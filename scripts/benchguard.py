@@ -1,145 +1,42 @@
 #!/usr/bin/env python3
-"""Bench-budget regression guard (round-6 lesson: BENCH_r06.json was
-rc 124 / parsed null because the suite outgrew the driver's wall budget
-and nothing locally tripped first).
+"""Bench-budget guard for graft.Bench captures.
 
-Reads a local bench capture (graft.Bench stdout: per-query
-`{"progress":"query",...}` JSONL lines and/or the final
-`{"metric":"total",...}` summary), estimates the DRIVER-side wall for a
-full bench run, and exits non-zero when the estimate exceeds the budget:
+Reads a bench capture, estimates the bench-host wall of a full bench
+run, and exits non-zero when the estimate exceeds the budget:
 
     estimate = (sum(cold) + sum(warm)) * SLOWDOWN + OVERHEAD
 
- - SLOWDOWN 1.3: observed driver/builder wall ratio (r05: driver 232 s
-   vs builder-local ~180 s including compile). Round-8 calibration
-   point: driver wall 1,988 s vs driver-measured query totals
-   1,945.6 s — ratio ~1.0 when the capture comes from the SAME
-   environment and fixtures, so 1.3 is conservative for a fresh
-   same-round capture;
- - OVERHEAD 100 s: sbt launch + incremental compile + SparkSession
-   start on the driver, outside the per-query timings;
- - BUDGET 1000 s (override with --budget): the operational target, not
-   the kill threshold. Evidence: r05's 232 s passed; r06 died at
-   rc 124 with an estimated ~600 s; r08's 1,988 s driver wall
-   completed at rc 0 — so the hard timeout (if any) now sits above
-   2,000 s and r06's kill likely had a different cause. The round-8
-   verdict set ~1,000 s as the wall to stay under; a 1,000 s budget
-   trips on a genuine suite blow-up (r08-policy warm-all at r08 env
-   speed estimated ~2,630 s) without tripping on the ~2x environment
-   drift observed round-over-round.
+ - SLOWDOWN 1.3: ratio of the bench host's wall to a local capture's
+   (r05: 232 s vs ~180 s local). A BENCH_r{N}.json wrapper was measured
+   on the bench host already, so it gets 1.0;
+ - OVERHEAD 100 s: sbt launch, compile and SparkSession start on the
+   bench host, outside the per-query timings;
+ - BUDGET 1000 s (--budget): the operational target, not the kill
+   threshold.
 
-ROUND-8 LESSON — STALENESS IS THE FAILURE MODE, NOT THE MODEL: the
-guard said OK (est 358 s) to a 1,988 s driver run because its input,
-the committed bench_local.jsonl, predated a driver-side fixture
-regeneration AND an environment slowdown. A capture older than the
-fixtures it benchmarked cannot predict anything. The guard now
-REFUSES (exit 2) a capture file older than the newest fixture under
---fixtures (default /root/testdata), so a regen forces a re-baseline
-before the guard will pass again.
+A capture older than the newest fixture under --fixtures (default
+DEFAULT_FIXTURES) cannot predict anything, so it is refused (exit 2)
+unless --no-staleness-check is given.
+
+Two capture shapes are accepted: raw graft.Bench stdout (JSONL:
+`{"progress":...}` lines and the `{"metric":"total",...}` summary), and
+the driver's BENCH_r{N}.json wrapper, one JSON object whose string
+`tail` holds the last ~2,000 chars of bench stdout. When per-query lines
+were truncated away, the summary's `value` + `total_warm` is the basis
+and its `top_cold`/`warm_echo` maps name the heavy queries.
 
 Usage:
-    benchguard.py <bench_capture.jsonl | BENCH_r{N}.json> [--budget SECONDS]
+    benchguard.py CAPTURE [--budget SECONDS]
                   [--fixtures DIR | --no-staleness-check]
-                  [--compare-warm OTHER_CAPTURE]
-                  [--compare-cold OTHER_CAPTURE]
+                  [--compare OTHER_CAPTURE]
     benchguard.py --selftest
 
-Round-17 additions (VERDICT r16 ask #1): the bench summary now echoes
-budget-trimmed `top_cold` / `warm_echo` per-query maps, so the guard
+--compare OTHER prints, on the queries both captures carry, the cold,
+cold_min (per query min of cold and warm) and warm totals, and the
+largest per-query cold movers. It is advisory and never changes the
+exit code.
 
- - always prints the heaviest cold queries (per-line records win for
-   precision; the summary echo fills what the driver tail truncated);
- - adjudicates WARM contention: a warm row exceeding its OWN cold
-   ([WARM-SUSPECT]) is a contention artifact, not a regression — the
-   warm pass re-runs the identical plan with codegen already cached and
-   the inter-pass cache cleared, so it is structurally <= cold (r16's
-   smoking gun: q79 warm 11.26 s vs ~1.5 s cold, which nothing named);
- - `--compare-warm OTHER` compares warm totals across two captures on
-   the cohort INTERSECTION only, refusing when the cohorts are disjoint
-   (the warm cohort is re-derived from each run's own cold ranking, so
-   r15-vs-r16's "+59 %" compared different query sets).
-
-The capture argument accepts BOTH shapes (round-15 lesson: the guard
-could adjudicate a raw stdout capture but printed [NO CANARY]/RC 2 on
-the driver's own artifact): a raw JSONL stdout capture, or the
-driver's BENCH_r{N}.json wrapper — a single JSON object whose string
-`tail` holds the last ~2,000 chars of bench stdout. The wrapper is
-detected by parsing the whole file as one JSON object with a string
-`tail`, which is then re-split into capture lines.
-
-Round-18 additions (VERDICT r17 asks #1b/#2 — BENCH_r17 was a FALSE
-RED: a co-tenant IO burst inflated contiguous cold spans 14-56x while
-the 3-point canary, the warm rows, and the write probes all read
-clean, so the guard ruled the contradictory [CLEAN]+[OVER BUDGET]):
-
- - INLINE PROBES: Bench now times a spin + fixed-size parquet read
-   every ~25 queries through the cold pass
-   (`{"progress":"canary_inline",...}` lines + `inline_after`/
-   `inline_spin`/`inline_io` summary arrays); an inflated probe
-   brackets the polluted cold window by query index.
- - COLD/WARM ASYMMETRY (fallback for pre-inline captures like
-   BENCH_r17.json): a warm pass re-runs the identical plan, so a cold
-   at >5x its own clean warm with >5s excess is a contention-suspect
-   row — UNLESS the excess is a one-time landed-table write (q110's
-   clean-host 15.6x), which is why the verdict needs >=3 suspects AND
-   the contention-adjusted estimate to fit the budget (a real plan
-   regression inflates warm too, so min(cold, warm) stays over).
- - COLD_MIN BUDGETING: each query's contention-resistant cold is the
-   MIN over its measured executions (`total_cold_min` in round-18+
-   summaries; derived from top_cold ∧ warm_echo ∧ cold2 for older
-   captures). When the RAW estimate is over budget but the cold_min
-   estimate fits AND contention evidence exists (inline-probe flags,
-   or the asymmetry fallback), the verdict is
-   [OVER-BUDGET-CONTENTION-SUSPECT] (exit 3) naming the polluted
-   spans — distinct from a clean structural [OVER BUDGET] (exit 1),
-   which stays a hard red.
-
-Round-19 additions (VERDICT r18 ask #1 — BENCH_r18 left 7 warm rows
-unadjudicated because their colds fell to the summary's budget trim,
-and the raw `value` was still the only cross-round anchor):
-
- - WARM PAIR ECHO: Bench now emits each `warm_echo` value as a
-   `[warm, cold]` pair (and keeps `top_cold` disjoint from the warm
-   cohort); parse_summary_echo accepts both shapes and merges pair
-   colds into the cold-attribution map, so every warm row in a
-   round-19+ artifact self-carries its adjudication basis.
- - COLD-ATTRIBUTION FALLBACK: for older artifacts (BENCH_r18 and
-   before), warm rows with no cold in their own capture are
-   adjudicated against the committed bench_local.jsonl
-   (auto-discovered next to the capture / in the repo root), labeled
-   as cross-capture attribution grade. The asymmetry/cold_min
-   contention adjudicators stay strictly same-run.
- - COLD_MIN COMPARISON BASIS: `--compare-cold OTHER` now also prints
-   `cold_min vs prior cold_min` (canary-drift-normalized), so a
-   contention-inflated raw `value` can never again anchor the
-   round-over-round headline.
-
-Round-20 additions (VERDICT r19 ask #1 — the capture self-HEALS, not
-just self-adjudicates: r19 lost 4 warm rows and all 3 write probes to
-a disk burst; they were correctly flagged-and-excluded, but excluded
-is still lost signal):
-
- - IN-RUN RETRY, WARM: Bench re-measures once, at end of run, every
-   warm row whose first sample trips the WARM-SUSPECT predicate. The
-   retry arrives as a `{"progress":"warm_retry",...}` line and as the
-   third slot of the row's `warm_echo` value (`[warm, cold, retry]`).
-   annotate_warm takes min(first, retry): a clean retry RESCUES the
-   row (verdict WARM-CLEAN, attribution grade `retried`, both samples
-   printed); a still-suspect retry leaves the row flagged.
- - IN-RUN RETRY, WRITES: a probe whose first sample exceeds 3x nominal
-   is re-run once, arriving as a `<name>__retry` row in the same write
-   stream/echo. annotate_io adjudicates min(first, retry) per probe,
-   labeled `retried` — a passing burst no longer costs the round its
-   sink-row signal.
- - Retries also feed every cold_min second-sample derivation.
-   Bench.scala mirrors this file's WARM_SUSPECT_* and WRITE_NOMINAL_S/
-   WRITE_NOISY_FACTOR constants (pinned on both sides: BenchPolicySpec
-   and --selftest), so the bench retries exactly the rows this guard
-   would otherwise have to exclude.
-
-Exit codes: 0 OK, 1 over budget (structural), 2 unusable/stale
-capture, 3 over budget but contention-suspect (adjudicate against the
-committed local capture via --compare-cold before believing it).
+Exit codes: 0 within budget, 1 over budget, 2 empty or stale capture.
 """
 import json
 import os
@@ -150,80 +47,9 @@ OVERHEAD_S = 100.0
 DEFAULT_BUDGET_S = 1000.0
 DEFAULT_FIXTURES = "/root/testdata"
 
-# Host-noise canary calibration (round-12 ask: make captures
-# self-adjudicating). graft.Bench times a fixed single-threaded spin
-# (3e8 xorshift64 iterations) at start/mid/end. Calibrated clean-host
-# range on this container: 0.45-0.58 s over repeated runs (~±15%
-# turbo/thermal jitter), so nominal 0.50 s and a 2x threshold: any
-# spin above 1.0 s means the canary thread was being descheduled by
-# co-tenant load during the run -> the capture is [NOISY] and a
-# slower-than-last-round total is NOT evidence of a code regression.
-CANARY_NOMINAL_S = 0.50
-CANARY_NOISY_FACTOR = 2.0
-
-# IO-noise annotation from the write-path rows the bench already
-# emits: the CPU spin cannot see disk contention, but r12's second
-# noise signature was exactly that — the pure-IO
-# write_s5_silver_partitioned row swinging 1.4 -> 12.2 s (8.7x) while
-# plans were unchanged. Nominals are clean-host captures (driver r13 /
-# local r14 agree within noise); 3x headroom because small absolute
-# numbers jitter more than the spin does.
-WRITE_NOMINAL_S = {
-    "write_s5_silver_partitioned": 1.4,
-    "write_s5b_dynamic_overwrite": 0.8,
-    "write_s7_gold": 0.45,
-}
-WRITE_NOISY_FACTOR = 3.0
-# positional order of the summary line's compact `write_secs` echo
-# (kept in Bench.scala's write-bench emission order)
-WRITE_SUMMARY_ORDER = ["write_s5_silver_partitioned",
-                       "write_s5b_dynamic_overwrite", "write_s7_gold"]
-
-# Round-20 (VERDICT r19 ask #1 — self-HEALING capture): Bench now
-# re-measures, ONCE at end of run, every row whose first sample trips
-# the very predicates this guard applies post hoc (warm > 1.2x own
-# cold + 0.1s; write > 3x nominal). The retry arrives as a
-# `{"progress":"warm_retry",...}` line / a third `[warm, cold, retry]`
-# echo slot for warm rows, and as a `<name>__retry` row in the same
-# write stream/echo for write probes. The guard takes the per-row MIN
-# under a `retried` attribution grade — rescued signal, named as such,
-# never silently promoted to same-run-pristine. Bench.scala's
-# WarmSuspectFactor/WriteNominalS mirror these constants; drift on
-# either side fails BenchPolicySpec or this file's selftest.
-RETRY_SUFFIX = "__retry"
-
 
 def json_records(lines):
-    """The parse-or-skip scan every capture parser shares: yields each
-    line that decodes as a JSON object, ignoring log noise.
-
-    `lines` must be a re-iterable sequence (a list), not a one-shot
-    iterator: multi-pass callers (cold_min_estimate, check) feed the
-    same `lines` to several parsers in turn, and an iterator would be
-    silently exhausted after the first. Every multi-pass entry point
-    also materializes defensively (`lines = list(lines)`)."""
-    for line in lines:
-        line = line.strip()
-        if not line.startswith("{"):
-            continue
-        try:
-            yield json.loads(line)
-        except json.JSONDecodeError:
-            continue
-
-
-def parse_capture(lines):
-    """Per-query (cold, warm) seconds from a bench stdout capture.
-
-    Accumulates the flushed progress lines (cold lines carry
-    progress=query, top-K warm lines carry progress=warm), so a capture
-    from a run that was itself killed mid-flight still guards
-    (under-estimating: what it saw). A pre-round-8 summary line that
-    still embeds full per-query maps is honored when present; the
-    round-8+ compact summary carries no per-query data and is ignored
-    in favor of the accumulated lines.
-    """
-    cold, warm = {}, {}
+    """Each line that decodes as a JSON object; log noise is skipped."""
     for line in lines:
         line = line.strip()
         if not line.startswith("{"):
@@ -232,6 +58,15 @@ def parse_capture(lines):
             d = json.loads(line)
         except json.JSONDecodeError:
             continue
+        if isinstance(d, dict):
+            yield d
+
+
+def parse_capture(lines):
+    """Per-query (cold, warm) seconds from the progress lines. A pre-round-8
+    summary that embeds full per-query maps is honoured when present."""
+    cold, warm = {}, {}
+    for d in json_records(lines):
         if d.get("metric") == "total" and d.get("queries"):
             return dict(d["queries"]), dict(d.get("queries_warm", {}))
         if d.get("progress") == "query" and "name" in d:
@@ -243,31 +78,20 @@ def parse_capture(lines):
     return cold, warm
 
 
-def estimate_s(cold, warm, slowdown=SLOWDOWN):
-    return (sum(cold.values()) + sum(warm.values())) * slowdown + OVERHEAD_S
+def parse_summary(lines):
+    """The first `{"metric":"total",...}` record carrying `value`, or None
+    (Bench prints the same summary twice)."""
+    for d in json_records(lines):
+        if d.get("metric") == "total" and "value" in d:
+            return d
+    return None
 
 
 def parse_summary_echo(lines):
-    """(top_cold, warm_echo) dicts from the round-17+ summary echo;
-    empty dicts for an older capture. Values are the 2-decimal echoes —
-    attribution-grade, not ulp-comparable to the per-line precision.
-
-    Round-19 shape: each `warm_echo` value may be a `[warm, cold]` PAIR
-    (the warm row carrying its own cold — r18's budget trim dropped the
-    7 union-extra colds from top_cold, leaving those warm rows
-    unadjudicatable from the driver artifact alone, and the pair shape
-    keeps top_cold disjoint from the warm cohort). Pair colds are merged
-    into the returned top_cold map (explicit top_cold entries win, not
-    that the same run can disagree with itself), so every downstream
-    consumer — merged_attribution, the warm-vs-own-cold check, the
-    cold_min echo correction — sees one complete cold-attribution map
-    regardless of which shape the capture used. Round-20 TRIPLES
-    ([warm, cold, retry]) parse identically here — the third slot is
-    parse_warm_retries' concern."""
-    # LAST summary record wins, both maps together (same convention as
-    # total_cold_min_of): merging across records would adjudicate one
-    # run's warm rows against another run's colds when two summaries
-    # ever land in one capture (concatenated runs, a crashed retry)
+    """(top_cold, warm_echo) from the last summary's echo maps. A
+    `warm_echo` value is a `[warm, cold, ...]` list (or a bare warm in
+    older captures); list colds merge into top_cold, so the returned
+    cold map is the whole attribution the summary carries."""
     summary = None
     for d in json_records(lines):
         if d.get("metric") == "total" and (
@@ -277,11 +101,7 @@ def parse_summary_echo(lines):
     if summary is None:
         return {}, {}
     top_cold, warm_echo, pair_cold = {}, {}, {}
-    we_raw = summary.get("warm_echo")
-    tc_raw = summary.get("top_cold")
-    for k, v in (we_raw if isinstance(we_raw, dict) else {}).items():
-        # parse-or-skip like every other parser here: one malformed
-        # value ([], [null,...], a string) must not crash the verdict
+    for k, v in (summary.get("warm_echo") or {}).items():
         try:
             if isinstance(v, (list, tuple)):
                 warm_echo[k] = float(v[0])
@@ -291,7 +111,7 @@ def parse_summary_echo(lines):
                 warm_echo[k] = float(v)
         except (TypeError, ValueError, IndexError):
             warm_echo.pop(k, None)
-    for k, v in (tc_raw if isinstance(tc_raw, dict) else {}).items():
+    for k, v in (summary.get("top_cold") or {}).items():
         try:
             top_cold[k] = float(v)
         except (TypeError, ValueError):
@@ -299,935 +119,28 @@ def parse_summary_echo(lines):
     return {**pair_cold, **top_cold}, warm_echo
 
 
-def parse_warm_retries(lines):
-    """In-run warm re-measures (round-20): {name: retry_seconds}.
-    Per-line `{"progress":"warm_retry",...}` records win (full
-    precision); the third slot of a summary `warm_echo` triple fills
-    rows whose per-lines were truncated away — the same merge rule as
-    every other echo. An errored retry measured time-to-failure and is
-    skipped. Empty for pre-round-20 captures."""
-    per_line, last_summary = {}, None
-    for d in json_records(lines):
-        if d.get("progress") == "warm_retry" and "name" in d \
-                and "warm_retry" in d and "err" not in d:
-            per_line[d["name"]] = float(d["warm_retry"])
-        elif d.get("metric") == "total" \
-                and isinstance(d.get("warm_echo"), dict):
-            # last summary wins, same convention as parse_summary_echo
-            last_summary = d
-    summary = {}
-    if last_summary is not None:
-        for k, v in last_summary["warm_echo"].items():
-            try:
-                if isinstance(v, (list, tuple)) and len(v) > 2 \
-                        and v[2] is not None:
-                    summary[k] = float(v[2])
-            except (TypeError, ValueError):
-                continue
-    merged = dict(summary)
-    merged.update(per_line)
-    return merged
-
-
 def merged_attribution(lines):
-    """(cold, warm) per-query maps merging the per-line records with the
-    summary echo. Per-line wins per name (full precision); the echo
-    fills names whose per-lines scrolled out of the driver tail — the
-    same merge rule as the canary and write echoes. Cold from the echo
-    covers only the echoed top-K heaviest, which is exactly the
-    attribution the guard prints."""
+    """(cold, warm) maps: per-line records win (full precision), the
+    summary echo fills names whose lines scrolled out of the tail."""
     lines = list(lines)
     pq_cold, pq_warm = parse_capture(lines)
     top_cold, warm_echo = parse_summary_echo(lines)
-    cold = dict(top_cold)
-    cold.update(pq_cold)
-    warm = dict(warm_echo)
-    warm.update(pq_warm)
-    return cold, warm
+    return {**top_cold, **pq_cold}, {**warm_echo, **pq_warm}
 
 
 def print_heaviest(cold, k=5):
-    """Names the heaviest cold queries (round-17 ask: the driver tail
-    keeps ~20 lines, so BENCH_r{N}.json alone must answer 'which
-    queries are heavy' — previously unanswerable after truncation)."""
     if not cold:
         print("benchguard: heaviest colds [NO COLD ATTRIBUTION] — no "
-              "per-query lines survived and the summary carries no "
-              "top_cold echo (pre-round-17 capture)")
+              "per-query lines and no top_cold echo in the capture")
         return
     top = sorted(cold.items(), key=lambda kv: (-kv[1], kv[0]))[:k]
     print("benchguard: heaviest colds — "
           + ", ".join(f"{n}={t:.2f}s" for n, t in top))
 
 
-# A warm pass re-executes the identical physical plan with codegen
-# already JIT-compiled and the inter-pass cache cleared: structurally
-# it can only be FASTER than its cold. A warm exceeding its own cold by
-# more than jitter (20% + 0.1 s absolute — small rows jitter more in
-# relative terms) means the warm pass ran under contention and the row
-# is a host artifact, not a steady-state measurement. r16's smoking
-# gun: q79_semantic_dedup warm 11.26 s vs ~1.5 s cold, flagged by
-# nothing at the time.
-WARM_SUSPECT_FACTOR = 1.2
-WARM_SUSPECT_MIN_EXCESS_S = 0.1
-
-# Fallback-attributed rows (cold borrowed from the committed local
-# capture) compare a DRIVER warm against a LOCAL cold: "warm <= cold"
-# is only structural within one run, and two runs on two hosts differ
-# beyond what the spin ratio normalizes (page-cache state, IO stack —
-# the r18 artifact's q272/q68 sat at 1.4-1.7x their local colds while
-# every same-run-adjudicated row was clean). A cross-capture basis
-# therefore gets the canary's own 2x philosophy plus an absolute floor
-# ABOVE small-row scatter: the same query's cold measured 0.79s and
-# 1.31s in two consecutive CLEAN local captures (1.7x run-to-run on a
-# sub-second row), so any floor below ~1.5s lets the verdict flip with
-# the baseline refresh. The target class is the r16 q79 artifact
-# (warm 11.26s vs cold ~1.5s: 7.7x, ~8s excess), which clears both
-# thresholds with a wide margin.
-FALLBACK_SUSPECT_FACTOR = 2.0
-FALLBACK_MIN_EXCESS_S = 2.0
-
-
-def annotate_warm(lines, fallback_lines=None, fallback_label=None):
-    """Print the [WARM-SUSPECT]/[WARM-CLEAN]/[NO WARM DATA] verdict:
-    each warm row against its OWN cold (merged per-line + echo). Warm
-    rows whose cold is unknown (echo trimmed, tail truncated) are named
-    as unadjudicated rather than silently skipped. Returns the verdict
-    string.
-
-    Round-19 (VERDICT r18 ask #1a): when `fallback_lines` is given (the
-    committed bench_local.jsonl, auto-discovered by main()), rows whose
-    own capture carries no cold are adjudicated against the FALLBACK
-    capture's cold for the same query — labeled as such, because a
-    cross-capture cold is attribution-grade, not same-run-grade. This
-    closes the r18 gap where 7 warm rows stayed unadjudicated in
-    `BENCH_r18.json` (their colds fell to the echo trim) even though
-    the committed local capture carried the numbers. The fallback is
-    used ONLY here: the asymmetry/cold_min contention adjudicators stay
-    strictly same-run.
-
-    Round-20 (VERDICT r19 ask #1): a first-sample suspect whose IN-RUN
-    RETRY (Bench re-measures suspect rows once at end of run) clears
-    the same threshold is RESCUED — min(first, retry) adjudicates,
-    named under a `retried` attribution grade instead of excluding the
-    row. A retry that is itself still suspect leaves the row flagged
-    (both samples contended, or a genuine steady-state regression)."""
-    lines = list(lines)
-    cold, warm = merged_attribution(lines)
-    if not warm:
-        print("benchguard: warm [NO WARM DATA] — no warm rows in the "
-              "capture (filtered run, streaming-only, or pre-round-8 "
-              "shape)")
-        return "NO WARM DATA"
-    # parse the fallback capture only when some warm row actually needs
-    # it — for a round-19+ pair-shaped artifact every row self-carries
-    # its cold, and parsing the ~340-line committed capture for nothing
-    # would be the common case
-    fb_cold = {}
-    if fallback_lines is not None and any(n not in cold for n in warm):
-        fb_cold, _ = merged_attribution(list(fallback_lines))
-    retries = parse_warm_retries(lines)
-    suspects = []
-    rescued = []
-    unknown = []
-    borrowed = []
-    for name, w in sorted(warm.items()):
-        c = cold.get(name)
-        src = ""
-        factor, floor = WARM_SUSPECT_FACTOR, WARM_SUSPECT_MIN_EXCESS_S
-        if c is None and name in fb_cold:
-            c = fb_cold[name]
-            borrowed.append((name, w, c))
-            src = f" [cold from {fallback_label}]"
-            # cross-capture basis: looser threshold (see FALLBACK_*)
-            factor, floor = FALLBACK_SUSPECT_FACTOR, FALLBACK_MIN_EXCESS_S
-        if c is None:
-            unknown.append(name)
-        elif w > c * factor + floor:
-            r = retries.get(name)
-            if r is not None and min(w, r) <= c * factor + floor:
-                # round-20 rescue: the end-of-run retry cleared the same
-                # threshold the first sample tripped — min adjudicates
-                rescued.append((name, w, r, c))
-            else:
-                suspects.append((name, w, c, src, r))
-    if suspects:
-        verdict = "WARM-SUSPECT"
-        # cold can be 0.00: the summary echo renders at 2 decimals, so a
-        # sub-5ms cold arrives as 0.0 — print the ratio only when it
-        # divides
-        detail = ", ".join(
-            f"{n} warm {w:.2f}s vs cold {c:.2f}s"
-            + (f" ({w / c:.1f}x)" if c > 0 else " (cold ~0: ratio n/a)")
-            + (f" [retry {r:.2f}s also suspect]" if r is not None else "")
-            + src
-            for n, w, c, src, r in suspects)
-        print(f"benchguard: warm [WARM-SUSPECT] — {detail}; a warm pass "
-              "re-runs the identical plan with codegen cached, so "
-              "exceeding its own cold means the row is a contention "
-              "artifact — exclude it from warm-total comparisons")
-    elif len(unknown) == len(warm):
-        # "clean" would overclaim when NOTHING was actually checked
-        # (pre-round-17 capture whose colds all scrolled out)
-        verdict = "WARM-UNADJUDICATED"
-        print(f"benchguard: warm [WARM-UNADJUDICATED] — {len(warm)} warm "
-              "rows but no cold attribution for any of them; cannot "
-              "check warm-vs-own-cold")
-    else:
-        verdict = "WARM-CLEAN"
-        suffix = (f" ({FALLBACK_SUSPECT_FACTOR:.1f}x for "
-                  "fallback-attributed rows)") if borrowed else ""
-        if rescued:
-            suffix += (f"; {len(rescued)} rescued by in-run retry "
-                       "(attribution grade: retried)")
-        print(f"benchguard: warm [WARM-CLEAN] — {len(warm) - len(unknown)} "
-              f"warm rows each within {WARM_SUSPECT_FACTOR:.1f}x of their "
-              f"own cold{suffix}")
-    if rescued:
-        # rescued signal is attribution-grade `retried`, never silently
-        # promoted to same-run-pristine: both samples are printed so the
-        # contention that hit the first pass stays visible
-        print("benchguard: warm NOTE — retried in-run: "
-              + ", ".join(f"{n} first {w:.2f}s, retry {r:.2f}s vs cold "
-                          f"{c:.2f}s" for n, w, r, c in rescued)
-              + "; min(first, retry) adjudicates — grade `retried`, the "
-                "first sample was a contention artifact the end-of-run "
-                "re-measure rescued")
-    if borrowed:
-        # each borrowed row's actual ratio is printed even when it does
-        # not trip the (looser) cross-capture threshold, so a 1.8x row
-        # is visible inside a WARM-CLEAN verdict (r19 ADVICE)
-        print("benchguard: warm NOTE — cold attribution for "
-              + ", ".join(
-                  f"{n} (warm {w:.2f}s vs borrowed cold {c:.2f}s"
-                  + (f", {w / c:.1f}x)" if c > 0 else ")")
-                  for n, w, c in borrowed)
-              + f" taken from {fallback_label} (committed local capture): "
-                "this capture's own echo carried no cold for those rows, "
-                "so the verdict for them is cross-capture attribution "
-                "grade")
-    if unknown:
-        print("benchguard: warm NOTE — no cold attribution for "
-              + ", ".join(unknown)
-              + " (echo trimmed or pre-round-17 capture"
-              + (", and the fallback capture lacks them too"
-                 if fallback_lines is not None else
-                 "; no fallback capture available")
-              + "): those rows are unadjudicated")
-    return verdict
-
-
-def compare_warm(lines_a, label_a, lines_b, label_b):
-    """Compare two captures' warm totals on the cohort INTERSECTION
-    only (round-17 ask #1b: the warm cohort is re-derived from each
-    run's own cold ranking, so raw total_warm deltas compare different
-    query sets — r15 vs r16's '+59 % regression' was partly set-shift).
-    Refuses (returns 'REFUSED') when the cohorts are disjoint: there is
-    nothing comparable, and printing a ratio anyway would manufacture
-    the exact artifact this exists to kill. Returns 'OK' otherwise."""
-    lines_a, lines_b = list(lines_a), list(lines_b)
-    _, warm_a = merged_attribution(lines_a)
-    _, warm_b = merged_attribution(lines_b)
-    inter = sorted(set(warm_a) & set(warm_b))
-    if not warm_a or not warm_b:
-        missing = label_a if not warm_a else label_b
-        print(f"benchguard: warm-compare [REFUSED] — no warm rows in "
-              f"{missing}; nothing to compare")
-        return "REFUSED"
-    if not inter:
-        print(f"benchguard: warm-compare [REFUSED] — cohorts are "
-              f"disjoint ({len(warm_a)} rows in {label_a}, "
-              f"{len(warm_b)} in {label_b}, 0 shared): the warm cohort "
-              "is each run's own top-K cold ranking, so these totals "
-              "measure different query sets and comparing them would "
-              "manufacture a set-shift artifact, not a regression")
-        return "REFUSED"
-    ta = sum(warm_a[n] for n in inter)
-    tb = sum(warm_b[n] for n in inter)
-    only_a = len(warm_a) - len(inter)
-    only_b = len(warm_b) - len(inter)
-    ratio = f" ({ta / tb:.2f}x)" if tb > 0 else ""
-    print(f"benchguard: warm-compare [OK] — intersection {len(inter)} "
-          f"queries: {label_a} {ta:.2f}s vs {label_b} {tb:.2f}s{ratio}")
-    if only_a or only_b:
-        print(f"benchguard: warm-compare NOTE — excluded {only_a} rows "
-              f"only in {label_a} and {only_b} only in {label_b} "
-              "(cohort set-shift)")
-    return "OK"
-
-
-# Cold cross-capture comparison (round-17 self-review addition): the
-# judge's round-over-round cold reasoning is "normalize by the canary
-# spin ratio, then ask if anything moved" (r16: 0.554 -> 0.498 s spins
-# explained the apparent improvement; r17: 0.50 -> 0.62 s explained the
-# apparent 1.35x regression). compare_cold institutionalizes that math.
-COLD_DRIFT_BAND = 0.10            # |normalized ratio - 1| <= this = drift
-COLD_REGRESSION_FACTOR = 1.5      # per-query normalized naming threshold
-COLD_REGRESSION_MIN_EXCESS_S = 0.5
-
-
-def mean_spin(lines):
-    """Mean canary spin of a capture, or None (pre-round-14 shape)."""
-    spins = [s for _, s, _ in parse_canary(lines)]
-    return (sum(spins) / len(spins)) if spins else None
-
-
-def spin_drift(lines_a, lines_b):
-    """(spin_a, spin_b, drift, refuse_msg) — the canary-drift scaffolding
-    compare_cold and compare_cold_min share. drift is None when either
-    capture predates the canary ([NO-CANARY] handling is the caller's);
-    refuse_msg is non-None for a degenerate 0-second spin (a corrupt
-    capture, not a clean host — r17 ADVICE: truthiness used to conflate
-    this with a missing canary)."""
-    sa, sb = mean_spin(lines_a), mean_spin(lines_b)
-    if sa is not None and sb is not None and (sa <= 0 or sb <= 0):
-        return sa, sb, None, (
-            f"degenerate canary spin ({sa:.3f}s vs {sb:.3f}s): a "
-            "0-second spin is a corrupt capture, not a clean host; "
-            "drift is undefined")
-    drift = (sa / sb) if (sa is not None and sb is not None) else None
-    return sa, sb, drift, None
-
-
-def compare_cold(lines_a, label_a, lines_b, label_b):
-    """Compare two captures' cold totals on the query INTERSECTION,
-    normalized by the canary-spin ratio so host drift reads as
-    [DRIFT-EXPLAINED] instead of a fake regression (and a real
-    regression can't hide behind "the host got slower" — the spin pins
-    how much slower). Per-query normalized outliers are named whatever
-    the aggregate verdict. Refuses on disjoint cohorts like
-    compare_warm; [NO-CANARY] (raw ratio only) when either capture
-    predates the canary. Advisory: never changes the exit code."""
-    lines_a, lines_b = list(lines_a), list(lines_b)
-    cold_a, _ = merged_attribution(lines_a)
-    cold_b, _ = merged_attribution(lines_b)
-    if not cold_a or not cold_b:
-        missing = label_a if not cold_a else label_b
-        print(f"benchguard: cold-compare [REFUSED] — no cold "
-              f"attribution in {missing}; nothing to compare")
-        return "REFUSED"
-    inter = sorted(set(cold_a) & set(cold_b))
-    if not inter:
-        print(f"benchguard: cold-compare [REFUSED] — cohorts are "
-              f"disjoint ({len(cold_a)} queries in {label_a}, "
-              f"{len(cold_b)} in {label_b}, 0 shared); a driver "
-              "artifact carries only its top-K echo, so compare "
-              "full local captures (or overlapping echoes)")
-        return "REFUSED"
-    ta = sum(cold_a[n] for n in inter)
-    tb = sum(cold_b[n] for n in inter)
-    if tb <= 0:
-        print(f"benchguard: cold-compare [REFUSED] — zero cold total "
-              f"in {label_b}; ratio undefined")
-        return "REFUSED"
-    raw = ta / tb
-    sa, sb, drift, refuse = spin_drift(lines_a, lines_b)
-    if refuse is not None:
-        print(f"benchguard: cold-compare [REFUSED] — {refuse}")
-        return "REFUSED"
-    if drift is None:
-        verdict = "NO-CANARY"
-        print(f"benchguard: cold-compare [NO-CANARY] — intersection "
-              f"{len(inter)} queries: {label_a} {ta:.1f}s vs {label_b} "
-              f"{tb:.1f}s (raw {raw:.2f}x); no canary spins in at "
-              "least one capture, so host drift cannot be separated "
-              "from real movement")
-    else:
-        norm = raw / drift
-        inside = abs(norm - 1.0) <= COLD_DRIFT_BAND
-        verdict = "DRIFT-EXPLAINED" if inside else "COLD-SHIFT"
-        print(f"benchguard: cold-compare [{verdict}] — intersection "
-              f"{len(inter)} queries: {label_a} {ta:.1f}s vs {label_b} "
-              f"{tb:.1f}s (raw {raw:.2f}x); canary spins {sa:.2f}s vs "
-              f"{sb:.2f}s (host drift {drift:.2f}x) -> drift-normalized "
-              f"{norm:.2f}x, {'within' if inside else 'OUTSIDE'} the "
-              f"±{COLD_DRIFT_BAND:.0%} band")
-    # name per-query normalized outliers regardless of the aggregate
-    # verdict (a single regressed query hides inside a clean total)
-    d = drift if drift else 1.0
-    regr = sorted(
-        ((cold_a[n] / (cold_b[n] * d), n) for n in inter
-         if cold_b[n] > 0
-         and cold_a[n] > cold_b[n] * d * COLD_REGRESSION_FACTOR
-         and cold_a[n] - cold_b[n] * d > COLD_REGRESSION_MIN_EXCESS_S),
-        reverse=True)
-    if regr:
-        print("benchguard: cold-compare NOTE — normalized per-query "
-              "outliers (vs drift-adjusted baseline): "
-              + ", ".join(f"{n} {cold_a[n]:.2f}s vs {cold_b[n]:.2f}s "
-                          f"({r:.1f}x)" for r, n in regr[:5]))
-    only_a = len(cold_a) - len(inter)
-    only_b = len(cold_b) - len(inter)
-    if only_a or only_b:
-        print(f"benchguard: cold-compare NOTE — excluded {only_a} "
-              f"queries only in {label_a} and {only_b} only in "
-              f"{label_b}")
-    return verdict
-
-
-def total_cold_min_of(lines):
-    """(cold_min total seconds, provenance, n_queries) for a capture, or
-    (None, why-not, n_queries). Preference order mirrors
-    cold_min_estimate: the summary's explicit `total_cold_min`
-    (round-18+), else a per-query min over merged cold/warm/cold2 when
-    the per-query lines cover the whole run."""
-    lines = list(lines)
-    summary = None
-    for d in json_records(lines):
-        if d.get("metric") == "total" and "value" in d:
-            summary = d
-    n_q = summary.get("n_queries") if summary is not None else None
-    if summary is not None and summary.get("total_cold_min") is not None:
-        return float(summary["total_cold_min"]), "explicit", n_q
-    cold, warm = parse_capture(lines)
-    second = dict(parse_cold2(lines))
-    for n, w in warm.items():
-        second[n] = min(w, second[n]) if n in second else w
-    # round-20 in-run retries are third samples of the same plan
-    for n, r in parse_warm_retries(lines).items():
-        second[n] = min(r, second[n]) if n in second else r
-    if cold and (n_q is None or len(cold) >= n_q):
-        tcm = sum(min(c, second.get(n, c)) for n, c in cold.items())
-        return tcm, f"per-query min over {len(cold)} queries", \
-            n_q if n_q is not None else len(cold)
-    return None, "no explicit total_cold_min and per-query lines do not " \
-        "cover the run", n_q
-
-
-def compare_cold_min(lines_a, label_a, lines_b, label_b):
-    """Round-over-round comparison on the contention-resistant cold_min
-    basis (VERDICT r18 ask #1b: BENCH_r17's raw `value` was inflated
-    14-56x by a co-tenant burst and anchored that round's headline —
-    `total_cold_min` is the basis a one-pass burst cannot inflate, so
-    the guard now prints `cold_min vs prior cold_min` explicitly
-    whenever it is given two artifacts). Canary-drift-normalized like
-    compare_cold; advisory only — never changes the exit code. Returns
-    the verdict string."""
-    lines_a, lines_b = list(lines_a), list(lines_b)
-    ta, prov_a, nq_a = total_cold_min_of(lines_a)
-    tb, prov_b, nq_b = total_cold_min_of(lines_b)
-    if ta is None or tb is None:
-        missing, why = (label_a, prov_a) if ta is None else (label_b, prov_b)
-        print(f"benchguard: cold_min-compare [REFUSED] — no cold_min "
-              f"basis in {missing} ({why}); pre-round-18 captures "
-              "carry no total_cold_min")
-        return "REFUSED"
-    if ta <= 0 or tb <= 0:
-        # refuse BOTH directions: a 0.0s explicit total_cold_min (an
-        # empty/filtered-run summary) would otherwise print a confident
-        # 0.00x as "the round-over-round basis" — the exact
-        # degenerate-anchor class this comparison exists to kill
-        which = label_a if ta <= 0 else label_b
-        print(f"benchguard: cold_min-compare [REFUSED] — zero cold_min "
-              f"total in {which}; ratio undefined")
-        return "REFUSED"
-    # cold_min totals are WHOLE-RUN sums (the summary carries no
-    # per-query breakdown), so a catalog-size change shifts the ratio
-    # for set reasons — name it rather than silently comparing
-    if nq_a is not None and nq_b is not None and nq_a != nq_b:
-        print(f"benchguard: cold_min-compare NOTE — query counts differ "
-              f"({nq_a} vs {nq_b}): the totals sum different catalogs, "
-              "so part of any ratio is set-shift, not per-query movement")
-    raw = ta / tb
-    sa, sb, drift, refuse = spin_drift(lines_a, lines_b)
-    if refuse is not None:
-        print(f"benchguard: cold_min-compare [REFUSED] — {refuse}")
-        return "REFUSED"
-    if drift is None:
-        print(f"benchguard: cold_min-compare [NO-CANARY] — cold_min "
-              f"{label_a} {ta:.1f}s ({prov_a}) vs prior cold_min "
-              f"{label_b} {tb:.1f}s ({prov_b}): raw {raw:.2f}x; no "
-              "canary spins in at least one capture, so host drift "
-              "cannot be separated from real movement")
-        return "NO-CANARY"
-    norm = raw / drift
-    inside = abs(norm - 1.0) <= COLD_DRIFT_BAND
-    verdict = "DRIFT-EXPLAINED" if inside else "COLDMIN-SHIFT"
-    print(f"benchguard: cold_min-compare [{verdict}] — cold_min "
-          f"{label_a} {ta:.1f}s ({prov_a}) vs prior cold_min {label_b} "
-          f"{tb:.1f}s ({prov_b}): raw {raw:.2f}x; canary spins "
-          f"{sa:.2f}s vs {sb:.2f}s (host drift {drift:.2f}x) -> "
-          f"drift-normalized {norm:.2f}x, "
-          f"{'within' if inside else 'OUTSIDE'} the "
-          f"±{COLD_DRIFT_BAND:.0%} band — this, not the raw `value`, "
-          "is the round-over-round basis")
-    return verdict
-
-
-def parse_canary(lines):
-    """Canary observations from a capture: list of (phase, spin_s, load1).
-
-    MERGES the two sources instead of either/or (r14 lesson: the
-    driver's ~2,000-char stdout tail kept only the `end` per-line, and
-    preferring per-lines dropped the summary echo's start/mid spins):
-    per-line `{"progress":"canary",...}` records win for the phases
-    they cover (they carry full-precision spin + 3-slot loadavg), and
-    the summary line's compact `canary_spins`/`canary_load1` echo
-    fills any phase whose per-line was truncated away. Returns [] for
-    a pre-round-14 capture.
-    """
-    per_line, summary = {}, {}
-    for line in lines:
-        line = line.strip()
-        if not line.startswith("{"):
-            continue
-        try:
-            d = json.loads(line)
-        except json.JSONDecodeError:
-            continue
-        if d.get("progress") == "canary" and "spin_sec" in d:
-            load = d.get("loadavg") or [None]
-            p = d.get("phase", "?")
-            per_line[p] = (p, float(d["spin_sec"]), load[0])
-        elif d.get("metric") == "total" and d.get("canary_spins"):
-            # round-16+ summaries echo canary_phases alongside the
-            # spins; decode by NAME so a phase the positional
-            # convention doesn't know (a future 4th spin) merges with
-            # its per-line record instead of double-counting under a
-            # synthetic p{i} key. Positional start/mid/end is only the
-            # legacy (r14/r15) fallback.
-            phases = d.get("canary_phases")
-            if phases is None:
-                phases = ["start", "mid", "end"]
-            loads = d.get("canary_load1") or []
-            for i, s in enumerate(d["canary_spins"]):
-                p = phases[i] if i < len(phases) else f"p{i}"
-                summary[p] = (p, float(s),
-                              loads[i] if i < len(loads) else None)
-    merged = dict(summary)
-    merged.update(per_line)
-    rank = {"start": 0, "mid": 1, "end": 2}
-    return sorted(merged.values(), key=lambda t: (rank.get(t[0], 99), t[0]))
-
-
-def annotate_canary(lines):
-    """Print the [NOISY]/[CLEAN]/[NO CANARY] host-noise annotation.
-
-    Verdict comes from the spin times alone: the spin is fixed
-    single-threaded work, so inflation beyond the calibrated threshold
-    means CPU contention. loadavg is printed as supporting context but
-    NOT thresholded — the bench's own 32 worker threads legitimately
-    drive the 1-minute load into the tens at mid/end.
-    Returns the verdict string for callers/selftest.
-    """
-    obs = parse_canary(lines)
-    if not obs:
-        print("benchguard: canary [NO CANARY] — pre-round-14 capture; "
-              "host-noise adjudication needs out-of-band evidence")
-        return "NO CANARY"
-    threshold = CANARY_NOMINAL_S * CANARY_NOISY_FACTOR
-    worst = max(s for _, s, _ in obs)
-    noisy = worst > threshold
-    detail = ", ".join(
-        f"{p}={s:.2f}s" + (f" (load1 {l:.1f})" if l is not None else "")
-        for p, s, l in obs)
-    verdict = "NOISY" if noisy else "CLEAN"
-    print(f"benchguard: canary [{verdict}] — spins {detail}; nominal "
-          f"{CANARY_NOMINAL_S:.2f}s, threshold {threshold:.2f}s"
-          + (f"; worst spin {worst:.2f}s = "
-               f"{worst / CANARY_NOMINAL_S:.1f}x nominal: the host was "
-               "contended during this capture — adjudicate regressions "
-               "against per-query local numbers, not this total"
-               if noisy else ""))
-    return verdict
-
-
-def annotate_io(lines):
-    """Print the [IO-NOISY]/[IO-CLEAN]/[NO IO ROWS] annotation from the
-    bench's write-path rows. Separate from the CPU canary: a clean spin
-    with an inflated pure-IO write is disk/page-cache contention (the
-    r12 signature), which still invalidates sink-row comparisons while
-    leaving compute-bound query rows mostly credible.
-
-    Per-line rows win per write name; the summary echo fills names
-    whose per-lines were truncated away (same merge rule as the
-    canary). The summary echo is decoded via its own `write_names`
-    array when present (round-15+ Bench emits it); positional
-    WRITE_SUMMARY_ORDER is only the legacy fallback and prints a
-    warning when the slot count disagrees with the convention instead
-    of silently dropping extras.
-
-    Round-20 (VERDICT r19 ask #1): a probe whose first sample tripped
-    the 3x threshold is re-measured once by Bench at end of run,
-    arriving as a `<name>__retry` row in the same stream/echo. The
-    verdict uses min(first, retry) per probe, labeled `retried` with
-    both samples printed — an IO burst that passed by the end of the
-    run no longer costs the round its sink-row signal, while a retry
-    that is still inflated leaves the verdict IO-NOISY. Returns the
-    verdict string."""
-    nominals = WRITE_NOMINAL_S
-
-    def known(name):
-        return name in nominals or (
-            isinstance(name, str) and name.endswith(RETRY_SUFFIX)
-            and name[:-len(RETRY_SUFFIX)] in nominals)
-    per_line, summary = {}, {}
-    for line in lines:
-        line = line.strip()
-        if not line.startswith("{"):
-            continue
-        try:
-            d = json.loads(line)
-        except json.JSONDecodeError:
-            continue
-        if d.get("progress") == "write" and known(d.get("name")) \
-                and "sec" in d and "err" not in d:
-            per_line[d["name"]] = float(d["sec"])
-        elif d.get("metric") == "total" and d.get("write_secs"):
-            secs = d["write_secs"]
-            names = d.get("write_names")
-            if names is None:
-                # legacy capture: only the positional convention is
-                # available — say so when the shape disagrees with it
-                if len(secs) > len(WRITE_SUMMARY_ORDER):
-                    print(f"benchguard: io WARNING — legacy write_secs "
-                          f"echo has {len(secs)} slots but the positional "
-                          f"convention names {len(WRITE_SUMMARY_ORDER)}; "
-                          f"slots beyond the convention are ignored and "
-                          f"the named ones may be misattributed")
-                elif len(secs) < len(WRITE_SUMMARY_ORDER):
-                    print(f"benchguard: io WARNING — legacy write_secs "
-                          f"echo has {len(secs)} slots but the positional "
-                          f"convention names {len(WRITE_SUMMARY_ORDER)}; "
-                          f"all slots are used but their positional "
-                          f"attribution may be wrong")
-                names = WRITE_SUMMARY_ORDER
-            summary = {names[i]: float(s) for i, s in enumerate(secs)
-                       if s is not None and i < len(names)}
-    merged = dict(summary)
-    merged.update(per_line)
-    # round-20: fold each probe's in-run retry — min(first, retry)
-    # adjudicates; both samples are printed so the burst stays visible.
-    # An ORPHAN retry (its base first-sample truncated away — retries
-    # print after firsts, so a tail window can keep one without the
-    # other) is dropped: an unpaired second sample adjudicates nothing
-    retries = {n[:-len(RETRY_SUFFIX)]: s for n, s in merged.items()
-               if isinstance(n, str) and n.endswith(RETRY_SUFFIX)
-               and n[:-len(RETRY_SUFFIX)] in nominals
-               and n[:-len(RETRY_SUFFIX)] in merged}
-    obs = [(n, min(s, retries.get(n, s))) for n, s in merged.items()
-           if n in nominals]
-    obs.sort(key=lambda t: (WRITE_SUMMARY_ORDER.index(t[0])
-                            if t[0] in WRITE_SUMMARY_ORDER else 99, t[0]))
-    if not obs:
-        print("benchguard: io [NO IO ROWS] — no usable write-path "
-              "timings (filtered run, pre-round-14 summary with the "
-              "per-line rows truncated away, or every write errored)")
-        return "NO IO ROWS"
-    worst_name, worst_ratio = max(
-        ((n, s / nominals[n]) for n, s in obs), key=lambda t: t[1])
-    noisy = worst_ratio > WRITE_NOISY_FACTOR
-    detail = ", ".join(
-        f"{n}={s:.2f}s ({s / nominals[n]:.1f}x of {nominals[n]:.2f}s)"
-        + (f" [retried: samples {merged[n]:.2f}s/{retries[n]:.2f}s, "
-           "min used]" if n in retries else "")
-        for n, s in obs)
-    verdict = "IO-NOISY" if noisy else "IO-CLEAN"
-    print(f"benchguard: io [{verdict}] — {detail}; threshold "
-          f"{WRITE_NOISY_FACTOR:.0f}x nominal"
-          + (f"; {worst_name} at {worst_ratio:.1f}x means disk contention "
-               "during the capture — sink rows are not comparable this "
-               "round" if noisy else ""))
-    if retries:
-        rescued = [n for n in retries
-                   if merged[n] / nominals[n] > WRITE_NOISY_FACTOR
-                   and min(merged[n], retries[n]) / nominals[n]
-                   <= WRITE_NOISY_FACTOR]
-        print("benchguard: io NOTE — in-run retries: "
-              + ", ".join(f"{n} first {merged[n]:.2f}s, retry "
-                          f"{retries[n]:.2f}s" for n in sorted(retries))
-              + ("; rescued: " + ", ".join(sorted(rescued))
-                 if rescued else "")
-              + " — attribution grade `retried` (min adjudicates, the "
-                "first sample stays visible above)")
-    return verdict
-
-
-# ---- round-18: episodic cold-pass contention adjudication ----
-#
-# BENCH_r17's false red: a co-tenant IO burst during the COLD pass
-# inflated contiguous spans (q134-136, q171-176, q185-186, q226-228)
-# 14-56x while the same run's warm rows, CPU spins, and write probes
-# all read clean. Three independent detectors now cover that class:
-# inline probes bracket the polluted window in-run; the cold/warm
-# asymmetry heuristic adjudicates older captures after the fact; and
-# the cold_min basis bounds the damage either way.
-
-# io probes are thresholded SELF-RELATIVELY (vs the run's own median):
-# the probe file size is a constant but host decode speed is not, so a
-# cross-round nominal would drift; a burst that inflates EVERY probe
-# equally escapes this check and is caught by the spin threshold or
-# the asymmetry fallback instead.
-INLINE_IO_REL_FACTOR = 3.0
-INLINE_IO_MIN_EXCESS_S = 0.3
-
-# Asymmetry fallback calibration: a warm pass re-runs the identical
-# plan with codegen cached, so cold sits within ~2x of warm on a clean
-# host — EXCEPT queries whose cold pays a one-time landed-table write
-# (q110_triangles is 15.6x on the committed clean capture). Hence the
-# per-row test is deliberately loose (>5x AND >5s excess) and the
-# VERDICT requires >=3 suspect rows plus the contention-adjusted
-# estimate fitting the budget: a real plan regression inflates warm
-# too, so min(cold, warm) stays over and the red stays hard.
-ASYM_RATIO = 5.0
-ASYM_MIN_EXCESS_S = 5.0
-ASYM_MIN_SUSPECTS = 3
-
-# suspects qN..qM with numeric gaps <= this merge into one span — r17's
-# bursts polluted contiguous ALPHABETICAL execution spans, minus the
-# odd member whose cold didn't rank into the top_cold echo (q173)
-SPAN_GAP = 2
-
-
-def parse_inline(lines):
-    """Inline probes as [(after_query_index, spin_s, io_s)], sorted by
-    index. Per-line `{"progress":"canary_inline",...}` records win;
-    the summary's `inline_after`/`inline_spin`/`inline_io` arrays fill
-    indices whose per-lines were truncated away (same merge rule as the
-    canary echo). Empty for a pre-round-18 capture."""
-    per_line, summary = {}, {}
-    for d in json_records(lines):
-        if d.get("progress") == "canary_inline" and "after" in d:
-            a = int(d["after"])
-            per_line[a] = (a, float(d.get("spin_sec", 0.0)),
-                           float(d.get("io_sec", 0.0)))
-        elif d.get("metric") == "total" and d.get("inline_after"):
-            afters = d["inline_after"]
-            spins = d.get("inline_spin") or []
-            ios = d.get("inline_io") or []
-            for i, a in enumerate(afters):
-                summary[int(a)] = (
-                    int(a),
-                    float(spins[i]) if i < len(spins) else 0.0,
-                    float(ios[i]) if i < len(ios) else 0.0)
-    merged = dict(summary)
-    merged.update(per_line)
-    return sorted(merged.values())
-
-
-def inline_flags(probes):
-    """Contention-flagged probes: [(probe_idx, after, reason)]. A probe
-    is flagged when its spin exceeds the calibrated canary threshold or
-    its io read exceeds the run's own median by the relative factor."""
-    if not probes:
-        return []
-    ios = sorted(io for _, _, io in probes)
-    med = ios[len(ios) // 2]
-    spin_thr = CANARY_NOMINAL_S * CANARY_NOISY_FACTOR
-    io_thr = max(med * INLINE_IO_REL_FACTOR, med + INLINE_IO_MIN_EXCESS_S)
-    flags = []
-    for i, (after, spin, io) in enumerate(probes):
-        why = []
-        if spin > spin_thr:
-            why.append(f"spin {spin:.2f}s (thr {spin_thr:.2f}s)")
-        if io > io_thr:
-            why.append(f"io {io:.2f}s (median {med:.2f}s)")
-        if why:
-            flags.append((i, after, ", ".join(why)))
-    return flags
-
-
-def inline_windows(probes, flags):
-    """Bracketed query-index windows [(lo, hi, reason)] — contention
-    observed at probe `hi` pollutes the cold rows run since the previous
-    probe `lo` (exclusive)."""
-    return [(probes[i - 1][0] if i > 0 else 0, after, why)
-            for i, after, why in flags]
-
-
-def asymmetry_suspects(cold, warm):
-    """Contention-suspect cold rows [(name, cold, warm)]: cold far above
-    its own clean warm (see ASYM_* calibration above)."""
-    out = []
-    for n, w in warm.items():
-        c = cold.get(n)
-        if c is not None and w > 0 and c > w * ASYM_RATIO \
-                and c - w > ASYM_MIN_EXCESS_S:
-            out.append((n, c, w))
-    return sorted(out)
-
-
-def group_spans(names):
-    """Group suspect query names into contiguous numeric spans:
-    ['q134_x','q135_y','q136_z','q45_w'] -> (['q134-q136'], ['q45_w']).
-    Names without a qN prefix stay singletons."""
-    import re
-    nums, other = [], []
-    for n in sorted(set(names)):
-        m = re.match(r"q(\d+)", n)
-        if m:
-            nums.append((int(m.group(1)), n))
-        else:
-            other.append(n)
-    nums.sort()
-    spans, singles = [], list(other)
-    run = []
-    for num, name in nums + [(None, None)]:
-        if run and (num is None or num - run[-1][0] > SPAN_GAP):
-            if len(run) >= 2:
-                spans.append(f"q{run[0][0]}-q{run[-1][0]}")
-            else:
-                singles.append(run[0][1])
-            run = []
-        if num is not None:
-            run.append((num, name))
-    return spans, singles
-
-
-def parse_cold2(lines):
-    """Streaming cold re-measures: per-line `{"progress":"cold2",...}`
-    records win, the summary's `cold2` map fills."""
-    per_line, summary = {}, {}
-    for d in json_records(lines):
-        if d.get("progress") == "cold2" and "name" in d \
-                and "cold2" in d and "err" not in d:
-            per_line[d["name"]] = float(d["cold2"])
-        elif d.get("metric") == "total" and isinstance(d.get("cold2"), dict):
-            summary = {k: float(v) for k, v in d["cold2"].items()}
-    merged = dict(summary)
-    merged.update(per_line)
-    return merged
-
-
-def cold_min_estimate(lines, slowdown):
-    """(estimated driver wall on the contention-resistant cold_min
-    basis, provenance string), or (None, why-not).
-
-    Preference order: the summary's explicit `total_cold_min`
-    (round-18+ Bench computes the true per-query min over every
-    execution); else a per-query min over the merged cold/warm/cold2
-    maps when per-query lines cover the run; else the echo-derived
-    pseudo-min for a tail-only driver artifact — `value` minus the
-    echoed top-K's (cold - min(cold, second-sample)) corrections. The
-    fallbacks can only adjust queries they can SEE, so they
-    under-correct: a derived estimate that fits the budget is
-    conservative evidence, never an optimistic one."""
-    lines = list(lines)
-    summary = None
-    for d in json_records(lines):
-        if d.get("metric") == "total" and "value" in d:
-            summary = d
-    # the first two preference levels ARE total_cold_min_of (one
-    # implementation of the summary/min-merge logic); only the warm
-    # total differs per level — the explicit path trusts the summary's
-    # total_warm, the per-query path sums the surviving warm lines
-    tcm, prov, _ = total_cold_min_of(lines)
-    if tcm is not None and prov == "explicit":
-        tw = float(summary.get("total_warm", 0.0))
-        return (tcm + tw) * slowdown + OVERHEAD_S, \
-            f"explicit total_cold_min {tcm:.1f}s"
-    _, warm = parse_capture(lines)
-    if tcm is not None:
-        return (tcm + sum(warm.values())) * slowdown + OVERHEAD_S, \
-            f"{prov} = {tcm:.1f}s"
-    if summary is not None:
-        second = dict(parse_cold2(lines))
-        for n, w in warm.items():
-            second[n] = min(w, second[n]) if n in second else w
-        top_cold, warm_echo = parse_summary_echo(lines)
-        for n, w in warm_echo.items():
-            if n not in second or w < second[n]:
-                second[n] = w
-        # round-20 in-run retries (per-line or echo-triple third slot)
-        for n, r in parse_warm_retries(lines).items():
-            if n not in second or r < second[n]:
-                second[n] = r
-        correction = sum(c - min(c, second[n])
-                         for n, c in top_cold.items() if n in second)
-        if correction > 0:
-            tcm = float(summary["value"]) - correction
-            tw = float(summary.get("total_warm", 0.0))
-            return (tcm + tw) * slowdown + OVERHEAD_S, \
-                (f"echo-derived pseudo-min {tcm:.1f}s (raw "
-                 f"{float(summary['value']):.1f}s - {correction:.1f}s of "
-                 f"echoed-cohort excess; un-echoed queries uncorrected)")
-    return None, "no second samples to derive a cold_min basis from"
-
-
-def adjudicate_over_budget(lines, budget_s, est_raw, slowdown):
-    """Contention adjudication for an over-budget estimate. Returns the
-    exit code: 3 ([OVER-BUDGET-CONTENTION-SUSPECT]) when contention
-    evidence exists AND the cold_min-basis estimate fits the budget;
-    1 (hard red) otherwise. Prints the evidence either way."""
-    lines = list(lines)
-    probes = parse_inline(lines)
-    flags = inline_flags(probes)
-    windows = inline_windows(probes, flags)
-    merged_cold, merged_warm = merged_attribution(lines)
-    suspects = asymmetry_suspects(merged_cold, merged_warm)
-    est_min, basis = cold_min_estimate(lines, slowdown)
-    evidence = []
-    if windows:
-        evidence.append(
-            "inline probes flag cold windows (query index): "
-            + ", ".join(f"({lo},{hi}] {why}" for lo, hi, why in windows))
-    if len(suspects) >= ASYM_MIN_SUSPECTS:
-        spans, singles = group_spans([n for n, _, _ in suspects])
-        parts = spans + singles
-        worst = max(suspects, key=lambda s: s[1] / s[2])
-        evidence.append(
-            f"cold/warm asymmetry: {len(suspects)} cold rows run >"
-            f"{ASYM_RATIO:.0f}x their own clean warm (worst {worst[0]} "
-            f"cold {worst[1]:.2f}s vs warm {worst[2]:.2f}s, "
-            f"{worst[1] / worst[2]:.1f}x); polluted spans: "
-            + ", ".join(parts))
-    if est_min is not None:
-        print(f"benchguard: cold_min basis — {basis}; contention-"
-              f"adjusted estimate {est_min:.1f}s vs raw {est_raw:.1f}s "
-              f"(delta {est_raw - est_min:.1f}s)")
-    if evidence and est_min is not None and est_min <= budget_s:
-        print("benchguard: [OVER-BUDGET-CONTENTION-SUSPECT] — the raw "
-              f"estimate {est_raw:.1f}s exceeds the {budget_s:.0f}s "
-              f"budget, but the contention-adjusted estimate "
-              f"{est_min:.1f}s fits and the capture carries contention "
-              "evidence:")
-        for e in evidence:
-            print(f"  - {e}")
-        print("  adjudicate against the committed local capture "
-              "(--compare-cold bench_local.jsonl) before treating this "
-              "as a regression; rc 3, distinct from a structural rc 1")
-        return 3
-    if evidence:
-        print("benchguard: contention evidence present BUT the "
-              "contention-adjusted estimate "
-              + (f"{est_min:.1f}s" if est_min is not None else "(none)")
-              + f" still exceeds the {budget_s:.0f}s budget — the red "
-              "stays hard; clean samples confirm the suite itself "
-              "outgrew the budget")
-        for e in evidence:
-            print(f"  - {e}")
-    elif est_min is not None and est_min <= budget_s:
-        print("benchguard: cold_min estimate fits the budget but NO "
-              "contention evidence (no flagged probes, <"
-              f"{ASYM_MIN_SUSPECTS} asymmetry suspects) — refusing to "
-              "exonerate on basis alone; the red stays hard")
-    return 1
-
-
-def find_fallback(capture_path):
-    """Path of the committed local capture used for warm-row cold
-    attribution when the capture's own echo was trimmed (VERDICT r18
-    ask #1a's second option: "auto-fall-back to the committed
-    bench_local.jsonl") — next to the capture first, then next to this
-    script's repo root; never the capture itself. None when absent (the
-    NOTE then says no fallback was available)."""
-    here = os.path.dirname(os.path.abspath(__file__))
-    cands = [
-        os.path.join(os.path.dirname(os.path.abspath(capture_path)),
-                     "bench_local.jsonl"),
-        os.path.normpath(os.path.join(here, "..", "bench_local.jsonl")),
-    ]
-    for c in cands:
-        if os.path.isfile(c) \
-                and os.path.abspath(c) != os.path.abspath(capture_path):
-            return c
-    return None
-
-
 def newest_fixture_mtime(fixtures_dir):
-    """Max mtime over every file under the fixtures root (parquet files
-    sit in sf*/ subdirs); None when the root is absent (non-sandbox
-    host) so the check degrades to a warning, never a false trip."""
+    """Max mtime over every file under the fixtures root; None when the
+    root is absent, so the check degrades to no check."""
     newest = None
     for root, _dirs, files in os.walk(fixtures_dir):
         for f in files:
@@ -1251,40 +164,16 @@ def staleness_error(capture_path, fixtures_dir):
     if cap < newest:
         return (f"capture {capture_path} (mtime {cap:.0f}) is OLDER than "
                 f"the newest fixture under {fixtures_dir} (mtime "
-                f"{newest:.0f}): the fixtures were regenerated after this "
-                f"baseline was taken. Re-run scripts/run_bench.sh and "
-                f"commit a fresh capture — a stale baseline is how the "
-                f"round-8 guard passed a 4x overrun.")
+                f"{newest:.0f}): re-run scripts/run_bench.sh and commit a "
+                "fresh capture")
     return None
 
 
 def capture_lines(text):
-    """Capture lines from either accepted input shape.
-
-    A raw stdout capture is JSONL — one record per line — and is
-    returned as its lines. The driver's BENCH_r{N}.json wrapper is a
-    SINGLE JSON object (keys n/rc/cpus/sf/tail/parsed) whose string
-    `tail` holds the last ~2,000 chars of bench stdout; the wrapper is
-    unwrapped by re-splitting `tail` into lines (round-15 failure: the
-    guard fed the wrapper's one line to check() and printed
-    [NO CANARY]/[NO IO ROWS]/RC 2 on the very artifact it exists to
-    adjudicate). Detection is by shape, not filename: the whole text
-    parses as one JSON object with a string `tail` AND at least one
-    other wrapper-only key (`rc` or `parsed`) — requiring the second
-    key (r16 ADVICE) stops a future raw summary record or unrelated
-    single-object JSON that happens to carry a string `tail` from
-    being silently unwrapped and its timings exempted from the
-    SLOWDOWN ratio. A raw capture never matches (each of its lines is
-    a separate object, so the full text fails to parse as one; and no
-    bench record carries a `tail`/`rc`/`parsed` key).
-
-    Returns (lines, driver_origin): driver_origin is True for the
-    wrapper — its timings were measured ON the driver, so the
-    builder-to-driver SLOWDOWN ratio must not be applied to them again
-    (round-8 calibration: driver wall 1,988 s vs driver-measured totals
-    1,945.6 s, ratio ~1.0; applying 1.3x to a driver-side 700 s total
-    would false-trip a 1,000 s budget at 1,010 s).
-    """
+    """(lines, driver_origin). The BENCH_r{N}.json wrapper parses as ONE
+    JSON object with a string `tail` and a wrapper-only `rc` or `parsed`
+    key; its tail is re-split into lines and flagged driver-origin. Any
+    other text is a raw JSONL capture."""
     try:
         d = json.loads(text)
     except json.JSONDecodeError:
@@ -1295,1212 +184,225 @@ def capture_lines(text):
     return text.splitlines(), False
 
 
-def parse_summary_total(lines):
-    """(measured_total_s, n_queries) from the compact summary line, or
-    None when no summary survived. The budget fallback for tail-only
-    captures where every per-query line scrolled out of the driver's
-    stdout window but the summary's `value` (sum of cold secs) did not."""
-    for line in lines:
-        line = line.strip()
-        if not line.startswith("{"):
-            continue
-        try:
-            d = json.loads(line)
-        except json.JSONDecodeError:
-            continue
-        if d.get("metric") == "total" and "value" in d:
-            total = float(d["value"]) + float(d.get("total_warm", 0.0))
-            return total, d.get("n_queries")
-    return None
-
-
-def check(lines, budget_s, label, driver_origin=False,
-          fallback_lines=None, fallback_label=None):
-    # DELIBERATELY multi-parse (r18/r19 ADVICE, noted-not-applied; r19
-    # VERDICT asked to apply-or-record, so recorded): this function and
-    # its annotators re-scan `lines` a handful of times. A single-parse
-    # refactor would thread a parsed-record cache through ~12 parsers
-    # that are also called directly (selftest, compare_* entry points,
-    # external callers) on raw line lists. A capture is at most a few
-    # hundred short lines, so the total re-parse cost is single-digit
-    # milliseconds per run; the rewiring risk to a heavily-pinned,
-    # correctness-critical adjudicator outweighs an invisible speedup.
-    # driver-origin timings already ARE driver wall: applying the
-    # builder-to-driver ratio again would over-estimate ~30% and could
-    # false-trip the budget on a run that fit (see capture_lines)
+def check(lines, budget_s, label, driver_origin=False):
+    """Print the verdict and return the exit code (0 OK, 1 over, 2 no
+    data)."""
     lines = list(lines)
     slowdown = 1.0 if driver_origin else SLOWDOWN
     cold, warm = parse_capture(lines)
-    # canary verdicts first: they must print even for a tail-only
-    # capture (driver kept just the compact summary line, no per-query
-    # timings) — that truncated case is what the summary echo exists for
-    annotate_canary(lines)
-    annotate_io(lines)
-    # Two estimate sources, ONE adjudication path. A truncated driver
-    # tail can keep a HANDFUL of trailing per-query lines alongside the
-    # complete summary; adjudicating from that tiny partial sum would
-    # silently pass an over-budget run (the guard's founding failure
-    # mode). The summary basis wins exactly when the capture is
-    # TRUNCATED (decided by coverage, below) and the summary's
-    # estimate is the larger.
-    summary = parse_summary_total(lines)
-    est_pq = estimate_s(cold, warm, slowdown) if cold else None
-    est_sum = summary[0] * slowdown + OVERHEAD_S if summary else None
-    if est_pq is None and est_sum is None:
+    summary = parse_summary(lines)
+    if not cold and summary is None:
         print(f"benchguard: no per-query timings found in {label}")
         return 2
-    # truncation is a COVERAGE fact, not an estimate-magnitude one:
-    # the summary's n_queries vs the surviving per-query lines decides
-    # it (a full capture's two estimates can differ by float-summation
-    # ulps — magnitude alone could mislabel a complete capture as
-    # truncated and drop the heaviest-query attribution). The
-    # 1-second epsilon is the fallback for pre-n_queries summaries.
-    truncated = False
-    if cold and summary is not None:
-        n = summary[1]
-        truncated = (len(cold) < n) if n is not None \
-            else (est_sum > est_pq + 1.0)
-    from_summary = summary is not None and \
-        (not cold or (truncated and est_sum > est_pq))
-    if from_summary:
+    est_pq = (sum(cold.values()) + sum(warm.values())) * slowdown \
+        + OVERHEAD_S if cold else None
+    sum_total = None if summary is None else \
+        float(summary["value"]) + float(summary.get("total_warm", 0.0))
+    est_sum = None if sum_total is None else sum_total * slowdown + OVERHEAD_S
+    n_q = None if summary is None else summary.get("n_queries")
+    # a driver tail can keep a few trailing per-query lines next to the
+    # whole summary: coverage (n_queries) decides truncation, and a
+    # truncated capture is judged on the larger of the two estimates
+    truncated = bool(cold) and summary is not None and (
+        len(cold) < n_q if n_q is not None else est_sum > est_pq + 1.0)
+    if summary is not None and (not cold or (truncated and est_sum > est_pq)):
         est = est_sum
-        total, n = summary
-        basis = ("summary total " + f"{total:.1f}s"
-                 + (f" over {n} queries" if n is not None else ""))
-        if cold:
-            basis += (f" (per-query lines cover only {len(cold)} — "
-                      f"truncated capture)")
-        else:
-            basis = f"no per-query timings in {label}; using " + basis
+        basis = f"summary total {sum_total:.1f}s" \
+            + (f" over {n_q} queries" if n_q is not None else "")
+        basis = (basis + f" (per-query lines cover only {len(cold)} — "
+                 "truncated capture)") if cold else \
+            f"no per-query timings in {label}; using {basis}"
     else:
         est = est_pq
         basis = (f"{len(cold)} queries, measured {sum(cold.values()):.1f}s "
                  f"cold + {sum(warm.values()):.1f}s warm")
-    # round-17: per-query attribution + warm contention, straight from
-    # the wrapper (per-line records win; the summary echo fills what the
-    # driver tail truncated). For a TRUNCATED capture without an echo
-    # the surviving per-line colds are arbitrary tail stragglers —
-    # naming them "heaviest" would misdirect, so say so instead.
-    top_cold_echo, _ = parse_summary_echo(lines)
-    if top_cold_echo or (cold and not truncated):
-        merged_cold, _ = merged_attribution(lines)
-        print_heaviest(merged_cold)
+    top_cold, _ = parse_summary_echo(lines)
+    if top_cold or (cold and not truncated):
+        print_heaviest(merged_attribution(lines)[0])
     elif cold:
+        # the surviving lines of a truncated tail are stragglers, not
+        # the heaviest queries
         print("benchguard: heaviest colds [NO COLD ATTRIBUTION] — "
-              "truncated capture without a top_cold echo: the "
-              f"{len(cold)} surviving per-query lines are tail "
-              "stragglers, not the heaviest")
+              f"truncated capture without a top_cold echo: the {len(cold)} "
+              "surviving per-query lines are tail stragglers")
     else:
         print_heaviest({})
-    annotate_warm(lines, fallback_lines, fallback_label)
     verdict = "OK" if est <= budget_s else "OVER BUDGET"
     print(f"benchguard: {basis} -> estimated driver wall {est:.1f}s vs "
           f"budget {budget_s:.0f}s [{verdict}]")
-    if est > budget_s:
-        if from_summary:
-            top_cold = top_cold_echo  # parsed once above
-            if top_cold:
-                # round-17+: the summary's own top_cold echo IS the
-                # heavy-query attribution — no local re-run needed
-                top = sorted(top_cold.items(),
-                             key=lambda kv: (-kv[1], kv[0]))[:5]
-                print("  heaviest cold queries (summary echo): "
-                      + ", ".join(f"{n}={t:.2f}s" for n, t in top))
-            else:
-                # the surviving per-query lines (if any) are arbitrary
-                # tail stragglers — naming them as "heaviest" would
-                # misdirect
-                print("  per-query attribution unavailable in a "
-                      "truncated capture — re-run scripts/run_bench.sh "
-                      "locally to find the heavy queries.")
-        else:
-            top = sorted(cold.items(), key=lambda kv: -kv[1])[:5]
-            print("  heaviest cold queries: "
-                  + ", ".join(f"{n}={t:.1f}s" for n, t in top))
-            print("  cut passes or query cost before the DRIVER discovers "
-                  "this as an rc-124 bench.")
-        # round-18 (VERDICT r17 ask #1b): an over-budget capture with
-        # contention evidence AND a budget-fitting cold_min estimate is
-        # a contention-suspect (rc 3), not a structural red (rc 1)
-        return adjudicate_over_budget(lines, budget_s, est, slowdown)
-    # OK path: still surface flagged inline probes (a fitting run can
-    # carry a burst worth knowing about) and the cold_min delta
-    flags = inline_flags(parse_inline(lines))
-    if flags:
-        print("benchguard: NOTE — inline probes flagged despite the OK "
-              "verdict: "
-              + ", ".join(f"after q-index {a}: {w}" for _, a, w in flags)
-              + "; cold rows in those windows are contention-inflated")
-    est_min, _basis = cold_min_estimate(lines, slowdown)
-    if est_min is not None and est - est_min > 1.0:
-        print(f"benchguard: cold_min delta — contention-adjusted "
-              f"estimate {est_min:.1f}s vs raw {est:.1f}s")
-    return 0
+    return 0 if est <= budget_s else 1
+
+
+def compare(lines_a, label_a, lines_b, label_b, k=5):
+    """Cold, cold_min and warm totals of two captures on their shared
+    queries, plus the k largest per-query cold movers. Returns "REFUSED"
+    when there is nothing to compare, "OK" otherwise."""
+    cold_a, warm_a = merged_attribution(lines_a)
+    cold_b, warm_b = merged_attribution(lines_b)
+    inter = sorted(set(cold_a) & set(cold_b))
+    if not inter:
+        print(f"benchguard: compare [REFUSED] — no query has a cold in both "
+              f"{label_a} ({len(cold_a)}) and {label_b} ({len(cold_b)})")
+        return "REFUSED"
+
+    def ratio(a, b):
+        return f" ({a / b:.2f}x)" if b > 0 else ""
+
+    def cold_min(cold, warm):
+        return sum(min(cold[n], warm.get(n, cold[n])) for n in inter)
+
+    ca = sum(cold_a[n] for n in inter)
+    cb = sum(cold_b[n] for n in inter)
+    ma, mb = cold_min(cold_a, warm_a), cold_min(cold_b, warm_b)
+    print(f"benchguard: compare — {len(inter)} shared queries: cold "
+          f"{ca:.1f}s vs {cb:.1f}s{ratio(ca, cb)}; cold_min {ma:.1f}s vs "
+          f"{mb:.1f}s{ratio(ma, mb)}")
+    wi = sorted(set(warm_a) & set(warm_b))
+    if wi:
+        wa = sum(warm_a[n] for n in wi)
+        wb = sum(warm_b[n] for n in wi)
+        print(f"benchguard: compare — {len(wi)} shared warm rows: warm "
+              f"{wa:.1f}s vs {wb:.1f}s{ratio(wa, wb)}")
+    else:
+        print("benchguard: compare — no shared warm rows")
+    movers = sorted(inter, key=lambda n: (-abs(cold_a[n] - cold_b[n]), n))[:k]
+    print("benchguard: compare — cold movers: "
+          + ", ".join(f"{n} {cold_a[n]:.2f}s vs {cold_b[n]:.2f}s"
+                      f"{ratio(cold_a[n], cold_b[n])}" for n in movers))
+    only_a, only_b = len(cold_a) - len(inter), len(cold_b) - len(inter)
+    if only_a or only_b:
+        print(f"benchguard: compare — excluded {only_a} queries only in "
+              f"{label_a} and {only_b} only in {label_b}")
+    return "OK"
 
 
 def selftest():
-    # over budget: 120 queries x 4 s cold + 3 s warm ~= 1190 s estimate
+    import contextlib
+    import io
+    import tempfile
+
+    def run(fn, *args, **kw):
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            rc = fn(*args, **kw)
+        return rc, buf.getvalue()
+
+    def q(name, cold):
+        return json.dumps({"progress": "query", "name": name, "cold": cold,
+                           "streaming": False})
+
+    def w(name, warm):
+        return json.dumps({"progress": "warm", "name": name, "warm": warm})
+
+    def total(**kw):
+        return json.dumps({"metric": "total", "unit": "sec", **kw})
+
+    B = DEFAULT_BUDGET_S
+    # 120 x (4 s cold + 3 s warm) * 1.3 + 100 = 1192 s: over
     over = [json.dumps({"progress": "query", "name": f"q{i}", "cold": 4.0,
                         "warm": 3.0}) for i in range(120)]
-    assert check(over, DEFAULT_BUDGET_S, "selftest-over") == 1, \
-        "guard failed to trip on a synthetic over-budget table"
-    # under budget: 100 queries x 1.5 s cold + 1 s warm ~= 425 s estimate
-    under = [json.dumps({"metric": "total", "value": 150.0,
-                         "queries": {f"q{i}": 1.5 for i in range(100)},
-                         "queries_warm": {f"q{i}": 1.0 for i in range(100)}})]
-    assert check(under, DEFAULT_BUDGET_S, "selftest-under") == 0, \
-        "guard tripped on a synthetic under-budget table"
-    # empty capture is an error, never a silent pass
-    assert check([], DEFAULT_BUDGET_S, "selftest-empty") == 2
-    # round-8+ shape: progress lines + separate top-K warm lines + a
-    # COMPACT summary (no per-query maps) — the parser must use the
-    # accumulated lines, not return the summary's empty maps
-    compact = (
-        [json.dumps({"progress": "query", "name": f"q{i}", "cold": 1.5,
-                     "streaming": False}) for i in range(100)]
-        + [json.dumps({"progress": "warm", "name": f"q{i}", "warm": 1.0})
-           for i in range(20)]
-        + [json.dumps({"metric": "total", "value": 150.0, "unit": "sec",
-                       "total_warm": 20.0, "n_warm": 20,
-                       "n_queries": 100, "n_errors": 0})])
-    c, w = parse_capture(compact)
-    assert len(c) == 100 and len(w) == 20, \
-        f"compact-shape parse failed: {len(c)} cold / {len(w)} warm"
-    assert check(compact, DEFAULT_BUDGET_S, "selftest-compact") == 0
-    # staleness: a capture older than the newest fixture must refuse
-    import tempfile
+    assert run(check, over, B, "over")[0] == 1
+    # pre-round-8 summary with embedded per-query maps: 100 x 2.5 s -> 425 s
+    under = [total(value=150.0,
+                   queries={f"q{i}": 1.5 for i in range(100)},
+                   queries_warm={f"q{i}": 1.0 for i in range(100)})]
+    assert run(check, under, B, "under")[0] == 0
+    # nothing to judge is an error, never a silent pass
+    assert run(check, [], B, "empty")[0] == 2
+    assert run(check, ["[info] log noise", json.dumps(
+        {"progress": "write", "name": "write_s7_gold", "sec": 0.4})],
+        B, "no-data")[0] == 2
+    # the current shape: progress lines + a compact summary; per-query
+    # lines cover the run, so they are the basis
+    full = ([q(f"q{i}", 3.0) for i in range(100)]
+            + [w(f"q{i}", 0.1 + i * 0.01) for i in range(20)]
+            + [total(value=300.0, total_warm=sum(0.1 + i * 0.01
+                                                 for i in range(19, -1, -1)),
+                     n_warm=20, n_queries=100, n_errors=0, cpus=4)])
+    c, wm = parse_capture(full)
+    assert len(c) == 100 and len(wm) == 20
+    rc, out = run(check, full, B, "full")
+    assert rc == 0 and "100 queries, measured 300.0s" in out \
+        and "truncated" not in out and "heaviest colds — q0=3.00s" in out, out
+    # tail-only summary: judged on value + total_warm
+    assert run(check, [total(value=300.0, total_warm=40.0, n_queries=293)],
+               B, "tail")[0] == 0
+    assert run(check, [total(value=900.0, total_warm=100.0, n_queries=294)],
+               B, "tail-over")[0] == 1
+    # driver-origin timings are not scaled again: 700 s fits at 1.0x
+    # (800 s) but not at 1.3x (1010 s)
+    drv = [total(value=650.0, total_warm=50.0, n_queries=294)]
+    assert run(check, drv, B, "drv", driver_origin=True)[0] == 0
+    assert run(check, drv, B, "local")[0] == 1
+    # truncated tail: 5 surviving 1 s lines must not preempt a 1000 s
+    # summary, nor be named as the heaviest queries
+    trunc = [q(f"q{i}", 1.0) for i in range(5)] \
+        + [total(value=900.0, total_warm=100.0, n_queries=294)]
+    rc, out = run(check, trunc, B, "trunc", driver_origin=True)
+    assert rc == 1 and "cover only 5" in out \
+        and "tail stragglers" in out, out
+    # ... and without n_queries the magnitude fallback still flags it
+    rc, out = run(check, trunc[:-1] + [total(value=900.0, total_warm=100.0)],
+                  B, "trunc-legacy", driver_origin=True)
+    assert rc == 1 and "truncated capture" in out, out
+    # the summary echo names the heaviest colds once the lines are gone;
+    # warm_echo pairs carry their own cold
+    echo = [total(value=300.0, total_warm=40.0, n_queries=295,
+                  top_cold={"q107_stream": 4.82, "q263_x": 3.9},
+                  warm_echo={"q110_wedge": [4.1, 6.31],
+                             "q102_shingle": [2.2, 4.11]})]
+    rc, out = run(check, echo, B, "echo", driver_origin=True)
+    assert rc == 0 and "heaviest colds — q110_wedge=6.31s, " \
+        "q107_stream=4.82s, q102_shingle=4.11s" in out, out
+    assert merged_attribution(echo)[1] == {"q110_wedge": 4.1,
+                                           "q102_shingle": 2.2}
+    # a malformed echo value is skipped, not fatal
+    assert parse_summary_echo([total(value=1.0, warm_echo={"a": [],
+                                                           "b": [1.0]})]) \
+        == ({}, {"b": 1.0})
+    # wrapper shape: unwrapped and flagged driver-origin; raw JSONL and a
+    # lone summary line are not wrappers
+    wrapper = json.dumps({"n": 21, "rc": 0, "cpus": 8, "tail": (
+        '...partial line\n' + q("q1", 2.0) + "\n"
+        + total(value=334.1, total_warm=38.1, n_queries=295) + "\n"),
+        "parsed": None})
+    wl, origin = capture_lines(wrapper)
+    assert origin and len(wl) == 3
+    rc, out = run(check, wl, B, "wrapper", driver_origin=origin)
+    assert rc == 0 and "using summary total" not in out \
+        and "cover only 1" in out, out
+    raw = "\n".join(full) + "\n"
+    assert capture_lines(raw) == (raw.splitlines(), False)
+    assert capture_lines(full[-1]) == ([full[-1]], False)
+    # staleness: a capture older than the newest fixture is refused; a
+    # missing fixtures dir means no check
     with tempfile.TemporaryDirectory() as d:
         fixtures = os.path.join(d, "fixtures")
         os.makedirs(fixtures)
         cap = os.path.join(d, "capture.jsonl")
-        with open(cap, "w") as f:
-            f.write(under[0] + "\n")
-        os.utime(cap, (1000.0, 1000.0))
         fix = os.path.join(fixtures, "t.parquet")
-        with open(fix, "w") as f:
-            f.write("x")
+        for p in (cap, fix):
+            with open(p, "w") as f:
+                f.write("x")
+        os.utime(cap, (1000.0, 1000.0))
         os.utime(fix, (2000.0, 2000.0))
-        assert staleness_error(cap, fixtures) is not None, \
-            "staleness check failed to flag a capture older than fixtures"
+        assert staleness_error(cap, fixtures) is not None
         os.utime(cap, (3000.0, 3000.0))
-        assert staleness_error(cap, fixtures) is None, \
-            "staleness check tripped on a capture newer than fixtures"
-        assert staleness_error(cap, os.path.join(d, "missing")) is None, \
-            "missing fixtures dir must degrade to no-check, not a trip"
-    # canary: clean spins stay CLEAN, one contended spin flips NOISY,
-    # a pre-canary capture says so instead of guessing
-    clean_lines = [
-        json.dumps({"progress": "canary", "phase": p, "spin_sec": s,
-                    "loadavg": [0.8, 0.3, 0.2], "cpus": 32})
-        for p, s in [("start", 0.46), ("mid", 0.55), ("end", 0.50)]]
-    assert annotate_canary(clean_lines) == "CLEAN"
-    noisy_lines = clean_lines[:2] + [json.dumps(
-        {"progress": "canary", "phase": "end", "spin_sec": 2.4,
-         "loadavg": [61.0, 40.0, 22.0], "cpus": 32})]
-    assert annotate_canary(noisy_lines) == "NOISY"
-    assert annotate_canary(compact) == "NO CANARY"
-    # summary-echo fallback: only the compact summary line survived the
-    # driver's stdout tail, canary verdict must still resolve
-    tail_only = [json.dumps(
-        {"metric": "total", "value": 300.0, "unit": "sec",
-         "total_warm": 40.0, "n_warm": 20, "n_queries": 293,
-         "n_errors": 0, "canary_spins": [0.47, 1.9, 0.52],
-         "canary_load1": [0.9, 44.0, 3.1]})]
-    assert annotate_canary(tail_only) == "NOISY"
-    # the CLI path must reach the canary verdict BEFORE the per-query
-    # bail, and a tail-only capture WITH a summary value now adjudicates
-    # the budget from that total (round-15 ask's bonus) instead of RC 2
-    assert check(tail_only, DEFAULT_BUDGET_S, "selftest-tail-cli") == 0
-    # ... and still trips when that summary total blows the budget
-    tail_over = [json.dumps({"metric": "total", "value": 900.0,
-                             "total_warm": 100.0, "n_queries": 294})]
-    assert check(tail_over, DEFAULT_BUDGET_S, "selftest-tail-over") == 1
-    # a capture with NEITHER per-query lines NOR a summary stays RC 2
-    assert check([json.dumps({"progress": "canary", "phase": "end",
-                              "spin_sec": 0.5, "loadavg": [1.0]})],
-                 DEFAULT_BUDGET_S, "selftest-no-data") == 2
-    # PARTIAL-TAIL MERGE (the r14 truncation scenario the merge was
-    # built for): the driver's tail kept only the `end` per-line record
-    # plus the summary echo. All three phases must be reported, with
-    # the per-line's full-precision spin winning for `end` — here the
-    # summary echoes a rounded/noisy end spin of 1.9 while the per-line
-    # says 0.52, so a per-line-wins merge stays CLEAN; either/or logic
-    # would have dropped start/mid (per-line-only) or gone NOISY
-    # (summary-only).
-    partial_tail = [
-        json.dumps({"progress": "canary", "phase": "end",
-                    "spin_sec": 0.52, "loadavg": [3.1, 2.0, 1.0],
-                    "cpus": 32}),
-        json.dumps({"metric": "total", "value": 300.0, "unit": "sec",
-                    "n_queries": 294, "n_errors": 0,
-                    "canary_spins": [0.47, 0.55, 1.9],
-                    "canary_load1": [0.9, 4.0, 3.1]})]
-    merged = parse_canary(partial_tail)
-    assert [p for p, _, _ in merged] == ["start", "mid", "end"], \
-        f"partial-tail merge lost a phase: {merged}"
-    assert dict((p, s) for p, s, _ in merged)["end"] == 0.52, \
-        "per-line precision must win over the summary echo for `end`"
-    assert annotate_canary(partial_tail) == "CLEAN"
-    # round-16+ summary names its phases: a 4th phase (`post`) echoed in
-    # the summary must merge with its per-line record by NAME — one
-    # observation, not a double count under a synthetic p3 key
-    named_phases = [
-        json.dumps({"progress": "canary", "phase": "post",
-                    "spin_sec": 0.51, "loadavg": [1.2], "cpus": 32}),
-        json.dumps({"metric": "total", "value": 300.0,
-                    "canary_phases": ["start", "mid", "end", "post"],
-                    "canary_spins": [0.47, 0.5, 0.49, 0.6],
-                    "canary_load1": [0.9, 1.0, 1.1, 1.2]})]
-    named = parse_canary(named_phases)
-    assert len(named) == 4, f"named-phase merge double-counted: {named}"
-    assert dict((p, s) for p, s, _ in named)["post"] == 0.51, \
-        "per-line must win for the named 4th phase"
-    # io annotation: clean write rows, the r12 8.7x signature, a
-    # filtered capture with no write rows, and an errored write row
-    # (time-to-failure, never fed into the ratio)
-    io_clean = [json.dumps({"progress": "write", "name": n, "sec": s})
-                for n, s in [("write_s5_silver_partitioned", 1.35),
-                             ("write_s5b_dynamic_overwrite", 0.79),
-                             ("write_s7_gold", 0.33)]]
-    assert annotate_io(io_clean) == "IO-CLEAN"
-    io_noisy = io_clean[1:] + [json.dumps(
-        {"progress": "write", "name": "write_s5_silver_partitioned",
-         "sec": 12.2})]
-    assert annotate_io(io_noisy) == "IO-NOISY"
-    assert annotate_io([]) == "NO IO ROWS"
-    io_err = [json.dumps({"progress": "write",
-                          "name": "write_s5_silver_partitioned",
-                          "sec": 0.01, "err": "IOException: disk full"})]
-    assert annotate_io(io_err) == "NO IO ROWS"
-    # tail-only fallback: the compact write_secs echo alone must still
-    # resolve an IO verdict (r12's scenario WAS a driver tail capture),
-    # with null slots (errored writes) skipped
-    io_tail = [json.dumps(
-        {"metric": "total", "value": 300.0, "write_secs": [12.2, None, 0.4],
-         "canary_spins": [0.5, 0.5, 0.5]})]
-    assert annotate_io(io_tail) == "IO-NOISY"
-    io_tail_clean = [json.dumps(
-        {"metric": "total", "value": 300.0,
-         "write_secs": [1.3, 0.8, 0.4]})]
-    assert annotate_io(io_tail_clean) == "IO-CLEAN"
-    # write_names in NON-convention order: attribution must follow the
-    # names, not the slots — 12.2 s in slot 0 belongs to the 0.45 s
-    # nominal gold write here (27x -> IO-NOISY); positional decoding
-    # would have read it as the 1.4 s-nominal silver write (8.7x, also
-    # noisy) so pin the attribution itself via the printed detail
-    import io as _io
-    import contextlib
-    io_named = [json.dumps(
-        {"metric": "total", "value": 300.0,
-         "write_names": ["write_s7_gold", "write_s5_silver_partitioned",
-                         "write_s5b_dynamic_overwrite"],
-         "write_secs": [12.2, 1.3, 0.8]})]
-    buf = _io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        verdict = annotate_io(io_named)
-    assert verdict == "IO-NOISY"
-    assert "write_s7_gold=12.20s (27." in buf.getvalue(), \
-        f"write_names attribution ignored: {buf.getvalue()}"
-    # legacy echo (no write_names) with MORE slots than the positional
-    # convention: must warn that extras are ignored
-    buf = _io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        annotate_io([json.dumps({"metric": "total", "value": 300.0,
-                                 "write_secs": [1.3, 0.8, 0.4, 9.9]})])
-    assert "slots beyond the convention are ignored" in buf.getvalue(), \
-        f"missing too-many-slots warning: {buf.getvalue()}"
-    # ... and with FEWER slots: all slots ARE used, so the message must
-    # say attribution-may-be-wrong, not extras-ignored
-    buf = _io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        v = annotate_io([json.dumps({"metric": "total", "value": 300.0,
-                                     "write_secs": [1.3, 0.8]})])
-    out = buf.getvalue()
-    assert v == "IO-CLEAN" and "positional attribution may be wrong" in out \
-        and "ignored" not in out, f"wrong few-slots warning: {out}"
-    # DRIVER-WRAPPER shape (the round-15 front-door failure):
-    # BENCH_r{N}.json is one JSON object whose string `tail` holds a
-    # TRUNCATED stdout tail — a partial first line, one per-line canary,
-    # and the summary echo. capture_lines must unwrap it so both
-    # verdicts resolve and the summary total adjudicates the budget.
-    wrapper = json.dumps({
-        "n": 294, "rc": 0, "cpus": 32, "sf": "/root/testdata/sf0.1",
-        "tail": ('...,"sf":"/root/testdata/sf0.1"}\n'
-                 + json.dumps({"progress": "canary", "phase": "end",
-                               "spin_sec": 0.54, "loadavg": [4.2, 5.0, 4.8],
-                               "cpus": 32}) + "\n"
-                 + json.dumps({"metric": "total", "value": 334.1,
-                               "unit": "sec", "total_warm": 38.1,
-                               "n_warm": 20, "n_queries": 294,
-                               "n_errors": 0,
-                               "canary_spins": [0.52, 0.61, 0.54],
-                               "canary_load1": [2.8, 6.4, 4.2],
-                               "write_names": WRITE_SUMMARY_ORDER,
-                               "write_secs": [1.59, 0.75, 0.41]}) + "\n"),
-        "parsed": {"metric": "total", "value": 334.1}})
-    wl, wo = capture_lines(wrapper)
-    assert wo, "wrapper must be flagged driver-origin"
-    assert len(wl) == 3, f"wrapper unwrap produced {len(wl)} lines"
-    buf = _io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        rc = check(wl, DEFAULT_BUDGET_S, "selftest-wrapper",
-                   driver_origin=True)
-    out = buf.getvalue()
-    assert rc == 0, f"wrapper capture must adjudicate, got rc {rc}: {out}"
-    assert "canary [CLEAN]" in out and "start=0.52s" in out \
-        and "end=0.54s" in out, f"wrapper canary verdict missing: {out}"
-    assert "io [IO-CLEAN]" in out, f"wrapper io verdict missing: {out}"
-    assert "using summary total" in out, \
-        f"wrapper budget fallback missing: {out}"
-    # a raw JSONL capture must pass through capture_lines untouched
-    # and NOT be flagged driver-origin
-    raw = "\n".join(io_clean) + "\n"
-    assert capture_lines(raw) == (raw.splitlines(), False)
-    # ... including a single-line raw capture (one summary line is one
-    # valid JSON object but has no string `tail`, so NOT a wrapper)
-    assert capture_lines(io_tail_clean[0]) == ([io_tail_clean[0]], False)
-    # DRIVER-ORIGIN BUDGET MODEL: a 700s driver-side total fits a
-    # 1000s budget (ratio ~1.0 + overhead = 800s); applying the
-    # builder-to-driver SLOWDOWN again would false-trip at 1010s.
-    drv_total = [json.dumps({"metric": "total", "value": 650.0,
-                             "total_warm": 50.0, "n_queries": 294})]
-    assert check(drv_total, DEFAULT_BUDGET_S, "selftest-driver-origin",
-                 driver_origin=True) == 0
-    assert check(drv_total, DEFAULT_BUDGET_S,
-                 "selftest-local-origin") == 1
-    # TRUNCATED-TAIL PARTIAL per-query lines must not preempt the
-    # summary total: 5 surviving 1s query lines estimate ~105s, but
-    # the summary says the run took 900s+100s warm — the larger
-    # estimate (summary) must adjudicate, catching the over-budget run
-    trunc = ([json.dumps({"progress": "query", "name": f"q{i}",
-                          "cold": 1.0}) for i in range(5)]
-             + [json.dumps({"metric": "total", "value": 900.0,
-                            "total_warm": 100.0, "n_queries": 294})])
-    buf = _io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        rc = check(trunc, DEFAULT_BUDGET_S, "selftest-trunc-tail",
-                   driver_origin=True)
-    out = buf.getvalue()
-    assert rc == 1, f"truncated-tail over-budget run must trip: {out}"
-    assert "truncated capture" in out and "cover only 5" in out, \
-        f"basis must name the summary + truncation: {out}"
-    # pre-n_queries summary (no coverage signal): the 1-second-epsilon
-    # magnitude fallback must still flag the truncation and trip
-    trunc_legacy = trunc[:-1] + [json.dumps(
-        {"metric": "total", "value": 900.0, "total_warm": 100.0})]
-    buf = _io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        rc = check(trunc_legacy, DEFAULT_BUDGET_S,
-                   "selftest-trunc-legacy", driver_origin=True)
-    out = buf.getvalue()
-    assert rc == 1 and "truncated capture" in out, \
-        f"epsilon fallback failed to flag a pre-n_queries truncation: {out}"
-    # the 5 surviving ~1s stragglers are NOT the heavy queries — the
-    # diagnostic must say attribution is unavailable, never list them
-    assert "heaviest cold queries" not in out \
-        and "attribution unavailable" in out, \
-        f"truncated over-budget diagnostic misattributes: {out}"
-    # ... and a FULL capture (all n_queries covered, warm lines plus a
-    # matching total_warm echo) keeps the per-query basis — pinned via
-    # the printed basis, not just the (identical) rc. The warm values
-    # sum in a different order on each side, so the two estimates can
-    # differ by float ulps: coverage, not magnitude, must decide.
-    full = ([json.dumps({"progress": "query", "name": f"q{i}",
-                         "cold": 3.0}) for i in range(100)]
-            + [json.dumps({"progress": "warm", "name": f"q{i}",
-                           "warm": 0.1 + i * 0.01}) for i in range(20)]
-            + [json.dumps({"metric": "total", "value": 300.0,
-                           "total_warm": sum(0.1 + i * 0.01
-                                             for i in range(19, -1, -1)),
-                           "n_queries": 100})])
-    buf = _io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        rc = check(full, DEFAULT_BUDGET_S, "selftest-full-capture")
-    out = buf.getvalue()
-    assert rc == 0 and "100 queries, measured 300.0s" in out \
-        and "truncated capture" not in out, \
-        f"full capture must keep the per-query basis: {out}"
-    # ---- round-17 cases (VERDICT r16 ask #1) ----
-    # (i) TOP_COLD ECHO SURVIVING A TAIL-ONLY CAPTURE: every per-query
-    # line scrolled out of the driver tail, but the summary's top_cold
-    # echo alone must still name the heaviest colds — the ask's literal
-    # done-criterion ("BENCH_r{N}.json alone names the heavy queries
-    # after the tail truncates the per-query lines").
-    topcold_tail = [json.dumps(
-        {"metric": "total", "value": 300.0, "unit": "sec",
-         "total_warm": 40.0, "n_warm": 20, "n_queries": 295,
-         "n_errors": 0,
-         "top_cold": {"q110_wedge": 6.31, "q107_stream": 4.82,
-                      "q102_shingle": 4.11, "q263_x": 3.9, "q176_y": 3.88},
-         "warm_echo": {"q110_wedge": 4.1, "q102_shingle": 2.2},
-         "canary_spins": [0.47, 0.5, 0.52],
-         "canary_load1": [0.9, 1.0, 1.1]})]
-    buf = _io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        rc = check(topcold_tail, DEFAULT_BUDGET_S, "selftest-topcold-tail",
-                   driver_origin=True)
-    out = buf.getvalue()
-    assert rc == 0, f"selftest-topcold-tail rc {rc}: {out}"
-    assert "heaviest colds — q110_wedge=6.31s, q107_stream=4.82s" in out, \
-        f"top_cold echo must name the heaviest in a tail-only capture: {out}"
-    assert "warm [WARM-CLEAN]" in out, \
-        f"tail-only warm rows must adjudicate against echoed colds: {out}"
-    # ... and when a tail-only capture is ALSO over budget, the echo
-    # replaces the old attribution-unavailable apology
-    topcold_over = [json.dumps(
-        {"metric": "total", "value": 900.0, "total_warm": 100.0,
-         "n_queries": 295,
-         "top_cold": {"q110_wedge": 55.0, "q263_x": 41.2}})]
-    buf = _io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        rc = check(topcold_over, DEFAULT_BUDGET_S, "selftest-topcold-over",
-                   driver_origin=True)
-    out = buf.getvalue()
-    assert rc == 1 and "heaviest cold queries (summary echo): " \
-        "q110_wedge=55.00s" in out \
-        and "attribution unavailable" not in out, \
-        f"over-budget tail must attribute from the echo: {out}"
-    # (ii) WARM > COLD FLAGGED: the r16 smoking gun — q79 warm 11.26 s
-    # against a ~1.5 s cold is a contention artifact that nothing named
-    # at the time; it must come out [WARM-SUSPECT] with both numbers.
-    warm_suspect = [
-        json.dumps({"progress": "query", "name": "q79_semantic_dedup",
-                    "cold": 1.46, "streaming": False}),
-        json.dumps({"progress": "query", "name": "q110_wedge",
-                    "cold": 6.3, "streaming": False}),
-        json.dumps({"progress": "warm", "name": "q79_semantic_dedup",
-                    "warm": 11.26}),
-        json.dumps({"progress": "warm", "name": "q110_wedge",
-                    "warm": 5.9})]
-    buf = _io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        v = annotate_warm(warm_suspect)
-    out = buf.getvalue()
-    assert v == "WARM-SUSPECT" and \
-        "q79_semantic_dedup warm 11.26s vs cold 1.46s (7.7x)" in out, \
-        f"selftest-warm-suspect: warm>cold not flagged: {out}"
-    # warm within jitter of its own cold stays CLEAN (0.50 vs 0.49
-    # would otherwise false-flag every light row)
-    warm_clean = [
-        json.dumps({"progress": "query", "name": "q1", "cold": 0.49}),
-        json.dumps({"progress": "warm", "name": "q1", "warm": 0.50})]
-    assert annotate_warm(warm_clean) == "WARM-CLEAN", \
-        "selftest-warm-clean: sub-jitter warm excess must not flag"
-    # a warm row with NO cold anywhere (echo trimmed) is named as
-    # unadjudicated — and when NO row could be checked, the verdict says
-    # so instead of overclaiming CLEAN
-    buf = _io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        v = annotate_warm([json.dumps(
-            {"progress": "warm", "name": "q_orphan", "warm": 2.0})])
-    assert v == "WARM-UNADJUDICATED" and "no cold attribution for q_orphan" \
-        in buf.getvalue(), \
-        f"orphan warm row must be named unadjudicated: {buf.getvalue()}"
-    assert annotate_warm([]) == "NO WARM DATA"
-    # a 0.00 cold (sub-5ms rendered at the echo's 2 decimals) must not
-    # divide-by-zero the suspect detail — verdict still lands, ratio n/a
-    warm_zero_cold = [
-        json.dumps({"metric": "total", "value": 1.0, "n_queries": 1,
-                    "top_cold": {"q_tiny": 0.00},
-                    "warm_echo": {"q_tiny": 0.50}})]
-    buf = _io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        v = annotate_warm(warm_zero_cold)
-    assert v == "WARM-SUSPECT" and "cold ~0: ratio n/a" in buf.getvalue(), \
-        f"selftest-warm-zero-cold: 0.00 cold must not crash: {buf.getvalue()}"
-    # (iii) DISJOINT-COHORT WARM COMPARISON REFUSING RATHER THAN
-    # COMPARING: the warm cohort is each run's own top-K cold ranking;
-    # r15-vs-r16 compared different sets and manufactured a "+59 %
-    # regression". Zero shared queries -> REFUSED, no ratio printed.
-    cohort_a = [json.dumps({"progress": "warm", "name": f"qa{i}",
-                            "warm": 1.0}) for i in range(3)]
-    cohort_b = [json.dumps({"progress": "warm", "name": f"qb{i}",
-                            "warm": 2.0}) for i in range(3)]
-    buf = _io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        v = compare_warm(cohort_a, "selftest-warm-disjoint-a",
-                         cohort_b, "selftest-warm-disjoint-b")
-    out = buf.getvalue()
-    assert v == "REFUSED" and "cohorts are disjoint" in out \
-        and "x)" not in out, \
-        f"selftest-warm-disjoint: must refuse, not compare: {out}"
-    # overlapping cohorts compare on the INTERSECTION only, naming the
-    # set-shift exclusions
-    overlap_b = cohort_a[:2] + [json.dumps(
-        {"progress": "warm", "name": "qb9", "warm": 5.0})]
-    buf = _io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        v = compare_warm(cohort_a, "capA", overlap_b, "capB")
-    out = buf.getvalue()
-    assert v == "OK" and "intersection 2 queries" in out \
-        and "excluded 1 rows only in capA and 1 only in capB" in out, \
-        f"intersection compare wrong: {out}"
-    # an empty warm side refuses too (nothing comparable)
-    assert compare_warm(cohort_a, "a", [], "b") == "REFUSED"
-    # COLD-COMPARE (round-17 self-review addition): cross-capture cold
-    # ratios normalized by the canary-spin ratio. (i) a uniformly
-    # 1.3x-slower capture whose spins are ALSO 1.3x slower is host
-    # drift, not a regression — the r17 363.9s-vs-269.7s case.
-    def cold_cap(times, spin):
-        per = [json.dumps({"progress": "query", "name": n, "cold": t,
-                           "streaming": False}) for n, t in times.items()]
-        return per + [json.dumps({"progress": "canary", "phase": "start",
-                                  "spin_sec": spin, "loadavg": [0.5]})]
-    base = {"q1": 1.0, "q2": 2.0, "q3": 4.0}
-    drifted = {n: t * 1.3 for n, t in base.items()}
-    buf = _io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        v = compare_cold(cold_cap(drifted, 0.65), "now",
-                         cold_cap(base, 0.50), "baseline")
-    out = buf.getvalue()
-    assert v == "DRIFT-EXPLAINED" and "drift-normalized 1.00x" in out \
-        and "outliers" not in out, \
-        f"selftest-cold-drift: uniform drift must be explained: {out}"
-    # (ii) a real regression can't hide behind drift: same spins, one
-    # query 5x — aggregate verdict flips and the query is NAMED
-    regressed = dict(base, q3=20.0)
-    buf = _io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        v = compare_cold(cold_cap(regressed, 0.50), "now",
-                         cold_cap(base, 0.50), "baseline")
-    out = buf.getvalue()
-    assert v == "COLD-SHIFT" and "q3 20.00s vs 4.00s (5.0x)" in out, \
-        f"selftest-cold-regression: regression must be named: {out}"
-    # (iii) disjoint cohorts refuse; (iv) no canary -> raw ratio only
-    buf = _io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        v = compare_cold(cold_cap({"qa": 1.0}, 0.5), "a",
-                         cold_cap({"qb": 1.0}, 0.5), "b")
-    assert v == "REFUSED" and "disjoint" in buf.getvalue()
-    no_canary = [json.dumps({"progress": "query", "name": "q1",
-                             "cold": 1.3, "streaming": False})]
-    buf = _io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        v = compare_cold(no_canary, "a", cold_cap(base, 0.5), "b")
-    assert v == "NO-CANARY" and "raw 1.30x" in buf.getvalue(), \
-        f"selftest-cold-nocanary: {buf.getvalue()}"
-    # wrapper detection TIGHTENED (r16 ADVICE): a single JSON object
-    # with a string `tail` but NO rc/parsed is NOT the driver wrapper —
-    # it must pass through as a raw capture, keeping the SLOWDOWN ratio
-    not_wrapper = json.dumps({"metric": "total", "value": 300.0,
-                              "tail": "some unrelated string"})
-    nl, no = capture_lines(not_wrapper)
-    assert not no and nl == [not_wrapper], \
-        "tail-only object without rc/parsed must not unwrap as wrapper"
-    # per-line precision beats the 2-decimal echo in the merge
-    echo_merge = [
-        json.dumps({"progress": "query", "name": "q110_wedge",
-                    "cold": 6.312345}),
-        json.dumps({"metric": "total", "value": 300.0,
-                    "top_cold": {"q110_wedge": 6.31, "q263_x": 3.9}})]
-    mc, _ = merged_attribution(echo_merge)
-    assert mc["q110_wedge"] == 6.312345 and mc["q263_x"] == 3.9, \
-        f"per-line must win in the attribution merge: {mc}"
-    # ---- round-18 cases (VERDICT r17 asks #1b/#2) ----
-    # (i) INLINE-PROBE CONTENTION SPAN DETECTION: an over-budget capture
-    # whose inline probes flag a window must come out rc 3 with the
-    # window bracketed by query index — the probes are the in-run
-    # evidence the 3-point canary provably lacked in r17.
-    inline_over = (
-        [json.dumps({"progress": "query", "name": f"q{i:03d}", "cold": 10.0,
-                     "streaming": False}) for i in range(100)]
-        + [json.dumps({"progress": "canary_inline", "after": a,
-                       "spin_sec": 0.5,
-                       "io_sec": 9.0 if a == 50 else 0.15,
-                       "loadavg": [2.0]}) for a in (0, 25, 50, 75, 100)]
-        + [json.dumps({"progress": "warm", "name": f"q{i:03d}",
-                       "warm": 0.9}) for i in range(20)]
-        + [json.dumps({"metric": "total", "value": 1000.0,
-                       "total_warm": 18.0, "n_queries": 100,
-                       "total_cold_min": 250.0})])
-    buf = _io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        rc = check(inline_over, DEFAULT_BUDGET_S, "selftest-inline-span",
-                   driver_origin=True)
-    out = buf.getvalue()
-    assert rc == 3, f"selftest-inline-span: want rc 3, got {rc}: {out}"
-    assert "OVER-BUDGET-CONTENTION-SUSPECT" in out \
-        and "(25,50] io 9.00s (median 0.15s)" in out, \
-        f"selftest-inline-span: window not bracketed: {out}"
-    assert "explicit total_cold_min 250.0s" in out, \
-        f"selftest-inline-span: explicit cold_min basis ignored: {out}"
-    # an inflated SPIN probe flags too (CPU-contention windows)
-    spin_probe = [(0, 0.5, 0.15), (25, 2.4, 0.15), (50, 0.5, 0.15)]
-    fl = inline_flags(spin_probe)
-    assert len(fl) == 1 and fl[0][1] == 25 and "spin 2.40s" in fl[0][2], \
-        f"spin-probe flag wrong: {fl}"
-    assert inline_windows(spin_probe, fl) == [(0, 25, fl[0][2])]
-    # (ii) CLEAN-PROBE OVER STAYS A HARD RED: same over-budget shape but
-    # every probe clean, warm rows proportionate (no asymmetry), and the
-    # cold_min basis still over — a structural blow-up must stay rc 1.
-    clean_over = (
-        [json.dumps({"progress": "query", "name": f"q{i:03d}", "cold": 10.0,
-                     "streaming": False}) for i in range(100)]
-        + [json.dumps({"progress": "canary_inline", "after": a,
-                       "spin_sec": 0.5, "io_sec": 0.15,
-                       "loadavg": [2.0]}) for a in (0, 25, 50, 75, 100)]
-        + [json.dumps({"progress": "warm", "name": f"q{i:03d}",
-                       "warm": 9.5}) for i in range(20)]
-        + [json.dumps({"metric": "total", "value": 1000.0,
-                       "total_warm": 190.0, "n_queries": 100,
-                       "total_cold_min": 990.0})])
-    buf = _io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        rc = check(clean_over, DEFAULT_BUDGET_S, "selftest-clean-over",
-                   driver_origin=True)
-    out = buf.getvalue()
-    assert rc == 1 and "OVER-BUDGET-CONTENTION-SUSPECT" not in out, \
-        f"selftest-clean-over: clean over-budget must stay rc 1: {out}"
-    # ... and contention EVIDENCE without a fitting cold_min stays hard
-    # red too (clean samples confirm the suite itself is too big): flag
-    # a probe but keep total_cold_min over budget
-    evidence_still_over = inline_over[:-1] + [json.dumps(
-        {"metric": "total", "value": 1000.0, "total_warm": 18.0,
-         "n_queries": 100, "total_cold_min": 950.0})]
-    buf = _io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        rc = check(evidence_still_over, DEFAULT_BUDGET_S,
-                   "selftest-evidence-still-over", driver_origin=True)
-    out = buf.getvalue()
-    assert rc == 1 and "the red stays hard" in out, \
-        f"selftest-evidence-still-over: must stay rc 1: {out}"
-    # (iii) PRE-INLINE FALLBACK — the literal BENCH_r17 shape: tail-only
-    # wrapper, no probes, warm echo clean, contiguous cold spans 14-56x.
-    # The asymmetry heuristic must name the spans and rule rc 3 from the
-    # echo-derived pseudo-min.
-    r17_like = [json.dumps(
-        {"metric": "total", "value": 1396.2, "unit": "sec",
-         "total_warm": 46.6, "n_warm": 20, "n_queries": 295, "n_errors": 0,
-         "top_cold": {"q174_rfm": 90.02, "q176_reach": 79.14,
-                      "q171_contain": 77.42, "q136_hist": 77.20,
-                      "q227_recon": 74.57, "q135_chain": 50.85,
-                      "q175_median": 49.12, "q186_lift": 45.98,
-                      "q172_dup": 27.83, "q226_sla": 23.52,
-                      "q107_stream": 19.77, "q162_bm25": 10.17},
-         "warm_echo": {"q174_rfm": 4.61, "q176_reach": 5.83,
-                       "q171_contain": 2.59, "q136_hist": 3.69,
-                       "q227_recon": 2.15, "q135_chain": 0.81,
-                       "q175_median": 2.91, "q186_lift": 3.38,
-                       "q172_dup": 1.75, "q226_sla": 2.68,
-                       "q162_bm25": 6.93},
-         "canary_spins": [0.65, 0.65, 0.61],
-         "canary_load1": [4.8, 9.9, 7.7]})]
-    buf = _io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        rc = check(r17_like, DEFAULT_BUDGET_S, "selftest-asym-fallback",
-                   driver_origin=True)
-    out = buf.getvalue()
-    assert rc == 3 and "OVER-BUDGET-CONTENTION-SUSPECT" in out, \
-        f"selftest-asym-fallback: want rc 3: {out}"
-    # the reduced echo omits q173 (which never ranked into top_cold in
-    # r17 either) — the gap<=2 rule must still merge q171-q176; q186
-    # stands alone here because this fixture carries no q185
-    assert "q171-q176" in out and "q135-q136" in out \
-        and "q226-q227" in out and "q186_lift" in out, \
-        f"selftest-asym-fallback: spans wrong (this reduced echo covers " \
-        f"171-176/135-136/226-227 + singleton q186): {out}"
-    assert "q162" not in out.split("polluted spans")[1].split("\n")[0], \
-        f"q162 (cold within 1.5x of warm) must NOT be a suspect: {out}"
-    # the clean local capture's landing-amortized rows (q110 15.6x on a
-    # clean host) must NOT produce the suspect verdict alone: two such
-    # rows are below ASYM_MIN_SUSPECTS, so an over-budget capture with
-    # only them stays a hard red
-    landed_over = [json.dumps(
-        {"metric": "total", "value": 900.0, "total_warm": 100.0,
-         "n_queries": 295,
-         "top_cold": {"q110_tri": 7.11, "q263_mat": 5.27},
-         "warm_echo": {"q110_tri": 0.46, "q263_mat": 0.69}})]
-    buf = _io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        rc = check(landed_over, DEFAULT_BUDGET_S, "selftest-landed-over",
-                   driver_origin=True)
-    out = buf.getvalue()
-    assert rc == 1 and "OVER-BUDGET-CONTENTION-SUSPECT" not in out, \
-        f"selftest-landed-over: 2 landing-amortized rows must not " \
-        f"exonerate: {out}"
-    # group_spans unit verdicts: gap<=2 merges (q173 missing from the
-    # echo must not split q171-q176), gap>2 splits, non-qN names stay
-    asym_spans, asym_singles = group_spans(
-        ["q171_a", "q172_b", "q174_c", "q175_d", "q176_e", "q45_f",
-         "write_gold"])
-    assert asym_spans == ["q171-q176"] \
-        and asym_singles == ["write_gold", "q45_f"], \
-        f"group_spans wrong: {asym_spans} / {asym_singles}"
-    # parse_inline merge: per-line precision wins over the summary echo
-    inline_merge = [
-        json.dumps({"progress": "canary_inline", "after": 25,
-                    "spin_sec": 0.512345, "io_sec": 0.151}),
-        json.dumps({"metric": "total", "value": 1.0,
-                    "inline_after": [0, 25], "inline_spin": [0.5, 0.51],
-                    "inline_io": [0.15, 0.15]})]
-    probes = parse_inline(inline_merge)
-    assert probes == [(0, 0.5, 0.15), (25, 0.512345, 0.151)], \
-        f"parse_inline merge wrong: {probes}"
-    # degenerate canary spin refuses the cold comparison (r17 ADVICE:
-    # truthiness conflated zero spin with no canary)
-    zero_spin = [json.dumps({"progress": "query", "name": "q1",
-                             "cold": 1.0, "streaming": False}),
-                 json.dumps({"progress": "canary", "phase": "start",
-                             "spin_sec": 0.0, "loadavg": [0.5]})]
-    buf = _io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        v = compare_cold(zero_spin, "a", cold_cap(base, 0.5), "b")
-    assert v == "REFUSED" and "degenerate canary spin" in buf.getvalue(), \
-        f"zero-spin capture must refuse, not NO-CANARY: {buf.getvalue()}"
-    # an OK capture with a flagged probe still surfaces the note (a
-    # fitting run can carry a burst worth knowing about)
-    ok_flagged = (
-        [json.dumps({"progress": "query", "name": f"q{i}", "cold": 1.0,
-                     "streaming": False}) for i in range(50)]
-        + [json.dumps({"progress": "canary_inline", "after": a,
-                       "spin_sec": 0.5,
-                       "io_sec": 5.0 if a == 25 else 0.15})
-           for a in (0, 25, 50)]
-        + [json.dumps({"metric": "total", "value": 50.0, "n_queries": 50,
-                       "total_cold_min": 48.0})])
-    buf = _io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        rc = check(ok_flagged, DEFAULT_BUDGET_S, "selftest-ok-flagged")
-    out = buf.getvalue()
-    assert rc == 0 and "inline probes flagged despite the OK verdict" \
-        in out, f"selftest-ok-flagged: {out}"
-    # ---- round-19 cases (VERDICT r18 ask #1) ----
-    # (i) WARM PAIR ECHO: a tail-only round-19 summary whose warm_echo
-    # values are [warm, cold] pairs — every warm row adjudicates from
-    # the artifact alone, pair colds merge into the attribution map,
-    # and a suspect pair is still flagged. This is the shape that makes
-    # the r18 "7 unadjudicated warm rows" gap structurally impossible.
-    pair_tail = [json.dumps(
-        {"metric": "total", "value": 300.0, "unit": "sec",
-         "total_warm": 10.0, "n_warm": 3, "n_queries": 295,
-         "n_errors": 0,
-         "top_cold": {"q107_stream": 9.4},
-         "warm_echo": {"q110_wedge": [4.1, 6.31],
-                       "q68_mix": [1.2, 2.0],
-                       "q79_sem": [11.26, 1.46]}})]
-    buf = _io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        v = annotate_warm(pair_tail)
-    out = buf.getvalue()
-    assert v == "WARM-SUSPECT" \
-        and "q79_sem warm 11.26s vs cold 1.46s (7.7x)" in out \
-        and "no cold attribution" not in out, \
-        f"selftest-warm-pair-echo: pairs must self-adjudicate: {out}"
-    mc, mw = merged_attribution(pair_tail)
-    assert mc == {"q107_stream": 9.4, "q110_wedge": 6.31,
-                  "q68_mix": 2.0, "q79_sem": 1.46} \
-        and mw == {"q110_wedge": 4.1, "q68_mix": 1.2, "q79_sem": 11.26}, \
-        f"selftest-warm-pair-echo: pair merge wrong: {mc} / {mw}"
-    # an all-clean pair capture says WARM-CLEAN with zero NOTEs
-    pair_clean = [json.dumps(
-        {"metric": "total", "value": 300.0, "n_queries": 295,
-         "warm_echo": {"qa": [1.0, 2.0], "qb": [0.5, 1.1]}})]
-    buf = _io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        v = annotate_warm(pair_clean)
-    assert v == "WARM-CLEAN" and "NOTE" not in buf.getvalue(), \
-        f"selftest-warm-pair-clean: {buf.getvalue()}"
-    # ... and the pair colds feed the echo-derived cold_min correction
-    # (the warm member of each pair is the second sample)
-    pair_min = [json.dumps(
-        {"metric": "total", "value": 100.0, "total_warm": 5.0,
-         "n_queries": 295,
-         "warm_echo": {"qa": [4.0, 50.0], "qb": [1.0, 1.1]}})]
-    # correction = (50-4) + (1.1-1.0) = 46.1 -> pseudo-min 100-46.1
-    est, basis = cold_min_estimate(pair_min, 1.0)
-    assert est is not None and "pseudo-min 53.9s" in basis, \
-        f"selftest-pair-coldmin: pair colds must correct: {est} / {basis}"
-    # (ii) COLD-ATTRIBUTION FALLBACK — the literal BENCH_r18 gap: a
-    # legacy (single-value) echo whose trim dropped a warm row's cold;
-    # the committed local capture carries it, so the row adjudicates
-    # with the provenance named and NO "no cold attribution" NOTE.
-    r18_like = [json.dumps(
-        {"metric": "total", "value": 500.0, "total_warm": 6.0,
-         "n_queries": 295,
-         "top_cold": {"q110_wedge": 7.0},
-         "warm_echo": {"q110_wedge": 4.0, "q68_mix": 2.0}})]
-    fb = [json.dumps({"progress": "query", "name": "q68_mix",
-                      "cold": 3.4, "streaming": False})]
-    buf = _io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        v = annotate_warm(r18_like, fb, "bench_local.jsonl")
-    out = buf.getvalue()
-    # the borrowed row's ACTUAL ratio is printed inside the NOTE even
-    # though it does not trip the looser cross-capture threshold (r19
-    # ADVICE: a 1.8x borrowed row used to be invisible in WARM-CLEAN)
-    assert v == "WARM-CLEAN" and "no cold attribution" not in out \
-        and "cold attribution for " \
-            "q68_mix (warm 2.00s vs borrowed cold 3.40s, 0.6x)" in out \
-        and "taken from bench_local.jsonl" in out, \
-        f"selftest-warm-fallback: {out}"
-    # a fallback-attributed SUSPECT names its cross-capture provenance
-    # inline (it is attribution grade, not same-run grade)
-    buf = _io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        v = annotate_warm(
-            [json.dumps({"metric": "total", "value": 500.0,
-                         "n_queries": 295,
-                         "warm_echo": {"q68_mix": 9.0}})],
-            fb, "bench_local.jsonl")
-    out = buf.getvalue()
-    assert v == "WARM-SUSPECT" \
-        and "q68_mix warm 9.00s vs cold 3.40s (2.6x) " \
-            "[cold from bench_local.jsonl]" in out, \
-        f"selftest-warm-fallback-suspect: {out}"
-    # a fallback-attributed row at 1.5x stays CLEAN (cross-capture
-    # scatter: r18's q272/q68 sat at 1.4-1.7x their LOCAL colds while
-    # every same-run row was clean) — the same 1.5x SAME-RUN flags, so
-    # the pair pins that the looser threshold applies to the borrowed
-    # basis only
-    marginal = {"metric": "total", "value": 500.0, "n_queries": 295,
-                "warm_echo": {"q68_mix": 5.1}}
-    # ... and a 2.8x of a SUB-SECOND fallback cold stays clean too (the
-    # q68 flip: the same query's cold scattered 0.79s vs 1.31s across
-    # two clean local captures, so a baseline refresh must not flip the
-    # verdict — the absolute floor absorbs small-row scatter)
-    buf = _io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        v = annotate_warm(
-            [json.dumps({"metric": "total", "value": 500.0,
-                         "n_queries": 295,
-                         "warm_echo": {"q68_small": 2.23}})],
-            [json.dumps({"progress": "query", "name": "q68_small",
-                         "cold": 0.79, "streaming": False})],
-            "bench_local.jsonl")
-    assert v == "WARM-CLEAN", \
-        f"selftest-warm-fallback-smallrow: sub-second scatter must not " \
-        f"flip the verdict: {buf.getvalue()}"
-    buf = _io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        v = annotate_warm([json.dumps(marginal)], fb, "bench_local.jsonl")
-    assert v == "WARM-CLEAN", \
-        f"selftest-warm-fallback-marginal: 1.5x cross-capture must stay " \
-        f"clean: {buf.getvalue()}"
-    same_run = dict(marginal, top_cold={"q68_mix": 3.4})
-    buf = _io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        v = annotate_warm([json.dumps(same_run)], fb, "bench_local.jsonl")
-    assert v == "WARM-SUSPECT", \
-        f"selftest-warm-fallback-marginal: the same 1.5x SAME-RUN must " \
-        f"flag: {buf.getvalue()}"
-    # a row the fallback ALSO lacks stays named-unadjudicated, and the
-    # NOTE says the fallback was consulted
-    buf = _io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        annotate_warm(
-            [json.dumps({"metric": "total", "value": 500.0,
-                         "n_queries": 295,
-                         "warm_echo": {"q_orphan": 2.0, "q68_mix": 2.0}})],
-            fb, "bench_local.jsonl")
-    out = buf.getvalue()
-    assert "no cold attribution for q_orphan" in out \
-        and "the fallback capture lacks them too" in out, \
-        f"selftest-warm-fallback-miss: {out}"
-    # (iii) COLD_MIN COMPARISON BASIS: two driver artifacts with
-    # explicit total_cold_min — the guard prints `cold_min vs prior
-    # cold_min`, drift-normalized, so the raw `value` never anchors the
-    # headline alone. A burst-inflated `value` (1396s) with a clean
-    # cold_min (450s) against a prior 443.8s at equal spins reads
-    # DRIFT-EXPLAINED; a real cold_min shift reads COLDMIN-SHIFT.
-    def cm_cap(value, tcm, spin):
-        return [json.dumps({"metric": "total", "value": value,
-                            "total_warm": 40.0, "n_queries": 295,
-                            "total_cold_min": tcm,
-                            "canary_spins": [spin, spin, spin]})]
-    buf = _io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        v = compare_cold_min(cm_cap(1396.2, 450.0, 0.52), "r19",
-                             cm_cap(587.6, 443.8, 0.52), "r18")
-    out = buf.getvalue()
-    assert v == "DRIFT-EXPLAINED" \
-        and "cold_min r19 450.0s (explicit) vs prior cold_min r18 443.8s" \
-        in out and "round-over-round basis" in out, \
-        f"selftest-coldmin-compare: {out}"
-    buf = _io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        v = compare_cold_min(cm_cap(900.0, 880.0, 0.52), "now",
-                             cm_cap(587.6, 443.8, 0.52), "prior")
-    assert v == "COLDMIN-SHIFT", \
-        f"selftest-coldmin-shift: a real cold_min move must be named: " \
-        f"{buf.getvalue()}"
-    # a pre-round-18 capture (no total_cold_min, partial per-query
-    # coverage) refuses rather than inventing a basis
-    legacy_cm = [json.dumps({"metric": "total", "value": 500.0,
-                             "n_queries": 295})]
-    buf = _io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        v = compare_cold_min(legacy_cm, "old", cm_cap(500.0, 450.0, 0.5),
-                             "new")
-    assert v == "REFUSED" and "no cold_min basis in old" in buf.getvalue(), \
-        f"selftest-coldmin-refused: {buf.getvalue()}"
-    # ... and a full local capture DERIVES its cold_min per-query
-    derived_cm = (
-        [json.dumps({"progress": "query", "name": f"q{i}", "cold": 2.0,
-                     "streaming": False}) for i in range(10)]
-        + [json.dumps({"progress": "warm", "name": "q0", "warm": 0.5})]
-        + [json.dumps({"metric": "total", "value": 20.0,
-                       "total_warm": 0.5, "n_queries": 10,
-                       "canary_spins": [0.5]})])
-    tcm, prov, nq = total_cold_min_of(derived_cm)
-    assert tcm == 18.5 and "per-query min over 10 queries" in prov \
-        and nq == 10, f"selftest-coldmin-derived: {tcm} / {prov} / {nq}"
-    # catalog-size drift between the two artifacts is NAMED (the totals
-    # sum different query sets)
-    buf = _io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        compare_cold_min(cm_cap(500.0, 450.0, 0.5), "now",
-                         [json.dumps({"metric": "total", "value": 400.0,
-                                      "total_cold_min": 380.0,
-                                      "n_queries": 200,
-                                      "canary_spins": [0.5]})], "prior")
-    assert "query counts differ (295 vs 200)" in buf.getvalue(), \
-        f"selftest-coldmin-setshift: {buf.getvalue()}"
-    # the full check() path on a TAIL-ONLY pair-echo DRIVER WRAPPER —
-    # the exact shape BENCH_r19+.json has after the driver truncates
-    # the per-query lines: every warm row must adjudicate from its own
-    # pair, the heaviest colds must merge from top_cold ∧ pairs, and no
-    # fallback or unadjudicated NOTE may appear
-    pair_wrapper = json.dumps({
-        "n": 295, "rc": 0, "cpus": 32, "sf": "/root/testdata/sf0.1",
-        "tail": json.dumps(
-            {"metric": "total", "value": 405.9, "unit": "sec",
-             "total_warm": 49.6, "total_cold_min": 349.27,
-             "n_warm": 2, "n_queries": 295, "n_errors": 0,
-             "top_cold": {"q110_tri": 13.12, "q107_stream": 12.93},
-             "warm_echo": {"q102_prefix": [2.4, 7.09],
-                           "q139_adc": [2.1, 5.32]},
-             "canary_spins": [0.71, 0.66, 0.72],
-             "canary_load1": [1.6, 1.9, 1.6],
-             "write_names": WRITE_SUMMARY_ORDER,
-             "write_secs": [1.75, 1.06, 0.60]}) + "\n",
-        "parsed": {"metric": "total", "value": 405.9}})
-    pw_lines, pw_origin = capture_lines(pair_wrapper)
-    assert pw_origin, "pair wrapper must be flagged driver-origin"
-    buf = _io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        rc = check(pw_lines, DEFAULT_BUDGET_S, "selftest-pair-wrapper",
-                   driver_origin=True,
-                   fallback_lines=fb, fallback_label="bench_local.jsonl")
-    out = buf.getvalue()
-    assert rc == 0 and "warm [WARM-CLEAN]" in out \
-        and "taken from" not in out and "no cold attribution" not in out \
-        and "q110_tri=13.12s" in out and "q102_prefix=7.09s" in out, \
-        f"selftest-pair-wrapper: {out}"
-    # (iv) REVIEW FIXES. Malformed warm_echo values parse-or-skip like
-    # every other parser here — one corrupt value must not turn an
-    # adjudication into a traceback (the skipped row simply goes back
-    # to being unattributed)
-    bad_pairs = [json.dumps(
-        {"metric": "total", "value": 10.0, "n_queries": 3,
-         "top_cold": {"q_ok": 5.0, "q_badtc": "x"},
-         "warm_echo": {"q_empty": [], "q_null": [None, 2.0],
-                       "q_str": ["x", 1.0], "q_ok": [1.0, 5.0]}})]
-    tc_b, we_b = parse_summary_echo(bad_pairs)
-    assert we_b == {"q_ok": 1.0} and tc_b == {"q_ok": 5.0}, \
-        f"selftest-pair-malformed: {tc_b} / {we_b}"
-    # last-summary-wins: a stale earlier summary's top_cold must not
-    # adjudicate a later summary's warm rows (concatenated runs / a
-    # crashed retry's summary in the same capture)
-    two_sums = [
-        json.dumps({"metric": "total", "value": 9.0,
-                    "top_cold": {"q110": 7.0}}),
-        json.dumps({"metric": "total", "value": 10.0,
-                    "warm_echo": {"q110": [4.1, 6.31]}})]
-    tc2, we2 = parse_summary_echo(two_sums)
-    assert tc2 == {"q110": 6.31} and we2 == {"q110": 4.1}, \
-        f"selftest-echo-last-summary: {tc2} / {we2}"
-    # zero cold_min refuses in BOTH directions (a 0.0s explicit basis
-    # must never print a confident 0.00x as the round-over-round anchor)
-    buf = _io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        v = compare_cold_min(cm_cap(10.0, 0.0, 0.5), "now",
-                             cm_cap(500.0, 450.0, 0.5), "prior")
-    assert v == "REFUSED" and "zero cold_min total in now" in buf.getvalue(), \
-        f"selftest-coldmin-zero-now: {buf.getvalue()}"
-    # json_records multi-pass safety (r18 ADVICE): the multi-pass entry
-    # points materialize, so a one-shot iterator input cannot silently
-    # drop data
-    est_iter, _ = cold_min_estimate(iter(pair_min), 1.0)
-    assert est_iter is not None, \
-        "cold_min_estimate must materialize a one-shot iterator input"
-    assert check(iter(under), DEFAULT_BUDGET_S, "selftest-iter-input") == 0, \
-        "check must materialize a one-shot iterator input"
-    # ---- round-20 cases (VERDICT r19 ask #1: self-HEALING retries) ----
-    # (i) WARM RETRY RESCUE, per-line shape: the r16 q79 contention
-    # artifact (warm 11.26s vs cold 1.46s) whose end-of-run retry
-    # measured 1.41s — min adjudicates, verdict flips to WARM-CLEAN,
-    # both samples visible under the `retried` grade.
-    retry_rescue = [
-        json.dumps({"progress": "query", "name": "q79_sem", "cold": 1.46,
-                    "streaming": False}),
-        json.dumps({"progress": "warm", "name": "q79_sem", "warm": 11.26}),
-        json.dumps({"progress": "warm_retry", "name": "q79_sem",
-                    "warm_retry": 1.41, "first": 11.26})]
-    buf = _io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        v = annotate_warm(retry_rescue)
-    out = buf.getvalue()
-    assert v == "WARM-CLEAN" \
-        and "rescued by in-run retry" in out \
-        and "q79_sem first 11.26s, retry 1.41s vs cold 1.46s" in out \
-        and "grade `retried`" in out, \
-        f"selftest-retry-rescue: {out}"
-    # (ii) ... and via the tail-only TRIPLE echo (the driver-artifact
-    # path): the third warm_echo slot is the retry; pair rows coexist
-    triple_tail = [json.dumps(
-        {"metric": "total", "value": 300.0, "n_queries": 295,
-         "warm_echo": {"q79_sem": [11.26, 1.46, 1.41],
-                       "q110_wedge": [4.1, 6.31]}})]
-    buf = _io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        v = annotate_warm(triple_tail)
-    out = buf.getvalue()
-    assert v == "WARM-CLEAN" and "retried in-run" in out, \
-        f"selftest-retry-triple: {out}"
-    mc3, mw3 = merged_attribution(triple_tail)
-    assert mc3 == {"q79_sem": 1.46, "q110_wedge": 6.31} \
-        and mw3 == {"q79_sem": 11.26, "q110_wedge": 4.1}, \
-        f"selftest-retry-triple-merge: triples must still merge cold/" \
-        f"first-warm like pairs: {mc3} / {mw3}"
-    assert parse_warm_retries(triple_tail) == {"q79_sem": 1.41}, \
-        "triple third slot must parse as the retry"
-    # per-line retry precision wins over the echo's 2-decimal slot
-    assert parse_warm_retries(
-        retry_rescue + [json.dumps(
-            {"metric": "total", "value": 1.0,
-             "warm_echo": {"q79_sem": [11.26, 1.46, 1.4]}})]
-    ) == {"q79_sem": 1.41}, "per-line warm_retry must win the merge"
-    # an errored retry measured time-to-failure, never a second sample
-    assert parse_warm_retries([json.dumps(
-        {"progress": "warm_retry", "name": "q79_sem", "warm_retry": 0.01,
-         "err": "OOM"})]) == {}, "errored retry must be skipped"
-    # (iii) a retry that is ITSELF still suspect leaves the row flagged
-    # (both samples contended, or a genuine steady-state regression) —
-    # the retry must not launder a real regression
-    retry_fail = [json.dumps(
-        {"metric": "total", "value": 300.0, "n_queries": 295,
-         "warm_echo": {"q79_sem": [11.26, 1.46, 10.9]}})]
-    buf = _io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        v = annotate_warm(retry_fail)
-    out = buf.getvalue()
-    assert v == "WARM-SUSPECT" and "[retry 10.90s also suspect]" in out, \
-        f"selftest-retry-fail: a still-suspect retry must stay flagged: " \
-        f"{out}"
-    # (iv) IO RETRY RESCUE: the r12/r19 write-burst signature (silver
-    # 12.2s = 8.7x nominal) whose end-of-run retry landed clean — the
-    # verdict heals to IO-CLEAN, both samples printed, rescue named
-    io_retry = io_clean[1:] + [
-        json.dumps({"progress": "write",
-                    "name": "write_s5_silver_partitioned", "sec": 12.2}),
-        json.dumps({"progress": "write",
-                    "name": "write_s5_silver_partitioned" + RETRY_SUFFIX,
-                    "sec": 1.31})]
-    buf = _io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        v = annotate_io(io_retry)
-    out = buf.getvalue()
-    assert v == "IO-CLEAN" \
-        and "[retried: samples 12.20s/1.31s, min used]" in out \
-        and "rescued: write_s5_silver_partitioned" in out, \
-        f"selftest-io-retry-rescue: {out}"
-    # ... a still-inflated retry keeps the round IO-NOISY (a burst that
-    # spans the whole run is real lost signal, not heal-able)
-    io_retry_fail = io_clean[1:] + [
-        json.dumps({"progress": "write",
-                    "name": "write_s5_silver_partitioned", "sec": 12.2}),
-        json.dumps({"progress": "write",
-                    "name": "write_s5_silver_partitioned" + RETRY_SUFFIX,
-                    "sec": 11.0})]
-    buf = _io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        v = annotate_io(io_retry_fail)
-    assert v == "IO-NOISY", \
-        f"selftest-io-retry-fail: still-noisy retry must stay IO-NOISY: " \
-        f"{buf.getvalue()}"
-    # ... and the retry travels through the summary echo too (the
-    # tail-only driver artifact is where the healing matters most)
-    io_retry_tail = [json.dumps(
-        {"metric": "total", "value": 300.0,
-         "write_names": WRITE_SUMMARY_ORDER
-         + ["write_s5_silver_partitioned" + RETRY_SUFFIX],
-         "write_secs": [12.2, 0.79, 0.41, 1.31]})]
-    buf = _io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        v = annotate_io(io_retry_tail)
-    assert v == "IO-CLEAN" and "retried" in buf.getvalue(), \
-        f"selftest-io-retry-tail: {buf.getvalue()}"
-    # an ORPHAN retry (base first-sample truncated away) adjudicates
-    # nothing and must not crash: alone it is NO IO ROWS, and next to
-    # the other probes it is simply ignored
-    orphan = [json.dumps({"progress": "write",
-                          "name": "write_s7_gold" + RETRY_SUFFIX,
-                          "sec": 0.4})]
-    assert annotate_io(orphan) == "NO IO ROWS", \
-        "orphan io retry must not adjudicate"
-    buf = _io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        v = annotate_io(io_clean[:2] + orphan)
-    assert v == "IO-CLEAN" and "retried" not in buf.getvalue(), \
-        f"orphan retry next to other probes must be ignored: {buf.getvalue()}"
-    # (v) retries feed the cold_min second-sample maps: per-query
-    # derivation and the echo-derived pseudo-min both take the min
-    retry_cm = [
-        json.dumps({"progress": "query", "name": "qa", "cold": 50.0,
-                    "streaming": False}),
-        json.dumps({"progress": "query", "name": "qb", "cold": 5.0,
-                    "streaming": False}),
-        json.dumps({"progress": "warm", "name": "qa", "warm": 40.0}),
-        json.dumps({"progress": "warm_retry", "name": "qa",
-                    "warm_retry": 4.0, "first": 40.0}),
-        json.dumps({"metric": "total", "value": 55.0, "total_warm": 40.0,
-                    "n_queries": 2})]
-    tcm_r, prov_r, _ = total_cold_min_of(retry_cm)
-    assert tcm_r == 9.0, \
-        f"selftest-retry-coldmin: per-query min must use the retry: {tcm_r}"
-    est_r, basis_r = cold_min_estimate([json.dumps(
-        {"metric": "total", "value": 100.0, "total_warm": 4.0,
-         "n_queries": 295,
-         "warm_echo": {"qa": [4.0, 50.0, 2.0]}})], 1.0)
-    assert "pseudo-min 52.0s" in basis_r, \
-        f"selftest-retry-pseudomin: echo triple retry must correct: " \
-        f"{basis_r}"
-    # (vi) THE DONE-CRITERION: a synthetic contended DRIVER capture —
-    # warm rows and a write probe all burst-inflated on first sample,
-    # all retried clean in-run — adjudicates rc 0 with ZERO rows
-    # excluded-without-signal: every suspect heals under the `retried`
-    # grade instead of being thrown away (r19 lost 4 warm rows and 3
-    # write probes exactly this way).
-    healed_wrapper = json.dumps({
-        "n": 295, "rc": 0, "cpus": 32, "sf": "/root/testdata/sf0.1",
-        "tail": json.dumps(
-            {"metric": "total", "value": 360.0, "unit": "sec",
-             "total_warm": 60.0, "total_cold_min": 320.0,
-             "n_warm": 3, "n_queries": 295, "n_errors": 0,
-             "top_cold": {"q110_tri": 13.1},
-             "warm_echo": {"q40_corr": [6.73, 2.31, 1.9],
-                           "q162_bm25": [9.4, 3.1, 2.8],
-                           "q139_adc": [2.1, 5.3]},
-             "canary_spins": [0.5, 0.52, 0.49],
-             "canary_load1": [1.0, 1.2, 1.1],
-             "write_names": WRITE_SUMMARY_ORDER
-             + ["write_s5b_dynamic_overwrite" + RETRY_SUFFIX],
-             "write_secs": [1.4, 3.3, 0.4, 0.77]}) + "\n",
-        "parsed": {"metric": "total", "value": 360.0}})
-    hw_lines, hw_origin = capture_lines(healed_wrapper)
-    assert hw_origin
-    buf = _io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        rc = check(hw_lines, DEFAULT_BUDGET_S, "selftest-healed-wrapper",
-                   driver_origin=True)
-    out = buf.getvalue()
-    assert rc == 0 and "warm [WARM-CLEAN]" in out \
-        and "2 rescued by in-run retry" in out \
-        and "io [IO-CLEAN]" in out and "rescued" in out \
-        and "WARM-SUSPECT" not in out and "IO-NOISY" not in out \
-        and "unadjudicated" not in out, \
-        f"selftest-healed-wrapper: every contended row must heal via " \
-        f"retry, none excluded: {out}"
+        assert staleness_error(cap, fixtures) is None
+        assert staleness_error(cap, os.path.join(d, "missing")) is None
+    # compare: totals on the shared queries only, cold_min takes the warm
+    # where it is lower, movers ranked by absolute cold delta
+    a = [q("qa", 10.0), q("qb", 2.0), q("qc", 1.0), q("only_a", 9.0),
+         w("qa", 4.0)]
+    b = [q("qa", 5.0), q("qb", 2.5), q("qc", 1.0), w("qa", 4.5)]
+    rc, out = run(compare, a, "A", b, "B", k=2)
+    assert rc == "OK" and "3 shared queries: cold 13.0s vs 8.5s (1.53x)" \
+        in out and "cold_min 7.0s vs 8.0s (0.88x)" in out \
+        and "1 shared warm rows: warm 4.0s vs 4.5s" in out \
+        and "cold movers: qa 10.00s vs 5.00s (2.00x), qb 2.00s vs 2.50s" \
+        in out and "excluded 1 queries only in A and 0 only in B" in out, out
+    rc, out = run(compare, a, "A", [q("zz", 1.0)], "B")
+    assert rc == "REFUSED", out
     print("benchguard selftest: PASS")
     return 0
 
@@ -2512,29 +414,21 @@ def main():
     if not args:
         print(__doc__)
         return 2
-    budget = DEFAULT_BUDGET_S
-    if "--budget" in args:
-        i = args.index("--budget")
-        budget = float(args[i + 1])
+
+    def take(flag):
+        if flag not in args:
+            return None
+        i = args.index(flag)
+        value = args[i + 1]
         del args[i:i + 2]
-    fixtures = DEFAULT_FIXTURES
-    if "--fixtures" in args:
-        i = args.index("--fixtures")
-        fixtures = args[i + 1]
-        del args[i:i + 2]
+        return value
+
+    budget = float(take("--budget") or DEFAULT_BUDGET_S)
+    fixtures = take("--fixtures") or DEFAULT_FIXTURES
+    other_path = take("--compare")
     if "--no-staleness-check" in args:
         args.remove("--no-staleness-check")
         fixtures = None
-    compare_path = None
-    if "--compare-warm" in args:
-        i = args.index("--compare-warm")
-        compare_path = args[i + 1]
-        del args[i:i + 2]
-    compare_cold_path = None
-    if "--compare-cold" in args:
-        i = args.index("--compare-cold")
-        compare_cold_path = args[i + 1]
-        del args[i:i + 2]
     if fixtures is not None:
         err = staleness_error(args[0], fixtures)
         if err is not None:
@@ -2542,30 +436,11 @@ def main():
             return 2
     with open(args[0]) as f:
         lines, driver_origin = capture_lines(f.read())
-    fb_path = find_fallback(args[0])
-    fb_lines = None
-    if fb_path is not None:
-        with open(fb_path) as f:
-            fb_lines, _ = capture_lines(f.read())
-    rc = check(lines, budget, args[0], driver_origin=driver_origin,
-               fallback_lines=fb_lines, fallback_label=fb_path)
-    if compare_path is not None:
-        # advisory: a REFUSED comparison is the CORRECT outcome for
-        # disjoint cohorts (a fact about the two captures, not a defect
-        # of this one), so it never changes the exit code
-        with open(compare_path) as f:
+    rc = check(lines, budget, args[0], driver_origin=driver_origin)
+    if other_path is not None:
+        with open(other_path) as f:
             other, _ = capture_lines(f.read())
-        compare_warm(lines, args[0], other, compare_path)
-    if compare_cold_path is not None:
-        # advisory like --compare-warm
-        with open(compare_cold_path) as f:
-            other, _ = capture_lines(f.read())
-        compare_cold(lines, args[0], other, compare_cold_path)
-        # round-19 (VERDICT r18 ask #1b): the contention-resistant basis
-        # is ALWAYS printed alongside the raw cold comparison, so a
-        # burst-inflated raw total can never anchor a round-over-round
-        # conclusion on its own
-        compare_cold_min(lines, args[0], other, compare_cold_path)
+        compare(lines, args[0], other, other_path)
     return rc
 
 

@@ -4,7 +4,7 @@
 # stdout line):
 #   scripts/run_bench.sh [queryName ...]
 # Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-#      SPARK_GRAFT_CPUS (threads AND shuffle.partitions, default 32),
+#      SPARK_GRAFT_CPUS (threads AND shuffle.partitions, default 4),
 #      SPARK_DRIVER_MEM (default 16g).
 set -euo pipefail
 cd "$(dirname "$0")/.."

@@ -1,399 +1,108 @@
 package graft
 
-/** Benchmark main (driver contract): streams one JSON line per query as
-  * it completes, then the driver-facing summary line LAST.
+/** Benchmark main (driver contract): the full-suite `value` run.
   *
-  * Delivery policy (round-6 lesson: `BENCH_r06.json` was rc 124 /
-  * `parsed: null` because the whole suite's numbers were held until the
-  * end and the driver's wall budget expired first):
-  *  - every per-query result is printed — and flushed — the moment the
-  *    query finishes, as a `{"progress":"query",...}` JSONL line, so a
-  *    timeout still yields per-query data (the key is `progress`, not
-  *    `metric`, so summary-line consumers cannot mis-parse a partial
-  *    line as the total);
-  *  - the single `{"metric":"total",...}` summary line is printed last
-  *    and is BUDGETED: totals + counts + compact echoes, hard-capped at
-  *    [[SummaryMaxChars]] (< the driver's 2,000-char stdout tail).
-  *    Rounds 1-7 embedded the FULL per-query maps (~8 KB at 161
-  *    queries) in the summary line, so its head — `{"metric":"total",
-  *    ...` — was always truncated away and the driver's parse came back
-  *    null every round. Since round 17 the summary carries budget-
-  *    trimmed `top_cold`/`warm_echo` maps (top-K heaviest only, 2
-  *    decimals — ~1.2 KB at 295 queries) so the driver artifact alone
-  *    attributes heavy queries after the tail truncates the per-query
-  *    lines; the trim guarantees the rounds-1-7 failure mode cannot
-  *    recur. Since round 19 each `warm_echo` value is a `[warm, cold]`
-  *    PAIR (r18's trim dropped the 7 warm-cohort colds outside the
-  *    global top-20, leaving those warm rows unadjudicatable from the
-  *    artifact alone — see [[echoCohorts]]). Full-precision per-query
-  *    numbers still stream as the flushed progress lines above.
+  *   scripts/run_bench.sh [queryName ...]
   *
-  * Write-path policy: the sink surface (S5 partitioned silver write, S7
-  * gold write, S5b dynamic-partition overwrite) is timed too — each as a
-  * flushed `{"progress":"write",...}` line — so a sink regression is
-  * visible round-over-round, not just query regressions. Writes land in a
-  * fresh temp dir that is deleted afterwards.
+  * Passes, in order:
+  *  1. an un-timed warm-up: the flagship q01 plus the streaming staging,
+  *     so neither lands in the first affected query's cold figure;
+  *  2. the COLD pass over every catalog query (name order). Each query
+  *     runs through a `noop`-format write, so the timed physical plan is
+  *     the verified plan, including a final sort a bare `.count()` would
+  *     let Catalyst delete. The cache is cleared after every query. A
+  *     query that throws is reported with its error, never as a fast
+  *     time. `value` is the sum of these colds;
+  *  3. the WARM pass over the 20 heaviest errorless batch queries by this
+  *     run's colds (codegen cached, cache cleared between). Streaming
+  *     queries stay cold-only: a re-run re-pays state-store provisioning
+  *     rather than measuring a cached data path;
+  *  4. three write probes, one sample each: the S5 partitioned silver
+  *     write, the S5b dynamic-partition overwrite and the S7 gold write,
+  *     into a temp dir deleted afterwards. Skipped when iterating on a
+  *     query filter.
   *
-  * Measurement policy:
-  *  - each query is executed via a `noop`-format write, so the measured
-  *    physical plan is exactly the verified plan — including the final
-  *    total-order sort that a bare `.count()` would let Catalyst delete;
-  *  - one un-timed warm-up execution (the flagship q01) absorbs JVM /
-  *    session / codegen start-up cost, and streaming staging dirs are
-  *    pre-built, so per-query numbers are comparable across rounds;
-  *  - a query that THROWS is reported in an `"errors"` object rather than
-  *    silently recording a near-zero (i.e. flatteringly fast) time;
-  *  - BATCH queries: one cold pass for EVERY query (includes per-query
-  *    Catalyst/Janino/JIT cost; `value` = cold total for round-over-round
-  *    comparability), then ONE warm pass for only the top-20 heaviest by
-  *    this run's cold time (codegen cached — the steady-state cost that
-  *    amortizes at 100 TB). Warming all 161 queries cost 888 s in r08 —
-  *    half a driver wall that ran within sight of the round-6 rc-124
-  *    timeout — for steady-state numbers that only matter on the heavy
-  *    tail. `total_warm` is therefore a top-K figure (see `n_warm`).
-  *  - STREAMING queries (`Q.streaming`): cold pass only. Each execution
-  *    re-pays state-store provisioning (~3.5 s load in the r06 driver
-  *    tail) regardless of warmth — a warm pass measures provisioning
-  *    again, not a cached data path — and steady-state micro-batch cost
-  *    is not meaningful at bench SF anyway. They are excluded from
-  *    `queries_warm`/`total_warm` so the warm totals stay a pure batch
-  *    steady-state figure.
-  *  - the cache is cleared between passes: queries that persist
-  *    intermediates (dedup band tables, CC labels) would otherwise serve
-  *    later passes from cache and measure cache hits, not the recomputed
-  *    data path;
-  *  - HOST-NOISE CANARY (round-12 lesson: the r12 capture's 393 s vs
-  *    329 s ambiguity took out-of-band forensics to adjudicate): a fixed
-  *    single-threaded spin + `/proc/loadavg` snapshot is timed at start,
-  *    midpoint, and end, streamed as `{"progress":"canary",...}` lines
-  *    and echoed in the summary, so every capture carries its own
-  *    contention evidence — see [[canarySpin]] and `scripts/benchguard.py`.
-  *  - INLINE PROBES (round-17 lesson: BENCH_r17 was the build's first
-  *    [OVER BUDGET] — a co-tenant IO burst inflated contiguous cold
-  *    spans 14-56x while all THREE point canaries read clean, because a
-  *    3-point sample provably misses a multi-minute contention window
-  *    inside a 23-minute pass): the same spin PLUS a fixed-size parquet
-  *    read is timed every [[InlineProbeStride]] queries THROUGH the cold
-  *    pass, streamed as `{"progress":"canary_inline",...}` lines and
-  *    echoed compactly in the summary (`inline_after`/`inline_spin`/
-  *    `inline_io`), so benchguard can bracket exactly WHICH cold spans
-  *    ran under contention. The IO probe reads a file this bench wrote
-  *    itself (constant size, independent of SF), so inflation is host
-  *    state, never data growth.
-  *  - COLD_MIN (round-17 ask #2 — bound the damage when contention does
-  *    hit): every query's contention-resistant cold is the MIN over its
-  *    measured executions this run. The warm pass already re-executes
-  *    the top-20 batch colds (identical plan, cache cleared between), so
-  *    it doubles as their second sample at zero extra wall; STREAMING
-  *    queries — excluded from warm by policy — get a dedicated `cold2`
-  *    re-run when they rank in the top-20 colds (every streaming run
-  *    re-pays state-store provisioning, so a re-run IS a legitimate
-  *    cold re-measurement). The summary carries `total_cold_min` plus
-  *    the `cold2` map; the raw first-pass numbers stay in `value` and
-  *    `top_cold` so contention remains VISIBLE, never silently masked —
-  *    benchguard budgets on cold_min and reports the delta.
-  *  - IN-RUN RETRY (round-20, VERDICT r19 ask #1 — self-HEALING, not
-  *    just self-adjudicating: the r19 driver capture lost 4 warm rows
-  *    and all 3 write probes to a disk-contention burst; benchguard
-  *    correctly flagged and excluded them, but flagged-and-excluded is
-  *    still lost signal): a warm row whose first sample trips
-  *    benchguard's WARM-SUSPECT predicate (warm > 1.2x its own cold
-  *    + 0.1 s — see [[warmSuspect]]) and a write probe whose first
-  *    sample trips the IO-NOISY threshold (> 3x nominal — see
-  *    [[writeSuspect]]) are each re-measured ONCE at the END of the
-  *    run, when a mid-run burst has had the most wall-clock to pass.
-  *    Both samples are emitted — the warm retry as a flushed
-  *    `{"progress":"warm_retry",...}` line and a third slot in the
-  *    row's `warm_echo` value (`[warm, cold, retry]`), the write retry
-  *    as a `<name>__retry` row in the same write stream/echo — so
-  *    benchguard can take the per-row MIN under a `retried`
-  *    attribution grade instead of excluding the row. First samples
-  *    stay untouched in `value`/`total_warm`/the first echo slot:
-  *    contention remains visible, the retry only adds the second
-  *    sample that rescues the row's signal. Retries also feed
-  *    `total_cold_min`'s second-sample map. Cost bound: retries only
-  *    fire on suspect rows (zero on a clean run), each runs once, and
-  *    the suspect sets are capped by the warm cohort (20) and the
-  *    write probe count (3).
+  * Every query, warm and write result is printed and flushed the moment
+  * it finishes as a `{"progress":"query"|"warm"|"write",...}` JSONL line,
+  * so a driver timeout still yields per-query data (the key is
+  * `progress`, not `metric`, so a partial line never parses as the
+  * total).
+  *
+  * The one `{"metric":"total",...}` summary line is printed last, twice
+  * (the second copy after `spark.stop()`, so nothing can follow it). It
+  * carries `value`, `total_warm`, `total_cold_min` (per query, the min of
+  * its cold and warm), the counts, the budget-trimmed `top_cold` /
+  * `warm_echo` attribution maps, the write echo, `cpus` and `sf`, and is
+  * hard-capped at [[SummaryMaxChars]] so it survives the driver's
+  * 2,000-char stdout tail whole.
+  *
+  * Performance claims are judged by `perfbench/` (interleaved A/B runs
+  * with quartile spreads); this main measures the whole suite once.
   */
 object Bench {
-  /** Host-noise canary (round-12 ask): a FIXED amount of single-threaded
-    * CPU work, timed at bench start / midpoint / end, plus a
-    * `/proc/loadavg` snapshot at each point. On a clean host the spin
-    * time is a constant of the hardware; under co-tenant CPU contention
-    * the spin thread gets descheduled and the number inflates — exactly
-    * the signal that separated r12's 393 s capture (host noise) from a
-    * real regression, but which previously took out-of-band forensics.
-    * The three flushed `{"progress":"canary",...}` lines plus the
-    * compact echo in the summary make every capture self-adjudicating:
-    * `scripts/benchguard.py` reads them and annotates [NOISY]/[CLEAN].
-    *
-    * The spin is a serial xorshift64 chain: every iteration depends on
-    * the last, so the JIT cannot vectorize or hoist it, and the result
-    * is sunk into a volatile to defeat dead-code elimination. Iteration
-    * count is calibrated so one spin is ~0.5 s on this container
-    * (recorded as `CanaryNominalS`, the benchguard baseline).
-    */
-  @volatile private var canaryBlackhole: Long = 0L
-  private val CanaryIters = 300000000L
-
-  /** Cold-pass inline-probe cadence (round-17 ask #1a): a probe fires
-    * before the first query, after every `InlineProbeStride`-th query,
-    * and after the last — so every cold row sits inside a bracketed
-    * window at most this many queries wide. 25 ≈ 30-60 s of cold wall
-    * per window at the current catalog: fine-grained enough to name a
-    * multi-minute contention burst's span, cheap enough (~13 probes x
-    * ~0.8 s) to cost <2% of a clean run.
-    */
-  private[graft] val InlineProbeStride = 25
-
-  /** Contention-resistant per-run cold total: each query's cold is the
-    * MIN over its measured executions this run (first cold pass, plus
-    * the warm pass / `cold2` re-run when the query ranked heavy enough
-    * to get one). One co-tenant burst inflates only the pass it hit;
-    * the min recovers the query's real cost as long as ONE sample ran
-    * clean — r17's 90 s q174 had a 4.61 s warm in the same artifact.
+  /** Per-query min of the cold and, where the query was warmed, its warm
+    * (the same plan re-executed): a one-pass host burst inflates only the
+    * sample it hit.
     */
   private[graft] def coldMinTotal(colds: Seq[(String, Double)],
-      second: Map[String, Double]): Double =
-    colds.map { case (n, c) => math.min(c, second.getOrElse(n, c)) }.sum
+      warms: Map[String, Double]): Double =
+    colds.map { case (n, c) => math.min(c, warms.getOrElse(n, c)) }.sum
 
-  /** In-run retry predicates (round-20, VERDICT r19 ask #1). Both
-    * MIRROR `scripts/benchguard.py`'s post-hoc thresholds exactly —
-    * WARM_SUSPECT_FACTOR/WARM_SUSPECT_MIN_EXCESS_S and
-    * WRITE_NOMINAL_S/WRITE_NOISY_FACTOR — so the bench re-measures
-    * precisely the rows the guard would otherwise have to exclude. A
-    * mirrored constant is a sync hazard by construction; the guard's
-    * selftest and [[BenchPolicySpec]] both pin the values, so drift on
-    * either side fails a gate before it ships a silently-different
-    * retry policy.
-    */
-  private[graft] val WarmSuspectFactor = 1.2
-  private[graft] val WarmSuspectMinExcessS = 0.1
-  private[graft] def warmSuspect(warm: Double, cold: Double): Boolean =
-    warm > cold * WarmSuspectFactor + WarmSuspectMinExcessS
-
-  /** Clean-host write-probe nominals (mirror of benchguard.py's
-    * WRITE_NOMINAL_S; driver r13 / local r14 captures agree within
-    * noise) and the 3x IO-NOISY factor. A first sample above
-    * nominal x factor earns the probe ONE end-of-run re-measure.
-    */
-  private[graft] val WriteNominalS = Map(
-    "write_s5_silver_partitioned" -> 1.4,
-    "write_s5b_dynamic_overwrite" -> 0.8,
-    "write_s7_gold" -> 0.45)
-  private[graft] val WriteNoisyFactor = 3.0
-  private[graft] def writeSuspect(name: String, sec: Double): Boolean =
-    WriteNominalS.get(name).exists(nom => sec > nom * WriteNoisyFactor)
-
-  /** Test hook: force every successful write probe to retry once, so
-    * the `<name>__retry` emission path can be driven end-to-end on a
-    * clean host (real write retries only fire under disk contention —
-    * the one condition a validation run cannot schedule). Never set by
-    * the driver; a capture taken with it is a plumbing check, not a
-    * baseline.
-    */
-  private def forceWriteRetry: Boolean =
-    sys.env.contains("GRAFT_BENCH_FORCE_WRITE_RETRY")
-
-  /** Suffix naming a write probe's retry row in the write stream/echo
-    * (`write_s7_gold__retry`): the retry travels through the SAME
-    * `write_names`/`write_secs` channel as the first sample, so a
-    * tail-only driver artifact carries both, and a pre-round-20
-    * benchguard simply ignores the unknown name (no nominal for it)
-    * instead of misparsing.
-    */
-  private[graft] val RetrySuffix = "__retry"
-
-  /** Round-21 COLD RETRY (VERDICT r20 #1 — contention-proof the
-    * headline): `value` stays the raw first-pass cold sum by design,
-    * but `total_cold_min` previously had second samples only for the
-    * warm top-20, the streaming cold2 re-runs, and the retried-warm
-    * rows — a contended cold OUTSIDE those cohorts fed `value` AND
-    * `total_cold_min` un-resampled (the r20 32-core capture: q145 cold
-    * 42.2 s against a 1.5 s in-run retry of the same plan, and the
-    * round's comparison basis moved with it). Now every errorless cold
-    * whose first sample exceeds [[ColdSuspectFactor]]x its committed
-    * nominal plus [[ColdSuspectMinExcessS]] earns ONE end-of-run
-    * re-measure — after the warm/write retries, i.e. with the most
-    * wall-clock between it and the burst that inflated the first
-    * sample — ordered by absolute excess (the biggest corrections
-    * first), capped at [[ColdRetryMax]] rows AND
-    * [[ColdRetryWallBudgetS]] seconds of re-measure wall, and skipping
-    * rows that already hold a second sample this run. Nominals come
-    * from the committed full local capture (`bench_local.jsonl`,
-    * overridable via `GRAFT_BENCH_NOMINALS`); no file, no retries —
-    * identical pre-round-21 behavior. Retries stream as
-    * `{"progress":"cold2",...}` lines and ride the existing `cold2`
-    * summary echo (value-capped at [[Cold2EchoMax]] entries so the
-    * summary line's budget never starves the warm/cold attribution
-    * maps): the same channel the streaming re-measures use, so
-    * benchguard's cold_min derivations consume them with NO new
-    * parser. First samples stay untouched in `value`/`top_cold` —
-    * contention remains visible, never silently masked.
-    *
-    * The absolute-excess floor exists because sub-second rows jitter
-    * far beyond 1.5x run-to-run (the committed capture itself has
-    * 0.79 s vs 1.31 s on consecutive clean runs); the row cap plus the
-    * wall budget bound the worst-case cost (a fully-contended run) to
-    * ~[[ColdRetryWallBudgetS]] s, and a clean same-core run fires zero.
-    */
-  private[graft] val ColdSuspectFactor = 1.5
-  private[graft] val ColdSuspectMinExcessS = 0.5
-  private[graft] val ColdRetryMax = 25
-  private[graft] val ColdRetryWallBudgetS = 120.0
-  private[graft] val Cold2EchoMax = 12
-  private[graft] def coldSuspect(cold: Double, nominal: Double): Boolean =
-    cold > nominal * ColdSuspectFactor + ColdSuspectMinExcessS
-
-  /** The retry plan: suspect colds not already second-sampled, ordered
-    * by absolute excess over nominal (descending, name tiebreak),
-    * capped at [[ColdRetryMax]]. Pure for the policy spec.
-    */
-  private[graft] def coldRetryPlan(colds: Seq[(String, Double)],
-      nominals: Map[String, Double], covered: Set[String]): Seq[String] =
-    colds.filterNot { case (n, _) => covered(n) }
-      .flatMap { case (n, c) =>
-        nominals.get(n).filter(coldSuspect(c, _)).map(nom => (n, c - nom))
-      }
-      .sortBy { case (n, ex) => (-ex, n) }
-      .take(ColdRetryMax).map(_._1)
-
-  /** Per-query nominal colds from a committed bench capture (JSONL).
-    * The nominal is the MIN over every errorless sample the capture
-    * carries for the name — the first-pass cold (`progress:query`) AND
-    * the second samples (`warm`, `cold2`, `warm_retry`): the committed
-    * capture can itself contain contention-hit first samples whose
-    * in-run re-measures recovered the clean cost (this round's capture
-    * has q30 cold 5.38 s vs its 1.0 s warm), and a raw-cold nominal
-    * would de-sensitize the retry threshold for exactly those rows.
-    * Parse-or-skip like benchguard's readers; min wins per name.
-    * Empty map when the file is absent — the retry mechanism then
-    * stays off.
-    */
-  private[graft] def nominalColds(path: java.nio.file.Path)
-      : Map[String, Double] = {
-    if (!java.nio.file.Files.exists(path)) return Map.empty
-    val sampleKey = Map("query" -> "cold", "warm" -> "warm",
-      "cold2" -> "cold2", "warm_retry" -> "warm_retry")
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val out = scala.collection.mutable.Map.empty[String, Double]
-    val src = scala.io.Source.fromFile(path.toFile)
-    try src.getLines().foreach { line =>
-      val t = line.trim
-      if (t.startsWith("{")) {
-        try {
-          val node = mapper.readTree(t)
-          sampleKey.get(node.path("progress").asText()).foreach { k =>
-            if (node.hasNonNull("name") && node.hasNonNull(k) &&
-                !node.has("err")) {
-              val n = node.get("name").asText()
-              val v = node.get(k).asDouble()
-              out(n) = out.get(n).fold(v)(math.min(_, v))
-            }
-          }
-        } catch { case _: Throwable => () }
-      }
-    } finally src.close()
-    out.toMap
-  }
-
-  /** Hard character budget for the ONE summary line (round-17 ask #1a).
-    *
-    * The driver retains a 2,000-char stdout tail; the summary is printed
-    * twice (last-line guarantee) and only the LAST copy must survive
-    * complete — so the line itself must stay strictly under 2,000 chars
-    * or its head (`{"metric":"total",...`) is truncated away and the
-    * driver's parse comes back null (the rounds-1-7 failure mode this
-    * file's header documents). 1,900 leaves a 100-char margin for the
-    * trailing newline and driver-side off-by-ones. At the current
-    * catalog (295 queries, mean name ~18 chars) the echo maps render
-    * ~1,250 chars against a ~590-char base, so trimming never engages
-    * in practice; the budget is the safety valve for name growth.
+  /** Hard character budget for the summary line: the driver keeps a
+    * 2,000-char stdout tail and the line must survive it whole, or its
+    * head is cut and the driver's parse comes back null. 1,900 leaves
+    * room for the newline and driver-side off-by-ones.
     */
   private[graft] val SummaryMaxChars = 1900
 
+  // Locale.ROOT: the default-locale formatter renders comma decimals on
+  // e.g. de_DE JVMs, corrupting the JSON
   private[graft] def fmt2(v: Double): String =
     String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
 
-  /** Echo cohorts for the summary's per-query attribution maps
-    * (round-17 ask #1a: after the driver tail truncates the 295
-    * per-query progress lines, `BENCH_r{N}.json` alone must still name
-    * the heavy queries — the same summary-echo pattern as
-    * `canary_phases`/`write_names`).
+  /** Echo cohorts for the summary's attribution maps, so the driver
+    * artifact alone names the heavy queries after its tail truncates the
+    * per-query lines.
     *
-    *  - `warm_echo`: every successful warm row (≤ K by construction),
-    *    each carrying ITS OWN COLD as a `[warm, cold]` pair (round-18
-    *    lesson: r18's 1,883/1,900-char line trimmed the 7 warm-cohort
-    *    colds that sat outside the global top-20, leaving those warm
-    *    rows unadjudicatable from the driver artifact alone — inside
-    *    the pair, no trim of the OTHER map can detach a warm row's
-    *    cold). Since round 20, a row that earned an in-run retry (its
-    *    first warm tripped [[warmSuspect]]) carries the retry as a
-    *    THIRD slot — `[warm, cold, retry]` — so a tail-only driver
-    *    artifact self-carries the rescuing sample too; pre-round-20
-    *    consumers read slots 0-1 and ignore the third.
-    *  - `top_cold`: the K heaviest colds across ALL queries (streaming
-    *    included — q107's stream-stream outer join is a legitimate
-    *    heavy-tail member), MINUS the names already carried in
-    *    `warm_echo` pairs: a duplicate entry would spend ~28 chars
-    *    repeating a number the pair already carries for ~6, and the
-    *    pair-shape line must stay under the same [[SummaryMaxChars]]
-    *    budget the r18 single-value shape nearly filled. Consumers
-    *    (benchguard's `parse_summary_echo`) merge pair colds back into
-    *    the cold-attribution map, so "the top-K heaviest" is always
-    *    reconstructible from the two maps together. Rounds ≤18 instead
-    *    UNIONed the warm cohort's colds into top_cold as single
-    *    values; benchguard accepts both shapes.
+    *  - `warm_echo`: every successful warm row, each carrying its own
+    *    cold as a `[warm, cold]` pair, so no trim of the other map can
+    *    detach a warm row from its cold;
+    *  - `top_cold`: the `k` heaviest colds across all queries (streaming
+    *    included), minus the names `warm_echo` already carries.
     *
-    * Both are value-descending with a name tiebreak — rows by the max
-    * over every sample they carry (`max(warm, cold, retry)`), since a
-    * row matters when ANY number is heavy (its cold may be the run's
-    * #1 heaviest, or its warm the anomaly benchguard exists to flag) —
-    * so the budget trim in [[renderEchoMaps]] always drops the least
-    * informative entries first and can never discard the heaviest cold
-    * attribution while lighter rows survive.
+    * Both are value-descending with a name tiebreak (warm rows by
+    * `max(warm, cold)`), so the trim in [[renderEchoMaps]] drops the
+    * least informative entries first.
     */
   private[graft] def echoCohorts(
       colds: Seq[(String, Double)],
       warms: Map[String, Double],
-      k: Int,
-      retries: Map[String, Double] = Map.empty)
-      : (Seq[(String, Double)],
-         Seq[(String, Double, Double, Option[Double])]) = {
-    val desc = colds.sortBy { case (n, c) => (-c, n) }
+      k: Int): (Seq[(String, Double)], Seq[(String, Double, Double)]) = {
     val coldOf = colds.toMap
     // every warm name came from this run's cold ranking, so coldOf is
     // total over the warm cohort
     val warmEcho = warms.toSeq
-      .map { case (n, w) => (n, w, coldOf(n), retries.get(n)) }
-      .sortBy { case (n, w, c, r) =>
-        (-math.max(math.max(w, c), r.getOrElse(0.0)), n) }
-    val top = desc.take(k).filterNot { case (n, _) => warms.contains(n) }
+      .map { case (n, w) => (n, w, coldOf(n)) }
+      .sortBy { case (n, w, c) => (-math.max(w, c), n) }
+    val top = colds.sortBy { case (n, c) => (-c, n) }.take(k)
+      .filterNot { case (n, _) => warms.contains(n) }
     (top, warmEcho)
   }
 
-  /** Renders `"top_cold":{...},"warm_echo":{...}` (2-decimal values;
-    * warm entries as `[warm, cold]` pairs, or `[warm, cold, retry]`
-    * triples for rows re-measured in-run) in at most `budget` chars,
-    * dropping the smallest entry from the longer map (ties: warm_echo —
-    * cold attribution is the primary ask) until it fits. Both keys are
-    * always present, possibly as empty maps, so consumers never
-    * key-check against line length.
+  /** Renders `"top_cold":{...},"warm_echo":{...}` (2-decimal values,
+    * warm entries as `[warm, cold]` pairs) in at most `budget` chars,
+    * dropping the smallest entry from the longer map (ties: warm_echo)
+    * until it fits. Both keys are always present, possibly empty.
     */
   private[graft] def renderEchoMaps(
       topCold: Seq[(String, Double)],
-      warmEcho: Seq[(String, Double, Double, Option[Double])],
+      warmEcho: Seq[(String, Double, Double)],
       budget: Int): String = {
-    def render(tc: Seq[(String, Double)],
-        we: Seq[(String, Double, Double, Option[Double])]) = {
+    def render(tc: Seq[(String, Double)], we: Seq[(String, Double, Double)]) = {
       val tcm = tc.map { case (n, v) => s"${Jsons.quote(n)}:${fmt2(v)}" }
         .mkString(",")
-      val wem = we
-        .map { case (n, w, c, r) =>
-          s"${Jsons.quote(n)}:[${fmt2(w)},${fmt2(c)}${
-            r.fold("")(x => "," + fmt2(x))}]" }
-        .mkString(",")
+      val wem = we.map { case (n, w, c) =>
+        s"${Jsons.quote(n)}:[${fmt2(w)},${fmt2(c)}]" }.mkString(",")
       s""""top_cold":{$tcm},"warm_echo":{$wem}"""
     }
     var tc = topCold
@@ -406,20 +115,18 @@ object Bench {
     }
     out
   }
-  private def canarySpin(iters: Long): Double = {
-    val t0 = System.nanoTime()
-    var x = 0x9E3779B97F4A7C15L
-    var i = 0L
-    while (i < iters) { x ^= x << 13; x ^= x >>> 7; x ^= x << 17; i += 1 }
-    canaryBlackhole = x
-    (System.nanoTime() - t0) / 1e9
+
+  private def errText(e: Throwable): String =
+    e.getClass.getSimpleName + ": " +
+      Option(e.getMessage).getOrElse("").take(200)
+
+  private def errField(err: Option[String]): String =
+    err.fold("")(e => s""","err":${Jsons.quote(e)}""")
+
+  private def emit(line: String): Unit = {
+    println(line)
+    System.out.flush()
   }
-  private def loadAvg(): Seq[Double] =
-    try {
-      val src = scala.io.Source.fromFile("/proc/loadavg")
-      try src.mkString.trim.split("\\s+").take(3).toSeq.map(_.toDouble)
-      finally src.close()
-    } catch { case _: Throwable => Seq.empty }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -431,334 +138,79 @@ object Bench {
     val spark = graft.engine.Sessions.local("graft-bench")
     def run(fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-    // un-timed: session warm-up + streaming staging (both would otherwise
-    // land in the first affected query's cold figure)
     try run(SparkEntry.queries("q01_gold_count")) catch { case _: Throwable => () }
     try graft.queries.EventQueries.prestage(spark, sfDir)
     catch { case _: Throwable => () }
 
-    // Canary JIT warm-up (un-timed, ~10% of one spin): the first timed
-    // spin must measure the host, not C2 compilation of the spin loop.
-    canarySpin(CanaryIters / 10); canarySpin(CanaryIters / 10)
-    val canaries =
-      scala.collection.mutable.ArrayBuffer.empty[(String, Double, Seq[Double])]
-    def canary(phase: String): Unit = {
-      val spin = canarySpin(CanaryIters)
-      val load = loadAvg()
-      canaries += ((phase, spin, load))
-      println(s"""{"progress":"canary","phase":${Jsons.quote(phase)},"spin_sec":$spin,"loadavg":[${load.mkString(",")}],"cpus":${Runtime.getRuntime.availableProcessors()}}""")
-      System.out.flush()
-    }
-    canary("start")
-
-    // Inline-probe IO target: a fixed-size parquet file THIS RUN writes
-    // (1M rows, two long columns, ~8 MB — constant at every SF), so an
-    // inflated probe read is host contention, never data growth. One
-    // untimed read warms JIT + page cache; later inflation therefore
-    // means the cache was evicted or the readers were descheduled —
-    // exactly the r17 co-tenant-burst signature the 3-point canary
-    // missed.
-    val probeDir = java.nio.file.Files.createTempDirectory("graft-ioprobe")
-    val probePath: String = s"$probeDir/probe.parquet"
-    locally {
-      import org.apache.spark.sql.functions.{col, xxhash64}
-      spark.range(0, 1000000L).select(col("id"), xxhash64(col("id")).as("h"))
-        .coalesce(4).write.mode("overwrite").parquet(probePath)
-    }
-    def ioProbeRead(): Double = {
+    def timed(body: => Unit): (Double, Option[String]) = {
       val t0 = System.nanoTime()
-      spark.read.parquet(probePath).write.format("noop")
-        .mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
-    ioProbeRead(); ioProbeRead() // un-timed JIT / page-cache warm-up
-    val inlineProbes =
-      scala.collection.mutable.ArrayBuffer.empty[(Int, Double, Double)]
-    def inlineProbe(after: Int): Unit = {
-      val spin = canarySpin(CanaryIters)
-      val io = ioProbeRead()
-      inlineProbes += ((after, spin, io))
-      println(s"""{"progress":"canary_inline","after":$after,"spin_sec":$spin,"io_sec":$io,"loadavg":[${loadAvg().mkString(",")}]}""")
-      System.out.flush()
+      val err = try { body; None } catch { case e: Throwable => Some(errText(e)) }
+      val sec = (System.nanoTime() - t0) / 1e9
+      spark.sharedState.cacheManager.clearCache()
+      (sec, err)
     }
 
-    def timed(q: Catalog.Q): (Double, Option[String]) = {
-      val t0 = System.nanoTime()
-      val err =
-        try { run(q.fn); None }
-        catch { case e: Throwable =>
-          Some(e.getClass.getSimpleName + ": " +
-            Option(e.getMessage).getOrElse("").take(200))
-        }
-      ((System.nanoTime() - t0) / 1e9, err)
-    }
-    // Phase 1: COLD pass for every query (the round-over-round headline),
-    // with an inline probe before the first query, after every
-    // InlineProbeStride-th, and after the last — each cold row sits in a
-    // bracketed contention window (round-17 ask #1a).
-    val coldQs = Catalog.all.filter(q => only.isEmpty || only(q.name))
-      .sortBy(_.name)
-    inlineProbe(0)
-    val colds = coldQs.zipWithIndex.map { case (q, i) =>
-        val (cold, err) = timed(q)
-        spark.sharedState.cacheManager.clearCache()
-        // flushed JSONL progress line: a driver timeout still yields data
-        println(s"""{"progress":"query","name":${Jsons.quote(q.name)},"cold":$cold,"streaming":${q.streaming}${
-          err.fold("")(e => s""","err":${Jsons.quote(e)}""")}}""")
-        System.out.flush()
-        if ((i + 1) % InlineProbeStride == 0 || (i + 1) == coldQs.size)
-          inlineProbe(i + 1)
+    val colds = Catalog.all.filter(q => only.isEmpty || only(q.name))
+      .sortBy(_.name).map { q =>
+        val (cold, err) = timed(run(q.fn))
+        emit(s"""{"progress":"query","name":${Jsons.quote(q.name)},"cold":$cold,"streaming":${q.streaming}${errField(err)}}""")
         (q, cold, err)
       }
-    // COLD2 re-measure (round-17 ask #2): streaming members of this
-    // run's top-20 colds get a second COLD sample here — they are
-    // excluded from the warm pass by policy, but a streaming re-run
-    // re-pays state-store provisioning and so IS a cold re-measurement;
-    // batch members get their second sample from the warm pass below at
-    // zero extra wall. ~3 queries, ~15 s on a clean host.
-    val Cold2K = 20
-    val cold2: Map[String, Double] = colds
-      .sortBy { case (_, cold, _) => -cold }.take(Cold2K)
-      .filter { case (q, _, err) => q.streaming && err.isEmpty }
-      .flatMap { case (q, _, _) =>
-        val (t, e) = timed(q)
-        spark.sharedState.cacheManager.clearCache()
-        println(s"""{"progress":"cold2","name":${Jsons.quote(q.name)},"cold2":$t${
-          e.fold("")(x => s""","err":${Jsons.quote(x)}""")}}""")
-        System.out.flush()
-        if (e.isEmpty) Some(q.name -> t) else None
-      }.toMap
-    // Phase 2: WARM pass for the top-K heaviest batch queries only,
-    // ranked by THIS run's cold times. r08 warmed all 161 queries and
-    // spent 888 s — nearly half a driver wall that ran within sight of
-    // the round-6 rc-124 timeout — on steady-state numbers that only
-    // matter for the heavy tail. K=20 keeps warm coverage where codegen
-    // amortization is the story (q110 wedge join, the corr matrix, the
-    // minhash agg) and lets cold-only cover regression for the rest.
-    // Streaming stays cold-only as before (a "warm" pass re-pays state
-    // store provisioning, not a cached data path).
-    canary("mid")
+
     val WarmK = 20
     val warms: Map[String, Double] = colds
       .filter { case (q, _, err) => !q.streaming && err.isEmpty }
       .sortBy { case (_, cold, _) => -cold }
       .take(WarmK)
       .flatMap { case (q, _, _) =>
-        val (t, e) = timed(q)
-        spark.sharedState.cacheManager.clearCache()
-        println(s"""{"progress":"warm","name":${Jsons.quote(q.name)},"warm":$t${
-          e.fold("")(x => s""","err":${Jsons.quote(x)}""")}}""")
-        System.out.flush()
+        val (t, err) = timed(run(q.fn))
+        emit(s"""{"progress":"warm","name":${Jsons.quote(q.name)},"warm":$t${errField(err)}}""")
         // a pass that threw measured time-to-failure, not the data path
-        if (e.isEmpty) Some(q.name -> t) else None
+        if (err.isEmpty) Some(q.name -> t) else None
       }.toMap
-    final case class R(name: String, cold: Double, warm: Option[Double],
-        err: Option[String])
-    val results = colds.map { case (q, cold, err) =>
-      R(q.name, cold, warms.get(q.name), err)
-    }
-    // Write-path bench (S5 partitioned silver / S7 gold / S5b dynamic
-    // overwrite): timed into flushed progress lines so sink regressions
-    // are visible; a throw is reported, never silently fast. Skipped when
-    // iterating on a query filter.
-    // successful write secs in emission order, echoed in the summary
-    // (like canary_spins) so a tail-only driver capture still carries
-    // the IO-noise evidence benchguard's [IO-NOISY] verdict needs
-    val writeSecs =
-      scala.collection.mutable.ArrayBuffer.empty[(String, Option[Double])]
-    // write retries pending until after the warm retries (below): a
-    // suspect write's re-measure runs as late in the run as possible,
-    // maximizing the wall-clock between it and the burst that inflated
-    // the first sample
-    var writeRetryJobs: Seq[(String, () => Unit)] = Nil
-    var writeCleanup: () => Unit = () => ()
-    def timedWrite(name: String)(body: => Unit): Option[Double] = {
-      val t0 = System.nanoTime()
-      val err = try { body; None } catch { case e: Throwable =>
-        Some(e.getClass.getSimpleName + ": " +
-          Option(e.getMessage).getOrElse("").take(200))
-      }
-      val sec = (System.nanoTime() - t0) / 1e9
-      // an errored write measured time-to-failure, not IO: null slot
-      writeSecs += (name -> (if (err.isEmpty) Some(sec) else None))
-      println(s"""{"progress":"write","name":${Jsons.quote(name)},"sec":$sec${
-        err.fold("")(e => s""","err":${Jsons.quote(e)}""")}}""")
-      System.out.flush()
-      if (err.isEmpty) Some(sec) else None
-    }
-    if (only.isEmpty) {
+
+    // (name, seconds); None when the write threw (time-to-failure is not
+    // an IO measurement)
+    val writes: Seq[(String, Option[Double])] = if (only.nonEmpty) Nil else {
+      import org.apache.spark.sql.functions.col
+      import graft.engine.Sinks
       val tmp = java.nio.file.Files.createTempDirectory("graft-writebench")
-      writeCleanup = () => graft.engine.Fs.deleteRecursivelyQuietly(tmp)
-      val gold = SparkEntry.queries("q01_gold_count")(spark, sfDir)
-      val lineitem = graft.engine.Tables.load(spark, sfDir, "lineitem")
-      // all three sinks are overwrite-mode, so a retry re-landing the
-      // same path measures the same IO work (idempotent re-run)
-      val jobs: Seq[(String, () => Unit)] = Seq(
-        "write_s5_silver_partitioned" -> { () =>
-          // hive-partitioned silver layout on a low-cardinality key;
-          // repartition first so it's one file per partition value, not
-          // one per (task, value) — the small-files hygiene the Sinks
-          // header documents
-          graft.engine.Sinks.writePartitionedParquet(
-            lineitem.repartition(org.apache.spark.sql.functions.col("l_returnflag")),
-            s"$tmp/silver_li", Seq("l_returnflag"))
-        },
-        "write_s5b_dynamic_overwrite" -> { () =>
+      try {
+        val gold = SparkEntry.queries("q01_gold_count")(spark, sfDir)
+        val lineitem = graft.engine.Tables.load(spark, sfDir, "lineitem")
+        Seq[(String, () => Unit)](
+          // one file per partition value, not one per (task, value)
+          "write_s5_silver_partitioned" -> (() => Sinks.writePartitionedParquet(
+            lineitem.repartition(col("l_returnflag")),
+            s"$tmp/silver_li", Seq("l_returnflag"))),
           // rewrite ONE partition slice in place; siblings must survive
-          graft.engine.Sinks.overwritePartitionsDynamic(
-            lineitem.filter(org.apache.spark.sql.functions.col("l_returnflag") === "R")
-              .repartition(org.apache.spark.sql.functions.col("l_returnflag")),
-            s"$tmp/silver_li", Seq("l_returnflag"))
-        },
-        "write_s7_gold" -> (() =>
-          graft.engine.Sinks.writeParquet(gold, s"$tmp/gold")))
-      writeRetryJobs = jobs.flatMap { case (name, body) =>
-        val sec = timedWrite(name)(body())
-        // round-20 retry predicate: first sample tripped the IO-NOISY
-        // threshold benchguard would apply post hoc — earn ONE
-        // end-of-run re-measure (emitted as `<name>__retry` through
-        // the same write stream/echo, so both samples travel)
-        if (sec.exists(s => writeSuspect(name, s) || forceWriteRetry))
-          Some((name + RetrySuffix) -> body)
-        else None
-      }
-    }
-    // IN-RUN WARM RETRY (round-20, VERDICT r19 ask #1): each warm row
-    // whose first sample tripped the WARM-SUSPECT predicate gets ONE
-    // re-measure here — after the write probes, as far from its own
-    // contended window as the run allows. The retry is a second sample
-    // of the identical plan (codegen cached, inter-pass cache cleared),
-    // so benchguard may take min(warm, retry) under a `retried`
-    // attribution grade; the first sample stays in total_warm and the
-    // echo's first slot so the contention remains visible.
-    val qByName = coldQs.map(q => q.name -> q).toMap
-    val coldByName = colds.map { case (q, c, _) => q.name -> c }.toMap
-    val warmRetries: Map[String, Double] = warms.toSeq.sortBy(_._1)
-      .flatMap { case (n, w) =>
-        if (!warmSuspect(w, coldByName(n))) None
-        else {
-          val (t, e) = timed(qByName(n))
-          spark.sharedState.cacheManager.clearCache()
-          println(s"""{"progress":"warm_retry","name":${Jsons.quote(n)},"warm_retry":$t,"first":$w${
-            e.fold("")(x => s""","err":${Jsons.quote(x)}""")}}""")
-          System.out.flush()
-          // a retry that threw measured time-to-failure, not the plan
-          if (e.isEmpty) Some(n -> t) else None
+          "write_s5b_dynamic_overwrite" -> (() => Sinks.overwritePartitionsDynamic(
+            lineitem.filter(col("l_returnflag") === "R")
+              .repartition(col("l_returnflag")),
+            s"$tmp/silver_li", Seq("l_returnflag"))),
+          "write_s7_gold" -> (() => Sinks.writeParquet(gold, s"$tmp/gold"))
+        ).map { case (name, body) =>
+          val (sec, err) = timed(body())
+          emit(s"""{"progress":"write","name":${Jsons.quote(name)},"sec":$sec${errField(err)}}""")
+          name -> (if (err.isEmpty) Some(sec) else None)
         }
-      }.toMap
-    // suspect write probes' end-of-run re-measures (collected above)
-    writeRetryJobs.foreach { case (name, body) => timedWrite(name)(body()) }
-    writeCleanup()
-    // round-21 COLD RETRY (see the policy block above): re-measure the
-    // suspect colds LAST — maximum wall between the burst and the
-    // second sample. Emitted through the cold2 channel; feeds only
-    // total_cold_min's second-sample map, never `value`.
-    val coldRetries: Map[String, Double] = {
-      val nominals = nominalColds(java.nio.file.Paths.get(
-        sys.env.getOrElse("GRAFT_BENCH_NOMINALS", "bench_local.jsonl")))
-      val covered = warms.keySet ++ cold2.keySet ++ warmRetries.keySet
-      val plan = coldRetryPlan(
-        colds.collect { case (q, c, None) => (q.name, c) },
-        nominals, covered)
-      val out = scala.collection.mutable.Map.empty[String, Double]
-      var spent = 0.0
-      plan.foreach { name =>
-        if (spent < ColdRetryWallBudgetS) {
-          val q = qByName(name)
-          val (t, e) = timed(q)
-          spark.sharedState.cacheManager.clearCache()
-          spent += t
-          println(s"""{"progress":"cold2","name":${Jsons.quote(name)},"cold2":$t,"first":${coldByName(name)}${
-            e.fold("")(x => s""","err":${Jsons.quote(x)}""")}}""")
-          System.out.flush()
-          if (e.isEmpty) out(name) = t
-        }
-      }
-      out.toMap
+      } finally graft.engine.Fs.deleteRecursivelyQuietly(tmp)
     }
-    canary("end")
-    graft.engine.Fs.deleteRecursivelyQuietly(probeDir)
-    val warmRs = results.collect { case R(n, _, Some(w), _) => (n, w) }
-    val errs = results.count(_.err.isDefined)
-    val total = results.map(_.cold).sum
-    val totalWarm = warmRs.map(_._2).sum
-    // contention-resistant total (see coldMinTotal): second samples are
-    // the warm rows (batch top-20), the cold2 re-runs (streaming
-    // top-20), and the round-20 in-run warm retries; min-merged in case
-    // a name ever lands in several
-    val secondSamples =
-      (warms.toSeq ++ cold2.toSeq ++ warmRetries.toSeq ++ coldRetries.toSeq)
-        .groupMapReduce(_._1)(_._2)(math.min)
-    val totalColdMin =
-      coldMinTotal(results.map(r => (r.name, r.cold)), secondSamples)
-    // COMPACT summary (see header): totals + counts only — per-query data
-    // already streamed above; an ~8 KB map here is what kept the driver's
-    // tail-window parse null for seven rounds.
-    // canary echo stays COMPACT (3 spins + 3 one-minute loads, ~60
-    // chars): the driver's ~2,000-char stdout tail must carry the
-    // noise evidence even if the per-line canary records scroll out.
-    // Locale.ROOT: the default-locale f-interpolator renders comma
-    // decimals on e.g. de_DE JVMs, corrupting the JSON array
-    def num(v: Double, fmt: String): String =
-      String.format(java.util.Locale.ROOT, fmt, Double.box(v))
-    // canary_phases travels WITH canary_spins for the same reason as
-    // write_names below: the guard must never decode the echo by a
-    // positional start/mid/end convention (a 4th phase added here would
-    // otherwise be double-counted under a synthetic name by the merge)
-    val canaryPhases =
-      canaries.map { case (p, _, _) => Jsons.quote(p) }.mkString(",")
-    val canarySpins =
-      canaries.map { case (_, s, _) => num(s, "%.3f") }.mkString(",")
-    val canaryLoads = canaries
-      .map { case (_, _, l) => l.headOption.fold("null")(num(_, "%.2f")) }
-      .mkString(",")
-    // write_names travels WITH write_secs so benchguard never has to
-    // trust a positional convention (adding/reordering a timedWrite here
-    // previously silently misattributed slots); null sec = the write
-    // threw (time-to-failure, not an IO measurement)
-    val writeNames =
-      writeSecs.map { case (n, _) => Jsons.quote(n) }.mkString(",")
-    val writeEcho =
-      writeSecs.map(_._2.fold("null")(num(_, "%.2f"))).mkString(",")
-    // round-17 ask #1a: compact per-query attribution maps in the
-    // summary (top-K heaviest colds + the warm rows), budget-trimmed so
-    // the line can never outgrow the driver's 2,000-char tail window —
-    // see SummaryMaxChars / echoCohorts / renderEchoMaps above
-    val (topCold, warmEcho) =
-      echoCohorts(results.map(r => (r.name, r.cold)), warms, WarmK,
-        warmRetries)
-    // inline-probe echo (round-17 ask #1a): `inline_after` travels WITH
-    // the spin/io arrays — same no-positional-convention rule as
-    // canary_phases/write_names — so benchguard brackets contention
-    // windows from the summary alone after the per-lines scroll out
-    val inlineAfter = inlineProbes.map(_._1).mkString(",")
-    val inlineSpin =
-      inlineProbes.map(p => num(p._2, "%.2f")).mkString(",")
-    val inlineIo = inlineProbes.map(p => num(p._3, "%.2f")).mkString(",")
-    // cold2 echo: the streaming re-measures plus the round-21 cold
-    // retries, value-descending, capped at Cold2EchoMax entries so a
-    // fully-retried contended run cannot starve the budgeted
-    // warm/cold attribution maps (all retries still streamed as
-    // progress lines above; total_cold_min already folds every one)
-    val cold2Echo = (cold2 ++ coldRetries).toSeq
-      .sortBy { case (n, v) => (-v, n) }
-      .take(Cold2EchoMax)
-      .map { case (n, v) => s"${Jsons.quote(n)}:${fmt2(v)}" }
-      .mkString(",")
+
+    val coldRows = colds.map { case (q, c, _) => (q.name, c) }
+    val total = coldRows.map(_._2).sum
+    val writeNames = writes.map { case (n, _) => Jsons.quote(n) }.mkString(",")
+    val writeSecs = writes.map(_._2.fold("null")(fmt2)).mkString(",")
     val head =
-      s"""{"metric":"total","value":$total,"unit":"sec","total_warm":$totalWarm,"total_cold_min":${num(totalColdMin, "%.2f")},"n_warm":${warmRs.size},"n_queries":${results.size},"n_errors":$errs,"""
+      s"""{"metric":"total","value":$total,"unit":"sec","total_warm":${warms.values.sum},"total_cold_min":${fmt2(coldMinTotal(coldRows, warms))},"n_warm":${warms.size},"n_queries":${colds.size},"n_errors":${colds.count(_._3.isDefined)},"""
     val rest =
-      s""""cold2":{$cold2Echo},"inline_after":[$inlineAfter],"inline_spin":[$inlineSpin],"inline_io":[$inlineIo],"canary_phases":[$canaryPhases],"canary_spins":[$canarySpins],"canary_load1":[$canaryLoads],"write_names":[$writeNames],"write_secs":[$writeEcho],"sf":${Jsons.quote(sfDir)}}"""
-    val echo = renderEchoMaps(topCold, warmEcho,
-      SummaryMaxChars - head.length - rest.length - 1)
-    val summary = head + echo + "," + rest
-    println(summary)
-    System.out.flush()
+      s""""write_names":[$writeNames],"write_secs":[$writeSecs],"cpus":${Runtime.getRuntime.availableProcessors()},"sf":${Jsons.quote(sfDir)}}"""
+    val (topCold, warmEcho) = echoCohorts(coldRows, warms, WarmK)
+    val summary = head +
+      renderEchoMaps(topCold, warmEcho, SummaryMaxChars - head.length - rest.length - 1) +
+      "," + rest
+    emit(summary)
     spark.stop()
-    // printed AGAIN after spark.stop(): nothing (shutdown logging is on
-    // stderr, sbt's success banner is disabled) can now follow it, so the
-    // summary is the literal last stdout line for the driver's tail parse
-    println(summary)
-    System.out.flush()
+    emit(summary)
   }
 }

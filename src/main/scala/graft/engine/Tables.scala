@@ -100,7 +100,7 @@ object Tables {
   }
 
   private lazy val landedRoot: java.nio.file.Path =
-    java.nio.file.Files.createTempDirectory("graft_landed_")
+    TempDirs.createCleanedAtExit("graft_landed_")
   private val landedPaths =
     scala.collection.concurrent.TrieMap.empty[String, String]
 

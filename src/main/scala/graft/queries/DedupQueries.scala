@@ -481,37 +481,24 @@ object DedupQueries {
   /** Materialize-once-reuse for [[componentLabels]] — the 100 TB posture
     * ("compute the clustering once, land it, let every consumer read the
     * table") as code instead of a comment: the FIRST consumer per
-    * (JVM, fixture dir) computes the labels and lands them through the
-    * gold parquet sink ([[graft.engine.Sinks.writeParquet]]); every later
-    * consumer (q59's corpus materialization, q72's funnel) reads that
-    * parquet back instead of re-running the iterative clustering. The
-    * table lives under a per-JVM temp root, so a regenerated fixture or
-    * a new run can never observe a stale clustering; q43/q69 keep
+    * (JVM, fixture signature) computes the labels and lands them through
+    * [[Tables.landed]]; every later consumer (q59's corpus
+    * materialization, q72's funnel) reads that parquet back instead of
+    * re-running the iterative clustering. The documents signature in the
+    * key makes a fixture rewritten in place recompute; q43/q69 keep
     * computing from scratch — they ARE the definition the oracle checks.
     */
-  private lazy val labelRoot: java.nio.file.Path =
-    java.nio.file.Files.createTempDirectory("graft_labels_")
-  private val labelPaths =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  /** Number of from-scratch label computations this JVM has run through
-    * the materialized path (spec hook: two consumers, one compute).
+  private[queries] def componentLabelTable(s: SparkSession,
+                                           dir: String): DataFrame =
+    Tables.landed(s,
+      s"labels:$dir@${Tables.fileSignature(dir, "documents")}",
+      labelComputeCount)(componentLabels(s, dir))
+
+  /** From-scratch label computations this JVM has run (spec hook: two
+    * consumers, one compute).
     */
   private[graft] val labelComputeCount =
     new java.util.concurrent.atomic.AtomicInteger(0)
-
-  private[queries] def componentLabelTable(s: SparkSession,
-                                           dir: String): DataFrame = {
-    val path = labelPaths.getOrElseUpdate(dir, {
-      val p = labelRoot
-        .resolve(s"${labelPaths.size}_" +
-          dir.replaceAll("[^A-Za-z0-9._-]", "_"))
-        .toString
-      labelComputeCount.incrementAndGet()
-      graft.engine.Sinks.writeParquet(componentLabels(s, dir), p)
-      p
-    })
-    s.read.parquet(path)
-  }
 
   /** Oracle CTE chain shared by q43/q59: same edge set, same fixpoint,
     * declaratively via a recursive CTE, ending in

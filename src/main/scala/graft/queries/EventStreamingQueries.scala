@@ -41,7 +41,8 @@ private[queries] trait EventStreamingQueries extends EventQueriesBase {
   private[queries] val StreamStateTargetBytes: Long = 64L * 1024 * 1024
 
   /** Bytes of staged parquet input under `stagingDir` (symlinks
-    * followed — the single-file staging IS a symlink to the fixture).
+    * followed, files and directories alike — the single-file staging IS
+    * a symlink to the fixture).
     * RECURSIVE (round-21, VERDICT r20 #6): the current stagings are
     * flat, but a hive-partitioned staging dir (`dt=…/part-….parquet`)
     * measured by the old `Files.list` read 0 bytes and silently floored
@@ -50,7 +51,8 @@ private[queries] trait EventStreamingQueries extends EventQueriesBase {
     */
   private[queries] def stagedInputBytes(stagingDir: String): Long = {
     val stream = java.nio.file.Files.walk(
-      java.nio.file.Paths.get(stagingDir))
+      java.nio.file.Paths.get(stagingDir),
+      java.nio.file.FileVisitOption.FOLLOW_LINKS)
     try stream.iterator().asScala
       .filter(p => p.getFileName.toString.endsWith(".parquet") &&
         java.nio.file.Files.isRegularFile(p))

@@ -424,14 +424,17 @@ object ManifestSink {
     require(numFiles >= 1, "numFiles must be >= 1")
     // stage the rewrite through the sink itself, in a scratch table —
     // same writer, same escaping, same per-file accounting
-    val scratch = Files.createTempDirectory("graft_compact_").toString
-    readData(spark, dir, readSchemaOf(dir, Some(base)), Some(base))
-      .repartition(numFiles)
-      .write.format("graft-manifest").option("path", scratch)
-      .mode("append").save()
-    val staged = filesOf(scratch, 1L)
-    staged.foreach(f =>
-      Files.move(Paths.get(scratch, f.name), Paths.get(dir, f.name)))
+    val scratch = Files.createTempDirectory("graft_compact_")
+    val staged = try {
+      readData(spark, dir, readSchemaOf(dir, Some(base)), Some(base))
+        .repartition(numFiles)
+        .write.format("graft-manifest").option("path", scratch.toString)
+        .mode("append").save()
+      val files = filesOf(scratch.toString, 1L)
+      files.foreach(f =>
+        Files.move(scratch.resolve(f.name), Paths.get(dir, f.name)))
+      files
+    } finally graft.engine.Fs.deleteRecursivelyQuietly(scratch)
     val next = base + 1
     val claimed =
       try {

@@ -3,18 +3,15 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
-/** Pins the bench delivery policy (round-6 lesson: the driver bench
-  * timed out with zero parsed numbers because suite growth silently
-  * outgrew the wall budget).
+/** Pins the bench delivery policy.
   *
   *  - the streaming tag drives cold-only timing in [[Bench]]; a new
   *    `readStream` query registered without the tag would be timed with
-  *    a warm pass that re-pays state-store provisioning, re-inflating
-  *    the bench wall — so the tagged set is pinned here and any drift
-  *    (either direction) fails the build with a pointer to the policy;
-  *  - `scripts/benchguard.py` (budget estimator) must stay green via its
-  *    own `--selftest`; this spec checks it exists so the round-close
-  *    checklist can't silently lose it.
+  *    a warm pass that re-pays state-store provisioning, so the tagged
+  *    set is pinned here and any drift fails the build;
+  *  - the summary line's echo maps and `total_cold_min`;
+  *  - `scripts/benchguard.py --selftest` (the budget guard's own cases)
+  *    must exit 0.
   */
 class BenchPolicySpec extends AnyFunSuite with Matchers {
 
@@ -72,68 +69,29 @@ class BenchPolicySpec extends AnyFunSuite with Matchers {
     val warms = Map("qa" -> 4.0, "qb" -> 3.1, "qc" -> 2.4, "qd" -> 1.9)
     val (topCold, warmEcho) = Bench.echoCohorts(colds, warms, k = 4)
     topCold.map(_._1) shouldBe Seq("q_stream_heavy")
-    warmEcho shouldBe Seq(("qa", 4.0, 5.0, None), ("qb", 3.1, 4.0, None),
-      ("qc", 2.4, 3.0, None), ("qd", 1.9, 2.0, None))
+    warmEcho shouldBe Seq(("qa", 4.0, 5.0), ("qb", 3.1, 4.0),
+      ("qc", 2.4, 3.0), ("qd", 1.9, 2.0))
     // both value-descending so the budget trim drops the lightest first
     topCold.map(_._2) shouldBe topCold.map(_._2).sorted.reverse
     warmEcho.map(_._2) shouldBe warmEcho.map(_._2).sorted.reverse
     // rows rank by max over their samples: an anomalous heavy WARM (the
     // r16 q79 shape) and a heavy COLD both outlive a trim against rows
-    // light on both numbers — neither the run's heaviest cold nor the
-    // warm anomaly benchguard exists to flag can be dropped first
+    // light on both numbers — neither the run's heaviest cold nor a
+    // warm anomaly can be dropped first
     val anom = Bench.echoCohorts(
       Seq(("q_warm_anom", 1.5), ("qa", 5.0), ("qz", 4.0)),
       Map("q_warm_anom" -> 11.0, "qa" -> 4.0, "qz" -> 0.2), k = 3)._2
     anom.map(_._1) shouldBe Seq("q_warm_anom", "qa", "qz")
-    // round-20: an in-run retry attaches as the row's THIRD slot, so a
-    // tail-only artifact self-carries the rescuing sample
-    val retried = Bench.echoCohorts(
-      Seq(("q_warm_anom", 1.5), ("qa", 5.0)),
-      Map("q_warm_anom" -> 11.0, "qa" -> 4.0),
-      k = 2, retries = Map("q_warm_anom" -> 1.4))._2
-    retried shouldBe Seq(("q_warm_anom", 11.0, 1.5, Some(1.4)),
-      ("qa", 4.0, 5.0, None))
-  }
-
-  test("in-run retry predicates mirror benchguard's post-hoc thresholds " +
-      "(round-20: the bench re-measures exactly the rows the guard " +
-      "would otherwise exclude)") {
-    // WARM-SUSPECT: warm > 1.2x own cold + 0.1s (benchguard's
-    // WARM_SUSPECT_FACTOR / WARM_SUSPECT_MIN_EXCESS_S)
-    Bench.WarmSuspectFactor shouldBe 1.2
-    Bench.WarmSuspectMinExcessS shouldBe 0.1
-    Bench.warmSuspect(11.26, 1.46) shouldBe true // the r16 q79 shape
-    Bench.warmSuspect(0.50, 0.49) shouldBe false // sub-jitter excess
-    Bench.warmSuspect(1.86, 1.46) shouldBe true // just over 1.2x + 0.1
-    Bench.warmSuspect(1.85, 1.46) shouldBe false // exactly at: not over
-    // IO-NOISY: sec > 3x the write's clean-host nominal (benchguard's
-    // WRITE_NOMINAL_S / WRITE_NOISY_FACTOR — values pinned here AND in
-    // the guard's selftest so one-sided drift fails a gate)
-    Bench.WriteNoisyFactor shouldBe 3.0
-    Bench.WriteNominalS shouldBe Map(
-      "write_s5_silver_partitioned" -> 1.4,
-      "write_s5b_dynamic_overwrite" -> 0.8,
-      "write_s7_gold" -> 0.45)
-    // the r19 capture's 4.0x write_s5b row would have earned a retry
-    Bench.writeSuspect("write_s5b_dynamic_overwrite", 3.2) shouldBe true
-    Bench.writeSuspect("write_s5b_dynamic_overwrite", 2.3) shouldBe false
-    // unknown probe names never retry (no nominal to threshold against)
-    Bench.writeSuspect("write_unknown", 99.0) shouldBe false
-    Bench.RetrySuffix shouldBe "__retry"
   }
 
   test("renderEchoMaps renders both keys, 2-decimal, warm as [warm,cold] " +
       "pairs, and never exceeds its budget (drops lightest entries first)") {
     val tc = Seq(("q110_wedge", 6.312), ("q107_stream", 4.818))
-    val we = Seq(("q110_wedge", 4.1, 6.312, None))
+    val we = Seq(("q110_wedge", 4.1, 6.312))
     val full = Bench.renderEchoMaps(tc, we, budget = 10000)
     full shouldBe
       """"top_cold":{"q110_wedge":6.31,"q107_stream":4.82},""" +
         """"warm_echo":{"q110_wedge":[4.10,6.31]}"""
-    // a retried row renders its third slot (round-20)
-    Bench.renderEchoMaps(Nil, Seq(("q79_sem", 11.26, 1.46, Some(1.41))),
-      budget = 10000) shouldBe
-      """"top_cold":{},"warm_echo":{"q79_sem":[11.26,1.46,1.41]}"""
     // squeezed: the LIGHTEST entries go first, keys always remain
     val squeezed = Bench.renderEchoMaps(tc, we, budget = full.length - 1)
     squeezed.length should be <= (full.length - 1)
@@ -148,112 +106,25 @@ class BenchPolicySpec extends AnyFunSuite with Matchers {
   test("the echo maps for the REAL catalog nearly fit the summary " +
       "budget: at most 2 lightest entries trimmed") {
     // worst realistic shape: every name at its true length, all K slots
-    // filled, plus the round-18 base summary (~755 chars measured: the
-    // r17 base of 380 plus total_cold_min, the ~3-entry cold2 map, and
-    // three 13-probe inline arrays). The trim may now engage, but only
-    // on the LIGHTEST couple of entries — heavy-cold attribution and
-    // the warm rows benchguard's asymmetry heuristic needs must survive
-    // (see Bench.SummaryMaxChars)
+    // filled. The rest of the summary (totals, counts, the write echo,
+    // cpus, sf) measures ~340 chars, so nothing is trimmed; an 800-char
+    // base keeps headroom and may trim only the LIGHTEST couple of
+    // entries (see Bench.SummaryMaxChars)
     val colds = Catalog.all.map(q => (q.name, 10.0))
     val warms = colds.filterNot(c =>
       Catalog.all.find(_.name == c._1).exists(_.streaming))
       .sortBy { case (n, c) => (-c, n) }.take(20)
       .map { case (n, _) => n -> 9.99 }.toMap
     val (tc, we) = Bench.echoCohorts(colds, warms, k = 20)
-    val baseOverhead = 800 // measured new base ≈ 755 chars; headroom
+    val entries = tc.size + we.size + 2
+    Bench.renderEchoMaps(tc, we, Bench.SummaryMaxChars - 400)
+      .count(_ == ':') shouldBe entries
+    val baseOverhead = 800
     val rendered =
       Bench.renderEchoMaps(tc, we, Bench.SummaryMaxChars - baseOverhead)
     // at most the 2 lightest entries may be dropped
-    rendered.count(_ == ':') should be >= (tc.size + we.size + 2 - 2)
+    rendered.count(_ == ':') should be >= (entries - 2)
     (rendered.length + baseOverhead) should be <= Bench.SummaryMaxChars
-    // round-20 pathological shape: EVERY warm row retried (a real run
-    // retries only suspect rows — r19's worst capture had 4). Each
-    // third slot costs ~5 chars, so a few more of the LIGHTEST entries
-    // may trim, but the budget holds and the heavy rows survive
-    val (tcR, weR) = Bench.echoCohorts(colds, warms, k = 20,
-      retries = warms.map { case (n, _) => n -> 9.98 })
-    val renderedR =
-      Bench.renderEchoMaps(tcR, weR, Bench.SummaryMaxChars - baseOverhead)
-    renderedR.count(_ == ':') should be >= (tcR.size + weR.size + 2 - 6)
-    (renderedR.length + baseOverhead) should be <= Bench.SummaryMaxChars
-  }
-
-  // ---- round-21 cold retry (VERDICT r20 ask #1) ----
-
-  test("cold-retry predicate and plan: suspect colds vs committed " +
-      "nominal, excess-descending, deduped against existing second " +
-      "samples, row-capped") {
-    // suspect = cold > 1.5x nominal + 0.5s (absolute floor: sub-second
-    // rows jitter beyond 1.5x between clean runs)
-    Bench.ColdSuspectFactor shouldBe 1.5
-    Bench.ColdSuspectMinExcessS shouldBe 0.5
-    Bench.ColdRetryMax shouldBe 25
-    Bench.coldSuspect(42.16, 1.61) shouldBe true // the r20 q145 capture
-    Bench.coldSuspect(3.5, 2.0) shouldBe false   // exactly 1.5x + 0.5: not over
-    Bench.coldSuspect(3.6, 2.0) shouldBe true
-    Bench.coldSuspect(0.08, 0.02) shouldBe false // 4x but under the floor
-    // plan: biggest absolute excess first; rows already second-sampled
-    // (warm cohort / streaming cold2 / warm retries) never re-run;
-    // rows without a nominal (new queries) never fire
-    val colds = Seq(("qa", 42.0), ("qb", 10.0), ("qc", 9.0),
-      ("qd", 1.0), ("qe", 50.0))
-    val noms = Map("qa" -> 1.6, "qb" -> 2.0, "qc" -> 5.0, "qd" -> 0.9)
-    Bench.coldRetryPlan(colds, noms, covered = Set("qc")) shouldBe
-      Seq("qa", "qb")
-    Bench.coldRetryPlan(colds, noms, covered = Set.empty)
-      .take(2) shouldBe Seq("qa", "qb")
-    // the cap bounds a fully-contended run
-    val many = (1 to 40).map(i => (f"q$i%02d", 100.0))
-    val manyNoms = many.map { case (n, _) => n -> 1.0 }.toMap
-    Bench.coldRetryPlan(many, manyNoms, Set.empty).size shouldBe 25
-    // no nominals file -> empty map -> no retries (pre-round-21 behavior)
-    Bench.nominalColds(java.nio.file.Paths.get(
-      "/nonexistent/bench_nominals.jsonl")) shouldBe Map.empty
-  }
-
-  test("nominalColds min-merges every errorless sample in the committed " +
-      "capture (a contended first-pass cold must not de-sensitize the " +
-      "retry threshold when its own in-run re-measure recovered the " +
-      "clean cost)") {
-    val tmp = java.nio.file.Files.createTempFile("graft-noms", ".jsonl")
-    try {
-      java.nio.file.Files.writeString(tmp,
-        """log noise
-          |{"progress":"canary","phase":"start","spin_sec":0.5}
-          |{"progress":"query","name":"qa","cold":5.38,"streaming":false}
-          |{"progress":"query","name":"qb","cold":0.5,"streaming":true}
-          |{"progress":"query","name":"qc","cold":2.0,"streaming":false}
-          |not json {{{
-          |{"progress":"warm","name":"qa","warm":1.0}
-          |{"progress":"cold2","name":"qb","cold2":0.4}
-          |{"progress":"warm_retry","name":"qc","warm_retry":1.2,"first":3.0}
-          |{"progress":"warm","name":"qd","warm":9.9,"err":"boom"}
-          |{"metric":"total","value":99.0}
-          |""".stripMargin)
-      Bench.nominalColds(tmp) shouldBe
-        Map("qa" -> 1.0, "qb" -> 0.4, "qc" -> 1.2)
-    } finally java.nio.file.Files.delete(tmp)
-  }
-
-  test("the cold2 echo stays bounded: a fully-retried contended run " +
-      "may not starve the budgeted attribution maps") {
-    // Cold2EchoMax caps the unbudgeted cold2 summary map; with the cap,
-    // the worst-case base (~12 extra entries, ~330 chars over the old
-    // ~3-entry base) still leaves the budgeted echo room for the heavy
-    // warm/cold rows (mirrors the baseOverhead simulation below)
-    Bench.Cold2EchoMax shouldBe 12
-    val colds = Catalog.all.map(q => (q.name, 10.0))
-    val warms = colds.filterNot(c =>
-      Catalog.all.find(_.name == c._1).exists(_.streaming))
-      .sortBy { case (n, c) => (-c, n) }.take(20)
-      .map { case (n, _) => n -> 9.99 }.toMap
-    val (tc, we) = Bench.echoCohorts(colds, warms, k = 20)
-    val worstBase = 800 + 27 * Bench.Cold2EchoMax // old base + maxed cold2
-    val rendered =
-      Bench.renderEchoMaps(tc, we, Bench.SummaryMaxChars - worstBase)
-    (rendered.length + worstBase) should be <= Bench.SummaryMaxChars
-    // the heavy rows survive the extra squeeze
-    rendered.count(_ == ':') should be >= (tc.size + we.size + 2 - 8)
   }
 
   // ---- round-18 cold_min (VERDICT r17 ask #2) ----
@@ -269,23 +140,12 @@ class BenchPolicySpec extends AnyFunSuite with Matchers {
     Bench.coldMinTotal(Nil, Map("qa" -> 1.0)) shouldBe 0.0
   }
 
-  test("inline-probe cadence brackets every query inside one window") {
-    // a probe fires after every stride-th query and after the last, so
-    // for any catalog size every index i has a bracketing probe at or
-    // after it within one stride — the property benchguard's window
-    // naming relies on
-    val n = Catalog.all.size
-    val probeAfter = (0 to n).filter(i =>
-      i == 0 || i % Bench.InlineProbeStride == 0 || i == n)
-    probeAfter.sliding(2).foreach { case Seq(a, b) =>
-      (b - a) should be <= Bench.InlineProbeStride
-    }
-  }
-
-  test("bench-budget guard script is present") {
-    assert(java.nio.file.Files.exists(
-      java.nio.file.Paths.get("scripts/benchguard.py")),
-      "scripts/benchguard.py missing — the bench-budget regression guard " +
-        "(VERDICT r06 ask #3) must survive round closes")
+  test("bench-budget guard selftest passes") {
+    import scala.sys.process._
+    val out = new StringBuilder
+    val rc = Seq("python3", "scripts/benchguard.py", "--selftest")
+      .!(ProcessLogger(l => out.append(l).append('\n'),
+        l => out.append(l).append('\n')))
+    assert(rc == 0, s"benchguard --selftest exited $rc:\n$out")
   }
 }

@@ -119,6 +119,17 @@ class CumulativePropertySpec extends SparkSpec {
           }
       }
       got shouldBe expect
+      // totalName: every row also carries its group's row count (the
+      // q96/q269/q274 "rank out of n" shape)
+      val groupSize = rows.groupBy(_._2).map { case (g, rs) => g -> rs.size.toLong }
+      Cumulative
+        .groupedRankedCumSums(df, Seq(col("g")), Seq(col("k").asc),
+          values = Seq(col("v") -> "cum"), numPartitions = nParts,
+          totalName = Some("n"))
+        .select(col("g"), col("k"), col("rk"), col("cum"), col("n"))
+        .as[(Long, Long, Long, Long, Long)].collect()
+        .sortBy(t => (t._1, t._2)).toSeq shouldBe
+        expect.map { case (g, k, rk, cum) => (g, k, rk, cum, groupSize(g)) }
     }
     // rank-only call (no value columns) and desc order within groups —
     // the q269/q274 shape

@@ -59,6 +59,18 @@ class MedallionSpec extends SparkSpec {
     }
   }
 
+  test("a column null in every row survives bronze into silver") {
+    withTempDir { root =>
+      val layout = Medallion.Layout(s"$root/bronze", s"$root/silver", s"$root/gold")
+      Medallion.toBronze(raw.withColumn("address_3", lit(null).cast("string")),
+        layout, "20240102_120000")
+      val silver = Medallion.toSilver(spark, layout, projection, Seq("state"))
+      silver.collect().map(r => r.getAs[String]("id") ->
+        r.getAs[String]("full_address")).toMap shouldBe
+        Map("b1" -> "1 Main St", "b2" -> "2 Oak Ave, Bldg 2", "b3" -> "")
+    }
+  }
+
   test("gate trips block gold: min-count and null-or-empty (control flow)") {
     withTempDir { root =>
       val layout = Medallion.Layout(s"$root/bronze", s"$root/silver", s"$root/gold")

@@ -311,6 +311,23 @@ class NewOpsSpec extends SparkSpec {
     val direct = DedupQueries.componentLabels(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     mat shouldBe direct
+    // a fixture rewritten IN PLACE recomputes: the cache key carries the
+    // documents file signature, not the dir alone
+    withTempDir { tmp =>
+      val docs = graft.engine.Tables.load(spark, dir, "documents")
+      def labels() = DedupQueries.componentLabelTable(spark, tmp)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      docs.write.parquet(s"$tmp/documents.parquet")
+      val c0 = DedupQueries.labelComputeCount.get
+      labels() shouldBe direct
+      labels()
+      DedupQueries.labelComputeCount.get shouldBe c0 + 1
+      docs.filter(col("doc_id") % 2 === 0)
+        .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
+      labels() shouldBe DedupQueries.componentLabels(spark, tmp)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      DedupQueries.labelComputeCount.get shouldBe c0 + 2
+    }
   }
 
   test("doc shingle table materializes once and serves the dedup family") {

@@ -63,6 +63,16 @@ class StreamShuffleSpec extends SparkSpec {
     }
   }
 
+  test("stagedInputBytes follows a symlinked partition directory") {
+    withTempDir { src =>
+      withTempDir { dir =>
+        Files.write(Paths.get(src, "part-0.parquet"), Array.fill[Byte](40)(1))
+        Files.createSymbolicLink(Paths.get(dir, "dt=2026-08-19"), Paths.get(src))
+        EventQueries.stagedInputBytes(dir) shouldBe 40L
+      }
+    }
+  }
+
   test("a stateful stream under the bracket provisions the derived " +
       "partition count, and its result matches the session-default run") {
     import org.apache.spark.sql.functions._

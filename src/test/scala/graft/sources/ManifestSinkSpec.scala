@@ -411,6 +411,23 @@ class ManifestSinkSpec extends SparkSpec {
     }
   }
 
+  test("compact leaves no graft_compact_ scratch dir behind") {
+    def scratchDirs(): Set[String] =
+      new java.io.File(System.getProperty("java.io.tmpdir")).list()
+        .filter(_.startsWith("graft_compact_")).toSet
+    withTempDir { dir =>
+      val before = scratchDirs()
+      writeRows(dir, Seq((1L, "a")))
+      writeRows(dir, Seq((2L, "b")))
+      ManifestSink.compact(spark, dir, numFiles = 1)
+      // the aborted path (a stale base) cleans up too
+      intercept[java.util.ConcurrentModificationException] {
+        ManifestSink.compactFrom(spark, dir, numFiles = 1, base = 1L)
+      }
+      (scratchDirs() -- before) shouldBe empty
+    }
+  }
+
   test("zone-map stats prune files a filter provably cannot match") {
     withTempDir { dir =>
       // three append jobs with KNOWN disjoint id ranges -> 3 files
