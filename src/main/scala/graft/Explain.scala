@@ -26,6 +26,21 @@ object Explain {
   * regenerate after plan-shape changes and diff.
   */
 object PlanAudit {
+  import org.apache.spark.sql.execution.SparkPlan
+  import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+
+  /** Every node of the plan, descending through the AQE wrapper into its
+    * initial plan — `collect` stops at the wrapper. The one traversal
+    * the plan audits and plan-policy specs share. (Deliberately does NOT
+    * descend into cached relations: a final plan's `InMemoryTableScan`
+    * contents are audited separately via MaterializationAudit, at the
+    * moment they materialize.)
+    */
+  def flatten(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => a +: flatten(a.initialPlan)
+    case other => other +: other.children.flatMap(flatten)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out = if (args.length > 1) args(1) else "PLANS.md"
@@ -40,16 +55,7 @@ object PlanAudit {
     sb ++= "|---|---|---|---|---|---|---|---|\n"
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       try {
-        val plan = fn(spark, sfDir).queryExecution.executedPlan
-        // collect() stops at the AQE wrapper — descend into its initial
-        // plan (and any nested ones) to see the real operators
-        def flatten(p: org.apache.spark.sql.execution.SparkPlan)
-            : Seq[org.apache.spark.sql.execution.SparkPlan] = p match {
-          case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-            a +: flatten(a.initialPlan)
-          case other => other +: other.children.flatMap(flatten)
-        }
-        val nodes = flatten(plan)
+        val nodes = flatten(fn(spark, sfDir).queryExecution.executedPlan)
         def count(pred: String => Boolean) =
           nodes.count(n => pred(n.nodeName))
         val joins = nodes.map(_.nodeName)
@@ -96,10 +102,9 @@ object PlanAudit {
   * provisioned shuffle-partition counts from StreamingQueryProgress —
   * the one plan property `Explain` cannot see (the catalog returns the
   * drained batch table, not the streaming query handle). This is the
-  * evidence artifact for state-partition sizing changes: run once with
-  * `SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS=32` (the pre-round-20
-  * core-count behavior) and once without (input-derived sizing) and
-  * diff. `runMain graft.StreamPlanAudit <sfDir> <query ...>`.
+  * evidence artifact for state-partition sizing changes: run it before
+  * and after such a change and diff the outputs.
+  * `runMain graft.StreamPlanAudit <sfDir> <query ...>`.
   */
 object StreamPlanAudit {
   import scala.jdk.CollectionConverters._
@@ -143,52 +148,14 @@ object StreamPlanAudit {
           System.nanoTime() < deadline)
         Thread.sleep(50)
     }
-    val mode = sys.env.get("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS")
-      .map(v => s"override=$v").getOrElse("derived-from-input")
     names.foreach { name =>
       current.set(name)
       SparkEntry.queries(name)(spark, sfDir).collect()
       drainListenerEvents()
     }
     println(s"# StreamPlanAudit sfDir=$sfDir " +
-      s"sessionPartitions=${spark.conf.get("spark.sql.shuffle.partitions")}" +
-      s" streamSizing=$mode")
+      s"sessionPartitions=${spark.conf.get("spark.sql.shuffle.partitions")}")
     lines.synchronized(lines.sorted.foreach(println))
-    spark.stop()
-  }
-}
-
-/** Single-partition-window audit: one line per query whose physical plan
-  * contains a `WindowExec` with an EMPTY partitionSpec (the "No
-  * Partition Defined / moving all data to a single partition" class).
-  * Input to the scale triage: global windows over dimension-sized
-  * pre-aggregates are acceptable (documented per query); global windows
-  * over user/part-scale inputs should be converted to
-  * [[engine.Cumulative.rankedCumSum]].
-  * `runMain graft.GlobalWindowAudit [sfDir]`.
-  */
-object GlobalWindowAudit {
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = engine.Sessions.local("graft-window-audit")
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      try {
-        val plan = fn(spark, sfDir).queryExecution.executedPlan
-        def flatten(p: org.apache.spark.sql.execution.SparkPlan)
-            : Seq[org.apache.spark.sql.execution.SparkPlan] = p match {
-          case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-            a +: flatten(a.initialPlan)
-          case other => other +: other.children.flatMap(flatten)
-        }
-        val globals = flatten(plan).collect {
-          case w: org.apache.spark.sql.execution.window.WindowExec
-              if w.partitionSpec.isEmpty => w
-        }
-        if (globals.nonEmpty) println(s"GLOBALWIN $name ${globals.size}")
-      } catch { case e: Throwable =>
-        println(s"GLOBALWIN_ERR $name ${e.getClass.getSimpleName}")
-      }
-    }
     spark.stop()
   }
 }

@@ -29,39 +29,24 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Bucketing {
 
-  /** Write `df` as a catalog table bucketed (and within-bucket sorted)
-    * by `key`. Overwrites any existing table of the same name.
+  /** Write `df` as an EXTERNAL catalog table at `location`, bucketed
+    * (and within-bucket sorted) by `key`. Overwrites any existing table
+    * of the same name. The caller owns the location, so nothing lands
+    * under the session warehouse dir and dropping the table leaves the
+    * data in place.
     */
   def writeBucketed(df: DataFrame, table: String, key: String,
-      buckets: Int): Unit =
+      buckets: Int, location: String): Unit =
     df.repartition(buckets, df(key))
       .write
       .mode("overwrite")
       .bucketBy(buckets, key)
       .sortBy(key)
       .format("parquet")
+      .option("path", location)
       .saveAsTable(table)
 
   /** Read a bucketed table back (scan carries the bucket distribution). */
   def readBucketed(spark: SparkSession, table: String): DataFrame =
     spark.table(table)
-
-  /** A managed table's location under the session warehouse dir — for
-    * clearing a stale location a PRIOR JVM left behind (the in-memory
-    * catalog forgets the table, the directory survives; creating a
-    * managed table over a non-empty location then fails). One resolver
-    * shared by q295's build and `BucketingSpec`.
-    *
-    * The warehouse conf may be a URI (`file:/...`, Spark's default) or
-    * a plain filesystem path, possibly with URI-illegal characters
-    * (spaces). Hadoop's `Path` normalizes both — `new java.net.URI`
-    * (the previous resolver) threw `URISyntaxException` on unescaped
-    * paths, which was tolerable test-only but this is on q295's
-    * production path (r16 ADVICE).
-    */
-  def tableLocation(spark: SparkSession, table: String): java.io.File =
-    new java.io.File(
-      new org.apache.hadoop.fs.Path(
-        spark.conf.get("spark.sql.warehouse.dir")).toUri.getPath,
-      table.toLowerCase)
 }

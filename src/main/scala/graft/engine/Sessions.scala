@@ -39,8 +39,8 @@ object Sessions {
       // silently retype numeric-looking string partitions (state "00901"
       // -> INT 901, leading zeros lost) on the medallion read-back path
       .config("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
-      // saveAsTable target for bucketed-table workflows; keep it out of
-      // the repo working tree
+      // managed-table root (engine tables are external, see Bucketing);
+      // keep it out of the repo working tree
       .config("spark.sql.warehouse.dir",
         s"${sys.props("java.io.tmpdir")}/graft-warehouse")
       .config("spark.ui.enabled", "false")

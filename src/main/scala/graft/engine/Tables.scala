@@ -104,53 +104,69 @@ object Tables {
   private val landedPaths =
     scala.collection.concurrent.TrieMap.empty[String, String]
 
-  /** Land `compute` as parquet ONCE per (JVM, key); every later call
+  /** Build `name` into its own dir ONCE per (JVM, name, fixture dir,
+    * signatures of `tables` in it); every later call returns the built
+    * dir. The one once-per-JVM memo of the engine: [[landed]] is this
+    * plus a parquet write, and builds that are not a single parquet
+    * write (q283/q293/q294's manifest tables, q295's bucketed tables)
+    * call it directly. The fixture signatures in the key make a table
+    * rewritten in place recompute instead of serving a stale build;
+    * the dir is named from the WHOLE key, so nested builds (gtri ->
+    * goedges -> gedges) never share a dir, and a build that threw
+    * leaves no entry and restarts from an empty dir. Every dir lives
+    * under one root removed at JVM exit.
+    *
+    * The memo relies on sequential callers (Verify, Bench and the specs
+    * run queries one at a time): two threads racing on an unbuilt key
+    * may both run the build. No concurrent caller exists, so there is
+    * no lock.
+    */
+  def landedDir(name: String, dir: String, tables: Seq[String])(
+      build: String => Unit): String = {
+    val key = s"$name:$dir@" + tables.map(fileSignature(dir, _)).mkString("@")
+    landedPaths.getOrElseUpdate(key, {
+      val p = landedRoot.resolve(
+        name.replaceAll("[^A-Za-z0-9._-]", "_") + "_" +
+          java.util.UUID.nameUUIDFromBytes(key.getBytes("UTF-8")))
+      Fs.deleteRecursively(p)
+      build(p.toString)
+      p.toString
+    })
+  }
+
+  /** Land `compute` as parquet through [[landedDir]]; every later call
     * for the same key scans the landed table. The gold-sink pattern
     * behind [[graft.queries.DedupQueries.docShingleTable]] (q81
     * 18.3 s -> 2.4 s) and the graph family's shared edge list: a
     * projection consumed by a whole query family is a landed silver
-    * table, not a per-query recompute. Callers bake a FIXTURE
-    * SIGNATURE ([[fileSignature]]) into the key so a rewritten fixture
-    * dir recomputes instead of reading a stale table. `counter` (when
-    * given) counts from-scratch computes — the spec hook proving
+    * table, not a per-query recompute. `counter` (when given) counts
+    * from-scratch computes — the spec hook proving
     * one-compute-many-consumers.
     */
-  def landed(s: SparkSession, key: String,
+  def landed(s: SparkSession, name: String, dir: String, tables: Seq[String],
       counter: java.util.concurrent.atomic.AtomicInteger = null)(
       compute: => DataFrame): DataFrame = {
-    // `computedHere` (set inside the update thunk) — not a separate
-    // check-then-act `contains` read — decides whether THIS caller's
-    // thunk ran (r17 ADVICE): two threads racing on the same un-landed
-    // key both see contains=false, but only the getOrElseUpdate winner
-    // runs the thunk; the loser must still fall through to the record
-    // below or its audit hook silently never fires.
     var computedHere = false
-    val path = landedPaths.getOrElseUpdate(key, {
-      val p = landedRoot
-        .resolve(s"${landedPaths.size}_" +
-          key.replaceAll("[^A-Za-z0-9._-]", "_").takeRight(80))
-        .toString
+    val path = landedDir(name, dir, tables) { p =>
       if (counter != null) counter.incrementAndGet()
       val df = compute
-      MaterializationAudit.record(s"landed:$key", df)
+      MaterializationAudit.record(s"landed:$name", df)
       Sinks.writeParquet(df, p)
       computedHere = true
-      p
-    })
-    // already-landed keys (and race losers) still expose their compute
-    // PLAN to an enabled audit (by-name, never built otherwise), so
-    // plan-policy coverage does not depend on which suite — or thread —
-    // landed the table first
-    if (!computedHere) MaterializationAudit.record(s"landed:$key", compute)
+    }
+    // already-landed keys still expose their compute PLAN to an enabled
+    // audit (by-name, never built otherwise), so plan-policy coverage
+    // does not depend on which suite landed the table first
+    if (!computedHere) MaterializationAudit.record(s"landed:$name", compute)
     s.read.parquet(path)
   }
 
   /** Signature of one fixture table's parquet files (names, sizes,
-    * mtimes) — the cache-key component that makes [[landed]] safe
-    * against in-place fixture rewrites (the property specs overwrite
-    * temp dirs between runs).
+    * mtimes) — the key component that makes [[landedDir]] safe against
+    * in-place fixture rewrites (the property specs overwrite temp dirs
+    * between runs).
     */
-  def fileSignature(dir: String, table: String): String = {
+  private def fileSignature(dir: String, table: String): String = {
     def walk(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory)
         Option(f.listFiles()).map(_.toSeq.sortBy(_.getName)).getOrElse(Nil)

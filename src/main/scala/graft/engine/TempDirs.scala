@@ -5,8 +5,8 @@ import java.nio.file.{Files, Path}
 /** Per-JVM temp-dir registry with ONE shutdown hook.
   *
   * Several queries stage tables or stream sinks in tmp whose contents
-  * are read lazily for the session's lifetime (drained parquet, the
-  * memoized manifest bases, q295's bucketed warehouse tables) — eager
+  * are read lazily for the session's lifetime (drained parquet, stream
+  * sinks, the root of every table [[Tables.landedDir]] builds) — eager
   * deletion is only safe for a per-invocation copy with its own
   * try/finally. Across JVMs those dirs used to accumulate one staged
   * copy per sweep/bench run (round 16 found 20 stale q294 bases), so

@@ -62,8 +62,7 @@ object DedupQueries {
     */
   private[queries] def docShingleTable(s: SparkSession,
                                        dir: String): DataFrame =
-    Tables.landed(s,
-      s"shingles:$dir@${Tables.fileSignature(dir, "documents")}",
+    Tables.landed(s, "shingles", dir, Seq("documents"),
       shingleComputeCount) {
       // widen: tokenize+shingle is per-row compute-bound, and the
       // single-row-group fixture scan would run it on one thread
@@ -73,9 +72,6 @@ object DedupQueries {
           array_distinct(Text.shingles(Text.tokens(col("text")), K))
             .as("sh"))
     }
-
-  /** See [[Tables.eager]]: materialize before multi-branch consumption. */
-  private def eager(df: DataFrame): DataFrame = Tables.eager(df)
 
   /** df-blocked shingle postings (s, doc_id), df(s) ∈ [2, 5] — the
     * candidate-generation relation shared VERBATIM by
@@ -88,8 +84,7 @@ object DedupQueries {
     */
   private[queries] def rareBlockedShingles(s: SparkSession,
                                            dir: String): DataFrame =
-    Tables.landed(s,
-      s"rareblk:$dir@${Tables.fileSignature(dir, "documents")}") {
+    Tables.landed(s, "rareblk", dir, Seq("documents")) {
       val exploded = shingled(s, dir)
         .select(col("doc_id"), explode(col("sh")).as("s"))
       val rare = exploded.groupBy(col("s"))
@@ -107,8 +102,7 @@ object DedupQueries {
     */
   private[queries] def minhashSigTable(s: SparkSession,
                                        dir: String): DataFrame =
-    Tables.landed(s,
-      s"minhsig:$dir@${Tables.fileSignature(dir, "documents")}") {
+    Tables.landed(s, "minhsig", dir, Seq("documents")) {
       val ex = shingled(s, dir)
         .select(col("doc_id"), explode(col("sh")).as("sch"))
         .select(col("doc_id"), md5(col("sch")).as("m"))
@@ -214,7 +208,7 @@ object DedupQueries {
   val q24MinhashLsh: Q = Q(
     "q24_minhash_lsh",
     (s, dir) => {
-      val base = eager(shingled(s, dir))
+      val base = Tables.eager(shingled(s, dir))
       // the (doc_id, m0..m15) signature table is LANDED once per
       // fixture (shared with q242's accuracy audit) — see
       // [[minhashSigTable]] for the md5-derived permutation family
@@ -225,7 +219,7 @@ object DedupQueries {
           col(s"m${b * RowsPerBand + r}").cast("string")): _*)))
       val bands = sig.select(col("doc_id"),
         posexplode(array(bkCols: _*)).as(Seq("b", "bk")))
-      val bandsM = eager(bands)
+      val bandsM = Tables.eager(bands)
       val cand = bandsM.as("x")
         .join(bandsM.as("y"),
           col("x.b") === col("y.b") && col("x.bk") === col("y.bk")
@@ -258,7 +252,7 @@ object DedupQueries {
   val q25JaccardBlocked: Q = Q(
     "q25_jaccard_blocked",
     (s, dir) => {
-      val base = eager(shingled(s, dir))
+      val base = Tables.eager(shingled(s, dir))
       val blocked = rareBlockedShingles(s, dir)
       val cand = blocked.as("x")
         .join(blocked.as("y"),
@@ -320,7 +314,7 @@ object DedupQueries {
       // unless the flips cover all 4 bands
       val bvs = array((0 until 4).map(i =>
         shiftrightunsigned(col("simhash"), 15 * i).bitwiseAND(32767)): _*)
-      val bands = eager(sim.select(col("doc_id"), col("simhash"),
+      val bands = Tables.eager(sim.select(col("doc_id"), col("simhash"),
           posexplode(bvs).as(Seq("band_i", "bv"))))
       val pairs = bands.as("x")
         .join(bands.as("y"),
@@ -374,8 +368,7 @@ object DedupQueries {
     * this table, checked row-for-row against DuckDB's levenshtein().
     */
   private[queries] def levPairTable(s: SparkSession, dir: String): DataFrame =
-    Tables.landed(s,
-      s"levpairs:$dir@${Tables.fileSignature(dir, "documents")}",
+    Tables.landed(s, "levpairs", dir, Seq("documents"),
       levPairComputeCount) {
       Text.levNearDupPairs(Tables.load(s, dir, "documents"),
         "doc_id", "text", blockTokens = 3, maxDist = 40)
@@ -396,8 +389,7 @@ object DedupQueries {
     * demands it (q43/q69); only the input silver relation is landed.
     */
   private[queries] def dupEdges(s: SparkSession, dir: String): DataFrame =
-    Tables.landed(s,
-      s"dupedges:$dir@${Tables.fileSignature(dir, "documents")}",
+    Tables.landed(s, "dupedges", dir, Seq("documents"),
       dupEdgeComputeCount) {
       val docs = Tables.load(s, dir, "documents")
       val fp = docs.select(col("doc_id"),
@@ -445,7 +437,7 @@ object DedupQueries {
     val edges = dupEdges(s, dir)
     val undirected = edges
       .union(edges.select(col("b").as("a"), col("a").as("b")))
-    var cached = eager(edges.select(col("a").as("v"))
+    var cached = Tables.eager(edges.select(col("a").as("v"))
       .union(edges.select(col("b").as("v"))).distinct()
       .select(col("v"), col("v").as("lbl")))
     var lbl = cached
@@ -490,8 +482,7 @@ object DedupQueries {
     */
   private[queries] def componentLabelTable(s: SparkSession,
                                            dir: String): DataFrame =
-    Tables.landed(s,
-      s"labels:$dir@${Tables.fileSignature(dir, "documents")}",
+    Tables.landed(s, "labels", dir, Seq("documents"),
       labelComputeCount)(componentLabels(s, dir))
 
   /** From-scratch label computations this JVM has run (spec hook: two
@@ -691,7 +682,7 @@ object DedupQueries {
   val q61Decontaminate: Q = Q(
     "q61_decontaminate",
     (s, dir) => {
-      val sh = eager(shingled(s, dir))
+      val sh = Tables.eager(shingled(s, dir))
       val benchEx = sh.filter(col("doc_id") % 97 === 0)
         .select(col("doc_id").as("bench_doc"), explode(col("sh")).as("s"))
       val corpEx = sh.filter(col("doc_id") % 97 =!= 0)
@@ -736,7 +727,7 @@ object DedupQueries {
   val q63Boilerplate: Q = Q(
     "q63_boilerplate",
     (s, dir) => {
-      val ex = eager(shingled(s, dir)
+      val ex = Tables.eager(shingled(s, dir)
         .select(col("doc_id"), explode(col("sh")).as("s")))
       // 1-row corpus size, same crossJoin(broadcast) pattern as q45's idf
       val nDocs = Tables.load(s, dir, "documents")
@@ -797,7 +788,7 @@ object DedupQueries {
       // distinct (source, shingle) vocabulary — reused by both join
       // sides and the per-source size aggregate; shingles come from the
       // landed docShingleTable, not a fresh corpus tokenization
-      val sv = eager(docShingleTable(s, dir)
+      val sv = Tables.eager(docShingleTable(s, dir)
         .select(col("source"), explode(col("sh")).as("sg"))
         .distinct())
       val vocab = sv.groupBy(col("source")).agg(count(lit(1)).as("n_sh"))
@@ -861,8 +852,7 @@ object DedupQueries {
     */
   private[queries] def docPrefixShingleTable(s: SparkSession,
                                              dir: String): DataFrame =
-    Tables.landed(s,
-      s"shingles$PrefixK:$dir@${Tables.fileSignature(dir, "documents")}",
+    Tables.landed(s, s"shingles$PrefixK", dir, Seq("documents"),
       prefixShingleComputeCount) {
       // widen: same single-thread-scan repair as docShingleTable
       Tables.widen(s, Tables.load(s, dir, "documents"))
@@ -907,7 +897,7 @@ object DedupQueries {
       // eager: the self-join below consumes `prefix` twice — without
       // materialization each branch recomputes the df join + window
       // (see Tables.eager).
-      val prefix = eager(ranked
+      val prefix = Tables.eager(ranked
         .filter(col("rk") <= col("sz") - expr("(sz * 6 + 9) div 10") + 1)
         .select(col("doc_id"), col("g")))
       val cand = prefix.as("x")
@@ -978,7 +968,7 @@ object DedupQueries {
   val q156NoveltyRate: Q = Q(
     "q156_novelty_rate",
     (s, dir) => {
-      val ex = eager(shingled(s, dir)
+      val ex = Tables.eager(shingled(s, dir)
         .select(col("doc_id"), explode(col("sh")).as("sch")))
       val firstSeen = ex.groupBy(col("sch"))
         .agg(min(col("doc_id")).as("first_doc"))
@@ -1019,7 +1009,7 @@ object DedupQueries {
   val q171ContainmentJoin: Q = Q(
     "q171_containment_join",
     (s, dir) => {
-      val base = eager(shingled(s, dir))
+      val base = Tables.eager(shingled(s, dir))
       val blocked = rareBlockedShingles(s, dir)
       val cand = blocked.as("x")
         .join(blocked.as("y"),
@@ -1064,7 +1054,7 @@ object DedupQueries {
   val q172SourceDupMatrix: Q = Q(
     "q172_source_dup_matrix",
     (s, dir) => {
-      val base = eager(shingled(s, dir))
+      val base = Tables.eager(shingled(s, dir))
       val blocked = rareBlockedShingles(s, dir)
       val cand = blocked.as("x")
         .join(blocked.as("y"),
@@ -1138,7 +1128,7 @@ object DedupQueries {
   val q180SortedNeighborhood: Q = Q(
     "q180_sorted_neighborhood",
     (s, dir) => {
-      val base = eager(shingled(s, dir))
+      val base = Tables.eager(shingled(s, dir))
       val keyed = Tables.load(s, dir, "documents")
         .select(col("doc_id"),
           lower(substring(col("text"), 1, 24)).as("k"))
@@ -1148,7 +1138,7 @@ object DedupQueries {
           Window.orderBy(col("blk"))
             .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
         .select(col("blk"), col("off"))
-      val ranked = eager(keyed
+      val ranked = Tables.eager(keyed
         .join(broadcast(offsets), Seq("blk"))
         .withColumn("rn", col("off") + row_number().over(
           Window.partitionBy(col("blk"))
@@ -1325,14 +1315,14 @@ object DedupQueries {
     "q228_threshold_curve",
     (s, dir) => {
       import s.implicits._
-      val base = eager(shingled(s, dir))
+      val base = Tables.eager(shingled(s, dir))
       val blocked = rareBlockedShingles(s, dir)
       val cand = blocked.as("x")
         .join(blocked.as("y"),
           col("x.s") === col("y.s") && col("x.doc_id") < col("y.doc_id"))
         .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"))
         .distinct()
-      val scored = eager(cand
+      val scored = Tables.eager(cand
         .join(base.select(col("doc_id").as("d1"), col("sh").as("sh1")),
           Seq("d1"))
         .join(base.select(col("doc_id").as("d2"), col("sh").as("sh2")),
@@ -1404,14 +1394,14 @@ object DedupQueries {
   val q234DedupTransitivity: Q = Q(
     "q234_dedup_transitivity",
     (s, dir) => {
-      val base = eager(shingled(s, dir))
+      val base = Tables.eager(shingled(s, dir))
       val blocked = rareBlockedShingles(s, dir)
       val cand = blocked.as("x")
         .join(blocked.as("y"),
           col("x.s") === col("y.s") && col("x.doc_id") < col("y.doc_id"))
         .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"))
         .distinct()
-      val e = eager(verifyPairs(cand, base, threshold = 0.5)
+      val e = Tables.eager(verifyPairs(cand, base, threshold = 0.5)
         .select(col("d1").as("u"), col("d2").as("v")))
       val deg = e.select(col("u").as("node"))
         .unionAll(e.select(col("v").as("node")))
@@ -1495,7 +1485,7 @@ object DedupQueries {
   val q242MinhashAccuracy: Q = Q(
     "q242_minhash_accuracy",
     (s, dir) => {
-      val base = eager(shingled(s, dir))
+      val base = Tables.eager(shingled(s, dir))
       // both the signature table and the blocking postings are LANDED
       // relations (shared with q24 and the whole blocked-candidate
       // family) — this audit's own work starts at the pair join
@@ -1607,7 +1597,7 @@ object DedupQueries {
     "q261_contrastive_mining",
     (s, dir) => {
       val anchorCap = 30L
-      val base = eager(docShingleTable(s, dir))
+      val base = Tables.eager(docShingleTable(s, dir))
       val blocked = rareBlockedShingles(s, dir)
       val hardCand = blocked.as("x")
         .join(blocked.as("y"),

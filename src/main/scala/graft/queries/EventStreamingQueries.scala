@@ -8,7 +8,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
 import graft.Catalog.Q
-import graft.engine.Tables
+import graft.engine.{Tables, TempDirs}
 
 /** Structured-Streaming + lake-certification family (see
   * [[EventQueries]] for the suite doc): real `readStream` runs (file
@@ -19,19 +19,6 @@ import graft.engine.Tables
   * overwrite before the driver's oracle hashes the result.
   */
 private[queries] trait EventStreamingQueries extends EventQueriesBase {
-  /** Temp dir for this file's per-JVM staged tables and stream sinks,
-    * deleted at JVM EXIT: the drained results are read lazily from
-    * these dirs, so the in-JVM lifetime must span the session (eager
-    * deletion is only safe for q294's per-invocation work copy, which
-    * has its own try/finally) — but across JVMs they accumulated one
-    * full staged-table copy per sweep/bench run in tmp (the q294
-    * lifecycle spec found 20 stale bases from prior rounds). One
-    * shared registry/hook in [[graft.engine.TempDirs]].
-    */
-  private[queries] def tempDirCleanedAtExit(prefix: String)
-      : java.nio.file.Path =
-    graft.engine.TempDirs.createCleanedAtExit(prefix)
-
   /** Target input bytes per streaming state partition — the same
     * bytes-per-partition sizing the batch side gets from AQE's advisory
     * partition size (64 MB default), applied to the one exchange AQE
@@ -60,49 +47,6 @@ private[queries] trait EventStreamingQueries extends EventQueriesBase {
     finally stream.close()
   }
 
-  /** Scale-adaptive shuffle-partition count for ONE bounded streaming
-    * run over `stagingDir` (guide §2: derive partitioning from input
-    * size, never a constant tuned for local mode or the cluster).
-    *
-    * Why it matters: every stateful operator provisions ONE state store
-    * per shuffle partition per micro-batch — commit/delta/maintenance
-    * files on the HDFS-backed provider, a whole RocksDB instance each
-    * under transformWithState — and AQE cannot coalesce streaming
-    * exchanges, so the session default (sized to the core count for
-    * batch work) buys `cores x operators x batches` of pure provisioning
-    * overhead while each store holds kilobytes. Partitions are derived
-    * as one per [[StreamStateTargetBytes]] of staged input, clamped to
-    * [1, session default] so a cluster deployment (whose session
-    * default is sized to its data) never loses parallelism it had, and
-    * overridable via SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS for a
-    * deployment whose steady-state STATE volume is not proportional to
-    * one bounded drain's input (an unbounded run accumulating keys
-    * sizes partitions to state, not to a batch).
-    *
-    * Correctness-neutral by construction: every stateful op here is
-    * keyed (groupBy / dropDuplicates / join keys), and key->partition
-    * assignment never changes which rows meet which state — the suite's
-    * 32-vs-4 thread invariance gate re-proves partition-count
-    * invariance of all 295 results each round.
-    */
-  private[queries] def streamShufflePartitions(s: SparkSession,
-      stagingDir: String): Int =
-    sys.env.get("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS")
-      .map(_.trim).filter(_.nonEmpty) match {
-      // an empty/blank export is "unset", not an override
-      case Some(raw) =>
-        // r20 ADVICE: a malformed override must fail NAMING THE VARIABLE
-        // (not as an unhandled NumberFormatException mid-query), and a
-        // non-positive value is the same operator error as a non-numeric
-        // one — consistent handling, never a silent fallback
-        val n = raw.toIntOption.getOrElse(-1)
-        require(n >= 1, "SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS must be a " +
-          s"positive integer, got '$raw'")
-        n
-      case None => deriveStreamPartitions(stagedInputBytes(stagingDir),
-        s.conf.get("spark.sql.shuffle.partitions").toInt)
-    }
-
   /** Parallelism floor for the derived count: stateful per-batch work
     * (the symmetric join's per-row state probes above all) scales with
     * the rows buffered, not with the input bytes the derivation sees,
@@ -116,10 +60,28 @@ private[queries] trait EventStreamingQueries extends EventQueriesBase {
     */
   private[queries] val StreamMinPartitions = 4
 
-  /** The pure sizing rule behind [[streamShufflePartitions]]: one
-    * partition per [[StreamStateTargetBytes]] of input (ceil), floored
-    * at min([[StreamMinPartitions]], session default), never above the
-    * session default.
+  /** Scale-adaptive shuffle-partition count for ONE bounded streaming
+    * run over `inputBytes` of staged input (guide §2: derive
+    * partitioning from input size, never a constant tuned for local
+    * mode or the cluster).
+    *
+    * Why it matters: every stateful operator provisions ONE state store
+    * per shuffle partition per micro-batch — commit/delta/maintenance
+    * files on the HDFS-backed provider, a whole RocksDB instance each
+    * under transformWithState — and AQE cannot coalesce streaming
+    * exchanges, so the session default (sized to the core count for
+    * batch work) buys `cores x operators x batches` of pure provisioning
+    * overhead while each store holds kilobytes. Partitions are derived
+    * as one per [[StreamStateTargetBytes]] of staged input, clamped to
+    * [1, session default] so a cluster deployment (whose session
+    * default is sized to its data) never loses parallelism it had,
+    * and floored at min([[StreamMinPartitions]], session default).
+    *
+    * Correctness-neutral by construction: every stateful op here is
+    * keyed (groupBy / dropDuplicates / join keys), and key->partition
+    * assignment never changes which rows meet which state — the suite's
+    * 32-vs-4 thread invariance gate re-proves partition-count
+    * invariance of all 295 results each round.
     */
   private[queries] def deriveStreamPartitions(inputBytes: Long,
       sessionDefault: Int): Int = {
@@ -147,7 +109,8 @@ private[queries] trait EventStreamingQueries extends EventQueriesBase {
       stagingDir: String)(body: => A): A = {
     val key = "spark.sql.shuffle.partitions"
     val prior = s.conf.getOption(key)
-    s.conf.set(key, streamShufflePartitions(s, stagingDir).toString)
+    s.conf.set(key, deriveStreamPartitions(stagedInputBytes(stagingDir),
+      s.conf.get(key).toInt).toString)
     try body finally prior match {
       case Some(v) => s.conf.set(key, v)
       case None => s.conf.unset(key)
@@ -712,7 +675,7 @@ private[queries] trait EventStreamingQueries extends EventQueriesBase {
       if (ties > 0) throw new IllegalStateException(
         "q84 precondition: duplicate (user_id, ts_us) would make the " +
           "cross-batch merge arrival-order-dependent")
-      val root = tempDirCleanedAtExit("graft_q84")
+      val root = TempDirs.createCleanedAtExit("graft_q84")
       val stateDir = root.resolve("state")
       val stagingDir = eventsOooStreamDir(s, dir)
       val src = s.readStream.schema(batchSchema)
@@ -1318,7 +1281,7 @@ private[queries] trait EventStreamingQueries extends EventQueriesBase {
       import org.apache.spark.sql.streaming.Trigger
       import java.nio.file.Files
       val batchSchema = s.read.parquet(s"$dir/events.parquet").schema
-      val root = tempDirCleanedAtExit("graft_q284")
+      val root = TempDirs.createCleanedAtExit("graft_q284")
       val goldDir = root.resolve("gold")
       val stagingDir = eventsOooStreamDir(s, dir)
       val src = s.readStream.schema(batchSchema)
@@ -1380,39 +1343,27 @@ private[queries] trait EventStreamingQueries extends EventQueriesBase {
     * so the result is identical at any parallelism.
     */
 
-  /** q283's two-version manifest table, keyed by fixture signature so
-    * a rewritten fixture rebuilds — the same once-per-JVM discipline
-    * as [[graft.engine.Tables.landed]].
-    */
-  private val q283Tables =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   val q283ManifestTimeTravel: Q = Q(
     "q283_manifest_timetravel",
     (s, dir) => {
-      import java.nio.file.Files
       // the two-version table is BUILT once per (JVM, fixture): building
       // it inside DataFrame construction would re-run both write jobs
-      // (and leak a temp dir) on every plan-only consumer — PlanAudit,
-      // the warm bench pass, repeated Verify calls. Memoized, the writes
-      // run once and every later call exercises exactly the READ path
-      // (time travel + zone-map skipping) this query certifies.
-      val root = q283Tables.getOrElseUpdate(
-        s"$dir@${Tables.fileSignature(dir, "part")}", {
-          val r = tempDirCleanedAtExit("graft_q283")
-            .resolve("tbl").toString
-          val part = Tables.load(s, dir, "part")
-            .withColumn("price_cents",
-              floor(col("p_retailprice") * 100).cast("long"))
-            .select("p_partkey", "p_brand", "p_size", "price_cents")
-          part.repartitionByRange(8, col("p_size"))
-            .write.format("graft-manifest").option("path", r)
-            .mode("append").save()
-          part.filter(col("p_size") <= lit(3))
-            .write.format("graft-manifest").option("path", r)
-            .mode("overwrite").save()
-          r
-        })
+      // on every plan-only consumer — PlanAudit, the warm bench pass,
+      // repeated Verify calls. Memoized, the writes run once and every
+      // later call exercises exactly the READ path (time travel +
+      // zone-map skipping) this query certifies.
+      val root = Tables.landedDir("q283_manifest", dir, Seq("part")) { r =>
+        val part = Tables.load(s, dir, "part")
+          .withColumn("price_cents",
+            floor(col("p_retailprice") * 100).cast("long"))
+          .select("p_partkey", "p_brand", "p_size", "price_cents")
+        part.repartitionByRange(8, col("p_size"))
+          .write.format("graft-manifest").option("path", r)
+          .mode("append").save()
+        part.filter(col("p_size") <= lit(3))
+          .write.format("graft-manifest").option("path", r)
+          .mode("overwrite").save()
+      }
       s.read.format("graft-manifest")
         .option("path", root).option("versionAsOf", "1").load()
         .filter(col("p_size") >= lit(40))
@@ -1428,12 +1379,6 @@ private[queries] trait EventStreamingQueries extends EventQueriesBase {
               max(p_size) AS max_size
             FROM part WHERE p_size >= 40
             GROUP BY 1 ORDER BY p_brand"""))
-
-  /** q293's four-version manifest table, keyed by fixture signature —
-    * the same once-per-JVM build discipline as [[q283Tables]].
-    */
-  private val q293Tables =
-    scala.collection.concurrent.TrieMap.empty[String, String]
 
   /** Manifest CHANGE FEED, end-to-end through the driver's oracle —
     * the streaming counterpart of q283's batch promotion. The customer
@@ -1466,31 +1411,28 @@ private[queries] trait EventStreamingQueries extends EventQueriesBase {
   val q293ManifestChangeFeed: Q = Q(
     "q293_manifest_changefeed",
     (s, dir) => {
-      import java.nio.file.Files
       import org.apache.spark.sql.streaming.Trigger
-      val root = q293Tables.getOrElseUpdate(
-        s"$dir@${Tables.fileSignature(dir, "customer")}", {
-          val r = tempDirCleanedAtExit("graft_q293")
-            .resolve("tbl").toString
-          val cust = Tables.load(s, dir, "customer")
-            .withColumn("bal_cents",
-              round(col("c_acctbal") * 100).cast("long"))
-            .select("c_custkey", "c_mktsegment", "bal_cents")
-          cust.filter(col("c_custkey") % 3 === 0)
-            .write.format("graft-manifest").option("path", r)
-            .mode("append").save()
-          cust.filter(col("c_custkey") % 3 === 1)
-            .write.format("graft-manifest").option("path", r)
-            .mode("append").save()
-          // rewrite-only version between the appends and the overwrite:
-          // the drained feed must skip it (see Scaladoc above)
-          graft.sources.ManifestSink.compact(s, r, numFiles = 1)
-          cust.filter(col("c_custkey") % 3 === 2)
-            .write.format("graft-manifest").option("path", r)
-            .mode("overwrite").save()
-          r
-        })
-      val out = tempDirCleanedAtExit("graft_q293_out")
+      // the four-version table is built once per (JVM, fixture), the
+      // same memo discipline as q283's
+      val root = Tables.landedDir("q293_manifest", dir, Seq("customer")) { r =>
+        val cust = Tables.load(s, dir, "customer")
+          .withColumn("bal_cents",
+            round(col("c_acctbal") * 100).cast("long"))
+          .select("c_custkey", "c_mktsegment", "bal_cents")
+        cust.filter(col("c_custkey") % 3 === 0)
+          .write.format("graft-manifest").option("path", r)
+          .mode("append").save()
+        cust.filter(col("c_custkey") % 3 === 1)
+          .write.format("graft-manifest").option("path", r)
+          .mode("append").save()
+        // rewrite-only version between the appends and the overwrite:
+        // the drained feed must skip it (see Scaladoc above)
+        graft.sources.ManifestSink.compact(s, r, numFiles = 1)
+        cust.filter(col("c_custkey") % 3 === 2)
+          .write.format("graft-manifest").option("path", r)
+          .mode("overwrite").save()
+      }
+      val out = TempDirs.createCleanedAtExit("graft_q293_out")
       val q = s.readStream.format("graft-manifest")
         .option("path", root)
         .option("max_versions_per_trigger", "1").load()
@@ -1509,18 +1451,6 @@ private[queries] trait EventStreamingQueries extends EventQueriesBase {
               CAST(sum(CAST(round(c_acctbal * 100) AS BIGINT)) AS BIGINT)
                 AS sum_bal_cents
             FROM customer GROUP BY 1 ORDER BY c_mktsegment"""))
-
-  /** q294's two-version base table (bal-cents customer slices %3=0 and
-    * %3=1 as two appends), built once per JVM like [[q293Tables]]. The
-    * query COPIES it per invocation: the resume test appends a third
-    * version to its copy, which must never leak into the shared base
-    * (bench invokes the same query more than once per JVM).
-    */
-  // private[graft] so Q294LifecycleSpec can locate the cached base
-  // deterministically (tmp-scanning broke when an earlier suite in the
-  // same JVM had already warmed the cache)
-  private[graft] val q294Tables =
-    scala.collection.concurrent.TrieMap.empty[String, String]
 
   /** Manifest change-feed RESUME, end-to-end through the driver's
     * oracle — q293 certifies the FRESH drain (snapshot + deltas +
@@ -1552,23 +1482,24 @@ private[queries] trait EventStreamingQueries extends EventQueriesBase {
         .withColumn("bal_cents",
           round(col("c_acctbal") * 100).cast("long"))
         .select("c_custkey", "c_mktsegment", "bal_cents")
-      val base = q294Tables.getOrElseUpdate(
-        s"$dir@${Tables.fileSignature(dir, "customer")}", {
-          val r = tempDirCleanedAtExit("graft_q294_base")
-            .resolve("tbl").toString
-          cust.filter(col("c_custkey") % 3 === 0)
-            .write.format("graft-manifest").option("path", r)
-            .mode("append").save()
-          cust.filter(col("c_custkey") % 3 === 1)
-            .write.format("graft-manifest").option("path", r)
-            .mode("append").save()
-          r
-        })
+      // the two-version base table (slices %3=0 and %3=1 as two
+      // appends) is built once per (JVM, fixture) and COPIED per
+      // invocation: the resume test appends a third version to its
+      // copy, which must never leak into the shared base (bench invokes
+      // the same query more than once per JVM)
+      val base = Tables.landedDir("q294_base", dir, Seq("customer")) { r =>
+        cust.filter(col("c_custkey") % 3 === 0)
+          .write.format("graft-manifest").option("path", r)
+          .mode("append").save()
+        cust.filter(col("c_custkey") % 3 === 1)
+          .write.format("graft-manifest").option("path", r)
+          .mode("append").save()
+      }
       // PID-tagged prefix (r16 ADVICE): Q294LifecycleSpec leak-scans
       // the shared java.io.tmpdir for these work dirs; without the tag
       // a concurrently running sweep/bench JVM's in-flight copy would
       // appear "leaked" and flake the suite. The tag scopes the scan
-      // to this JVM (same convention as q295's PID-suffixed tables).
+      // to this JVM.
       val work = Files.createTempDirectory(
           s"graft_q294_work_pid${ProcessHandle.current().pid()}_")
         .resolve("tbl")
@@ -1582,7 +1513,7 @@ private[queries] trait EventStreamingQueries extends EventQueriesBase {
           ()
         }
       } finally walk.close()
-      val out = tempDirCleanedAtExit("graft_q294_out")
+      val out = TempDirs.createCleanedAtExit("graft_q294_out")
       def drain(): Unit = {
         val q = s.readStream.format("graft-manifest")
           .option("path", work.toString).load()

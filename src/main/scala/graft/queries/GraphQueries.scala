@@ -80,8 +80,7 @@ object GraphQueries {
     */
   private[queries] def cooccurrenceEdges(s: SparkSession,
                                          dir: String): DataFrame =
-    Tables.landed(s,
-      s"gedges:$dir@${Tables.fileSignature(dir, "events")}",
+    Tables.landed(s, "gedges", dir, Seq("events"),
       edgeComputeCount)(computeCooccurrenceEdges(s, dir))
 
   /** (node, d) vertex degrees of [[cooccurrenceEdges]] — landed with
@@ -90,8 +89,7 @@ object GraphQueries {
     */
   private[queries] def graphDegrees(s: SparkSession,
                                     dir: String): DataFrame =
-    Tables.landed(s,
-      s"gdeg:$dir@${Tables.fileSignature(dir, "events")}") {
+    Tables.landed(s, "gdeg", dir, Seq("events")) {
       val e = cooccurrenceEdges(s, dir)
       e.select(col("u").as("node"))
         .unionAll(e.select(col("v").as("node")))
@@ -141,8 +139,7 @@ object GraphQueries {
     */
   private[queries] def orientedEdges(s: SparkSession,
                                      dir: String): DataFrame =
-    Tables.landed(s,
-      s"goedges:$dir@${Tables.fileSignature(dir, "events")}") {
+    Tables.landed(s, "goedges", dir, Seq("events")) {
       orientEdges(cooccurrenceEdges(s, dir), graphDegrees(s, dir))
     }
 
@@ -158,8 +155,7 @@ object GraphQueries {
     * smaller here: the bucket cap bounds cliques at 8 vertices).
     */
   private[queries] def triangleTable(s: SparkSession, dir: String): DataFrame =
-    Tables.landed(s,
-      s"gtri:$dir@${Tables.fileSignature(dir, "events")}") {
+    Tables.landed(s, "gtri", dir, Seq("events")) {
       wedgeTriangles(orientedEdges(s, dir), cooccurrenceEdges(s, dir))
     }
 
@@ -173,8 +169,7 @@ object GraphQueries {
     * be the pipeline bug.
     */
   private[queries] def timedEdges(s: SparkSession, dir: String): DataFrame =
-    Tables.landed(s,
-      s"gtedges:$dir@${Tables.fileSignature(dir, "events")}") {
+    Tables.landed(s, "gtedges", dir, Seq("events")) {
       val ev = Tables.load(s, dir, "events")
       val b = ev.select(col("event_type"),
           expr("(ts div 1000) div 600000000").as("h"), col("user_id"))

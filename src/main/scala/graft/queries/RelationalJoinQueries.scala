@@ -1227,23 +1227,14 @@ private[queries] trait RelationalJoinQueries {
                 ELSE 'PLAIN' END AS encoding
             FROM a ORDER BY col_name"""))
 
-  /** q295's bucketed table names, built once per JVM (the writes are
-    * the layout under test; every later invocation exercises exactly
-    * the bucketed READ + co-located join this query certifies). The
-    * PID suffix keeps concurrent sweep JVMs out of each other's
-    * warehouse locations; the exit hook removes the managed dirs so
-    * repeated runs don't accumulate table copies in tmp.
-    */
-  private val q295Tables =
-    scala.collection.concurrent.TrieMap.empty[String, (String, String)]
-
   /** Bucketed co-located join, end-to-end through the driver's oracle —
     * promotes `engine/Bucketing.scala` from plan-shape-only evidence
     * (`BucketingSpec` pins the exchange-free physical plan) to the
     * hash-checked driver gate, the round-12 pattern every other
     * mechanism already follows (q283 time travel, q292 paged source,
-    * q293 change feed). Orders and customer are WRITTEN as catalog
-    * tables bucketed 8 ways on custkey via [[graft.engine.Bucketing]],
+    * q293 change feed). Orders and customer are WRITTEN as external
+    * catalog tables bucketed 8 ways on custkey via
+    * [[graft.engine.Bucketing]],
     * read back, merge-joined on the bucket key (the `merge` hint keeps
     * the join on the sort-merge path the bucketed layout serves, not a
     * broadcast that would bypass it at this SF), and aggregated per
@@ -1270,38 +1261,30 @@ private[queries] trait RelationalJoinQueries {
   val q295BucketedJoin: Q = Q(
     "q295_bucketed_join",
     (s, dir) => {
-      val (tOrders, tCust) = q295Tables.getOrElseUpdate(
-        s"$dir@${Tables.fileSignature(dir, "orders")}" +
-          s"@${Tables.fileSignature(dir, "customer")}", {
-          val tag = dir.replaceAll("[^A-Za-z0-9]", "_") +
-            "_p" + ProcessHandle.current().pid()
-          val to = s"graft_q295_orders$tag"
-          val tc = s"graft_q295_customer$tag"
-          // a prior JVM's managed-table location can linger under the
-          // shared warehouse dir with no entry in THIS JVM's in-memory
-          // catalog (the BucketingSpec lesson) — clear both, and remove
-          // this JVM's locations again at exit
-          import graft.engine.{Bucketing, Fs, TempDirs}
-          Seq(to, tc).foreach { t =>
-            s.sql(s"DROP TABLE IF EXISTS $t")
-            val loc = Bucketing.tableLocation(s, t)
-            Fs.deleteRecursively(loc.toPath)
-            TempDirs.registerAtExit(loc.toPath)
-          }
-          graft.engine.Bucketing.writeBucketed(
-            Tables.load(s, dir, "orders")
-              .withColumn("price_cents",
-                round(col("o_totalprice") * 100).cast("long"))
-              .select("o_custkey", "price_cents"),
-            to, "o_custkey", buckets = 8)
-          graft.engine.Bucketing.writeBucketed(
-            Tables.load(s, dir, "customer")
-              .select("c_custkey", "c_mktsegment"),
-            tc, "c_custkey", buckets = 8)
-          (to, tc)
-        })
-      val o = graft.engine.Bucketing.readBucketed(s, tOrders)
-      val c = graft.engine.Bucketing.readBucketed(s, tCust)
+      import graft.engine.Bucketing
+      // the bucketed writes are the layout under test, built once per
+      // (JVM, fixture) as external tables under the memo's dir; every
+      // later invocation exercises exactly the bucketed READ +
+      // co-located join this query certifies. The table names come from
+      // the dir, so two fixture dirs in one session never share one.
+      def table(root: String, side: String) =
+        "graft_" + new java.io.File(root).getName
+          .replaceAll("[^A-Za-z0-9]", "_") + "_" + side
+      val root = Tables.landedDir("q295_bucketed", dir,
+          Seq("orders", "customer")) { r =>
+        Bucketing.writeBucketed(
+          Tables.load(s, dir, "orders")
+            .withColumn("price_cents",
+              round(col("o_totalprice") * 100).cast("long"))
+            .select("o_custkey", "price_cents"),
+          table(r, "orders"), "o_custkey", buckets = 8, s"$r/orders")
+        Bucketing.writeBucketed(
+          Tables.load(s, dir, "customer")
+            .select("c_custkey", "c_mktsegment"),
+          table(r, "customer"), "c_custkey", buckets = 8, s"$r/customer")
+      }
+      val o = Bucketing.readBucketed(s, table(root, "orders"))
+      val c = Bucketing.readBucketed(s, table(root, "customer"))
       o.hint("merge")
         .join(c, col("o_custkey") === col("c_custkey"))
         .groupBy(col("c_mktsegment"))

@@ -72,8 +72,7 @@ object TextQueries {
     * read the same table.
     */
   private[queries] def tokenTable(s: SparkSession, dir: String): DataFrame =
-    Tables.landed(s,
-      s"toktab:$dir@${Tables.fileSignature(dir, "documents")}",
+    Tables.landed(s, "toktab", dir, Seq("documents"),
       tokenComputeCount) {
       // NOT widened before landing (measured, r21): repartitioning the
       // 1M-row sf0.1 stream to the core count landed 32 sub-MB files
@@ -648,8 +647,7 @@ object TextQueries {
     */
   private[queries] def repetitionTable(s: SparkSession,
       dir: String): DataFrame =
-    Tables.landed(s,
-      s"repetition:$dir@${Tables.fileSignature(dir, "documents")}",
+    Tables.landed(s, "repetition", dir, Seq("documents"),
       repetitionComputeCount) {
       repetitionPerDoc(s, dir, dropNullText = false)
     }

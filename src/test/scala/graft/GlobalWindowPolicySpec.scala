@@ -81,14 +81,13 @@ class GlobalWindowPolicySpec extends SparkSpec with AdaptiveSparkPlanHelper {
     "q137_symspell_join", // deletion-neighborhood losslessness
     "q241_ann_bits_curve") // documented exhaustive truth pass
 
-  private def flatten(p: SparkPlan): Seq[SparkPlan] = PlanBounds.flatten(p)
-
-  /** One catalog pass: each non-streaming query's FINAL executed plan
-    * plus every intermediate plan it materializes through Tables.eager /
-    * Tables.landed (drained from MaterializationAudit). The final plan alone is NOT
-    * enough — materialized subplans hide behind an InMemoryTableScan /
-    * parquet scan (q180's block-offset window was invisible that way for
-    * five rounds). Both policy tests read this one sweep.
+  /** One catalog pass: every node (see [[PlanAudit.flatten]]) of each
+    * non-streaming query's FINAL executed plan plus every intermediate
+    * plan it materializes through Tables.eager / Tables.landed (drained
+    * from MaterializationAudit). The final plan alone is NOT enough —
+    * materialized subplans hide behind an InMemoryTableScan / parquet
+    * scan (q180's block-offset window was invisible that way for five
+    * rounds). All three policy tests read this one sweep.
     */
   private lazy val sweep: Seq[(String, Seq[SparkPlan])] = {
     engine.MaterializationAudit.enable()
@@ -96,14 +95,15 @@ class GlobalWindowPolicySpec extends SparkSpec with AdaptiveSparkPlanHelper {
       .filterNot(_.streaming) // streaming plans are runs, not lazy plans
       .map { q =>
         val finalPlan = q.fn(spark, sfDir).queryExecution.executedPlan
-        (q.name, finalPlan +: engine.MaterializationAudit.drain().map(_.plan))
+        (q.name, (finalPlan +: engine.MaterializationAudit.drain()
+          .map(_.plan)).flatMap(PlanAudit.flatten))
       }
     finally engine.MaterializationAudit.disable()
   }
 
   test("only reviewed queries carry single-partition windows") {
     val offenders = sweep.collect {
-      case (name, plans) if !allowed(name) && plans.flatMap(flatten).exists {
+      case (name, nodes) if !allowed(name) && nodes.exists {
         case w: WindowExec => w.partitionSpec.isEmpty
         case _ => false
       } => name
@@ -153,8 +153,8 @@ class GlobalWindowPolicySpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // see it; this gate can. A bounded partition KEY never blesses a
     // window; only a bounded CHILD (or a genuinely scaling key) does.
     val offenders = sweep.collect {
-      case (name, plans) if !collapsedAllowed(name) &&
-        plans.flatMap(flatten).exists {
+      case (name, nodes) if !collapsedAllowed(name) &&
+        nodes.exists {
           case w: WindowExec => w.partitionSpec.nonEmpty &&
             PlanBounds.allConstantDomains(w.partitionSpec, w) &&
             !bounded(w.child)
@@ -169,8 +169,8 @@ class GlobalWindowPolicySpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("cross/nested-loop joins only attach provably-bounded sides") {
     val offenders = sweep.collect {
-      case (name, plans) if !allPairsAllowed(name) &&
-        plans.flatMap(flatten).exists {
+      case (name, nodes) if !allPairsAllowed(name) &&
+        nodes.exists {
           case c: CartesianProductExec =>
             !(bounded(c.left) && bounded(c.right))
           case j: BroadcastNestedLoopJoinExec =>

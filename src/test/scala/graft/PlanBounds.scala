@@ -72,17 +72,6 @@ object PlanBounds {
 
   private type Aliases = Map[ExprId, Seq[Expression]]
 
-  /** Every node of the plan, descending through the AQE wrapper — the
-    * traversal the plan-policy specs share. (Deliberately does NOT
-    * descend into cached relations: a final plan's `InMemoryTableScan`
-    * contents are audited separately via MaterializationAudit, at the
-    * moment they materialize.)
-    */
-  def flatten(p: SparkPlan): Seq[SparkPlan] = p match {
-    case a: AdaptiveSparkPlanExec => a +: flatten(a.initialPlan)
-    case other => other +: other.children.flatMap(flatten)
-  }
-
   def bounded(p: SparkPlan): Boolean = boundedRows(p, aliasMap(p))
 
   /** Round-20 (VERDICT r19 #5): are ALL of `exprs` bounded-DOMAIN in

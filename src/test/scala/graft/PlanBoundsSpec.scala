@@ -202,7 +202,7 @@ class PlanBoundsSpec extends SparkSpec {
 
   private def constantKeys(df: DataFrame): Boolean = {
     import org.apache.spark.sql.execution.window.WindowExec
-    val plans = PlanBounds.flatten(df.queryExecution.executedPlan)
+    val plans = PlanAudit.flatten(df.queryExecution.executedPlan)
     val windows = plans.collect { case w: WindowExec => w }
     windows.nonEmpty && windows.forall(w =>
       PlanBounds.allConstantDomains(w.partitionSpec, w))

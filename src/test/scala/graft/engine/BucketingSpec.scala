@@ -38,24 +38,23 @@ class BucketingSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
-  /** The warehouse dir outlives the (in-memory-catalog) test JVM, so a
-    * prior run's managed-table location can linger with no catalog
-    * entry; clear both before writing. Deployment-side this is the
-    * persistent metastore's job, not the engine's.
+  /** Tables are EXTERNAL, one location each under a temp root removed
+    * at JVM exit, so nothing lands under the session warehouse dir and
+    * no prior run's location can linger there.
     */
-  private def fresh(table: String): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    Fs.deleteRecursively(Bucketing.tableLocation(spark, table).toPath)
-  }
+  private lazy val root = TempDirs.createCleanedAtExit("graft_bucketing_")
+
+  private def write(df: DataFrame, table: String, buckets: Int): Unit =
+    Bucketing.writeBucketed(df, table, "k", buckets,
+      root.resolve(table).toString)
 
   private val facts = (1L to 2000L).map(i => (i, i % 97, i * 2.0))
     .toDF("k", "grp", "v")
   private val dims = (1L to 500L).map(i => (i, s"name$i")).toDF("k", "nm")
 
   test("bucketed-bucketed equi-join: zero shuffles, zero sorts") {
-    fresh("b_facts"); fresh("b_dims")
-    Bucketing.writeBucketed(facts, "b_facts", "k", 8)
-    Bucketing.writeBucketed(dims, "b_dims", "k", 8)
+    write(facts, "b_facts", 8)
+    write(dims, "b_dims", 8)
     withSmjOnly {
       val j = Bucketing.readBucketed(spark, "b_facts")
         .join(Bucketing.readBucketed(spark, "b_dims"), "k")
@@ -84,9 +83,8 @@ class BucketingSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("mismatched bucket counts still join correctly (one side exchanges)") {
-    fresh("b_facts8"); fresh("b_dims4")
-    Bucketing.writeBucketed(facts, "b_facts8", "k", 8)
-    Bucketing.writeBucketed(dims, "b_dims4", "k", 4)
+    write(facts, "b_facts8", 8)
+    write(dims, "b_dims4", 4)
     withSmjOnly {
       val j = Bucketing.readBucketed(spark, "b_facts8")
         .join(Bucketing.readBucketed(spark, "b_dims4"), "k")
@@ -98,8 +96,7 @@ class BucketingSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("aggregation on the bucket key: zero shuffles") {
-    fresh("b_facts_agg")
-    Bucketing.writeBucketed(facts, "b_facts_agg", "k", 8)
+    write(facts, "b_facts_agg", 8)
     val a = Bucketing.readBucketed(spark, "b_facts_agg")
       .groupBy("k").agg(sum("v").as("sv"))
     shuffles(a) shouldBe 0
@@ -107,8 +104,7 @@ class BucketingSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("aggregation on a non-bucket key still shuffles (sanity)") {
-    fresh("b_facts_grp")
-    Bucketing.writeBucketed(facts, "b_facts_grp", "k", 8)
+    write(facts, "b_facts_grp", 8)
     val a = Bucketing.readBucketed(spark, "b_facts_grp")
       .groupBy("grp").agg(sum("v").as("sv"))
     assert(shuffles(a) >= 1)

@@ -2,13 +2,12 @@ package graft.engine
 
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{PlanAudit, SparkSpec}
 
 /** Contracts of the [[MaterializationAudit]] spec hook — each pinned because the
   * policy sweep riding it ([[graft.GlobalWindowPolicySpec]]) silently
@@ -28,9 +27,6 @@ import graft.SparkSpec
   */
 class MaterializationAuditSpec extends SparkSpec {
 
-  private def flatten(p: SparkPlan): Seq[SparkPlan] =
-    graft.PlanBounds.flatten(p)
-
   test("eager snapshots the original operators, not the cache scan") {
     import spark.implicits._
     // a global window eager'd away: exactly the q180 shape the final
@@ -43,7 +39,7 @@ class MaterializationAuditSpec extends SparkSpec {
       val recs = MaterializationAudit.drain()
       recs.map(_.site) shouldBe Seq("eager")
       withClue("audited plan must carry the window: ") {
-        flatten(recs.head.plan).collect {
+        PlanAudit.flatten(recs.head.plan).collect {
           case w: WindowExec if w.partitionSpec.isEmpty => w
         } should not be empty
       }
@@ -53,7 +49,7 @@ class MaterializationAuditSpec extends SparkSpec {
       // consumer reading the persisted instance's plan before the QE was
       // memoized) would see only this
       withClue("a fresh identical lineage planned post-persist hides it: ") {
-        val post = flatten(build().queryExecution.executedPlan)
+        val post = PlanAudit.flatten(build().queryExecution.executedPlan)
         post.collect { case w: WindowExec => w } shouldBe empty
         post.collect { case s: InMemoryTableScanExec => s } should
           not be empty
@@ -65,7 +61,9 @@ class MaterializationAuditSpec extends SparkSpec {
   test("landed records the compute plan even when already landed") {
     import spark.implicits._
     val computes = new AtomicInteger
-    def build() = Tables.landed(spark, "plan_audit_spec_key", computes) {
+    // no fixture tables: the key is the name alone
+    def build() = Tables.landed(spark, "plan_audit_spec_key", dir = "",
+        tables = Nil, counter = computes) {
       Seq((1L, "x")).toDF("id", "s")
         .withColumn("rn", row_number().over(Window.orderBy(col("id"))))
     }
@@ -77,7 +75,7 @@ class MaterializationAuditSpec extends SparkSpec {
       computes.get shouldBe 1
       val recs = MaterializationAudit.drain()
       recs.map(_.site) shouldBe Seq("landed:plan_audit_spec_key")
-      flatten(recs.head.plan).collect {
+      PlanAudit.flatten(recs.head.plan).collect {
         case w: WindowExec if w.partitionSpec.isEmpty => w
       } should not be empty
     } finally MaterializationAudit.disable()

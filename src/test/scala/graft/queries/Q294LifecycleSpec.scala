@@ -23,10 +23,11 @@ import graft.sources.ManifestSink
   *    releases it even when a drain throws (only the small sink dir
   *    may persist, the q293 precedent).
   *
-  * The base is located through the query's own cache map, not by
-  * scanning tmp: an earlier suite in the same JVM (e.g. the comparator
-  * contract walking every query) may already have warmed the cache,
-  * in which case this spec's invocations create no new base at all.
+  * The base is located through the memo ([[graft.engine.Tables.landedDir]]
+  * with a build that fails the test), not by scanning tmp: an earlier
+  * suite in the same JVM (e.g. the comparator contract walking every
+  * query) may already have warmed the memo, in which case this spec's
+  * invocations create no new base at all.
   */
 class Q294LifecycleSpec extends SparkSpec {
   private val sfDir = "/root/testdata/sf0.001"
@@ -56,12 +57,12 @@ class Q294LifecycleSpec extends SparkSpec {
     val q = graft.SparkEntry.queries("q294_manifest_feed_resume")
     assert(q(spark, sfDir).count() > 0)
 
-    // exactly one cache entry for this fixture dir (keyed by dir +
-    // fixture signature), holding exactly the two build appends
-    val keys = EventQueries.q294Tables.keys.filter(_.startsWith(sfDir + "@"))
-    assert(keys.size == 1,
-      s"expected one cached q294 base for $sfDir, found keys: $keys")
-    val baseTbl = EventQueries.q294Tables(keys.head)
+    // the memo holds the base for this fixture (keyed by name, dir and
+    // customer signature) — a lookup that would have to build it fails —
+    // and the base holds exactly the two build appends
+    def memoBase(): String = graft.engine.Tables.landedDir("q294_base",
+      sfDir, Seq("customer"))(_ => fail(s"no memoized q294 base for $sfDir"))
+    val baseTbl = memoBase()
     val v1 = ManifestSink.listVersions(baseTbl)
     assert(v1.size == 2,
       s"base table must hold exactly its 2 build versions, got $v1")
@@ -69,8 +70,7 @@ class Q294LifecycleSpec extends SparkSpec {
     // second invocation in the same JVM: reuses the cache, appends to
     // its own copy only
     assert(q(spark, sfDir).count() > 0)
-    assert(EventQueries.q294Tables(keys.head) == baseTbl &&
-        EventQueries.q294Tables.keys.count(_.startsWith(sfDir + "@")) == 1,
+    assert(memoBase() == baseTbl,
       "a second invocation must not create another base copy")
     assert(ManifestSink.listVersions(baseTbl) == v1,
       "the resume append leaked into the shared base table")
