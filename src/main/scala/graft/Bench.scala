@@ -132,9 +132,7 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // optional trailing args: query-name filters for local iteration
     // (the driver passes none and gets the full suite)
-    val only = args.toSet
-    val unknown = only -- Catalog.all.map(_.name).toSet
-    require(unknown.isEmpty, s"unknown query name(s): ${unknown.mkString(", ")}")
+    val selected = Catalog.select(args.toSeq)
     val spark = graft.engine.Sessions.local("graft-bench")
     def run(fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
@@ -150,8 +148,7 @@ object Bench {
       (sec, err)
     }
 
-    val colds = Catalog.all.filter(q => only.isEmpty || only(q.name))
-      .sortBy(_.name).map { q =>
+    val colds = selected.sortBy(_.name).map { q =>
         val (cold, err) = timed(run(q.fn))
         emit(s"""{"progress":"query","name":${Jsons.quote(q.name)},"cold":$cold,"streaming":${q.streaming}${errField(err)}}""")
         (q, cold, err)
@@ -171,7 +168,7 @@ object Bench {
 
     // (name, seconds); None when the write threw (time-to-failure is not
     // an IO measurement)
-    val writes: Seq[(String, Option[Double])] = if (only.nonEmpty) Nil else {
+    val writes: Seq[(String, Option[Double])] = if (args.nonEmpty) Nil else {
       import org.apache.spark.sql.functions.col
       import graft.engine.Sinks
       val tmp = java.nio.file.Files.createTempDirectory("graft-writebench")

@@ -70,6 +70,19 @@ object Catalog {
     queries.GraphQueries.all ++
     queries.MultimodalQueries.all
 
+  /** The queries `names` selects, in the order given (the whole catalog
+    * when `names` is empty): the one query-name check the mains run
+    * before they start a session. Throws listing every name the catalog
+    * does not declare, so a typo never silently selects nothing.
+    */
+  def select(names: Seq[String]): Seq[Q] = {
+    val byName = all.map(q => q.name -> q).toMap
+    val unknown = names.filterNot(byName.contains).distinct.sorted
+    if (unknown.nonEmpty) throw new IllegalArgumentException(
+      s"unknown query name(s): ${unknown.mkString(", ")}")
+    if (names.isEmpty) all else names.distinct.map(byName)
+  }
+
   lazy val queryMap: Map[String, QueryFn] =
     all.map(q => q.name -> q.fn).toMap
 

@@ -8,12 +8,12 @@ package graft
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val names = if (args.length > 1) args.drop(1).toSeq
-                else SparkEntry.queries.keys.toSeq.sorted
+    val named = Catalog.select(args.drop(1).toSeq)
+    val qs = if (args.length > 1) named else named.sortBy(_.name)
     val spark = engine.Sessions.local("graft-explain")
-    names.foreach { name =>
-      println(s"\n========== $name ==========")
-      SparkEntry.queries(name)(spark, sfDir).explain("formatted")
+    qs.foreach { q =>
+      println(s"\n========== ${q.name} ==========")
+      q.fn(spark, sfDir).explain("formatted")
     }
     spark.stop()
   }
@@ -110,8 +110,8 @@ object StreamPlanAudit {
   import scala.jdk.CollectionConverters._
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val names = if (args.length > 1) args.drop(1).toSeq
-                else Catalog.all.filter(_.streaming).map(_.name).sorted
+    val qs = Catalog.select(args.drop(1).toSeq)
+      .filter(q => args.length > 1 || q.streaming)
     val spark = engine.Sessions.local("graft-stream-plan-audit")
     val lines = new scala.collection.mutable.ArrayBuffer[String]
     val current = new java.util.concurrent.atomic.AtomicReference[String]("?")
@@ -148,9 +148,9 @@ object StreamPlanAudit {
           System.nanoTime() < deadline)
         Thread.sleep(50)
     }
-    names.foreach { name =>
-      current.set(name)
-      SparkEntry.queries(name)(spark, sfDir).collect()
+    qs.foreach { q =>
+      current.set(q.name)
+      q.fn(spark, sfDir).collect()
       drainListenerEvents()
     }
     println(s"# StreamPlanAudit sfDir=$sfDir " +

@@ -8,14 +8,13 @@ object Verify {
     // iteration aid, mirrors check.py's `only` filter) restrict which
     // queries run; the driver passes exactly two args and gets all.
     val (sfDir, outDir) = (args(0), args(1))
-    val only = args.drop(2).toSet
     // a typo'd name must not silently select nothing and exit 0
-    val unknown = only -- SparkEntry.queries.keySet
-    if (unknown.nonEmpty) {
-      System.err.println(
-        s"[verify] unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")}")
-      sys.exit(2)
-    }
+    val selected =
+      try Catalog.select(args.drop(2).toSeq)
+      catch { case e: IllegalArgumentException =>
+        System.err.println(s"[verify] ${e.getMessage}")
+        sys.exit(2)
+      }
     val spark = graft.engine.Sessions.local("graft-verify")
     new java.io.File(outDir).mkdirs()
     // oracle_sql.json FIRST: it is static (no query execution involved),
@@ -34,11 +33,8 @@ object Verify {
     Files.writeString(Paths.get(s"$outDir/empty_ok.json"),
       Catalog.emptyOkNames.toSeq.sorted
         .map(Jsons.quote).mkString("[", ",", "]"))
-    val selected =
-      if (only.isEmpty) SparkEntry.queries
-      else SparkEntry.queries.filter { case (n, _) => only(n) }
     val failed = scala.collection.mutable.ListBuffer.empty[String]
-    selected.foreach { case (name, fn) =>
+    selected.foreach { case Catalog.Q(name, fn, _, _, _) =>
       try {
         val df = fn(spark, sfDir)
         // fail loudly here, not as an opaque pandas error driver-side

@@ -108,8 +108,9 @@ object Tables {
     * signatures of `tables` in it); every later call returns the built
     * dir. The one once-per-JVM memo of the engine: [[landed]] is this
     * plus a parquet write, and builds that are not a single parquet
-    * write (q283/q293/q294's manifest tables, q295's bucketed tables)
-    * call it directly. The fixture signatures in the key make a table
+    * write (q283/q293/q294's manifest tables, q295's bucketed tables,
+    * the two events stream stagings: a symlink to the fixture and a
+    * three-file out-of-order copy) call it directly. The fixture signatures in the key make a table
     * rewritten in place recompute instead of serving a stale build;
     * the dir is named from the WHOLE key, so nested builds (gtri ->
     * goedges -> gedges) never share a dir, and a build that threw

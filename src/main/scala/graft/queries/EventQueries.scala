@@ -25,6 +25,13 @@ import graft.Catalog.Q
   */
 object EventQueries extends EventWindowQueries
     with EventStreamingQueries with EventStatsQueries {
+  /** The queries whose execution is a real Structured Streaming run —
+    * each pays per-run state-store provisioning (the r06 driver tail
+    * showed a 3.45 s state-store load for ONE of them), which is why
+    * [[graft.Bench]] times them cold-only. Any new `readStream` query
+    * must be added here; `BenchPolicySpec` cross-checks this set against
+    * the `all` registry.
+    */
   private val streamingNames: Set[String] = Set(
     "q64_stream_hourly", "q66_stream_dedup", "q75_stream_sessions",
     "q76_stream_late_drop", "q78_stream_interval_join",

@@ -1398,14 +1398,6 @@ private[queries] trait EventStatsQueries extends EventQueriesBase {
                    * CAST(n * syy - sy * sy AS DOUBLE)) AS r_lag1
              FROM m ORDER BY event_type"""))
 
-  /** The queries whose execution is a real Structured Streaming run —
-    * each pays per-run state-store provisioning (the r06 driver tail
-    * showed a 3.45 s state-store load for ONE of them), which is why
-    * [[graft.Bench]] times them cold-only. Any new `readStream` query
-    * must be added here; `BenchPolicySpec` cross-checks this set against
-    * the `all` registry.
-    */
-
   /** Exact ROC AUC by rank-sum — does `value` separate purchases from
     * non-purchases? AUC is the Mann-Whitney statistic
     * U / (n_pos * n_neg) with midrank tie handling; computed exactly in

@@ -91,12 +91,25 @@ private[queries] trait EventStreamingQueries extends EventQueriesBase {
     math.min(math.max(derived, math.min(StreamMinPartitions, cap)), cap)
   }
 
+  /** Run `body` with the session conf `key` set to `value`, restoring
+    * the prior value (or unsetting it) after — the one save/set/restore
+    * bracket behind [[withStreamShuffle]] and [[withRocksDb]].
+    */
+  private def withConf[A](s: SparkSession, key: String, value: String)(
+      body: => A): A = {
+    val prior = s.conf.getOption(key)
+    s.conf.set(key, value)
+    try body finally prior match {
+      case Some(v) => s.conf.set(key, v)
+      case None => s.conf.unset(key)
+    }
+  }
+
   /** Run `body` (which starts AND drains a streaming query) under the
     * scale-adaptive shuffle-partition count for `stagingDir`, restoring
-    * the session conf after — the [[withRocksDb]] bracket pattern. The
-    * conf must be in force when the stream STARTS: the stateful
-    * operator's partition count is fixed into the new checkpoint at
-    * start and every micro-batch re-uses it.
+    * the session conf after. The conf must be in force when the stream
+    * STARTS: the stateful operator's partition count is fixed into the
+    * new checkpoint at start and every micro-batch re-uses it.
     *
     * SEQUENTIAL-EXECUTION ASSUMPTION (r20 ADVICE): this mutates the
     * session-global `spark.sql.shuffle.partitions`. Verify and Bench run
@@ -108,29 +121,35 @@ private[queries] trait EventStreamingQueries extends EventQueriesBase {
   private[queries] def withStreamShuffle[A](s: SparkSession,
       stagingDir: String)(body: => A): A = {
     val key = "spark.sql.shuffle.partitions"
-    val prior = s.conf.getOption(key)
-    s.conf.set(key, deriveStreamPartitions(stagedInputBytes(stagingDir),
-      s.conf.get(key).toInt).toString)
-    try body finally prior match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
+    withConf(s, key, deriveStreamPartitions(stagedInputBytes(stagingDir),
+      s.conf.get(key).toInt).toString)(body)
   }
 
-  /** Run a streaming DataFrame to completion through a memory sink
-    * (append mode, AvailableNow) and return the drained table — the
-    * bounded-stream harness shared by q64/q66/q75. Drops any stale view
-    * from a prior run in the same session first. When `inputDir` is
-    * given, the run executes under [[withStreamShuffle]]'s input-sized
-    * state partitioning (the drained table itself is batch data; later
-    * transformations on it run under the restored session conf).
+  /** Pin the RocksDB state store provider for the duration of `body`
+    * and restore the prior session conf after — transformWithState
+    * only runs on RocksDB, and pinning per-query keeps every verify
+    * pass a real RocksDB-backed run (q265's posture, shared by the
+    * list/map-state queries).
+    */
+  private def withRocksDb[A](s: SparkSession)(body: => A): A =
+    withConf(s, "spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming." +
+        "state.RocksDBStateStoreProvider")(body)
+
+  /** Run a streaming DataFrame read from `stagingDir` to completion
+    * through a memory sink (AvailableNow) under [[withStreamShuffle]]'s
+    * input-sized state partitioning, and return the drained table — the
+    * bounded-stream harness shared by the memory-sink queries. Drops any
+    * stale view from a prior run in the same session first. The drained
+    * table itself is batch data: later transformations on it run under
+    * the restored session conf.
     */
   private def runToMemorySink(s: SparkSession, df: DataFrame,
-      name: String, outputMode: String = "append",
-      inputDir: Option[String] = None): DataFrame = {
+      stagingDir: String, name: String,
+      outputMode: String = "append"): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
     s.catalog.dropTempView(name)
-    def run(): DataFrame = {
+    withStreamShuffle(s, stagingDir) {
       // the memory sink APPENDS each batch's rows in update mode too, so
       // an update-mode run materializes the full per-batch emission log —
       // exactly what q119's oracle models
@@ -139,42 +158,26 @@ private[queries] trait EventStreamingQueries extends EventQueriesBase {
       query.awaitTermination()
       s.table(name)
     }
-    inputDir match {
-      case Some(d) => withStreamShuffle(s, d)(run())
-      case None => run()
-    }
   }
 
-  /** Staging dir for the streaming queries: the file source requires a
-    * DIRECTORY, and the fixture is one file in a dir shared with other
-    * tables, so expose it alone via a symlink (read-only fixtures stay
-    * untouched). The staging name embeds the sanitized source path
-    * (collision-free, unlike a hash), the link is validated against its
-    * expected target (a stale/dangling link from a moved fixture is
-    * recreated, never silently streamed), and a concurrent creator
-    * winning the race is fine because the name pins the target.
+  /** In-order staging for the streaming queries: the file source
+    * requires a DIRECTORY, and the fixture is one file in a dir shared
+    * with other tables, so a [[Tables.landedDir]] build exposes it alone
+    * through a symlink (read-only fixtures stay untouched; the memo
+    * root's NOFOLLOW delete removes the link, never its target).
     */
-  private def eventsStreamDir(dir: String): String = {
-    val streamDir = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"),
-      "graft_stream_events_" + dir.replaceAll("[^A-Za-z0-9._-]", "_"))
-    java.nio.file.Files.createDirectories(streamDir)
-    val target = java.nio.file.Paths.get(s"$dir/events.parquet").toAbsolutePath
-    val link = streamDir.resolve("events.parquet")
-    val linkOk = java.nio.file.Files.isSymbolicLink(link) &&
-      java.nio.file.Files.readSymbolicLink(link) == target &&
-      java.nio.file.Files.exists(link) // target still resolves
-    if (!linkOk) {
-      java.nio.file.Files.deleteIfExists(link)
-      try java.nio.file.Files.createSymbolicLink(link, target)
-      catch { case _: java.nio.file.FileAlreadyExistsException => () }
+  private def eventsStreamDir(dir: String): String =
+    Tables.landedDir("stream_events", dir, Seq("events")) { p =>
+      val staging = java.nio.file.Files.createDirectories(
+        java.nio.file.Paths.get(p))
+      java.nio.file.Files.createSymbolicLink(staging.resolve("events.parquet"),
+        java.nio.file.Paths.get(s"$dir/events.parquet").toAbsolutePath)
+      ()
     }
-    streamDir.toString
-  }
 
   /** Three-file OUT-OF-ORDER staging for the late-data oracle (q76),
     * admitted oldest-mtime-first as one micro-batch each
-    * (`maxFilesPerTrigger=1`):
+    * ([[eventsStream]] admits one file per trigger):
     *   - `a.parquet`: the even event_ids (full time span) — batch 0
     *     advances the watermark to max(a) − delay;
     *   - `b.parquet`: the odd ids BEYOND max(a) (may be empty) — batch 1
@@ -188,23 +191,14 @@ private[queries] trait EventStreamingQueries extends EventQueriesBase {
     *     is DROPPED. The dropping half of the watermark contract, which
     *     the in-arrival-order staging ([[eventsStreamDir]]) can never
     *     exercise.
-    * Rebuilt whenever the marker's recorded source (size, mtime) stops
-    * matching: a regenerated fixture invalidates the staging, a repeated
-    * run reuses it.
+    * A [[Tables.landedDir]] build: a fixture rewritten in place changes
+    * the memo key and restages.
     */
-  private def eventsOooStreamDir(s: SparkSession, dir: String): String = {
-    import java.nio.file.{Files, Paths}
-    val staging = Paths.get(System.getProperty("java.io.tmpdir"),
-      "graft_stream_events_ooo_" + dir.replaceAll("[^A-Za-z0-9._-]", "_"))
-    val src = Paths.get(s"$dir/events.parquet")
-    val stamp =
-      s"${Files.size(src)}:${Files.getLastModifiedTime(src).toMillis}"
-    val marker = staging.resolve("_STAGED")
-    val fresh = Files.exists(marker) && Files.readString(marker) == stamp
-    if (!fresh) {
-      graft.engine.Fs.deleteRecursively(staging)
-      Files.createDirectories(staging)
-      val ev = s.read.parquet(src.toString)
+  private def eventsOooStreamDir(s: SparkSession, dir: String): String =
+    Tables.landedDir("stream_events_ooo", dir, Seq("events")) { p =>
+      import java.nio.file.{Files, Paths}
+      val staging = Files.createDirectories(Paths.get(p))
+      val ev = s.read.parquet(s"$dir/events.parquet")
       def stageOne(df: DataFrame, name: String, mtimeMs: Long): Unit = {
         val tmp = staging.resolve(name + ".tmp")
         df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
@@ -223,7 +217,7 @@ private[queries] trait EventStreamingQueries extends EventQueriesBase {
       // 30 s apart: unambiguous ordering even on coarse-mtime filesystems
       val now = System.currentTimeMillis()
       // staged files must keep the fixture's PHYSICAL ts encoding (the
-      // consumer reads them with schema(batchSchema)), so the µs
+      // consumer reads them with the fixture's schema), so the µs
       // arithmetic dispatches on the raw type instead of normalizing
       val rawUs = Tables.rawTsUs(ev.schema("ts").dataType)
       val evens = ev.filter(col("event_id") % 2 === 0)
@@ -232,15 +226,31 @@ private[queries] trait EventStreamingQueries extends EventQueriesBase {
       stageOne(evens, "a.parquet", now - 90000)
       stageOne(odds.filter(rawUs > maxEvenUs), "b.parquet", now - 60000)
       stageOne(odds.filter(rawUs <= maxEvenUs), "c.parquet", now - 30000)
-      Files.writeString(marker, stamp)
     }
-    staging.toString
+
+  /** The bounded events stream every file-source streaming query reads:
+    * a file stream over one of the two stagings, read with the fixture's
+    * physical schema and `ts` normalized ([[Tables.normalizeEventTs]]),
+    * returned with its staging dir (the [[withStreamShuffle]] input).
+    * `outOfOrder` picks the three-file staging and admits one file per
+    * micro-batch; otherwise the fixture drains as one batch.
+    */
+  private def eventsStream(s: SparkSession, dir: String,
+      outOfOrder: Boolean): (DataFrame, String) = {
+    val staging =
+      if (outOfOrder) eventsOooStreamDir(s, dir) else eventsStreamDir(dir)
+    val reader = s.readStream
+      .schema(s.read.parquet(s"$dir/events.parquet").schema)
+    val stream =
+      (if (outOfOrder) reader.option("maxFilesPerTrigger", 1) else reader)
+        .parquet(staging).transform(Tables.normalizeEventTs)
+    (stream, staging)
   }
 
-  /** Build (or validate) both streaming staging dirs ahead of time, so a
-    * timed bench pass measures the streaming data path, not one-time
-    * symlink/file staging. Both stagings are content-stamped and reused
-    * across runs, so this is idempotent and cheap when already built.
+  /** Build both streaming staging dirs ahead of time, so a timed bench
+    * pass measures the streaming data path, not one-time staging. Both
+    * are [[Tables.landedDir]] builds, so the queries that follow in the
+    * same JVM reuse them.
     */
   def prestage(s: SparkSession, dir: String): Unit = {
     eventsStreamDir(dir)
@@ -298,20 +308,15 @@ private[queries] trait EventStreamingQueries extends EventQueriesBase {
   val q64StreamHourly: Q = Q(
     "q64_stream_hourly",
     (s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val batchSchema = s.read.parquet(s"$dir/events.parquet").schema
-      val stagingDir = eventsStreamDir(dir)
-      val agg = s.readStream.schema(batchSchema)
-        .parquet(stagingDir)
-        .transform(Tables.normalizeEventTs)
+      val (events, staging) = eventsStream(s, dir, outOfOrder = false)
+      val agg = events
         .select(tsStamp.as("tss"), col("event_type"))
         .withWatermark("tss", "10 minutes")
         .groupBy(window(col("tss"), "1 hour").as("w"), col("event_type"))
         .agg(count(lit(1)).as("n_events"))
         .select(us(col("w.start")).as("window_start_us"), col("event_type"),
           col("n_events"))
-      runToMemorySink(s, agg, "q64_stream_hourly_mem",
-        inputDir = Some(stagingDir))
+      runToMemorySink(s, agg, staging, "q64_stream_hourly_mem")
         .orderBy("window_start_us", "event_type")
     },
     Some(s"""WITH e AS (SELECT CAST(ts AS TIMESTAMP) AS t, event_type
@@ -340,20 +345,15 @@ private[queries] trait EventStreamingQueries extends EventQueriesBase {
   val q66StreamDedup: Q = Q(
     "q66_stream_dedup",
     (s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val batchSchema = s.read.parquet(s"$dir/events.parquet").schema
-      val stagingDir = eventsStreamDir(dir)
-      requireSingleDataFile(stagingDir)
-      val dedup = s.readStream.schema(batchSchema)
-        .parquet(stagingDir)
-        .transform(Tables.normalizeEventTs)
+      val (events, staging) = eventsStream(s, dir, outOfOrder = false)
+      requireSingleDataFile(staging)
+      val dedup = events
         .select(tsStamp.as("tss"), col("user_id"))
         .withColumn("hour_us", us(date_trunc("hour", col("tss"))))
         .withWatermark("tss", "10 minutes")
         .dropDuplicatesWithinWatermark("user_id", "hour_us")
         .select(col("user_id"), col("hour_us"))
-      runToMemorySink(s, dedup, "q66_stream_dedup_mem",
-        inputDir = Some(stagingDir))
+      runToMemorySink(s, dedup, staging, "q66_stream_dedup_mem")
         .orderBy("user_id", "hour_us")
     },
     Some(s"""SELECT DISTINCT user_id,
@@ -381,20 +381,15 @@ private[queries] trait EventStreamingQueries extends EventQueriesBase {
   val q75StreamSessions: Q = Q(
     "q75_stream_sessions",
     (s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
       import s.implicits._
-      val batchSchema = s.read.parquet(s"$dir/events.parquet").schema
-      val stagingDir = eventsStreamDir(dir)
-      val evs = s.readStream.schema(batchSchema)
-        .parquet(stagingDir)
-        .transform(Tables.normalizeEventTs)
+      val (events, staging) = eventsStream(s, dir, outOfOrder = false)
+      val evs = events
         .select(col("user_id"), tsUs.as("ts_us"), col("value"))
         .as[graft.streaming.EventStreams.Ev]
       val out = graft.streaming.EventStreams.sessionize(evs)
         .select(col("user_id"), col("start_us"), col("end_us"),
           col("n_events"))
-      runToMemorySink(s, out, "q75_stream_sessions_mem",
-        inputDir = Some(stagingDir))
+      runToMemorySink(s, out, staging, "q75_stream_sessions_mem")
         .orderBy("user_id", "start_us")
     },
     Some(duckStreamSessionsOracle))
@@ -435,27 +430,16 @@ private[queries] trait EventStreamingQueries extends EventQueriesBase {
     "q266_stream_tws_sessions",
     (s, dir) => {
       import s.implicits._
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prior = s.conf.getOption(key)
-      s.conf.set(key, "org.apache.spark.sql.execution.streaming." +
-        "state.RocksDBStateStoreProvider")
-      try {
-        val batchSchema = s.read.parquet(s"$dir/events.parquet").schema
-        val stagingDir = eventsStreamDir(dir)
-        val evs = s.readStream.schema(batchSchema)
-          .parquet(stagingDir)
-          .transform(Tables.normalizeEventTs)
+      withRocksDb(s) {
+        val (events, staging) = eventsStream(s, dir, outOfOrder = false)
+        val evs = events
           .select(col("user_id"), tsUs.as("ts_us"), col("value"))
           .as[graft.streaming.EventStreams.Ev]
         val out = graft.streaming.EventStreams.sessionizeTws(evs)
           .select(col("user_id"), col("start_us"), col("end_us"),
             col("n_events"))
-        runToMemorySink(s, out, "q266_stream_tws_sessions_mem",
-          inputDir = Some(stagingDir))
+        runToMemorySink(s, out, staging, "q266_stream_tws_sessions_mem")
           .orderBy("user_id", "start_us")
-      } finally prior match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
       }
     },
     Some(duckStreamSessionsOracle))
@@ -468,12 +452,8 @@ private[queries] trait EventStreamingQueries extends EventQueriesBase {
     */
   private[graft] def runQ76(s: SparkSession, dir: String): (DataFrame, Long) = {
     import org.apache.spark.sql.streaming.Trigger
-    val batchSchema = s.read.parquet(s"$dir/events.parquet").schema
-    val stagingDir = eventsOooStreamDir(s, dir)
-    val agg = s.readStream.schema(batchSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(stagingDir)
-      .transform(Tables.normalizeEventTs)
+    val (events, staging) = eventsStream(s, dir, outOfOrder = true)
+    val agg = events
       .select(tsStamp.as("tss"), col("event_type"))
       .withWatermark("tss", "10 minutes")
       .groupBy(window(col("tss"), "1 hour").as("w"), col("event_type"))
@@ -482,7 +462,7 @@ private[queries] trait EventStreamingQueries extends EventQueriesBase {
         col("n_events"))
     val name = "q76_stream_late_mem"
     s.catalog.dropTempView(name)
-    val (table, dropped) = withStreamShuffle(s, stagingDir) {
+    val (table, dropped) = withStreamShuffle(s, staging) {
       val query = agg.writeStream.format("memory").queryName(name)
         .outputMode("append").trigger(Trigger.AvailableNow()).start()
       query.awaitTermination()
@@ -572,17 +552,14 @@ private[queries] trait EventStreamingQueries extends EventQueriesBase {
   val q78StreamIntervalJoin: Q = Q(
     "q78_stream_interval_join",
     (s, dir) => {
-      val batchSchema = s.read.parquet(s"$dir/events.parquet").schema
-      val stagingDir = eventsStreamDir(dir)
-      requireSingleDataFile(stagingDir)
-      def side(): DataFrame = s.readStream.schema(batchSchema)
-        .parquet(stagingDir)
-        .transform(Tables.normalizeEventTs)
-        .select(col("user_id"), tsUs.as("ts_us"), col("event_type"))
-      val joined = graft.streaming.EventStreams.intervalJoin(
-        side(), side(), "user_id", windowUs = 600L * 1000000)
-      runToMemorySink(s, joined, "q78_stream_interval_mem",
-        inputDir = Some(stagingDir))
+      val (left, staging) = eventsStream(s, dir, outOfOrder = false)
+      requireSingleDataFile(staging)
+      def side(events: DataFrame): DataFrame =
+        events.select(col("user_id"), tsUs.as("ts_us"), col("event_type"))
+      val joined = graft.streaming.EventStreams.intervalJoin(side(left),
+        side(eventsStream(s, dir, outOfOrder = false)._1), "user_id",
+        windowUs = 600L * 1000000)
+      runToMemorySink(s, joined, staging, "q78_stream_interval_mem")
         .orderBy("user_id", "l_ts_us", "r_ts_us", "l_type", "r_type")
     },
     Some(s"""WITH ev AS (SELECT user_id, ${duckUs("ts")} AS us, event_type
@@ -613,16 +590,14 @@ private[queries] trait EventStreamingQueries extends EventQueriesBase {
   val q83StreamStaticEnrich: Q = Q(
     "q83_stream_static_enrich",
     (s, dir) => {
-      val batchSchema = s.read.parquet(s"$dir/events.parquet").schema
+      val (events, staging) = eventsStream(s, dir, outOfOrder = false)
       val cust = Tables.load(s, dir, "customer")
         .select(col("c_custkey"), col("c_mktsegment"))
-      val enriched = s.readStream.schema(batchSchema)
-        .parquet(eventsStreamDir(dir))
-        .transform(Tables.normalizeEventTs)
+      val enriched = events
         .select(col("user_id"), col("event_type"), col("value"))
         .join(broadcast(cust), col("user_id") === col("c_custkey"))
         .select(col("c_mktsegment"), col("event_type"), col("value"))
-      runToMemorySink(s, enriched, "q83_stream_static_mem")
+      runToMemorySink(s, enriched, staging, "q83_stream_static_mem")
         .groupBy(col("c_mktsegment"), col("event_type"))
         .agg(count(lit(1)).as("n_events"),
           round(sum(col("value").cast("decimal(30,10)")), 2).cast("double")
@@ -668,7 +643,6 @@ private[queries] trait EventStreamingQueries extends EventQueriesBase {
   private[graft] def runQ84(s: SparkSession, dir: String): (DataFrame, Long) = {
       import org.apache.spark.sql.streaming.Trigger
       import java.nio.file.Files
-      val batchSchema = s.read.parquet(s"$dir/events.parquet").schema
       val ties = Tables.load(s, dir, "events")
         .groupBy(col("user_id"), tsUs.as("ts_us"))
         .agg(count(lit(1)).as("n")).filter(col("n") > 1).limit(1).count()
@@ -677,18 +651,15 @@ private[queries] trait EventStreamingQueries extends EventQueriesBase {
           "cross-batch merge arrival-order-dependent")
       val root = TempDirs.createCleanedAtExit("graft_q84")
       val stateDir = root.resolve("state")
-      val stagingDir = eventsOooStreamDir(s, dir)
-      val src = s.readStream.schema(batchSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stagingDir)
-        .transform(Tables.normalizeEventTs)
+      val (events, staging) = eventsStream(s, dir, outOfOrder = true)
+      val src = events
         .select(col("user_id"), tsUs.as("ts_us"), col("event_type"),
           col("value"))
       // stateless stream, but the foreachBatch MERGE below is batch work
       // executed inside the streaming run — where AQE is disabled, so
       // its join shuffles at the raw session partition count unless the
       // input-sized bracket covers the run
-      val dataBatches = withStreamShuffle(s, stagingDir) {
+      val dataBatches = withStreamShuffle(s, staging) {
         val query = src.writeStream
           .option("checkpointLocation", root.resolve("ckpt").toString)
           .foreachBatch { (batch: DataFrame, _: Long) =>
@@ -742,18 +713,15 @@ private[queries] trait EventStreamingQueries extends EventQueriesBase {
   val q107StreamOuterJoin: Q = Q(
     "q107_stream_outer_join",
     (s, dir) => {
-      val batchSchema = s.read.parquet(s"$dir/events.parquet").schema
-      val stagingDir = eventsStreamDir(dir)
-      requireSingleDataFile(stagingDir)
-      def side(): DataFrame = s.readStream.schema(batchSchema)
-        .parquet(stagingDir)
-        .transform(Tables.normalizeEventTs)
-        .select(col("user_id"), tsUs.as("ts_us"), col("event_type"))
-      val joined = graft.streaming.EventStreams.intervalJoin(
-        side(), side(), "user_id", windowUs = 600L * 1000000,
-        watermark = "10 minutes", joinType = "leftOuter")
-      runToMemorySink(s, joined, "q107_stream_outer_mem",
-        inputDir = Some(stagingDir))
+      val (left, staging) = eventsStream(s, dir, outOfOrder = false)
+      requireSingleDataFile(staging)
+      def side(events: DataFrame): DataFrame =
+        events.select(col("user_id"), tsUs.as("ts_us"), col("event_type"))
+      val joined = graft.streaming.EventStreams.intervalJoin(side(left),
+        side(eventsStream(s, dir, outOfOrder = false)._1), "user_id",
+        windowUs = 600L * 1000000, watermark = "10 minutes",
+        joinType = "leftOuter")
+      runToMemorySink(s, joined, staging, "q107_stream_outer_mem")
         .orderBy(col("user_id"), col("l_ts_us"), col("l_type"),
           col("r_ts_us").asc_nulls_last, col("r_type").asc_nulls_last)
     },
@@ -783,7 +751,7 @@ private[queries] trait EventStreamingQueries extends EventQueriesBase {
     * lacked (q75's flatMapGroupsWithState is the zero-or-many append
     * form). Per-user running (count, exact-cent total, max event time)
     * counters fold across the THREE-batch out-of-order staging
-    * ([[eventsOooStreamDir]], `maxFilesPerTrigger=1`), so state
+    * ([[eventsOooStreamDir]], one file per micro-batch), so state
     * genuinely carries between micro-batches; the update-mode memory
     * sink appends each batch's emissions, so the materialized table is
     * the full emission LOG — one row per (user, batch-that-touched-it)
@@ -804,20 +772,15 @@ private[queries] trait EventStreamingQueries extends EventQueriesBase {
     "q119_stream_running_totals",
     (s, dir) => {
       import s.implicits._
-      val batchSchema = s.read.parquet(s"$dir/events.parquet").schema
-      val stagingDir = eventsOooStreamDir(s, dir)
-      val src = s.readStream.schema(batchSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stagingDir)
-        .transform(Tables.normalizeEventTs)
+      val (events, staging) = eventsStream(s, dir, outOfOrder = true)
+      val src = events
         .select(col("user_id"),
           floor(col("value") * 100).cast("long").as("cents"),
           tsUs.as("us"))
         .as[graft.streaming.EventStreams.Counted]
       graft.streaming.EventStreams.runningTotals(src).toDF()
-        .transform(df => runToMemorySink(s, df,
-          "q119_stream_running_totals_mem", outputMode = "update",
-          inputDir = Some(stagingDir)))
+        .transform(df => runToMemorySink(s, df, staging,
+          "q119_stream_running_totals_mem", outputMode = "update"))
         .orderBy("user_id", "n_events")
     },
     Some(duckRunningTotalsOracle))
@@ -864,49 +827,20 @@ private[queries] trait EventStreamingQueries extends EventQueriesBase {
     "q265_stream_tws_totals",
     (s, dir) => {
       import s.implicits._
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prior = s.conf.getOption(key)
-      s.conf.set(key, "org.apache.spark.sql.execution.streaming." +
-        "state.RocksDBStateStoreProvider")
-      try {
-        val batchSchema = s.read.parquet(s"$dir/events.parquet").schema
-        val stagingDir = eventsOooStreamDir(s, dir)
-        val src = s.readStream.schema(batchSchema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(stagingDir)
-          .transform(Tables.normalizeEventTs)
+      withRocksDb(s) {
+        val (events, staging) = eventsStream(s, dir, outOfOrder = true)
+        val src = events
           .select(col("user_id"),
             floor(col("value") * 100).cast("long").as("cents"),
             tsUs.as("us"))
           .as[graft.streaming.EventStreams.Counted]
         graft.streaming.EventStreams.runningTotalsTws(src).toDF()
-          .transform(df => runToMemorySink(s, df,
-            "q265_stream_tws_totals_mem", outputMode = "update",
-            inputDir = Some(stagingDir)))
+          .transform(df => runToMemorySink(s, df, staging,
+            "q265_stream_tws_totals_mem", outputMode = "update"))
           .orderBy("user_id", "n_events")
-      } finally prior match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
       }
     },
     Some(duckRunningTotalsOracle))
-
-  /** Pin the RocksDB state store provider for the duration of `body`
-    * and restore the prior session conf after — transformWithState
-    * only runs on RocksDB, and pinning per-query keeps every verify
-    * pass a real RocksDB-backed run (q265's posture, shared by the
-    * list/map-state queries).
-    */
-  private def withRocksDb[A](s: SparkSession)(body: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prior = s.conf.getOption(key)
-    s.conf.set(key, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    try body finally prior match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
-  }
 
   /** Streaming per-user top-3 amounts via `transformWithState` LIST
     * state (see [[graft.streaming.EventStreams.TopkProcessor]]: a
@@ -926,20 +860,15 @@ private[queries] trait EventStreamingQueries extends EventQueriesBase {
     (s, dir) => {
       import s.implicits._
       withRocksDb(s) {
-        val batchSchema = s.read.parquet(s"$dir/events.parquet").schema
-        val stagingDir = eventsOooStreamDir(s, dir)
-        val src = s.readStream.schema(batchSchema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(stagingDir)
-          .transform(Tables.normalizeEventTs)
+        val (events, staging) = eventsStream(s, dir, outOfOrder = true)
+        val src = events
           .select(col("user_id"),
             floor(col("value") * 100).cast("long").as("cents"),
             tsUs.as("us"))
           .as[graft.streaming.EventStreams.Counted]
         graft.streaming.EventStreams.topkTws(src).toDF()
-          .transform(df => runToMemorySink(s, df,
-            "q275_stream_tws_topk_mem", outputMode = "update",
-            inputDir = Some(stagingDir)))
+          .transform(df => runToMemorySink(s, df, staging,
+            "q275_stream_tws_topk_mem", outputMode = "update"))
           .orderBy("user_id", "n_events")
       }
     },
@@ -983,18 +912,13 @@ private[queries] trait EventStreamingQueries extends EventQueriesBase {
     (s, dir) => {
       import s.implicits._
       withRocksDb(s) {
-        val batchSchema = s.read.parquet(s"$dir/events.parquet").schema
-        val stagingDir = eventsOooStreamDir(s, dir)
-        val src = s.readStream.schema(batchSchema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(stagingDir)
-          .transform(Tables.normalizeEventTs)
+        val (events, staging) = eventsStream(s, dir, outOfOrder = true)
+        val src = events
           .select(col("user_id"), col("event_type"), lit(1L).as("n"))
           .as[graft.streaming.EventStreams.TypeCount]
         graft.streaming.EventStreams.typeCountsTws(src).toDF()
-          .transform(df => runToMemorySink(s, df,
-            "q276_stream_tws_typecounts_mem", outputMode = "update",
-            inputDir = Some(stagingDir)))
+          .transform(df => runToMemorySink(s, df, staging,
+            "q276_stream_tws_typecounts_mem", outputMode = "update"))
           .orderBy("user_id", "event_type", "n")
       }
     },
@@ -1280,20 +1204,16 @@ private[queries] trait EventStreamingQueries extends EventQueriesBase {
     (s, dir) => {
       import org.apache.spark.sql.streaming.Trigger
       import java.nio.file.Files
-      val batchSchema = s.read.parquet(s"$dir/events.parquet").schema
       val root = TempDirs.createCleanedAtExit("graft_q284")
       val goldDir = root.resolve("gold")
-      val stagingDir = eventsOooStreamDir(s, dir)
-      val src = s.readStream.schema(batchSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stagingDir)
-        .transform(Tables.normalizeEventTs)
+      val (events, staging) = eventsStream(s, dir, outOfOrder = true)
+      val src = events
         .select(col("user_id"),
           floor(col("value") * 100).cast("long").as("cents"))
       // stateless stream; the bracket covers the foreachBatch delta
       // aggregation + additive merge, which run inside the streaming
       // execution where AQE cannot coalesce their shuffles (q84's note)
-      withStreamShuffle(s, stagingDir) {
+      withStreamShuffle(s, staging) {
         val query = src.writeStream
           .option("checkpointLocation", root.resolve("ckpt").toString)
           .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -1496,7 +1416,7 @@ private[queries] trait EventStreamingQueries extends EventQueriesBase {
           .mode("append").save()
       }
       // PID-tagged prefix (r16 ADVICE): Q294LifecycleSpec leak-scans
-      // the shared java.io.tmpdir for these work dirs; without the tag
+      // the shared temp dir for these work dirs; without the tag
       // a concurrently running sweep/bench JVM's in-flight copy would
       // appear "leaked" and flake the suite. The tag scopes the scan
       // to this JVM.

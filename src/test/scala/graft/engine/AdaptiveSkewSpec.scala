@@ -70,9 +70,8 @@ class AdaptiveSkewSpec extends SparkSpec {
     // frame arrives already hash-partitioned by shingle, leaves no
     // right-side ShuffleQueryStage to replicate, and the rule can never
     // fire on that shape (pattern-match miss, not a threshold miss).
-    val statsDir = java.nio.file.Files
-      .createTempDirectory("graft-skewstats").toFile
-    statsDir.deleteOnExit()
+    // read lazily by the returned frame, so removed at JVM exit
+    val statsDir = TempDirs.createCleanedAtExit("graft-skewstats")
     val statsPath = s"$statsDir/stats.parquet"
     exploded.groupBy("shingle").agg(count(lit(1)).as("df"))
       .write.mode("overwrite").parquet(statsPath)

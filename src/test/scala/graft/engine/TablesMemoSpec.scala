@@ -8,7 +8,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.queries.{GraphQueries, RelationalQueries}
+import graft.queries.{EventQueries, GraphQueries, RelationalQueries}
 
 /** The once-per-JVM build memo ([[Tables.landedDir]] / [[Tables.landed]]):
   *
@@ -20,7 +20,9 @@ import graft.queries.{GraphQueries, RelationalQueries}
   *    build names: rewriting one of them recomputes, rewriting any
   *    other table in the dir does not;
   *  - q295's bucketed tables live under the memo's dir, never under the
-  *    session warehouse dir.
+  *    session warehouse dir;
+  *  - the events stream stagings are memo builds: staging adds nothing
+  *    to the temp dir, and a fixture rewritten in place restages.
   */
 class TablesMemoSpec extends SparkSpec {
   import spark.implicits._
@@ -100,6 +102,39 @@ class TablesMemoSpec extends SparkSpec {
       val q = RelationalQueries.q295BucketedJoin.fn
       q(spark, dir).collect() shouldBe q(spark, sf).collect()
       listing() shouldBe before
+    }
+  }
+
+  test("staging the events streams adds nothing to the temp dir") {
+    val tmp = Paths.get(System.getProperty("java.io.tmpdir"))
+    def stagings(): Set[String] = {
+      val s = Files.list(tmp)
+      try s.iterator.asScala.map(_.getFileName.toString)
+        .filter(_.startsWith("graft_stream_events")).toSet
+      finally s.close()
+    }
+    withTempDir { dir =>
+      copyTables(dir, "events")
+      val before = stagings()
+      EventQueries.prestage(spark, dir)
+      stagings() shouldBe before
+    }
+  }
+
+  test("rewriting events in place restages the out-of-order stream") {
+    def lateDrop(dir: String) = EventQueries.runQ76(spark, dir)._1.collect()
+    val kept = spark.read.parquet(s"$sf/events.parquet")
+      .filter(col("event_id") % 3 =!= 0)
+    withTempDir { dir =>
+      copyTables(dir, "events")
+      val before = lateDrop(dir)
+      kept.write.mode("overwrite").parquet(s"$dir/events.parquet")
+      val rewritten = lateDrop(dir)
+      rewritten should not equal before
+      withTempDir { fresh =>
+        kept.write.parquet(s"$fresh/events.parquet")
+        rewritten shouldBe lateDrop(fresh)
+      }
     }
   }
 }
