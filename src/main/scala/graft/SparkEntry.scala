@@ -16,7 +16,7 @@ object SparkEntry {
     Catalog.queryMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted keys get a weaker rows-only check.
+    * the same parquet tables. Every catalog query declares one.
     */
   def oracleSql: Map[String, String] = Catalog.oracleMap
 }

@@ -55,7 +55,7 @@ object Verify {
         engine.Fs.deleteRecursively(Paths.get(s"$outDir/$name"))
         failed += name
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
+      } finally spark.sharedState.cacheManager.clearCache()
     }
     spark.stop()
     if (failed.nonEmpty) {

@@ -21,6 +21,8 @@ import org.apache.spark.sql.SparkSession
   */
 object Sessions {
 
+  private lazy val warehouseDir = TempDirs.createCleanedAtExit("graft-warehouse")
+
   /** Local session sized from env (driver harness contract). */
   def local(appName: String = "graft"): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -39,10 +41,10 @@ object Sessions {
       // silently retype numeric-looking string partitions (state "00901"
       // -> INT 901, leading zeros lost) on the medallion read-back path
       .config("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
-      // managed-table root (engine tables are external, see Bucketing);
-      // keep it out of the repo working tree
-      .config("spark.sql.warehouse.dir",
-        s"${sys.props("java.io.tmpdir")}/graft-warehouse")
+      // managed-table root: every engine table is external (see
+      // Bucketing), so nothing needs it past the JVM; one dir per JVM,
+      // out of the repo working tree and removed at exit
+      .config("spark.sql.warehouse.dir", warehouseDir.toString)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

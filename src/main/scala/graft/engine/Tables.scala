@@ -66,6 +66,13 @@ object Tables {
     * block-manager cache-fill locks and the upstream pipeline runs up to
     * once per branch (measured 8.4 s -> 1.4 s on the LSH band table at
     * sf0.1). Same rule at 100 TB: materialize/checkpoint before fan-out.
+    *
+    * The rule: `eager` a COMPUTED frame with more than one consumer,
+    * never a [[landed]] read. A landed table is already materialized;
+    * a Project/Filter over its scan costs one more scan, so a second,
+    * in-memory copy buys an extra count job and a cache fill. The one
+    * exception is a driver loop that re-reads the frame across actions
+    * (q111, q165). GlobalWindowPolicySpec enforces this.
     */
   def eager(df: DataFrame): DataFrame = {
     MaterializationAudit.record("eager", df)

@@ -467,8 +467,8 @@ object CorpusQueries {
   val q191PhraseSearch: Q = Q(
     "q191_phrase_search",
     (s, dir) => {
-      val pos = Tables.eager(TextQueries.tokenTable(s, dir)
-        .select(col("doc_id"), col("pos").as("i"), col("tok")))
+      val pos = TextQueries.tokenTable(s, dir)
+        .select(col("doc_id"), col("pos").as("i"), col("tok"))
       val next = pos.select(col("doc_id"), (col("i") - 1).as("i"),
         col("tok").as("tok_b"))
       val big = pos.join(next, Seq("doc_id", "i"))

@@ -74,13 +74,13 @@ object DedupQueries {
     }
 
   /** df-blocked shingle postings (s, doc_id), df(s) ∈ [2, 5] — the
-    * candidate-generation relation shared VERBATIM by
-    * q25/q171/q172/q228/q234/q242/q261, each of which previously
-    * re-ran the explode + df-count + filter + join per execution.
-    * Landed once per (JVM, documents signature) like
-    * [[docShingleTable]]: blocking postings are a silver table, not a
-    * per-query recompute. (df=1 can't pair; the df cap bounds every
-    * block, so the downstream self-join stays skew-safe at scale.)
+    * candidate-generation relation. Its consumers are
+    * [[blockedPairTable]] (the pairs of q25/q171/q172/q228/q234/q242)
+    * and q261's anchor-capped self-join. Landed once per (JVM,
+    * documents signature) like [[docShingleTable]]: blocking postings
+    * are a silver table, not a per-query recompute. (df=1 can't pair;
+    * the df cap bounds every block, so the downstream self-join stays
+    * skew-safe at scale.)
     */
   private[queries] def rareBlockedShingles(s: SparkSession,
                                            dir: String): DataFrame =
@@ -92,6 +92,32 @@ object DedupQueries {
         .filter(col("df") >= 2 && col("df") <= 5)
         .select(col("s"))
       exploded.join(rare, Seq("s"))
+    }
+
+  /** Number of from-scratch blocked-pair computations this JVM has run
+    * (spec hook: many consumers, one compute).
+    */
+  private[graft] val blockedPairComputeCount =
+    new java.util.concurrent.atomic.AtomicInteger(0)
+
+  /** The scored rare-shingle candidate pairs (d1, d2, jacc), d1 < d2:
+    * every pair of documents sharing a [[rareBlockedShingles]] block,
+    * with its exact Jaccard, landed once per (JVM, documents signature)
+    * so the candidates are generated and scored once (filter-and-verify).
+    * q25, q172 and q234 keep `jacc >= 0.5`; q228 and q242 read it
+    * whole; q171 expands both orientations.
+    */
+  private[queries] def blockedPairTable(s: SparkSession,
+                                        dir: String): DataFrame =
+    Tables.landed(s, "blkpairs", dir, Seq("documents"),
+      blockedPairComputeCount) {
+      val blocked = rareBlockedShingles(s, dir)
+      val cand = blocked.as("x")
+        .join(blocked.as("y"),
+          col("x.s") === col("y.s") && col("x.doc_id") < col("y.doc_id"))
+        .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"))
+        .distinct()
+      scorePairs(cand, shingled(s, dir))
     }
 
   /** The 16-permutation MinHash signature table (doc_id, m0..m15),
@@ -136,17 +162,25 @@ object DedupQueries {
   private def jaccard(a: Column, b: Column): Column =
     graft.functions.GraftFunctions.jaccardSim(a, b)
 
-  /** Candidate verification shared by q24/q25: join (d1, d2) pairs back
-    * to the shingle table on both sides, keep pairs with exact Jaccard
-    * at or above the threshold.
+  /** Join (d1, d2) candidate pairs back to the shingle table on both
+    * sides and attach their exact Jaccard: the scoring half of
+    * [[verifyPairs]] and of [[blockedPairTable]].
     */
-  private def verifyPairs(cand: DataFrame, base: DataFrame,
-                          threshold: Double): DataFrame =
+  private def scorePairs(cand: DataFrame, base: DataFrame): DataFrame =
     cand
       .join(base.select(col("doc_id").as("d1"), col("sh").as("sh1")), Seq("d1"))
       .join(base.select(col("doc_id").as("d2"), col("sh").as("sh2")), Seq("d2"))
       .select(col("d1"), col("d2"),
         jaccard(col("sh1"), col("sh2")).as("jacc"))
+
+  /** Candidate verification for the queries whose candidates do not
+    * come from the rare-shingle blocks — q24 (LSH bands), q102 (prefix
+    * filter) and q180 (sorted neighborhood): score the pairs, keep
+    * those with exact Jaccard at or above the threshold.
+    */
+  private def verifyPairs(cand: DataFrame, base: DataFrame,
+                          threshold: Double): DataFrame =
+    scorePairs(cand, base)
       .filter(col("jacc") >= threshold)
       .orderBy("d1", "d2")
 
@@ -208,7 +242,7 @@ object DedupQueries {
   val q24MinhashLsh: Q = Q(
     "q24_minhash_lsh",
     (s, dir) => {
-      val base = Tables.eager(shingled(s, dir))
+      val base = shingled(s, dir)
       // the (doc_id, m0..m15) signature table is LANDED once per
       // fixture (shared with q242's accuracy audit) — see
       // [[minhashSigTable]] for the md5-derived permutation family
@@ -252,14 +286,8 @@ object DedupQueries {
   val q25JaccardBlocked: Q = Q(
     "q25_jaccard_blocked",
     (s, dir) => {
-      val base = Tables.eager(shingled(s, dir))
-      val blocked = rareBlockedShingles(s, dir)
-      val cand = blocked.as("x")
-        .join(blocked.as("y"),
-          col("x.s") === col("y.s") && col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"))
-        .distinct()
-      verifyPairs(cand, base, threshold = 0.5)
+      blockedPairTable(s, dir).filter(col("jacc") >= 0.5)
+        .orderBy("d1", "d2")
     },
     Some(s"""WITH shs AS ($duckShingled),
              ex AS (SELECT doc_id, unnest(sh) AS s FROM shs),
@@ -682,7 +710,7 @@ object DedupQueries {
   val q61Decontaminate: Q = Q(
     "q61_decontaminate",
     (s, dir) => {
-      val sh = Tables.eager(shingled(s, dir))
+      val sh = shingled(s, dir)
       val benchEx = sh.filter(col("doc_id") % 97 === 0)
         .select(col("doc_id").as("bench_doc"), explode(col("sh")).as("s"))
       val corpEx = sh.filter(col("doc_id") % 97 =!= 0)
@@ -1009,13 +1037,12 @@ object DedupQueries {
   val q171ContainmentJoin: Q = Q(
     "q171_containment_join",
     (s, dir) => {
-      val base = Tables.eager(shingled(s, dir))
-      val blocked = rareBlockedShingles(s, dir)
-      val cand = blocked.as("x")
-        .join(blocked.as("y"),
-          col("x.s") === col("y.s") && col("x.doc_id") =!= col("y.doc_id"))
-        .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"))
-        .distinct()
+      val base = shingled(s, dir)
+      // the ordered x != y blocked pairs are exactly both orientations
+      // of the unordered d1 < d2 ones
+      val pairs = blockedPairTable(s, dir)
+      val cand = pairs.select(col("d1"), col("d2"))
+        .unionAll(pairs.select(col("d2").as("d1"), col("d1").as("d2")))
       cand
         .join(base.select(col("doc_id").as("d1"), col("sh").as("sh1")), Seq("d1"))
         .join(base.select(col("doc_id").as("d2"), col("sh").as("sh2")), Seq("d2"))
@@ -1054,14 +1081,7 @@ object DedupQueries {
   val q172SourceDupMatrix: Q = Q(
     "q172_source_dup_matrix",
     (s, dir) => {
-      val base = Tables.eager(shingled(s, dir))
-      val blocked = rareBlockedShingles(s, dir)
-      val cand = blocked.as("x")
-        .join(blocked.as("y"),
-          col("x.s") === col("y.s") && col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"))
-        .distinct()
-      val pairs = verifyPairs(cand, base, threshold = 0.5)
+      val pairs = blockedPairTable(s, dir).filter(col("jacc") >= 0.5)
       val src = Tables.load(s, dir, "documents")
         .select(col("doc_id"), col("source"))
       pairs
@@ -1128,7 +1148,7 @@ object DedupQueries {
   val q180SortedNeighborhood: Q = Q(
     "q180_sorted_neighborhood",
     (s, dir) => {
-      val base = Tables.eager(shingled(s, dir))
+      val base = shingled(s, dir)
       val keyed = Tables.load(s, dir, "documents")
         .select(col("doc_id"),
           lower(substring(col("text"), 1, 24)).as("k"))
@@ -1315,20 +1335,7 @@ object DedupQueries {
     "q228_threshold_curve",
     (s, dir) => {
       import s.implicits._
-      val base = Tables.eager(shingled(s, dir))
-      val blocked = rareBlockedShingles(s, dir)
-      val cand = blocked.as("x")
-        .join(blocked.as("y"),
-          col("x.s") === col("y.s") && col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"))
-        .distinct()
-      val scored = Tables.eager(cand
-        .join(base.select(col("doc_id").as("d1"), col("sh").as("sh1")),
-          Seq("d1"))
-        .join(base.select(col("doc_id").as("d2"), col("sh").as("sh2")),
-          Seq("d2"))
-        .select(col("d1"), col("d2"),
-          jaccard(col("sh1"), col("sh2")).as("jacc")))
+      val scored = blockedPairTable(s, dir)
       val thr = Seq(0.5, 0.6, 0.7, 0.8, 0.9).toDF("threshold")
       val hits = scored.crossJoin(broadcast(thr))
         .filter(col("jacc") >= col("threshold"))
@@ -1394,15 +1401,8 @@ object DedupQueries {
   val q234DedupTransitivity: Q = Q(
     "q234_dedup_transitivity",
     (s, dir) => {
-      val base = Tables.eager(shingled(s, dir))
-      val blocked = rareBlockedShingles(s, dir)
-      val cand = blocked.as("x")
-        .join(blocked.as("y"),
-          col("x.s") === col("y.s") && col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"))
-        .distinct()
-      val e = Tables.eager(verifyPairs(cand, base, threshold = 0.5)
-        .select(col("d1").as("u"), col("d2").as("v")))
+      val e = blockedPairTable(s, dir).filter(col("jacc") >= 0.5)
+        .select(col("d1").as("u"), col("d2").as("v"))
       val deg = e.select(col("u").as("node"))
         .unionAll(e.select(col("v").as("node")))
         .groupBy(col("node")).agg(count(lit(1)).as("d"))
@@ -1485,24 +1485,10 @@ object DedupQueries {
   val q242MinhashAccuracy: Q = Q(
     "q242_minhash_accuracy",
     (s, dir) => {
-      val base = Tables.eager(shingled(s, dir))
-      // both the signature table and the blocking postings are LANDED
-      // relations (shared with q24 and the whole blocked-candidate
-      // family) — this audit's own work starts at the pair join
+      // signatures and scored pairs are both LANDED relations — this
+      // audit's own work starts at the signature join
       val sig = minhashSigTable(s, dir)
-      val blocked = rareBlockedShingles(s, dir)
-      val cand = blocked.as("x")
-        .join(blocked.as("y"),
-          col("x.s") === col("y.s") && col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"))
-        .distinct()
-      val scored = cand
-        .join(base.select(col("doc_id").as("d1"), col("sh").as("sh1")),
-          Seq("d1"))
-        .join(base.select(col("doc_id").as("d2"), col("sh").as("sh2")),
-          Seq("d2"))
-        .select(col("d1"), col("d2"),
-          jaccard(col("sh1"), col("sh2")).as("jacc"))
+      val scored = blockedPairTable(s, dir)
       val s1 = sig.select(col("doc_id").as("d1") +:
         (0 until NumHashes).map(i => col(s"m$i").as(s"a$i")): _*)
       val s2 = sig.select(col("doc_id").as("d2") +:
@@ -1597,7 +1583,7 @@ object DedupQueries {
     "q261_contrastive_mining",
     (s, dir) => {
       val anchorCap = 30L
-      val base = Tables.eager(docShingleTable(s, dir))
+      val base = docShingleTable(s, dir)
       val blocked = rareBlockedShingles(s, dir)
       val hardCand = blocked.as("x")
         .join(blocked.as("y"),

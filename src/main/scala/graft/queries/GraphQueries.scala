@@ -533,7 +533,7 @@ object GraphQueries {
       val e = cooccurrenceEdges(s, dir)
       // triangles come from the LANDED enumeration; this query's own
       // work starts at the corner-edge explosion
-      val tri = Tables.eager(triangleTable(s, dir))
+      val tri = triangleTable(s, dir)
       val triEdges = tri
         .select(least(col("a"), col("b")).as("p"),
           greatest(col("a"), col("b")).as("q"))
@@ -653,7 +653,7 @@ object GraphQueries {
   val q194Assortativity: Q = Q(
     "q194_assortativity",
     (s, dir) => {
-      val e = Tables.eager(cooccurrenceEdges(s, dir))
+      val e = cooccurrenceEdges(s, dir)
       val deg = e.select(col("u").as("node"))
         .unionAll(e.select(col("v").as("node")))
         .groupBy(col("node")).agg(count(lit(1)).as("d"))
@@ -716,7 +716,7 @@ object GraphQueries {
       val deg = graphDegrees(s, dir)
       // triangles come from the LANDED enumeration; this query's own
       // work is the corner count + the degree left join
-      val tri = Tables.eager(triangleTable(s, dir))
+      val tri = triangleTable(s, dir)
       val corners = tri.select(col("a").as("node"))
         .unionAll(tri.select(col("b").as("node")))
         .unionAll(tri.select(col("c").as("node")))
@@ -788,7 +788,7 @@ object GraphQueries {
   val q231LinkPrediction: Q = Q(
     "q231_link_prediction",
     (s, dir) => {
-      val e = Tables.eager(cooccurrenceEdges(s, dir))
+      val e = cooccurrenceEdges(s, dir)
       val adj = e.select(col("u").as("m"), col("v").as("x"))
         .unionAll(e.select(col("v").as("m"), col("u").as("x")))
       val deg = adj.groupBy(col("m")).agg(count(lit(1)).as("d"))

@@ -1,10 +1,12 @@
 package graft
 
 import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildRight}
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{ColumnarToRowExec, FileSourceScanExec, FilterExec, InputAdapter, ProjectExec, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
 import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
 import org.apache.spark.sql.execution.window.WindowExec
+
+import graft.engine.MaterializationAudit.Recorded
 
 /** Catalog-wide physical-plan POLICIES, as code — the two canonical
   * scale-killers, each with a reviewed allowlist:
@@ -27,6 +29,10 @@ import org.apache.spark.sql.execution.window.WindowExec
   *     all-pairs losslessness oracles, allowlisted by name. Previously a
   *     judge-side manual scan ("no cartesian outside labeled attaches");
   *     now a regression gate.
+  *
+  * A third, materialization policy rides the same sweep: `Tables.eager`
+  * persists computed frames only, never a read of a `Tables.landed`
+  * table (q111/q165's driver loops are the reviewed exceptions).
   *
   * A NEW query that trips either policy fails here until it is converted
   * or reviewed onto the list with a Scaladoc justification.
@@ -81,25 +87,34 @@ class GlobalWindowPolicySpec extends SparkSpec with AdaptiveSparkPlanHelper {
     "q137_symspell_join", // deletion-neighborhood losslessness
     "q241_ann_bits_curve") // documented exhaustive truth pass
 
-  /** One catalog pass: every node (see [[PlanAudit.flatten]]) of each
-    * non-streaming query's FINAL executed plan plus every intermediate
-    * plan it materializes through Tables.eager / Tables.landed (drained
-    * from MaterializationAudit). The final plan alone is NOT enough —
-    * materialized subplans hide behind an InMemoryTableScan / parquet
-    * scan (q180's block-offset window was invisible that way for five
-    * rounds). All three policy tests read this one sweep.
+  /** One catalog pass: each non-streaming query's FINAL executed plan
+    * (site `final`) plus every intermediate plan it materializes through
+    * Tables.eager / Tables.landed (drained from MaterializationAudit,
+    * with its site). The final plan alone is NOT enough — materialized
+    * subplans hide behind an InMemoryTableScan / parquet scan (q180's
+    * block-offset window was invisible that way for five rounds). Every
+    * policy test reads this one sweep.
     */
-  private lazy val sweep: Seq[(String, Seq[SparkPlan])] = {
+  private lazy val records: Seq[(String, Seq[Recorded])] = {
     engine.MaterializationAudit.enable()
     try Catalog.all
       .filterNot(_.streaming) // streaming plans are runs, not lazy plans
       .map { q =>
         val finalPlan = q.fn(spark, sfDir).queryExecution.executedPlan
-        (q.name, (finalPlan +: engine.MaterializationAudit.drain()
-          .map(_.plan)).flatMap(PlanAudit.flatten))
+        // a frame an earlier query left persisted would plan as an
+        // InMemoryTableScan here and hide the subplan it caches
+        spark.sharedState.cacheManager.clearCache()
+        (q.name,
+          Recorded("final", finalPlan) +: engine.MaterializationAudit.drain())
       }
     finally engine.MaterializationAudit.disable()
   }
+
+  /** Every node (see [[PlanAudit.flatten]]) of each query's records. */
+  private lazy val sweep: Seq[(String, Seq[SparkPlan])] =
+    records.map { case (name, rs) =>
+      (name, rs.flatMap(r => PlanAudit.flatten(r.plan)))
+    }
 
   test("only reviewed queries carry single-partition windows") {
     val offenders = sweep.collect {
@@ -186,5 +201,42 @@ class GlobalWindowPolicySpec extends SparkSpec with AdaptiveSparkPlanHelper {
     }
     val stale = allPairsAllowed.filterNot(Catalog.all.map(_.name).toSet)
     withClue("allowlisted names not in the catalog: ") { stale shouldBe empty }
+  }
+
+  /** Queries allowed to `Tables.eager` a landed read, because a driver
+    * loop reads the frame again in later actions.
+    */
+  private val eagerLandedAllowed: Set[String] = Set(
+    "q111_bfs_hops", // every BFS round is its own action over the edges
+    "q165_kcore")    // the peeling loop counts and re-reads round one
+
+  /** The plan only reads landed tables: scans of `graft_landed_` dirs
+    * under Project / Filter (plus the codegen and columnar wrappers).
+    */
+  private def landedRead(p: SparkPlan): Boolean = {
+    val nodes = PlanAudit.flatten(p)
+    nodes.exists(_.isInstanceOf[FileSourceScanExec]) && nodes.forall {
+      case f: FileSourceScanExec => f.relation.location.rootPaths
+        .forall(_.toString.contains("graft_landed_"))
+      case _: ProjectExec | _: FilterExec | _: ColumnarToRowExec |
+           _: WholeStageCodegenExec | _: InputAdapter |
+           _: AdaptiveSparkPlanExec => true
+      case _ => false
+    }
+  }
+
+  test("Tables.eager caches computed frames, never a landed read") {
+    // a landed table is already materialized: persisting a scan of it
+    // adds a count job and a second, in-memory copy
+    val eagerLanded = records.collect {
+      case (name, rs) if rs.exists(r => r.site == "eager" &&
+        landedRead(r.plan)) => name
+    }
+    withClue("eager over a landed read in: ") {
+      eagerLanded.filterNot(eagerLandedAllowed) shouldBe empty
+    }
+    withClue("allowlisted names that no longer eager a landed read: ") {
+      (eagerLandedAllowed -- eagerLanded) shouldBe empty
+    }
   }
 }

@@ -354,6 +354,42 @@ class NewOpsSpec extends SparkSpec {
     mat shouldBe direct
   }
 
+  test("blocked pair table materializes once and serves the " +
+      "rare-shingle candidate family") {
+    val dir = "/root/testdata/sf0.001"
+    val before = DedupQueries.blockedPairComputeCount.get
+    val table = DedupQueries.blockedPairTable(spark, dir)
+    val mid = DedupQueries.blockedPairComputeCount.get
+    (mid - before) should be <= 1
+    // the six consumers score no candidate pair of their own
+    Seq(DedupQueries.q25JaccardBlocked, DedupQueries.q171ContainmentJoin,
+      DedupQueries.q172SourceDupMatrix, DedupQueries.q228ThresholdCurve,
+      DedupQueries.q234DedupTransitivity, DedupQueries.q242MinhashAccuracy)
+      .foreach(_.fn(spark, dir).collect())
+    DedupQueries.blockedPairComputeCount.get shouldBe mid
+    // and the landed table IS the from-scratch candidate scoring: every
+    // d1 < d2 pair sharing a shingle of document frequency 2..5, with
+    // its exact set Jaccard
+    val mat = table.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val sh: Map[Long, Set[String]] = graft.engine.Tables
+      .load(spark, dir, "documents")
+      .select(col("doc_id"), graft.engine.ext.Text.shingles(
+        graft.engine.ext.Text.tokens(col("text")), 3))
+      .collect().map(r => r.getLong(0) ->
+        Option(r.getSeq[String](1)).fold(Set.empty[String])(_.toSet)).toMap
+    val postings = sh.toSeq.flatMap { case (d, ss) => ss.map(_ -> d) }
+      .groupBy(_._1).values.map(_.map(_._2))
+      .filter(ds => ds.size >= 2 && ds.size <= 5)
+    val direct = (for (ds <- postings; a <- ds; b <- ds if a < b)
+        yield (a, b)).toSet[(Long, Long)]
+      .map { case (a, b) =>
+        (a, b, (sh(a) & sh(b)).size.toDouble / (sh(a) | sh(b)).size)
+      }
+    direct should not be empty
+    mat shouldBe direct
+  }
+
   test("Levenshtein pair table materializes once and serves the " +
       "edit-distance family") {
     val dir = "/root/testdata/sf0.001"
@@ -2669,7 +2705,8 @@ class NewOpsSpec extends SparkSpec {
     }
     // wider truncation keeps at least as much of the head-packed signal
     // on this corpus (not a theorem, but a fixture-stable sanity rail)
-    out.map(_._3).sliding(2).foreach { case Seq(a, b) => b should be >= a }
+    val nHits = out.map(_._3)
+    nHits.zip(nHits.tail).foreach { case (a, b) => b should be >= a }
   }
 
   test("q258 prefix-dup curve: refinement monotonicity across k") {
@@ -2682,9 +2719,10 @@ class NewOpsSpec extends SparkSpec {
     out.map(_._2).distinct should have size 1
     // longer prefixes REFINE shorter ones: distinct-prefix counts can
     // only grow, shared-doc counts and the largest group can only shrink
-    out.map(_._3).sliding(2).foreach { case Seq(a, b) => b should be >= a }
-    out.map(_._4).sliding(2).foreach { case Seq(a, b) => b should be <= a }
-    out.map(_._5).sliding(2).foreach { case Seq(a, b) => b should be <= a }
+    def pairs(xs: List[Long]) = xs.zip(xs.tail)
+    pairs(out.map(_._3)).foreach { case (a, b) => b should be >= a }
+    pairs(out.map(_._4)).foreach { case (a, b) => b should be <= a }
+    pairs(out.map(_._5)).foreach { case (a, b) => b should be <= a }
   }
 
   test("q260 shard packing: shards partition the corpus in id order") {
