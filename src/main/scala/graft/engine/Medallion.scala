@@ -1,8 +1,12 @@
 package graft.engine
 
+import java.nio.charset.StandardCharsets.UTF_8
+
 import scala.util.{Failure, Success, Try}
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** The reference's whole pipeline as function composition
   * (SURVEY.md §2.9, §7.1): the Airflow DAG
@@ -11,10 +15,12 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * with the DQ gate as a throwing step — quality failures are control
   * flow, not data (the reference's contract, ditto :92-100).
   *
-  * Each stage both writes its layer and returns the DataFrame it wrote, so
-  * callers can compose without re-reading — unlike the reference, which
-  * re-reads silver from storage in both the gate and gold stages and
-  * recomputes the gold plan for its second (JDBC) write.
+  * Each stage writes its layer once and returns that landed copy, read
+  * back, so the next stage reads what was published. Gold's serving
+  * mirror composes at the call site,
+  * `Sinks.writeJdbc(Medallion.toGold(...), url, table)`, and so reads the
+  * landed gold — unlike the reference, which recomputes the gold plan for
+  * its second (JDBC) write.
   */
 object Medallion {
 
@@ -75,20 +81,51 @@ object Medallion {
     } finally conn.disconnect()
   }
 
-  /** Ingested batch -> bronze JSON snapshot (returns the snapshot dir). */
-  def toBronze(raw: DataFrame, layout: Layout, runTs: String): String =
-    Sinks.writeBronzeJson(raw, layout.bronzeRoot, runTs)
+  /** Name of the batch's schema (`StructType.json`) in each bronze
+    * snapshot dir. Spark's file listing skips `_`-prefixed names, so the
+    * JSON scan never sees it.
+    */
+  private val SchemaFile = "_schema.json"
 
-  /** Latest bronze snapshot -> cleaned silver, hive-partitioned. */
+  /** Ingested batch -> bronze JSON snapshot plus its schema (returns the
+    * snapshot dir). The schema lets silver read the snapshot without an
+    * inference pass, and read an empty batch at all.
+    */
+  def toBronze(raw: DataFrame, layout: Layout, runTs: String): String = {
+    val dir = Sinks.writeBronzeJson(raw, layout.bronzeRoot, runTs)
+    val path = new Path(dir, SchemaFile)
+    val out = path.getFileSystem(raw.sparkSession.sparkContext.hadoopConfiguration)
+      .create(path, true)
+    try out.write(raw.schema.json.getBytes(UTF_8)) finally out.close()
+    dir
+  }
+
+  /** Latest bronze snapshot -> cleaned silver, hive-partitioned, read back
+    * with the projected schema (partition columns last, as a discovered
+    * read orders them).
+    */
   def toSilver(spark: SparkSession, layout: Layout,
                projection: Seq[(String, Column)],
                partitionCols: Seq[String]): DataFrame = {
-    val bronze = Sources.readLatestJsonSnapshot(spark, layout.bronzeRoot)
+    val snapshot = Sources.latestSnapshotPath(spark, layout.bronzeRoot)
       .getOrElse(throw new IllegalStateException(
         s"no bronze snapshot under ${layout.bronzeRoot}"))
+    val bronze = Sources.readJson(spark, snapshot, Some(snapshotSchema(spark, snapshot)))
     val silver = Silver.project(bronze, projection)
     Sinks.writePartitionedParquet(silver, layout.silverPath, partitionCols)
-    Sources.readParquet(spark, layout.silverPath)
+    val (parts, data) = silver.schema.partition(f => partitionCols.contains(f.name))
+    spark.read.schema(StructType(data ++ parts)).parquet(layout.silverPath)
+  }
+
+  private def snapshotSchema(spark: SparkSession, snapshot: String): StructType = {
+    val path = new Path(snapshot, SchemaFile)
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(path))
+      throw new IllegalStateException(
+        s"bronze snapshot $snapshot has no $SchemaFile; write it with Medallion.toBronze")
+    val in = fs.open(path)
+    try DataType.fromJson(new String(in.readAllBytes(), UTF_8)).asInstanceOf[StructType]
+    finally in.close()
   }
 
   /** Throwing DQ gate between silver and gold (P7-P9/A2). */
@@ -97,18 +134,10 @@ object Medallion {
     silver
   }
 
-  /** Gated silver -> gold aggregate, parquet + optional JDBC mirror. */
+  /** Gated silver -> gold aggregate, landed as parquet and read back. */
   def toGold(silver: DataFrame, layout: Layout,
-             keys: Seq[Column], countCol: Column, countName: String,
-             jdbc: Option[(String, String)] = None): DataFrame = {
-    val gold = Gold.groupCount(silver, keys, countCol, countName)
-    // single materialization serves both sinks (the reference recomputes
-    // the aggregate for its JDBC write; see SURVEY.md §3.2)
-    gold.cache()
-    try {
-      Sinks.writeParquet(gold, layout.goldPath)
-      jdbc.foreach { case (url, table) => Sinks.writeJdbc(gold, url, table) }
-    } finally gold.unpersist()
-    gold
+             keys: Seq[Column], countCol: Column, countName: String): DataFrame = {
+    Sinks.writeParquet(Gold.groupCount(silver, keys, countCol, countName), layout.goldPath)
+    Sources.readParquet(silver.sparkSession, layout.goldPath)
   }
 }

@@ -10,13 +10,13 @@ import org.apache.spark.sql.functions._
   * minimum record count, and NULL-or-empty scans over critical columns.
   * The reference treats quality failures as control flow (raise ->
   * Airflow retry); `assertGate` keeps that contract, while `report`
-  * exposes the same checks as a DataFrame for the oracle harness.
+  * exposes the violation counts as a DataFrame for the oracle harness.
   *
-  * Scale notes: `minCount` uses the reference's bounded-probe pattern
-  * (`limit(n).count() < n`, :65) so the scan stops after n rows instead of
-  * counting 100 TB; the violation probe uses `limit(1)` the same way (:70).
-  * `report` does one full pass with conditional aggregates (one job, one
-  * scan) instead of the reference's one-job-per-column loop.
+  * Both run ONE conditional-aggregate pass over the data, where the
+  * reference runs a job per check (an emptiness probe, a row count
+  * bounded at n, one bounded violation probe per column): on clean data,
+  * the common case, a column has to be read to the end to prove it has
+  * no violation, so the per-check probes only add jobs.
   */
 object Quality {
 
@@ -33,22 +33,24 @@ object Quality {
     */
   def nullOrEmpty(c: Column): Column = c.isNull || c.cast("string") === ""
 
-  /** Early-exit gate; throws on first violation like the reference. */
+  /** Rows violating [[nullOrEmpty]] on column `c`; 0 on an empty input. */
+  private def violations(c: String): Column = count_if(nullOrEmpty(col(c)))
+
+  /** The gate: one aggregate pass, then throws on the first failing check
+    * like the reference — "dataset is empty" first, then the checks in
+    * order.
+    */
   def assertGate(df: DataFrame, checks: Seq[Check]): Unit = {
-    if (df.isEmpty) throw new IllegalStateException("dataset is empty")
+    val columns = checks.collect { case NotNullOrEmpty(c) => c }.distinct
+    val counts = df.agg(count(lit(1)), columns.map(violations): _*).head()
+    val rows = counts.getLong(0)
+    val bad = columns.zipWithIndex.map { case (c, i) => c -> counts.getLong(i + 1) }.toMap
+    if (rows == 0) throw new IllegalStateException("dataset is empty")
     checks.foreach {
-      case MinCount(n) if n <= Int.MaxValue =>
-        // bounded probe: reads at most n rows, never the full table.
-        if (df.limit(n.toInt).count() < n)
-          throw new IllegalStateException(s"record count below $n")
       case MinCount(n) =>
-        // limit() takes an Int; a >2^31 threshold would wrap negative and
-        // silently gut the gate. Fall back to a full count — correct, and
-        // a caller demanding >2 billion rows has priced in a full scan.
-        if (df.count() < n)
-          throw new IllegalStateException(s"record count below $n")
+        if (rows < n) throw new IllegalStateException(s"record count below $n")
       case NotNullOrEmpty(c) =>
-        if (df.filter(nullOrEmpty(col(c))).limit(1).count() > 0)
+        if (bad(c) > 0)
           throw new IllegalStateException(s"critical column $c has null/empty values")
     }
   }
@@ -69,66 +71,12 @@ object Quality {
     (df.filter(!bad), df.filter(bad))
   }
 
-  /** In-flight gate metrics via `Dataset.observe` — the ZERO-extra-pass
-    * form of the gate: the returned frame is written (or otherwise
-    * consumed) exactly once, and the row count plus per-column violation
-    * counts are collected as accumulator-style metrics DURING that one
-    * action. At 100 TB this is the difference between "write the silver
-    * table" and "scan the silver table three times first, then write
-    * it" — assertGate's bounded probes cost extra jobs; an observation
-    * costs nothing the action wasn't already paying.
-    *
-    * Usage: `val (tagged, obs) = Quality.observed(df, cols)`; run ONE
-    * action on `tagged`; then `assertObserved(obs, MinCount(n))` — which
-    * throws exactly like [[assertGate]], but after the fact.
-    */
-  def observed(df: DataFrame, criticalColumns: Seq[String])
-      : (DataFrame, org.apache.spark.sql.Observation) = {
-    require(criticalColumns.nonEmpty, "observed needs at least one column")
-    val obs = org.apache.spark.sql.Observation()
-    val metrics = count(lit(1)).as("rows") +:
-      criticalColumns.map(c =>
-        coalesce(sum(when(nullOrEmpty(col(c)), 1L).otherwise(0L)), lit(0L))
-          .as(s"bad_$c"))
-    (df.observe(obs, metrics.head, metrics.tail: _*), obs)
-  }
-
-  /** Post-action gate over [[observed]] metrics: same failure contract
-    * as [[assertGate]] (empty / below-min / critical-column violations
-    * throw), evaluated from the already-collected observation — no
-    * further jobs. Blocks until the observed action completes.
-    */
-  def assertObserved(obs: org.apache.spark.sql.Observation,
-      checks: Seq[Check]): Unit = {
-    val m = obs.get
-    val rows = m("rows").asInstanceOf[Long]
-    if (rows == 0) throw new IllegalStateException("dataset is empty")
-    checks.foreach {
-      case MinCount(n) =>
-        if (rows < n)
-          throw new IllegalStateException(s"record count below $n")
-      case NotNullOrEmpty(c) =>
-        // contract-level error, not a bare key-not-found: the check only
-        // makes sense for columns that were passed to observed()
-        val bad = m.getOrElse(s"bad_$c", throw new IllegalArgumentException(
-          s"column $c was not observed — pass it to observed() before " +
-            "gating on it")).asInstanceOf[Long]
-        if (bad > 0)
-          throw new IllegalStateException(
-            s"critical column $c has null/empty values")
-    }
-  }
-
   /** All critical-column violation counts in ONE scan (vs the reference's
     * job-per-column), as (column, violations) rows.
     */
   def report(df: DataFrame, criticalColumns: Seq[String]): DataFrame = {
     require(criticalColumns.nonEmpty, "report needs at least one column")
-    val aggs = criticalColumns.map { c =>
-      // coalesce: sum over an EMPTY input is NULL, but "0 violations" is
-      // the correct report for an empty dataset (count(*) FILTER parity).
-      coalesce(sum(when(nullOrEmpty(col(c)), 1L).otherwise(0L)), lit(0L)).as(c)
-    }
+    val aggs = criticalColumns.map(c => violations(c).as(c))
     val wide = df.agg(aggs.head, aggs.tail: _*)
     // unpivot to long form so adding a column never changes the schema
     wide.unpivot(Array.empty, criticalColumns.map(col).toArray,

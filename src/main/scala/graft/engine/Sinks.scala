@@ -28,10 +28,9 @@ object Sinks {
   /** Bronze write (S2): one run-timestamped JSON directory per ingest,
     * mirroring the reference's `{prefix}_{yyyyMMdd_HHmmss}.json` blob
     * naming (brewery_operators.py:117-130) as a `run_ts=` directory.
-    * Null fields are written as `null`, like the API's raw payload: with
-    * the JSON writer's default (nulls dropped) a column that is null in
-    * every row would be missing from bronze, and silver's projection of
-    * it would fail to resolve. Returns the directory written.
+    * Null fields are written as `null`, like the API's raw payload, not
+    * dropped as by the JSON writer's default. Returns the directory
+    * written.
     */
   def writeBronzeJson(df: DataFrame, bronzeRoot: String, runTs: String): String = {
     val dir = s"$bronzeRoot/run_ts=$runTs"

@@ -57,9 +57,4 @@ object Sources {
       case stats => Some(stats.maxBy(_.getModificationTime).getPath.toString)
     }
   }
-
-  /** Read the newest bronze snapshot as JSON (S3 + S4 composed). */
-  def readLatestJsonSnapshot(spark: SparkSession, root: String,
-                             schema: Option[StructType] = None): Option[DataFrame] =
-    latestSnapshotPath(spark, root).map(readJson(spark, _, schema))
 }

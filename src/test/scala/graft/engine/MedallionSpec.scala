@@ -39,6 +39,9 @@ class MedallionSpec extends SparkSpec {
       val silver = Medallion.toSilver(spark, layout, projection, Seq("state"))
 
       silver.count() shouldBe 3 // projection is 1:1
+      // read back with the projected schema: the same columns, in the same
+      // order, as a schema-discovering read of the landed silver
+      silver.schema shouldBe Sources.readParquet(spark, layout.silverPath).schema
       val byId = silver.collect().map(r => r.getAs[String]("id") -> r).toMap
       byId("b1").getAs[String]("brewery_name") shouldBe "Foo Brew" // trimmed
       byId("b2").getAs[String]("brewery_type") shouldBe "brewpub"  // lowered
@@ -86,10 +89,49 @@ class MedallionSpec extends SparkSpec {
       an[IllegalStateException] should be thrownBy
         Medallion.gate(withEmpty, Seq(Quality.NotNullOrEmpty("brewery_name")))
 
-      an[IllegalStateException] should be thrownBy
-        Medallion.gate(silver.limit(0), Seq(Quality.MinCount(1))) // isEmpty guard
+      the[IllegalStateException] thrownBy
+        Medallion.gate(silver.limit(0), Seq(Quality.MinCount(1))) should have message
+        "dataset is empty"
 
       new java.io.File(s"$root/gold").exists shouldBe false // gold never ran
+    }
+  }
+
+  test("an empty batch is refused by the gate, and gold never runs") {
+    withTempDir { root =>
+      val layout = Medallion.Layout(s"$root/bronze", s"$root/silver", s"$root/gold")
+      Medallion.toBronze(raw.limit(0), layout, "20240103_120000")
+      the[IllegalStateException] thrownBy {
+        val silver = Medallion.toSilver(spark, layout, projection, Seq("state"))
+        Medallion.gate(silver, Seq(Quality.MinCount(1), Quality.NotNullOrEmpty("id")))
+      } should have message "dataset is empty"
+      new java.io.File(s"$root/gold").exists shouldBe false
+    }
+  }
+
+  test("a bronze snapshot without its schema file is refused by name") {
+    withTempDir { root =>
+      val layout = Medallion.Layout(s"$root/bronze", s"$root/silver", s"$root/gold")
+      Sinks.writeBronzeJson(raw, layout.bronzeRoot, "20240105_120000")
+      val e = the[IllegalStateException] thrownBy
+        Medallion.toSilver(spark, layout, projection, Seq("state"))
+      e.getMessage should (include("run_ts=20240105_120000") and include("_schema.json"))
+    }
+  }
+
+  test("the JDBC serving mirror holds the landed gold's rows") {
+    withTempDir { root =>
+      val layout = Medallion.Layout(s"$root/bronze", s"$root/silver", s"$root/gold")
+      Medallion.toBronze(raw, layout, "20240104_120000")
+      val silver = Medallion.toSilver(spark, layout, projection, Seq("state"))
+      val url = "jdbc:derby:memory:medallion;create=true"
+      Sinks.writeJdbc(Medallion.toGold(silver, layout,
+        Seq(col("brewery_type"), col("state")), col("id"), "brewery_count"),
+        url, "brewery_summary")
+      val mirror = spark.read.jdbc(url, "brewery_summary", new java.util.Properties())
+      mirror.as[(String, String, Long)].collect().toSet shouldBe
+        Sources.readParquet(spark, layout.goldPath).as[(String, String, Long)].collect().toSet
+      mirror.count() shouldBe 3
     }
   }
 }

@@ -51,12 +51,65 @@ class SilverQualityGoldSpec extends SparkSpec {
       .as[(String, Long)].collect().toSet shouldBe Set(("u", 0L), ("v", 0L))
   }
 
-  test("assertGate bounded probes: pass path runs without full scan semantics") {
+  test("assertGate min-count: passes at the row count, throws above it") {
     val df = (1 to 10).map(i => (s"id$i", s"n$i")).toDF("id", "name")
     noException should be thrownBy
       Quality.assertGate(df, Seq(Quality.MinCount(10), Quality.NotNullOrEmpty("id")))
-    an[IllegalStateException] should be thrownBy
-      Quality.assertGate(df, Seq(Quality.MinCount(11)))
+    Seq(11L, Int.MaxValue.toLong + 1).foreach { n =>
+      the[IllegalStateException] thrownBy
+        Quality.assertGate(df, Seq(Quality.MinCount(n))) should have message
+        s"record count below $n"
+    }
+  }
+
+  test("assertGate reads each row once, whatever the number of checks") {
+    val n = 500
+    val reads = spark.sparkContext.longAccumulator("gate-reads")
+    // a nondeterministic filter is neither pruned nor pushed past, so it
+    // sees every row each query over df reads
+    val seen = udf { (_: String) => reads.add(1); true }.asNondeterministic()
+    val df = spark.sparkContext
+      .parallelize((1 to n).map(i => (s"id$i", s"n$i", "micro")), 4)
+      .toDF("id", "name", "kind")
+      .filter(seen(col("id")))
+    Quality.assertGate(df, Seq(Quality.MinCount(n), Quality.NotNullOrEmpty("id"),
+      Quality.NotNullOrEmpty("name"), Quality.NotNullOrEmpty("kind")))
+    reads.sum shouldBe n.toLong
+  }
+
+  /** The gate's verdict, modelled in plain Scala: the first failure
+    * message in the reference's order, or None when the data passes. */
+  private def verdict(rows: Seq[Map[String, Option[String]]],
+      checks: Seq[Quality.Check]): Option[String] =
+    if (rows.isEmpty) Some("dataset is empty")
+    else checks.collectFirst {
+      case Quality.MinCount(n) if rows.size < n => s"record count below $n"
+      case Quality.NotNullOrEmpty(c) if rows.exists(_(c).forall(_.isEmpty)) =>
+        s"critical column $c has null/empty values"
+    }
+
+  test("property: assertGate throws the model's first failure, or passes") {
+    val columns = Seq("a", "b", "c")
+    val cell = Gen.frequency(1 -> Gen.const(Option.empty[String]),
+      1 -> Gen.const(Option("")), 1 -> Gen.const(Option(" ")),
+      6 -> Gen.alphaStr.map(s => Option("v" + s)))
+    val cases = for {
+      n <- Gen.frequency(1 -> Gen.const(0), 6 -> Gen.choose(1, 6))
+      rows <- Gen.listOfN(n, Gen.listOfN(columns.size, cell)
+        .map(cells => columns.zip(cells).toMap))
+      checks <- Gen.listOf(Gen.oneOf(
+        Gen.choose(n - 1, n + 1).map(m => Quality.MinCount(m.toLong)),
+        Gen.oneOf(columns).map(Quality.NotNullOrEmpty(_))))
+    } yield (rows, checks.take(5))
+    (1 to 30).foreach { _ =>
+      val (rows, checks) = cases.sample.getOrElse((Nil, Nil))
+      val df = rows.map(r => (r("a"), r("b"), r("c"))).toDF(columns: _*)
+      val got = scala.util.Try(Quality.assertGate(df, checks)).failed.toOption
+        .map(_.getMessage)
+      withClue(s"rows=$rows checks=$checks: ") {
+        got shouldBe verdict(rows, checks)
+      }
+    }
   }
 
   // --- ScalaCheck-generated properties (generator-driven, one DF each) ---
@@ -66,32 +119,6 @@ class SilverQualityGoldSpec extends SparkSpec {
       Gen.alphaStr, Gen.asciiPrintableStr,
       Gen.const(""), Gen.const("  padded  "), Gen.const("MiXeD Case")))
     .sample.getOrElse(Seq.fill(200)("fallback"))
-
-  test("observed gate: metrics collected in the SAME action match report") {
-    val df = Seq(("a", "x"), ("", "y"), (null: String, "z"), ("d", ""))
-      .toDF("name", "city")
-    val (tagged, obs) = Quality.observed(df, Seq("name", "city"))
-    tagged.write.format("noop").mode("overwrite").save() // the ONE action
-    val m = obs.get
-    m("rows") shouldBe 4L
-    m("bad_name") shouldBe 2L // "" and null
-    m("bad_city") shouldBe 1L // ""
-    // and the after-the-fact gate throws exactly like assertGate
-    val e = intercept[IllegalStateException] {
-      Quality.assertObserved(obs, Seq(Quality.NotNullOrEmpty("name")))
-    }
-    e.getMessage should include("name")
-    Quality.assertObserved(obs, Seq(Quality.MinCount(4))) // passes
-  }
-
-  test("observed gate: clean data passes all checks post-action") {
-    val df = Seq(("a", "x"), ("b", "y")).toDF("name", "city")
-    val (tagged, obs) = Quality.observed(df, Seq("name", "city"))
-    tagged.write.format("noop").mode("overwrite").save()
-    Quality.assertObserved(obs,
-      Seq(Quality.MinCount(2), Quality.NotNullOrEmpty("name"),
-        Quality.NotNullOrEmpty("city")))
-  }
 
   test("property: normalization is idempotent (lower.lower = lower, trim.trim = trim)") {
     val df = rawStrings.toDF("s")

@@ -36,7 +36,8 @@ class SinksSourcesSpec extends SparkSpec {
       fs.setTimes(new Path(d1), 1000000L, -1)
       fs.setTimes(new Path(d2), 2000000L, -1)
       Sources.latestSnapshotPath(spark, bronze).get should endWith("run_ts=run_b")
-      Sources.readLatestJsonSnapshot(spark, bronze).get.count() shouldBe 3
+      Sources.readJson(spark, Sources.latestSnapshotPath(spark, bronze).get)
+        .count() shouldBe 3
       // flip the order: now run_a is "newest"
       fs.setTimes(new Path(d1), 3000000L, -1)
       Sources.latestSnapshotPath(spark, bronze).get should endWith("run_ts=run_a")
