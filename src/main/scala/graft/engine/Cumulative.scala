@@ -217,6 +217,37 @@ object Cumulative {
       values.indices.flatMap(i => Seq(s"__lcum$i", s"__soff$i"))): _*)
   }
 
+  /** The exact-quantile histogram walk of q40, q124, q136, q157, q175,
+    * q226, q236 and q288: one row per (`keys`, `value`) of `rows` with
+    * its `weight` aggregate as `w`, its inclusive running weight in value
+    * order as `cum` and its group's total weight as `n`. `keys` and
+    * `value` are plain columns, whose names the histogram keeps;
+    * `weight` (`count(lit(1))`, or q175's centi-quantity sum) is an
+    * exact type.
+    *
+    * This is the flat `sum(w) OVER (PARTITION BY keys [ORDER BY value])`
+    * pair, so each group's distinct values are sorted by one task (three
+    * return flags: three tasks). [[groupedRankedCumSums]] removes that
+    * shape, but its range sampling and eager pass cost more than the
+    * sort at the fixture scales measured so far; the walk moves to it
+    * once a workload where it wins is measured.
+    */
+  def histogram(rows: DataFrame, keys: Seq[Column], value: Column,
+      weight: Column): DataFrame = {
+    val byKey = Window.partitionBy(keys: _*)
+    rows.groupBy((keys :+ value): _*).agg(weight.as("w"))
+      .withColumn("cum", sum(col("w")).over(byKey.orderBy(value)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      .withColumn("n", sum(col("w")).over(byKey))
+  }
+
+  /** The discrete quantile of a [[histogram]] group: the first `value`
+    * whose running weight reaches rank `ceil(n * p)` — an actual
+    * element, no interpolation. Aggregate over the group's rows.
+    */
+  def rankPick(value: Column, p: Double): Column =
+    min(when(col("cum") >= ceil(col("n") * p), value))
+
   /** Running MAX over a total order, same two-phase shape as
     * [[rankedCumSum]] (max is associative, so per-range maxima plus a
     * broadcast prefix-max offset regroup exactly): appends `cumName` =

@@ -377,7 +377,8 @@ private[queries] trait EventStatsQueries extends EventQueriesBase {
     *
     * ## 100 TB notes
     * One shuffle to the (arm, cents) histogram with map-side
-    * partials; the per-arm window walks distinct values only; the
+    * partials; the per-arm [[graft.engine.Cumulative.histogram]] walk
+    * covers distinct values only; the
     * decile election crosses the histogram with a broadcast 9-row
     * dimension. Output is 9 rows at any scale.
     */
@@ -390,14 +391,8 @@ private[queries] trait EventStatsQueries extends EventQueriesBase {
         .filter(col("event_type") === "purchase")
         .select(arm.as("arm"),
           floor(col("value") * 100).cast("long").as("cents"))
-      val hist = pur.groupBy(col("arm"), col("cents"))
-        .agg(count(lit(1)).as("c"))
-      val byArm = Window.partitionBy(col("arm"))
-      val cum = hist
-        .withColumn("cum", sum(col("c")).over(
-          byArm.orderBy(col("cents"))
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        .withColumn("n", sum(col("c")).over(byArm))
+      val cum = graft.engine.Cumulative.histogram(pur, Seq(col("arm")),
+        col("cents"), count(lit(1)))
       val ks = s.range(1, 10).select(col("id").as("k"))
       cum.crossJoin(broadcast(ks))
         .filter(col("cum") * 10 >= col("n") * col("k"))

@@ -2,10 +2,9 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 
 import graft.Catalog.Q
-import graft.engine.Tables
+import graft.engine.{Cumulative, Tables}
 
 /** Star/snowflake joins, semi/anti joins, set ops, relation shaping
   * (pivot/unpivot), and the join/layout audit queries of the
@@ -1093,8 +1092,9 @@ private[queries] trait RelationalJoinQueries {
     *
     * ## 100 TB notes
     * Each edge is one map-side-combined count on its key; sizes then
-    * collapse to an (edge, size) histogram BEFORE the quantile walk,
-    * so the window runs over distinct sizes, never over groups.
+    * collapse to an (edge, size) histogram BEFORE the quantile walk
+    * ([[graft.engine.Cumulative.histogram]]), so the window runs over
+    * distinct sizes, never over groups.
     */
   val q236FanoutProfile: Q = Q(
     "q236_fanout_profile",
@@ -1107,19 +1107,11 @@ private[queries] trait RelationalJoinQueries {
       val all3 = sizes(orders, "o_custkey", "orders_per_customer")
         .unionByName(sizes(li, "l_orderkey", "lines_per_order"))
         .unionByName(sizes(li, "l_partkey", "lines_per_part"))
-      val hist = all3.groupBy(col("edge"), col("sz"))
-        .agg(count(lit(1)).as("c"))
-      val byEdge = Window.partitionBy(col("edge"))
-      val cum = hist
-        .withColumn("cum", sum(col("c")).over(
-          byEdge.orderBy(col("sz"))
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        .withColumn("n", sum(col("c")).over(byEdge))
-      def pick(p: Double) =
-        min(when(col("cum") >= ceil(col("n") * p), col("sz")))
-      cum.groupBy(col("edge"))
+      Cumulative.histogram(all3, Seq(col("edge")), col("sz"), count(lit(1)))
+        .groupBy(col("edge"))
         .agg(max(col("n")).as("n_groups"),
-          pick(0.5).as("p50"), pick(0.99).as("p99"),
+          Cumulative.rankPick(col("sz"), 0.5).as("p50"),
+          Cumulative.rankPick(col("sz"), 0.99).as("p99"),
           max(col("sz")).as("max_size"))
         .orderBy(col("edge"))
     },

@@ -1,11 +1,12 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.Catalog.Q
-import graft.engine.Tables
+import graft.engine.{Cumulative, Tables}
+import graft.engine.Cumulative.rankPick
 
 /** Statistics-adjacent relational queries: aggregate stats, moments,
   * quantiles/histograms, robust/outlier measures, rates and business
@@ -66,21 +67,13 @@ private[queries] trait RelationalStatsQueries {
   val q40QuantilesDisc: Q = Q(
     "q40_quantiles_disc",
     (s, dir) => {
-      val li = Tables.load(s, dir, "lineitem")
-      val hist = li.groupBy(col("l_returnflag"), col("l_extendedprice"))
-        .agg(count(lit(1)).as("c"))
-      val byFlag = Window.partitionBy(col("l_returnflag"))
-      val cum = hist
-        .withColumn("cum", sum(col("c")).over(
-          byFlag.orderBy(col("l_extendedprice"))
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        .withColumn("n", sum(col("c")).over(byFlag))
-      def pick(p: Double) =
-        min(when(col("cum") >= ceil(col("n") * p), col("l_extendedprice")))
-      cum.groupBy(col("l_returnflag"))
+      val price = col("l_extendedprice")
+      Cumulative.histogram(Tables.load(s, dir, "lineitem"),
+          Seq(col("l_returnflag")), price, count(lit(1)))
+        .groupBy(col("l_returnflag"))
         .agg(max(col("n")).as("n"),
-          pick(0.25).as("p25"), pick(0.5).as("p50"),
-          pick(0.75).as("p75"), pick(0.9).as("p90"))
+          rankPick(price, 0.25).as("p25"), rankPick(price, 0.5).as("p50"),
+          rankPick(price, 0.75).as("p75"), rankPick(price, 0.9).as("p90"))
         .orderBy("l_returnflag")
     },
     Some("""SELECT l_returnflag, max(n) AS n,
@@ -122,29 +115,24 @@ private[queries] trait RelationalStatsQueries {
     *
     * ## 100 TB notes
     * One shuffle to the (flag, price) histogram with map-side partials
-    * (the heavy reduction), then per-flag windows over distinct prices
-    * only. Centi-unit quantities accumulate in int64 — exact, order-
-    * independent — so the crossing point is partitioning-invariant.
+    * (the heavy reduction), then [[graft.engine.Cumulative.histogram]]'s
+    * per-flag windows over distinct prices only. Centi-unit
+    * quantities accumulate in int64 — exact, order-independent — so the
+    * crossing point is partitioning-invariant.
     * (int64 centi-quantity holds ~9.2e16 = 9.2e14 quantity units;
     * fine past sf100k.)
     */
   val q175WeightedMedian: Q = Q(
     "q175_weighted_median",
     (s, dir) => {
-      val li = Tables.load(s, dir, "lineitem")
-      val hist = li.groupBy(col("l_returnflag"), col("l_extendedprice"))
-        .agg(sum(floor(col("l_quantity") * 100).cast("long")).as("wc"))
-      val byFlag = Window.partitionBy(col("l_returnflag"))
-      val cum = hist
-        .withColumn("cum", sum(col("wc")).over(
-          byFlag.orderBy(col("l_extendedprice"))
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        .withColumn("tot", sum(col("wc")).over(byFlag))
-      cum.groupBy(col("l_returnflag"))
+      Cumulative.histogram(Tables.load(s, dir, "lineitem"),
+          Seq(col("l_returnflag")), col("l_extendedprice"),
+          sum(floor(col("l_quantity") * 100).cast("long")))
+        .groupBy(col("l_returnflag"))
         .agg(
-          min(when(col("cum") * 2 >= col("tot"), col("l_extendedprice")))
+          min(when(col("cum") * 2 >= col("n"), col("l_extendedprice")))
             .as("wmedian"),
-          max(col("tot")).as("tot_qty_centi"))
+          max(col("n")).as("tot_qty_centi"))
         .orderBy("l_returnflag")
     },
     Some("""WITH hist AS (SELECT l_returnflag, l_extendedprice,
@@ -407,6 +395,17 @@ private[queries] trait RelationalStatsQueries {
           m AS (SELECT $aggs FROM li) $rows ORDER BY xcol, ycol"""
     })
 
+  /** q124/q157's orders with planted spikes (`x` = total price x100
+    * where `o_orderkey % 997 = 0`, ~0.1% of rows; the q61 idiom): the
+    * fixture's uniform metrics would leave a 3 x MAD detector dead code.
+    */
+  private def spikedOrders(s: SparkSession, dir: String): DataFrame =
+    Tables.load(s, dir, "orders")
+      .select(col("o_orderstatus").as("flag"),
+        when(pmod(col("o_orderkey"), lit(997)) === 0,
+          col("o_totalprice") * 100).otherwise(col("o_totalprice"))
+          .as("x"))
+
   /** Robust outlier detection via MAD (median absolute deviation): per
     * group, the discrete median of the metric, then the discrete median
     * of absolute deviations from it, then a count of rows beyond
@@ -421,32 +420,15 @@ private[queries] trait RelationalStatsQueries {
   val q124MadOutliers: Q = Q(
     "q124_mad_outliers",
     (s, dir) => {
-      // the fixture's metrics are uniform, where the maximum deviation
-      // is only ~2 x MAD and a 3 x MAD detector is dead code — so plant
-      // sparse anomalies (~0.1% of rows, x100 spikes; the q61
-      // planted-fixture idiom) that the detector must flag
-      val li = Tables.load(s, dir, "orders")
-        .select(col("o_orderstatus").as("flag"),
-          when(pmod(col("o_orderkey"), lit(997)) === 0,
-            col("o_totalprice") * 100).otherwise(col("o_totalprice"))
-            .as("x"))
-      // discrete median of `c` per flag: histogram -> cumulative rank ->
-      // first value whose cum rank reaches ceil(n/2)
-      def discMedian(df: DataFrame, c: String, out: String): DataFrame = {
-        val byFlag = Window.partitionBy(col("flag"))
-        df.groupBy(col("flag"), col(c)).agg(count(lit(1)).as("cnt"))
-          .withColumn("cum", sum(col("cnt")).over(
-            byFlag.orderBy(col(c))
-              .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-          .withColumn("n", sum(col("cnt")).over(byFlag))
-          .groupBy(col("flag"))
-          .agg(min(when(col("cum") >= ceil(col("n") * 0.5), col(c)))
-            .as(out))
-      }
-      val med = discMedian(li, "x", "med")
+      val li = spikedOrders(s, dir)
+      val med = Cumulative.histogram(li, Seq(col("flag")), col("x"),
+          count(lit(1)))
+        .groupBy(col("flag")).agg(rankPick(col("x"), 0.5).as("med"))
       val dev = li.join(broadcast(med), "flag")
         .select(col("flag"), abs(col("x") - col("med")).as("d"))
-      val mad = discMedian(dev, "d", "mad")
+      val mad = Cumulative.histogram(dev, Seq(col("flag")), col("d"),
+          count(lit(1)))
+        .groupBy(col("flag")).agg(rankPick(col("d"), 0.5).as("mad"))
       li.join(broadcast(med), "flag").join(broadcast(mad), "flag")
         .groupBy(col("flag"))
         .agg(count(lit(1)).as("n"),
@@ -492,29 +474,22 @@ private[queries] trait RelationalStatsQueries {
     * q40 histogram/cumulative-rank idiom, so all rows of one value land
     * in one bucket (tie-coherent, hence engine-deterministic). Emits per
     * bucket the row count and value bounds. Same scale shape as q40:
-    * per-flag histogram shuffle, windows over the histogram reusing that
-    * partitioning.
+    * per-flag histogram shuffle, then the
+    * [[graft.engine.Cumulative.histogram]] walk over it.
     */
   val q136EquidepthHistogram: Q = Q(
     "q136_equidepth_histogram",
     (s, dir) => {
       val buckets = 8L
-      val byFlag = Window.partitionBy("l_returnflag")
-      val hist = Tables.load(s, dir, "lineitem")
-        .groupBy(col("l_returnflag"), col("l_extendedprice"))
-        .agg(count(lit(1)).as("cnt"))
-        .withColumn("cum", sum(col("cnt")).over(
-          byFlag.orderBy(col("l_extendedprice"))
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        .withColumn("n", sum(col("cnt")).over(byFlag))
-      hist
+      Cumulative.histogram(Tables.load(s, dir, "lineitem"),
+          Seq(col("l_returnflag")), col("l_extendedprice"), count(lit(1)))
         // value-level depth bucket from the cum rank of the value's LAST
         // row: floor((cum-1) * B / n), clamped by construction to B-1
         .withColumn("bucket",
           expr(s"(cum - 1) * $buckets div n"))
         .groupBy(col("l_returnflag"), col("bucket"))
         .agg(count(lit(1)).as("n_values"),
-          sum(col("cnt")).as("n_rows"),
+          sum(col("w")).as("n_rows"),
           min(col("l_extendedprice")).as("lo"),
           max(col("l_extendedprice")).as("hi"))
         .orderBy("l_returnflag", "bucket")
@@ -547,22 +522,12 @@ private[queries] trait RelationalStatsQueries {
   val q157Winsorize: Q = Q(
     "q157_winsorize",
     (s, dir) => {
-      val li = Tables.load(s, dir, "orders")
-        .select(col("o_orderstatus").as("flag"),
-          when(pmod(col("o_orderkey"), lit(997)) === 0,
-            col("o_totalprice") * 100).otherwise(col("o_totalprice"))
-            .as("x"))
-      val byFlag = Window.partitionBy(col("flag"))
-      val cum = li.groupBy(col("flag"), col("x"))
-        .agg(count(lit(1)).as("cnt"))
-        .withColumn("cum", sum(col("cnt")).over(
-          byFlag.orderBy(col("x"))
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        .withColumn("n", sum(col("cnt")).over(byFlag))
-      def pick(p: Double) =
-        min(when(col("cum") >= ceil(col("n") * p), col("x")))
-      val bounds = cum.groupBy(col("flag"))
-        .agg(pick(0.05).as("p05"), pick(0.95).as("p95"))
+      val li = spikedOrders(s, dir)
+      val bounds = Cumulative.histogram(li, Seq(col("flag")), col("x"),
+          count(lit(1)))
+        .groupBy(col("flag"))
+        .agg(rankPick(col("x"), 0.05).as("p05"),
+          rankPick(col("x"), 0.95).as("p95"))
       li.join(broadcast(bounds), "flag")
         .select(col("flag"), col("x"),
           least(greatest(col("x"), col("p05")), col("p95")).as("w"),
@@ -1266,7 +1231,8 @@ private[queries] trait RelationalStatsQueries {
     * The lineitem-orders join shuffles on orderkey (bucketable); lags
     * collapse to a (priority, lag_days) histogram FIRST (map-side
     * combined, bounded by priorities x distinct lags), and the
-    * quantile walk windows over that histogram, never over raw lines.
+    * quantile walk ([[graft.engine.Cumulative.histogram]]) runs over
+    * that histogram, never over raw lines.
     */
   val q226ShipSla: Q = Q(
     "q226_ship_sla",
@@ -1282,23 +1248,16 @@ private[queries] trait RelationalStatsQueries {
       val lags = li.join(o, col("l_orderkey") === col("o_orderkey"))
         .select(col("o_orderpriority"),
           (col("ship_day") - col("order_day")).as("lag_days"))
-      val hist = lags.groupBy(col("o_orderpriority"), col("lag_days"))
-        .agg(count(lit(1)).as("c"))
-      val byP = Window.partitionBy(col("o_orderpriority"))
-      val cum = hist
-        .withColumn("cum", sum(col("c")).over(
-          byP.orderBy(col("lag_days"))
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        .withColumn("n", sum(col("c")).over(byP))
-      def pick(p: Double) =
-        min(when(col("cum") >= ceil(col("n") * p), col("lag_days")))
-      cum.groupBy(col("o_orderpriority"))
+      val lag = col("lag_days")
+      Cumulative.histogram(lags, Seq(col("o_orderpriority")), lag,
+          count(lit(1)))
+        .groupBy(col("o_orderpriority"))
         .agg(max(col("n")).as("n_lines"),
-          min(col("lag_days")).as("min_days"),
-          pick(0.5).as("p50_days"), pick(0.95).as("p95_days"),
-          max(col("lag_days")).as("max_days"),
-          sum(when(col("lag_days") > 90, col("c")).otherwise(0L))
-            .as("n_breach"))
+          min(lag).as("min_days"),
+          rankPick(lag, 0.5).as("p50_days"),
+          rankPick(lag, 0.95).as("p95_days"),
+          max(lag).as("max_days"),
+          sum(when(lag > 90, col("w")).otherwise(0L)).as("n_breach"))
         .withColumn("breach_ppm", expr("n_breach * 1000000 div n_lines"))
         .orderBy(col("o_orderpriority"))
     },

@@ -12,9 +12,11 @@ import graft.SparkSpec
   * order)` for every input size, value distribution (negatives and
   * duplicates in the value column; order keys unique — the helper's
   * total-order contract), and partition count (1, 3, and more partitions
-  * than rows). This is the associativity-regrouping claim the seven
-  * production consumers (q125/q155/q174/q181/q186/q192/q214/q260) lean
-  * on, pinned as a property rather than per-query.
+  * than rows). This is the associativity-regrouping claim the
+  * production `rankedCumSum(s)` consumers (q125, q155, q174, q181, q186,
+  * q192, q214, q260, q270, q272, q273, q274) lean on, pinned as a
+  * property rather than per-query; the grouped kernel and the
+  * [[Cumulative.histogram]] walk get the same treatment.
   */
 class CumulativePropertySpec extends SparkSpec {
   import spark.implicits._
@@ -141,6 +143,55 @@ class CumulativePropertySpec extends SparkSpec {
       .as[(Long, Long, Long)].collect().sortBy(t => (t._1, t._2)).toList
     got shouldBe List((0L, 1L, 3L), (0L, 2L, 2L), (0L, 4L, 1L),
       (1L, 3L, 2L), (1L, 5L, 1L))
+  }
+
+  test("histogram equals the flat PARTITION BY key ORDER BY value window " +
+      "on random input") {
+    // 1–4 groups, few distinct values (so duplicates), weights >= 0
+    val gen = for {
+      n <- Gen.choose(1, 300)
+      groups <- Gen.choose(1L, 4L)
+      rows <- Gen.listOfN(n, for {
+        g <- Gen.choose(0L, groups - 1)
+        v <- Gen.choose(0L, 40L)
+        w <- Gen.choose(0L, 5L)
+      } yield (g, v, w))
+    } yield rows
+    val byG = Window.partitionBy(col("g"))
+    (1 to 12).foreach { i =>
+      val rows = gen.sample.getOrElse(Seq((0L, 0L, 1L)))
+      val df = rows.toDF("g", "v", "w")
+      // the two weights the catalog uses: a row count and an exact sum
+      val weight = if (i % 2 == 0) count(lit(1)) else sum(col("w"))
+      val hist = df.groupBy(col("g"), col("v")).agg(weight.as("w"))
+      def sorted(f: org.apache.spark.sql.DataFrame) =
+        f.select("g", "v", "w", "cum", "n")
+          .as[(Long, Long, Long, Long, Long)].collect()
+          .sortBy(t => (t._1, t._2)).toSeq
+      val expect = sorted(hist
+        .withColumn("cum", sum(col("w")).over(byG.orderBy(col("v"))
+          .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+        .withColumn("n", sum(col("w")).over(byG)))
+      // input spread over 1, 3 and more partitions than rows
+      Seq(1, 3, rows.size + 1).foreach { nParts =>
+        sorted(Cumulative.histogram(df.repartition(nParts), Seq(col("g")),
+          col("v"), weight)) shouldBe expect
+      }
+      // rankPick on a row-count walk is the ceil(n*p)-th smallest row
+      if (i % 2 == 0) {
+        val picks = Cumulative.histogram(df, Seq(col("g")), col("v"), weight)
+          .groupBy(col("g"))
+          .agg(Cumulative.rankPick(col("v"), 0.5).as("p50"),
+            Cumulative.rankPick(col("v"), 0.9).as("p90"))
+          .as[(Long, Long, Long)].collect().sortBy(_._1).toSeq
+        picks shouldBe rows.groupBy(_._1).toSeq.sortBy(_._1).map {
+          case (g, rs) =>
+            val vs = rs.map(_._2).sorted
+            def at(p: Double) = vs(math.ceil(vs.size * p).toInt - 1)
+            (g, at(0.5), at(0.9))
+        }
+      }
+    }
   }
 
   test("descending order with tie-broken keys matches the reference") {
