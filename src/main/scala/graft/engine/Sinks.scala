@@ -13,8 +13,10 @@ import org.apache.spark.sql.{DataFrame, SaveMode}
   *    a full `Overwrite` (the reference's semantics,
   *    brewery_operators.py:194-196) rewrites the whole dataset each run; at
   *    scale you flip `partitionOverwriteMode=dynamic` and only changed
-  *    partitions land. The API takes the mode so both postures are one
-  *    call.
+  *    partitions land. That posture is [[overwritePartitionsDynamic]];
+  *    the partitioned sink also takes `SaveMode.Append` (a streaming
+  *    `foreachBatch` landing each micro-batch), every other sink here
+  *    overwrites.
   *  - Partition-count hygiene: the caller controls parallelism upstream
   *    (`repartition(partitionCols)` before a partitioned write avoids the
   *    many-small-files explosion of one file per task per partition value).
@@ -85,9 +87,8 @@ object Sinks {
       .mode(SaveMode.Overwrite).parquet(path)
 
   /** Unpartitioned parquet sink (S7): gold layout. */
-  def writeParquet(df: DataFrame, path: String,
-                   mode: SaveMode = SaveMode.Overwrite): Unit =
-    df.write.mode(mode).parquet(path)
+  def writeParquet(df: DataFrame, path: String): Unit =
+    df.write.mode(SaveMode.Overwrite).parquet(path)
 
   /** CSV sink — the interchange format for hand-off OUT of the lake
     * (serving exports, spreadsheet consumers). Header on so the file is
@@ -96,9 +97,8 @@ object Sinks {
     * Not a lake format: no column pruning, no predicate pushdown, no
     * splittable compression by default — gold-sized tables only.
     */
-  def writeCsv(df: DataFrame, path: String,
-               mode: SaveMode = SaveMode.Overwrite): Unit =
-    df.write.option("header", "true").mode(mode).csv(path)
+  def writeCsv(df: DataFrame, path: String): Unit =
+    df.write.option("header", "true").mode(SaveMode.Overwrite).csv(path)
 
   /** ORC sink — the second columnar lake format Spark ships natively.
     * Same pushdown/pruning story as parquet (min/max stripe stats,
@@ -106,9 +106,8 @@ object Sinks {
     * engine; everything else in this codebase stays parquet, this is the
     * interop path.
     */
-  def writeOrc(df: DataFrame, path: String,
-               mode: SaveMode = SaveMode.Overwrite): Unit =
-    df.write.mode(mode).orc(path)
+  def writeOrc(df: DataFrame, path: String): Unit =
+    df.write.mode(SaveMode.Overwrite).orc(path)
 
   /** JDBC sink (S8): drop+recreate like the reference's overwrite. */
   def writeJdbc(df: DataFrame, url: String, table: String,

@@ -60,19 +60,26 @@ object Tables {
       s"events.ts: unsupported physical type $other")
   }
 
-  /** Persist AND materialize now. A lazily-persisted table consumed by
-    * several branches of one action (self-joins, derived aggregates) is
-    * otherwise computed concurrently by every branch — they race on the
-    * block-manager cache-fill locks and the upstream pipeline runs up to
-    * once per branch (measured 8.4 s -> 1.4 s on the LSH band table at
-    * sf0.1). Same rule at 100 TB: materialize/checkpoint before fan-out.
+  /** Persist AND materialize now: one count job plus a cache fill, paid
+    * before the query's own plan runs. The rule, measured: a COMPUTED
+    * frame is persisted only
+    *  - where a driver loop re-reads it across actions
+    *    (`DedupQueries.componentLabels`, q111, q165, q176);
+    *  - where two consumers need identical partition ids (the
+    *    [[Cumulative]] cell pass and its join-back); or
+    *  - where a named query measured slower without it: q86, q162 and
+    *    q190, each slower by more than the quartile spread of
+    *    interleaved runs at sf0.1 on 4 cores.
+    * More than one consumer is not reason enough: AQE reuses the
+    * exchanges the branches share, and the same runs found 22 of 25
+    * such sites no slower without the persist. Better still, give a
+    * frame one consumer (q114 explodes its six rows out of one row).
     *
-    * The rule: `eager` a COMPUTED frame with more than one consumer,
-    * never a [[landed]] read. A landed table is already materialized;
-    * a Project/Filter over its scan costs one more scan, so a second,
-    * in-memory copy buys an extra count job and a cache fill. The one
-    * exception is a driver loop that re-reads the frame across actions
-    * (q111, q165). GlobalWindowPolicySpec enforces this.
+    * Never `eager` a [[landed]] read. A landed table is already
+    * materialized; a Project/Filter over its scan costs one more scan,
+    * so a second, in-memory copy buys an extra count job and a cache
+    * fill. Only a driver loop (q111, q165) may. GlobalWindowPolicySpec
+    * enforces this.
     */
   def eager(df: DataFrame): DataFrame = {
     MaterializationAudit.record("eager", df)

@@ -253,9 +253,8 @@ object DedupQueries {
           col(s"m${b * RowsPerBand + r}").cast("string")): _*)))
       val bands = sig.select(col("doc_id"),
         posexplode(array(bkCols: _*)).as(Seq("b", "bk")))
-      val bandsM = Tables.eager(bands)
-      val cand = bandsM.as("x")
-        .join(bandsM.as("y"),
+      val cand = bands.as("x")
+        .join(bands.as("y"),
           col("x.b") === col("y.b") && col("x.bk") === col("y.bk")
             && col("x.doc_id") < col("y.doc_id"))
         .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"))
@@ -342,8 +341,8 @@ object DedupQueries {
       // unless the flips cover all 4 bands
       val bvs = array((0 until 4).map(i =>
         shiftrightunsigned(col("simhash"), 15 * i).bitwiseAND(32767)): _*)
-      val bands = Tables.eager(sim.select(col("doc_id"), col("simhash"),
-          posexplode(bvs).as(Seq("band_i", "bv"))))
+      val bands = sim.select(col("doc_id"), col("simhash"),
+          posexplode(bvs).as(Seq("band_i", "bv")))
       val pairs = bands.as("x")
         .join(bands.as("y"),
           col("x.band_i") === col("y.band_i") && col("x.bv") === col("y.bv")
@@ -755,8 +754,8 @@ object DedupQueries {
   val q63Boilerplate: Q = Q(
     "q63_boilerplate",
     (s, dir) => {
-      val ex = Tables.eager(shingled(s, dir)
-        .select(col("doc_id"), explode(col("sh")).as("s")))
+      val ex = shingled(s, dir)
+        .select(col("doc_id"), explode(col("sh")).as("s"))
       // 1-row corpus size, same crossJoin(broadcast) pattern as q45's idf
       val nDocs = Tables.load(s, dir, "documents")
         .agg(count(lit(1)).as("nd"))
@@ -816,9 +815,9 @@ object DedupQueries {
       // distinct (source, shingle) vocabulary — reused by both join
       // sides and the per-source size aggregate; shingles come from the
       // landed docShingleTable, not a fresh corpus tokenization
-      val sv = Tables.eager(docShingleTable(s, dir)
+      val sv = docShingleTable(s, dir)
         .select(col("source"), explode(col("sh")).as("sg"))
-        .distinct())
+        .distinct()
       val vocab = sv.groupBy(col("source")).agg(count(lit(1)).as("n_sh"))
       sv.as("x").join(sv.as("y"),
           col("x.sg") === col("y.sg") && col("x.source") < col("y.source"))
@@ -922,12 +921,9 @@ object DedupQueries {
         .withColumn("rk", row_number().over(
           Window.partitionBy("doc_id").orderBy(col("df"), col("g"))))
       // prefix size |s| - ceil(0.6|s|) + 1, exact integer ceil.
-      // eager: the self-join below consumes `prefix` twice — without
-      // materialization each branch recomputes the df join + window
-      // (see Tables.eager).
-      val prefix = Tables.eager(ranked
+      val prefix = ranked
         .filter(col("rk") <= col("sz") - expr("(sz * 6 + 9) div 10") + 1)
-        .select(col("doc_id"), col("g")))
+        .select(col("doc_id"), col("g"))
       val cand = prefix.as("x")
         .join(prefix.as("y"),
           col("x.g") === col("y.g") && col("x.doc_id") < col("y.doc_id"))
@@ -996,8 +992,8 @@ object DedupQueries {
   val q156NoveltyRate: Q = Q(
     "q156_novelty_rate",
     (s, dir) => {
-      val ex = Tables.eager(shingled(s, dir)
-        .select(col("doc_id"), explode(col("sh")).as("sch")))
+      val ex = shingled(s, dir)
+        .select(col("doc_id"), explode(col("sh")).as("sch"))
       val firstSeen = ex.groupBy(col("sch"))
         .agg(min(col("doc_id")).as("first_doc"))
       ex.join(firstSeen, "sch")
@@ -1158,13 +1154,13 @@ object DedupQueries {
           Window.orderBy(col("blk"))
             .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
         .select(col("blk"), col("off"))
-      val ranked = Tables.eager(keyed
+      val ranked = keyed
         .join(broadcast(offsets), Seq("blk"))
         .withColumn("rn", col("off") + row_number().over(
           Window.partitionBy(col("blk"))
             .orderBy(col("k"), col("doc_id"))))
         .select(col("doc_id"), col("rn"),
-          expr(s"(rn - 1) div $Wd").as("g")))
+          expr(s"(rn - 1) div $Wd").as("g"))
       val probes = ranked.select(col("doc_id").as("i1"), col("rn").as("rn1"),
         explode(array(col("g"), col("g") + 1)).as("gp"))
       val cand = probes

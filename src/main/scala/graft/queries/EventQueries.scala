@@ -25,23 +25,6 @@ import graft.Catalog.Q
   */
 object EventQueries extends EventWindowQueries
     with EventStreamingQueries with EventStatsQueries {
-  /** The queries whose execution is a real Structured Streaming run —
-    * each pays per-run state-store provisioning (the r06 driver tail
-    * showed a 3.45 s state-store load for ONE of them), which is why
-    * [[graft.Bench]] times them cold-only. Any new `readStream` query
-    * must be added here; `BenchPolicySpec` cross-checks this set against
-    * the `all` registry.
-    */
-  private val streamingNames: Set[String] = Set(
-    "q64_stream_hourly", "q66_stream_dedup", "q75_stream_sessions",
-    "q76_stream_late_drop", "q78_stream_interval_join",
-    "q83_stream_static_enrich", "q84_foreachbatch_upsert",
-    "q107_stream_outer_join", "q119_stream_running_totals",
-    "q265_stream_tws_totals", "q266_stream_tws_sessions",
-    "q275_stream_tws_topk", "q276_stream_tws_typecounts",
-    "q284_stream_incremental_gold", "q293_manifest_changefeed",
-    "q294_manifest_feed_resume")
-
   val all: Seq[Q] =
     Seq(q31HourlyFromJson, q32SlidingWindow, q33Sessionize, q34SessionWindow,
       q35EventFirst, q37AsofJoin, q38RangeJoin, q50AsofForward,
@@ -72,5 +55,4 @@ object EventQueries extends EventWindowQueries
       q294ManifestFeedResume,
       q286MetronomeRank, q287PartitionBalance, q288QteDeciles,
       q289SaltingBalance)
-      .map(q => q.copy(streaming = streamingNames(q.name)))
 }

@@ -73,9 +73,9 @@ private[queries] trait EventStatsQueries extends EventQueriesBase {
   val q105SkewProfile: Q = Q(
     "q105_skew_profile",
     (s, dir) => {
-      val perKey = Tables.eager(Tables.load(s, dir, "events")
+      val perKey = Tables.load(s, dir, "events")
         .groupBy(col("event_type"), col("user_id"))
-        .agg(count(lit(1)).as("cnt")))
+        .agg(count(lit(1)).as("cnt"))
       val totals = perKey.groupBy(col("event_type"))
         .agg(count(lit(1)).as("nk"), sum(col("cnt")).as("tot"))
       perKey.join(broadcast(totals), "event_type")
@@ -1472,10 +1472,10 @@ private[queries] trait EventStatsQueries extends EventQueriesBase {
   val q186DecileLift: Q = Q(
     "q186_decile_lift",
     (s, dir) => {
-      val u = Tables.eager(Tables.load(s, dir, "events")
+      val u = Tables.load(s, dir, "events")
         .groupBy(col("user_id"))
         .agg(count(when(col("event_type") === "view", 1)).as("score"),
-          max((col("event_type") === "purchase").cast("long")).as("buyer")))
+          max((col("event_type") === "purchase").cast("long")).as("buyer"))
       val hist = u.groupBy(col("score").as("v"))
         .agg(count(lit(1)).as("c"))
       // cutoff walk over distinct scores without a single-partition
@@ -1908,12 +1908,12 @@ private[queries] trait EventStatsQueries extends EventQueriesBase {
     "q248_lead_lag_xcorr",
     (s, dir) => {
       import s.implicits._
-      val daily = Tables.eager(Tables.load(s, dir, "events")
+      val daily = Tables.load(s, dir, "events")
         .groupBy(expr("(ts div 1000) div 86400000000").as("day"))
         .agg(sum(when(col("event_type") === "purchase",
           floor(col("value") * 100).cast("long")).otherwise(0L)).as("rev"),
           sum(when(col("event_type") === "error", 1L).otherwise(0L))
-            .as("err")))
+            .as("err"))
       val lags = Seq(-3L, -2L, -1L, 0L, 1L, 2L, 3L).toDF("lag")
       val a = daily.select(col("day"), col("rev"))
       val b = daily.select(col("day").as("bday"), col("err"))

@@ -327,7 +327,8 @@ private[queries] trait EventStreamingQueries extends EventQueriesBase {
             FROM e, mx
             WHERE date_trunc('hour', t) + INTERVAL 1 HOUR
               <= mt - INTERVAL 10 MINUTE
-            GROUP BY 1, 2 ORDER BY window_start_us, event_type"""))
+            GROUP BY 1, 2 ORDER BY window_start_us, event_type"""),
+    streaming = true)
 
   /** Streaming dedup through the REAL state-store path
     * (`StreamingDeduplicateWithinWatermarkExec`):
@@ -358,7 +359,8 @@ private[queries] trait EventStreamingQueries extends EventQueriesBase {
     },
     Some(s"""SELECT DISTINCT user_id,
               ${duckUs("date_trunc('hour', CAST(ts AS TIMESTAMP))")} AS hour_us
-            FROM events ORDER BY user_id, hour_us"""))
+            FROM events ORDER BY user_id, hour_us"""),
+    streaming = true)
 
   /** STATEFUL streaming under oracle hash check — the third and hardest
     * real-streaming oracle after q64 (windowed agg) and q66 (state-store
@@ -392,7 +394,8 @@ private[queries] trait EventStreamingQueries extends EventQueriesBase {
       runToMemorySink(s, out, staging, "q75_stream_sessions_mem")
         .orderBy("user_id", "start_us")
     },
-    Some(duckStreamSessionsOracle))
+    Some(duckStreamSessionsOracle),
+    streaming = true)
 
   /** Oracle for the append-mode sessionization emissions — shared
     * verbatim by q75 (flatMapGroupsWithState + EventTimeTimeout) and
@@ -442,7 +445,8 @@ private[queries] trait EventStreamingQueries extends EventQueriesBase {
           .orderBy("user_id", "start_us")
       }
     },
-    Some(duckStreamSessionsOracle))
+    Some(duckStreamSessionsOracle),
+    streaming = true)
 
   /** Run q76's two-batch late-data stream and surface the state
     * operator's `numRowsDroppedByWatermark` alongside the drained result
@@ -523,7 +527,8 @@ private[queries] trait EventStreamingQueries extends EventQueriesBase {
             FROM acc, wmf
             WHERE epoch_ms(date_trunc('hour', t) + INTERVAL 1 HOUR)
               <= wmf.ms
-            GROUP BY 1, 2 ORDER BY window_start_us, event_type"""))
+            GROUP BY 1, 2 ORDER BY window_start_us, event_type"""),
+    streaming = true)
 
   /** STREAM-STREAM interval join under oracle hash check — the fourth
     * real-streaming oracle (after q64 windowed agg, q66 state-store
@@ -568,7 +573,8 @@ private[queries] trait EventStreamingQueries extends EventQueriesBase {
               b.us AS r_ts_us, b.event_type AS r_type
             FROM ev a JOIN ev b ON a.user_id = b.user_id
               AND b.us > a.us AND b.us - a.us <= 600000000
-            ORDER BY a.user_id, l_ts_us, r_ts_us, l_type, r_type"""))
+            ORDER BY a.user_id, l_ts_us, r_ts_us, l_type, r_type"""),
+    streaming = true)
 
   /** Stream-STATIC broadcast enrichment — the remaining streaming join
     * shape (q78 covers stream-stream): the unbounded event stream joins
@@ -608,7 +614,8 @@ private[queries] trait EventStreamingQueries extends EventQueriesBase {
               CAST(round(sum(CAST(value AS DECIMAL(30,10))), 2) AS DOUBLE)
                 AS total_value
             FROM events e JOIN customer c ON e.user_id = c.c_custkey
-            GROUP BY 1, 2 ORDER BY c_mktsegment, event_type"""))
+            GROUP BY 1, 2 ORDER BY c_mktsegment, event_type"""),
+    streaming = true)
 
   /** foreachBatch + latest-wins MERGE — the streaming WRITE surface the
     * sink-format queries don't cover: each micro-batch upserts into a
@@ -689,7 +696,8 @@ private[queries] trait EventStreamingQueries extends EventQueriesBase {
               SELECT user_id, ${duckUs("ts")} AS ts_us, event_type, value,
                 row_number() OVER (PARTITION BY user_id
                   ORDER BY ${duckUs("ts")} DESC) AS rn
-              FROM events) WHERE rn = 1 ORDER BY user_id"""))
+              FROM events) WHERE rn = 1 ORDER BY user_id"""),
+    streaming = true)
 
   /** Stream-stream LEFT OUTER interval join — the null-completion half
     * of the q78 join surface, and the subtlest append-mode semantics in
@@ -744,7 +752,8 @@ private[queries] trait EventStreamingQueries extends EventQueriesBase {
               UNION ALL
               SELECT user_id, us, event_type, NULL, NULL FROM um)
             ORDER BY user_id, l_ts_us, l_type,
-              r_ts_us NULLS LAST, r_type NULLS LAST"""))
+              r_ts_us NULLS LAST, r_type NULLS LAST"""),
+    streaming = true)
 
   /** Update-mode `mapGroupsWithState` under oracle check — the
     * one-emission-per-touched-key-per-batch stateful API the suite
@@ -783,7 +792,8 @@ private[queries] trait EventStreamingQueries extends EventQueriesBase {
           "q119_stream_running_totals_mem", outputMode = "update"))
         .orderBy("user_id", "n_events")
     },
-    Some(duckRunningTotalsOracle))
+    Some(duckRunningTotalsOracle),
+    streaming = true)
 
   /** Oracle for the update-mode running-totals emission log — shared
     * verbatim by q119 (mapGroupsWithState) and q265 (transformWithState):
@@ -840,7 +850,8 @@ private[queries] trait EventStreamingQueries extends EventQueriesBase {
           .orderBy("user_id", "n_events")
       }
     },
-    Some(duckRunningTotalsOracle))
+    Some(duckRunningTotalsOracle),
+    streaming = true)
 
   /** Streaming per-user top-3 amounts via `transformWithState` LIST
     * state (see [[graft.streaming.EventStreams.TopkProcessor]]: a
@@ -895,7 +906,8 @@ private[queries] trait EventStreamingQueries extends EventQueriesBase {
               max(CASE WHEN rn = 2 THEN cents END) AS top2,
               max(CASE WHEN rn = 3 THEN cents END) AS top3
             FROM r GROUP BY user_id, batch, n_events
-            ORDER BY user_id, n_events"""))
+            ORDER BY user_id, n_events"""),
+    streaming = true)
 
   /** Streaming per-(user, type) counters via `transformWithState` MAP
     * state (see [[graft.streaming.EventStreams.TypeCountProcessor]]:
@@ -938,7 +950,8 @@ private[queries] trait EventStreamingQueries extends EventQueriesBase {
                          AND x.batch <= t.batch
                     GROUP BY t.user_id, t.event_type, t.batch)
             SELECT user_id, event_type, n FROM cum
-            ORDER BY user_id, event_type, n"""))
+            ORDER BY user_id, event_type, n"""),
+    streaming = true)
 
   /** Incremental gold maintenance under oracle check: the per-user
     * totals table built by folding THREE per-batch aggregates through
@@ -1236,7 +1249,8 @@ private[queries] trait EventStreamingQueries extends EventQueriesBase {
     Some("""SELECT user_id, count(*) AS n_events,
               CAST(sum(CAST(floor(value * 100) AS BIGINT)) AS BIGINT)
                 AS total_cents
-            FROM events GROUP BY 1 ORDER BY user_id"""))
+            FROM events GROUP BY 1 ORDER BY user_id"""),
+    streaming = true)
 
   /** Manifest table format, END-TO-END through the driver's oracle:
     * writes the `part` table through `graft-manifest` (v1 = the full
@@ -1370,7 +1384,8 @@ private[queries] trait EventStreamingQueries extends EventQueriesBase {
     Some("""SELECT c_mktsegment, count(*) AS n_cust,
               CAST(sum(CAST(round(c_acctbal * 100) AS BIGINT)) AS BIGINT)
                 AS sum_bal_cents
-            FROM customer GROUP BY 1 ORDER BY c_mktsegment"""))
+            FROM customer GROUP BY 1 ORDER BY c_mktsegment"""),
+    streaming = true)
 
   /** Manifest change-feed RESUME, end-to-end through the driver's
     * oracle — q293 certifies the FRESH drain (snapshot + deltas +
@@ -1467,5 +1482,6 @@ private[queries] trait EventStreamingQueries extends EventQueriesBase {
     Some("""SELECT c_mktsegment, count(*) AS n_cust,
               CAST(sum(CAST(round(c_acctbal * 100) AS BIGINT)) AS BIGINT)
                 AS sum_bal_cents
-            FROM customer GROUP BY 1 ORDER BY c_mktsegment"""))
+            FROM customer GROUP BY 1 ORDER BY c_mktsegment"""),
+    streaming = true)
 }

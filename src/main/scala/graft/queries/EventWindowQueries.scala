@@ -1432,15 +1432,13 @@ private[queries] trait EventWindowQueries extends EventQueriesBase {
   val q174RfmSegments: Q = Q(
     "q174_rfm_segments",
     (s, dir) => {
-      // eager'd: the rollup feeds the cutoff histogram AND the binning
-      // pass — materialize once, or each re-scans the events table
-      val u = Tables.eager(Tables.load(s, dir, "events")
+      val u = Tables.load(s, dir, "events")
         .filter(col("event_type") === "purchase")
         .select(col("user_id"), tsUs.as("us"),
           col("value").cast("decimal(30,10)").as("v"))
         .groupBy(col("user_id"))
         .agg(max(col("us")).as("r"), count(lit(1)).as("f"),
-          sum(col("v")).as("m")))
+          sum(col("v")).as("m"))
       // one histogram over distinct values of ALL THREE metrics
       val hist = u.selectExpr(
           "stack(3, 'r', CAST(r AS DECIMAL(38,10)), " +
@@ -1627,10 +1625,10 @@ private[queries] trait EventWindowQueries extends EventQueriesBase {
   val q185SeqPatterns: Q = Q(
     "q185_seq_patterns",
     (s, dir) => {
-      val ut = Tables.eager(Tables.load(s, dir, "events")
+      val ut = Tables.load(s, dir, "events")
         .select(col("user_id"), col("event_type"), tsUs.as("us"))
         .groupBy(col("user_id"), col("event_type"))
-        .agg(min(col("us")).as("first_us"), max(col("us")).as("last_us")))
+        .agg(min(col("us")).as("first_us"), max(col("us")).as("last_us"))
       val total = ut.agg(count_distinct(col("user_id")).as("n_total"))
       val a = ut.select(col("user_id"), col("event_type").as("a"),
         col("first_us"))

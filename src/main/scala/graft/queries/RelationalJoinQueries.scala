@@ -869,7 +869,7 @@ private[queries] trait RelationalJoinQueries {
         .select(pos(col("c_custkey"), col("i")).as("b"))
         .distinct()
       val probe = Tables.load(s, dir, "orders").select(col("o_custkey"))
-      val keys = Tables.eager(probe.distinct())
+      val keys = probe.distinct()
       val pass = keys.select(col("o_custkey"), explode(is).as("i"))
         .join(broadcast(bitset), pos(col("o_custkey"), col("i")) === col("b"),
           "left")

@@ -325,7 +325,7 @@ private[queries] trait RelationalStatsQueries {
     * evaluate the identical correlation op tree (IEEE mul/sub/div and
     * correctly-rounded sqrt), so the result is bit-identical without
     * any tolerance. The 15 aggregates ride one partial-agg reduce to a
-    * single row; the 6 output rows are projections of that row — at
+    * single row; the 6 output rows explode out of that row — at
     * 100 TB this is one scan, no shuffle beyond the reduce, vs six
     * separate corr() passes.
     *
@@ -351,25 +351,24 @@ private[queries] trait RelationalStatsQueries {
           col("l_discount"), col("l_tax")))
       def dsum(e: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
         round(sum(e.cast("decimal(30,10)")), 2).cast("double")
-      // materialize the 1-row moment table: the six union branches below
-      // would otherwise EACH recompute the full scan+aggregate (measured
-      // in PLANS.md as 6 shuffles / 6 scans before this eager)
-      val sums = Tables.eager(li.agg(
+      val sums = li.agg(
         count(lit(1)).cast("double").as("n"),
         cols.map(c => dsum(col(c)).as(s"s_$c")) ++
           cols.map(c => dsum(col(c) * col(c)).as(s"ss_$c")) ++
           cols.combinations(2).map { case Seq(x, y) =>
             dsum(col(x) * col(y)).as(s"sp_${x}_$y")
-          }.toSeq: _*))
+          }.toSeq: _*)
+      // the six rows explode out of the one moment row, so the moment
+      // row has one consumer and the scan + aggregate run once
       val pairs = cols.combinations(2).map { case Seq(x, y) =>
-        sums.select(
-          lit(x).as("xcol"), lit(y).as("ycol"),
+        struct(lit(x).as("xcol"), lit(y).as("ycol"),
           ((col("n") * col(s"sp_${x}_$y") - col(s"s_$x") * col(s"s_$y")) /
             (sqrt(col("n") * col(s"ss_$x") - col(s"s_$x") * col(s"s_$x")) *
               sqrt(col("n") * col(s"ss_$y") - col(s"s_$y") * col(s"s_$y"))))
             .as("corr"))
       }.toSeq
-      pairs.reduce(_.unionByName(_)).orderBy("xcol", "ycol")
+      sums.select(explode(array(pairs: _*)).as("p"))
+        .select("p.*").orderBy("xcol", "ycol")
     },
     Some {
       val cols = Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")

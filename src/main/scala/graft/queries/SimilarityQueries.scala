@@ -267,16 +267,14 @@ object SimilarityQueries {
           signBucket(col("embedding")).as("bucket"))
       val w = Window.partitionBy(col("q_id"))
         .orderBy(col("score").desc, col("cand_id").asc)
-      // materialized: truth feeds both the hit join and the n_truth
-      // aggregation — without this the exhaustive pass would run twice
-      val truth = Tables.eager(e
+      val truth = e
         .select(col("vec_id").as("cand_id"), col("embedding").as("ce"))
         .crossJoin(broadcast(q.select(col("q_id"), col("qe"))))
         .filter(col("cand_id") =!= col("q_id"))
         .select(col("q_id"), col("cand_id"),
           cosineSim(col("qe"), col("ce")).as("score"))
         .withColumn("rank", row_number().over(w)).filter(col("rank") <= 3)
-        .select(col("q_id"), col("cand_id")))
+        .select(col("q_id"), col("cand_id"))
       val cb = e.select(col("vec_id").as("cand_id"), col("embedding").as("ce"),
         signBucket(col("embedding")).as("bucket"))
       val ann = cb.join(broadcast(q), Seq("bucket"))
@@ -492,12 +490,8 @@ object SimilarityQueries {
   val q79SemanticDedup: Q = Q(
     "q79_semantic_dedup",
     (s, dir) => {
-      // materialized: the assignment feeds both sides of the pair join
-      // and the per-cluster size aggregate — three consumers
-      val assigned = Tables.eager(
-        assignToCentroid(emb(s, dir), carry = Seq("embedding"))
-          .select(col("vec_id"), col("c_label").as("cluster"),
-            col("embedding")))
+      val assigned = assignToCentroid(emb(s, dir), carry = Seq("embedding"))
+        .select(col("vec_id"), col("c_label").as("cluster"), col("embedding"))
       val dropped = assigned.as("x").join(assigned.as("y"),
           col("x.cluster") === col("y.cluster")
             && col("x.vec_id") < col("y.vec_id"))
@@ -832,7 +826,7 @@ object SimilarityQueries {
     "q218_cluster_margin",
     (s, dir) => {
       val e = emb(s, dir)
-      val cents = Tables.eager(centroids(e))
+      val cents = centroids(e)
       val own = e.join(broadcast(cents), col("label") === col("c_label"))
         .select(col("label"),
           cosineSim(col("embedding"), col("cemb")).as("sim"))
@@ -893,19 +887,19 @@ object SimilarityQueries {
     * recall-vs-cost frontier an ANN deployment actually tunes on:
     * every added plane halves the expected bucket (scan cost down),
     * and this table shows exactly what each halving costs in recall.
-    * Truth is computed once and shared by all three arms; every
+    * Truth is one subplan shared by all three arms; every
     * election is a total order (score desc, id asc).
     *
     * ## 100 TB notes
     * One exhaustive pass for truth (the benchmark's irreducible cost —
     * sampled in production); each arm is a bucket equi-join whose
-    * per-bucket population halves per plane. The three arms reuse the
-    * same eager'd bucketed relation; rollups are 1-row each.
+    * per-bucket population halves per plane. The three arms read the
+    * same embeddings scan; rollups are 1-row each.
     */
   val q241AnnBitsCurve: Q = Q(
     "q241_ann_bits_curve",
     (s, dir) => {
-      val e = Tables.eager(emb(s, dir))
+      val e = emb(s, dir)
       val corpusN = e.count().toDouble
       val nQ = 10
       val q = e.filter(col("vec_id") < nQ)
@@ -913,13 +907,13 @@ object SimilarityQueries {
       val c = e.select(col("vec_id").as("cand_id"), col("embedding").as("ce"))
       val wTruth = Window.partitionBy(col("q_id"))
         .orderBy(col("score").desc, col("cand_id").asc)
-      val truth = Tables.eager(c.crossJoin(broadcast(q))
+      val truth = c.crossJoin(broadcast(q))
         .filter(col("cand_id") =!= col("q_id"))
         .select(col("q_id"), col("cand_id"),
           cosineSim(col("qe"), col("ce")).as("score"))
         .withColumn("rn", row_number().over(wTruth))
         .filter(col("rn") <= 3)
-        .select(col("q_id"), col("cand_id")))
+        .select(col("q_id"), col("cand_id"))
       def bucketK(e: Column, k: Int): Column =
         (0 until k).map(i =>
           when(element_at(e, i + 1) >= 0, 1 << i).otherwise(0))
@@ -1200,14 +1194,14 @@ object SimilarityQueries {
         .withColumn("crk", row_number().over(crank))
       val w = Window.partitionBy(col("q_id"))
         .orderBy(col("score").desc, col("cand_id").asc)
-      val truth = Tables.eager(e
+      val truth = e
         .select(col("vec_id").as("cand_id"), col("embedding").as("ce"))
         .crossJoin(broadcast(q))
         .filter(col("cand_id") =!= col("q_id"))
         .select(col("q_id"), col("cand_id"),
           cosineSim(col("qe"), col("ce")).as("score"))
         .withColumn("rank", row_number().over(w)).filter(col("rank") <= 3)
-        .select(col("q_id"), col("cand_id")))
+        .select(col("q_id"), col("cand_id"))
       val probes = s.range(0, 1).select(
         explode(array(lit(1), lit(2), lit(4))).as("nprobe"))
       val wm = Window.partitionBy(col("nprobe"), col("q_id"))

@@ -317,21 +317,20 @@ object TextQueries {
     * pinned across engines, a ratio of exact integers is), score =
     * tf * N / df as one fixed IEEE op tree. Ties broken by token.
     *
-    * Scale shape: ONE scan+explode builds the (doc, tok, tf) table, which
-    * is materialized (Tables.eager) and then feeds everything else —
-    * df(tok) is just the per-token row count of tf, and N its distinct
-    * doc count — so the corpus is tokenized exactly once however many
-    * branches consume it. The df table joins back on tok (broadcast
-    * while it fits, AQE otherwise); top-k per doc is a bounded window.
-    * No global sort of the corpus.
+    * Scale shape: the (doc, tok, tf) table is one aggregate over the
+    * landed token table ([[tokenTable]]), so the corpus is tokenized
+    * once however many branches consume it — df(tok) is just the
+    * per-token row count of tf, and N its distinct doc count. The df
+    * table joins back on tok (broadcast while it fits, AQE otherwise);
+    * top-k per doc is a bounded window. No global sort of the corpus.
     */
   val q45TfidfTopk: Q = Q(
     "q45_tfidf_topk",
     (s, dir) => {
-      val tf = Tables.eager(tokenTable(s, dir)
+      val tf = tokenTable(s, dir)
         .select(col("doc_id"), col("tok"))
         .groupBy(col("doc_id"), col("tok"))
-        .agg(count(lit(1)).as("tf")))
+        .agg(count(lit(1)).as("tf"))
       // tf is distinct on (doc, tok): df = rows per tok, N = distinct docs
       val df = tf.groupBy(col("tok")).agg(count(lit(1)).as("df"))
       val n = tf.select(count_distinct(col("doc_id")).as("n"))
@@ -746,7 +745,7 @@ object TextQueries {
       val budget = perLang
         .agg(sum(col("n_lang")).as("total"), count(lit(1)).as("n_langs"))
         .select(expr("total div n_langs").as("budget"))
-      val rates = broadcast(Tables.eager(perLang.crossJoin(broadcast(budget))))
+      val rates = broadcast(perLang.crossJoin(broadcast(budget)))
       docs.join(rates, Seq("lang"))
         .withColumn("kept", col("b") * col("n_lang") < col("budget") * M)
         .groupBy(col("lang"))
@@ -1077,13 +1076,14 @@ object TextQueries {
     * defaults), written as one identical left-associated op tree on both
     * engines.
     *
-    * Scale shape: same skeleton as q45 — ONE scan+explode builds the
-    * (doc, tok, tf) table, materialized once; dl(doc) and df(tok) are
-    * both group-bys of it; the dl join co-locates with tf's own doc_id
-    * grouping, the df join shuffles on tok (broadcast while the
-    * vocabulary fits, AQE decides otherwise), corpus-level (N, avgdl) is
-    * a 1-row broadcast. Top-3 per doc is a bounded per-doc window, never
-    * a global sort.
+    * Scale shape: same skeleton as q45 — one aggregate over the landed
+    * token table builds the (doc, tok, tf) table, persisted because
+    * q162 measured slower without it (see Tables.eager); dl(doc) and
+    * df(tok) are both group-bys of it; the dl join co-locates with tf's
+    * own doc_id grouping, the df join shuffles on tok (broadcast while
+    * the vocabulary fits, AQE decides otherwise), corpus-level (N,
+    * avgdl) is a 1-row broadcast. Top-3 per doc is a bounded per-doc
+    * window, never a global sort.
     */
   val q162Bm25Topk: Q = Q(
     "q162_bm25_topk",
@@ -1156,10 +1156,10 @@ object TextQueries {
   val q163RrfFusion: Q = Q(
     "q163_rrf_fusion",
     (s, dir) => {
-      val per = Tables.eager(tokenTable(s, dir)
+      val per = tokenTable(s, dir)
         .select(col("doc_id"), col("tok"))
         .groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("dl"), count_distinct(col("tok")).as("uniq")))
+        .agg(count(lit(1)).as("dl"), count_distinct(col("tok")).as("uniq"))
       val byLen = per.orderBy(col("dl").desc, col("doc_id").asc).limit(100)
         .withColumn("ra", row_number().over(
           Window.orderBy(col("dl").desc, col("doc_id").asc)))

@@ -30,7 +30,7 @@ class BenchPolicySpec extends AnyFunSuite with Matchers {
     assert(tagged == expectedStreaming,
       s"streaming tag drifted: extra=${tagged -- expectedStreaming}, " +
         s"missing=${expectedStreaming -- tagged} — if a new readStream " +
-        "query was added, tag it in EventQueries.streamingNames AND here")
+        "query was added, set `streaming = true` on its Q AND list it here")
   }
 
   test("every catalog name is unique (bench/verify key into maps by name)") {

@@ -47,9 +47,10 @@ import org.apache.spark.sql.execution.{CollectLimitExec, ExpandExec, FileSourceS
   *    per-position projections, `Generate` outputs (domain ⊆ the
   *    generator's input values), and cached-relation positional bridges;
   *  - a LEAF attribute named in the reviewed ENUM set — `event_type`,
-  *    `source`, `label` — fixture columns whose cardinality is a data-
-  *    model constant (event-type enum, corpus source enum, cluster-label
-  *    enum), the column-level analogue of the region/nation rule.
+  *    `source`, `label`, `lang` and the TPC-H flag columns — fixture
+  *    columns whose cardinality is a data-model constant (event-type
+  *    enum, corpus source enum, cluster-label enum, TPC-H flags), the
+  *    column-level analogue of the region/nation rule.
   *
   * Used by [[GlobalWindowPolicySpec]]'s cross-join policy; kept
   * test-side because it encodes REVIEW judgement (what counts as
@@ -63,9 +64,13 @@ object PlanBounds {
   /** Fixture columns with data-model-constant domains. `lang` joined in
     * round 20: the documents generator draws it from a fixed 5-language
     * enum (verified at sf0.01/sf0.1), the text-pipeline analogue of
-    * `source`.
+    * `source`. The TPC-H flag columns are enums by the TPC-H spec:
+    * `l_returnflag`, `l_linestatus`, `o_orderstatus` and
+    * `o_orderpriority` hold 3, 2, 3 and 5 values at sf0.001, sf0.01 and
+    * sf0.1 alike.
     */
-  private val enumCols = Set("event_type", "source", "label", "lang")
+  private val enumCols = Set("event_type", "source", "label", "lang",
+    "l_returnflag", "l_linestatus", "o_orderstatus", "o_orderpriority")
 
   /** Unique dense-id columns: `id < k` selects at most k rows. */
   private val uniqueKeyCols = Set("vec_id", "doc_id")

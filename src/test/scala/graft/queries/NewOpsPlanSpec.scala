@@ -1,12 +1,13 @@
 package graft.queries
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec, BroadcastNestedLoopJoinExec}
 
 import graft.SparkSpec
+import graft.engine.MaterializationAudit
 
 /** Physical-plan shape of the continuation operators — the 100 TB
   * claims in their Scaladoc ("no joins", "one shuffle family",
@@ -35,6 +36,20 @@ class NewOpsPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val p = executed(RelationalQueries.q224GiniMeanDiff.fn(spark, dir))
     joins(p) shouldBe empty
     shuffles(p) should be <= 2
+  }
+
+  test("q114 corr matrix: the moment row has one consumer, so nothing " +
+      "is persisted and lineitem is scanned once") {
+    MaterializationAudit.enable()
+    val (p, sites) =
+      try {
+        val p = executed(RelationalQueries.q114CorrMatrix.fn(spark, dir))
+        (p, MaterializationAudit.drain().map(_.site))
+      } finally MaterializationAudit.disable()
+    sites should not contain "eager"
+    collect(p) { case f: FileSourceScanExec => f }
+      .count(_.relation.location.rootPaths
+        .exists(_.getName == "lineitem.parquet")) shouldBe 1
   }
 
   test("q229 seasonal decomposition: join-free") {
