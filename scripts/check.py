@@ -10,9 +10,14 @@ near-misses are visible. A zero-row result fails unless the catalog
 declared the query semantically empty (empty_ok.json, from
 Catalog.Q.emptyOk) — an oracle cannot see a degeneracy it shares.
 
+DuckDB runs with half of physical memory and spills to a temporary
+directory removed at exit, so an oracle larger than memory spills, or
+fails naming its query, instead of growing to DuckDB's default limit
+(80% of RAM) on a shared host.
+
 Usage: check.py <sfDir> <verifyOutDir> [query ...]
 """
-import sys, json, os, math
+import sys, json, os, math, tempfile
 import duckdb
 import pyarrow.parquet as pq
 
@@ -40,10 +45,12 @@ def sorted_rows(cols, rows):
     return [cols[i] for i in order], out
 
 
-def main():
+def main(spill_dir):
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
     only = set(sys.argv[3:])
-    con = duckdb.connect()
+    half_ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2
+    con = duckdb.connect(config={"memory_limit": f"{half_ram}B",
+                                 "temp_directory": spill_dir})
     # Mirror spark.sql.session.timeZone=UTC: without this, DuckDB's
     # CAST(TIMESTAMPTZ AS TIMESTAMP) uses the host-local zone and the
     # LTZ-encoded events.ts branch diverges from Spark on non-UTC hosts.
@@ -164,9 +171,12 @@ def main():
             n_pass += 1
         else:
             n_fail += 1
+    con.close()
     print(f"PASS {n_pass} FAIL {n_fail}")
-    sys.exit(1 if n_fail else 0)
+    return n_fail
 
 
 if __name__ == "__main__":
-    main()
+    with tempfile.TemporaryDirectory(prefix="oracle-spill-") as spill:
+        n_fail = main(spill)
+    sys.exit(1 if n_fail else 0)

@@ -6,6 +6,10 @@
 # Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
 #      SPARK_GRAFT_CPUS (threads AND shuffle.partitions, default 4),
 #      SPARK_DRIVER_MEM (default 16g).
+# With a query filter, the first queries of the cold pass also pay the
+# JVM's and JIT's warm-up (q241: 5.43 s cold alone, 2.27 s as the 10th
+# of 12 queries, sf0.1, 4 cores). A per-query A/B compares a query at the
+# same position in the same query group on both sides.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 CP="target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"

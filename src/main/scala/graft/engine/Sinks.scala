@@ -4,6 +4,7 @@ import java.sql.DriverManager
 import java.util.Properties
 
 import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.functions.col
 
 /** Write paths (SURVEY.md §2.1 S2/S5/S7/S8/S9) — the medallion layers all
   * end in a write; this is the engine API for them.
@@ -17,9 +18,15 @@ import org.apache.spark.sql.{DataFrame, SaveMode}
   *    the partitioned sink also takes `SaveMode.Append` (a streaming
   *    `foreachBatch` landing each micro-batch), every other sink here
   *    overwrites.
-  *  - Partition-count hygiene: the caller controls parallelism upstream
-  *    (`repartition(partitionCols)` before a partitioned write avoids the
-  *    many-small-files explosion of one file per task per partition value).
+  *  - File layout: the partitioned sinks own it. A plain `partitionBy`
+  *    lands one file per (write task, partition value): 4 tasks over 50
+  *    states is 200 small files. Both sinks first apply the `rebalance`
+  *    hint on the partition columns, so each value goes to one writer task
+  *    and lands one file. It is `rebalance`, not `repartition`: under AQE
+  *    a rebalance shuffle coalesces small writes into few tasks and splits
+  *    a skewed value (one large state) into advisory-size files, where a
+  *    hash `repartition` pins each value to one task. Callers pass the
+  *    frame as it is.
   *  - JDBC lands through executor-side batch inserts; `overwrite`
   *    drop+recreates like the reference (brewery_operators.py:386-387).
   *    The serving database is the scale bottleneck by design — gold tables
@@ -67,11 +74,14 @@ object Sinks {
       .drop("__rn", "__src")
   }
 
-  /** Partitioned parquet sink (S5): silver layout, hive-partitioned. */
+  /** Partitioned parquet sink (S5): silver layout, hive-partitioned, one
+    * file per partition value (see the header's file-layout note).
+    */
   def writePartitionedParquet(df: DataFrame, path: String,
                               partitionCols: Seq[String],
                               mode: SaveMode = SaveMode.Overwrite): Unit =
-    df.write.partitionBy(partitionCols: _*).mode(mode).parquet(path)
+    df.hint("rebalance", partitionCols.map(col): _*).write.partitionBy(partitionCols: _*)
+      .mode(mode).parquet(path)
 
   /** Dynamic-partition overwrite: land ONLY the partitions present in
     * `df`, leaving sibling partitions untouched — the at-scale posture the
@@ -82,7 +92,7 @@ object Sinks {
     */
   def overwritePartitionsDynamic(df: DataFrame, path: String,
                                  partitionCols: Seq[String]): Unit =
-    df.write.partitionBy(partitionCols: _*)
+    df.hint("rebalance", partitionCols.map(col): _*).write.partitionBy(partitionCols: _*)
       .option("partitionOverwriteMode", "dynamic")
       .mode(SaveMode.Overwrite).parquet(path)
 

@@ -62,6 +62,36 @@ class MedallionSpec extends SparkSpec {
     }
   }
 
+  test("silver lands one file per state, however many bronze files feed it") {
+    withTempDir { root =>
+      val layout = Medallion.Layout(s"$root/bronze", s"$root/silver", s"$root/gold")
+      val states = Seq("CA", "NY", "TX")
+      // four range partitions of consecutive ids: every one holds every state
+      val batch = spark.range(0, 48, 1, 4).select(
+        concat(lit("b"), $"id").as("id"), concat(lit(" Brew "), $"id").as("name"),
+        lit("Micro").as("brewery_type"), concat($"id", lit(" Main St")).as("address_1"),
+        lit(null).cast("string").as("address_2"), lit("Unit 1").as("address_3"),
+        lit("Town").as("city"),
+        element_at(typedLit(states), ($"id" % 3 + 1).cast("int")).as("state_province"),
+        lit("us").as("country"), lit("-1.5").as("longitude"), lit("40.0").as("latitude"))
+      val snapshot = Medallion.toBronze(batch, layout, "20240106_120000")
+      // silver's write reads four bronze files, each holding all three states
+      spark.read.schema(batch.schema).json(snapshot)
+        .select(col("_metadata.file_path"), col("state_province")).distinct()
+        .count() shouldBe 12
+
+      val silver = Medallion.toSilver(spark, layout, projection, Seq("state"))
+      def partFiles(state: String) = new java.io.File(s"${layout.silverPath}/state=$state")
+        .list().count(_.startsWith("part-"))
+      states.map(s => s -> partFiles(s)) shouldBe states.map(_ -> 1)
+      new java.io.File(layout.silverPath).list().count(_.startsWith("state=")) shouldBe 3
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.select(projection.map { case (n, _) => col(n) }: _*)
+          .collect().sortBy(_.getString(0)).toSeq
+      rows(silver) shouldBe rows(Silver.project(batch, projection))
+    }
+  }
+
   test("a column null in every row survives bronze into silver") {
     withTempDir { root =>
       val layout = Medallion.Layout(s"$root/bronze", s"$root/silver", s"$root/gold")

@@ -1,6 +1,7 @@
 package graft.engine
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.functions.{element_at, typedLit}
 
 import graft.SparkSpec
 
@@ -10,6 +11,18 @@ import graft.SparkSpec
   */
 class SinksSourcesSpec extends SparkSpec {
   import spark.implicits._
+
+  /** 48 rows in four range partitions of consecutive ids: every
+    * partition holds all three states, so a write task per partition
+    * would land four files per state.
+    */
+  private def spreadDf = spark.range(0, 48, 1, 4).select(
+    $"id".cast("string").as("id"),
+    element_at(typedLit(Seq("CA", "NY", "TX")), ($"id" % 3 + 1).cast("int")).as("state"),
+    ($"id" * 0.5).as("v"))
+
+  private def partFiles(dir: String) =
+    new java.io.File(dir).list().count(_.startsWith("part-"))
 
   private def sampleDf =
     Seq(("a", "CA", 1.5), ("b", "CA", 2.5), ("c", "NY", 3.5))
@@ -77,6 +90,33 @@ class SinksSourcesSpec extends SparkSpec {
       Sources.readParquet(spark, path).select("id", "state", "v")
         .as[(String, String, Double)].collect().toSet shouldBe
         Set(("a2", "CA", 9.9), ("c", "NY", 3.5))
+    }
+  }
+
+  test("partitioned parquet sink: one file per partition value from a multi-partition frame") {
+    withTempDir { root =>
+      val path = s"$root/silver"
+      spreadDf.rdd.getNumPartitions shouldBe 4
+      Sinks.writePartitionedParquet(spreadDf, path, Seq("state"))
+      Seq("CA", "NY", "TX").map(s => s -> partFiles(s"$path/state=$s")) shouldBe
+        Seq("CA" -> 1, "NY" -> 1, "TX" -> 1)
+      Sources.readParquet(spark, path).select("id", "state", "v")
+        .as[(String, String, Double)].collect().sorted shouldBe
+        spreadDf.as[(String, String, Double)].collect().sorted
+    }
+  }
+
+  test("dynamic partition overwrite lands the touched value as one file") {
+    withTempDir { root =>
+      val path = s"$root/silver"
+      Sinks.writePartitionedParquet(sampleDf, path, Seq("state"))
+      val ca = spreadDf.filter($"state" === "CA")
+      ca.rdd.getNumPartitions shouldBe 4
+      Sinks.overwritePartitionsDynamic(ca, path, Seq("state"))
+      partFiles(s"$path/state=CA") shouldBe 1
+      Sources.readParquet(spark, path).filter($"state" === "CA").select("id", "state", "v")
+        .as[(String, String, Double)].collect().sorted shouldBe
+        ca.as[(String, String, Double)].collect().sorted
     }
   }
 
