@@ -52,9 +52,7 @@ object Sources {
     val p = new Path(root)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) None
-    else fs.listStatus(p).toSeq match {
-      case Seq() => Nil.headOption
-      case stats => Some(stats.maxBy(_.getModificationTime).getPath.toString)
-    }
+    else fs.listStatus(p).maxByOption(_.getModificationTime)
+      .map(_.getPath.toString)
   }
 }

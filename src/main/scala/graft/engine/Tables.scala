@@ -63,8 +63,6 @@ object Tables {
   /** Persist AND materialize now: one count job plus a cache fill, paid
     * before the query's own plan runs. The rule, measured: a COMPUTED
     * frame is persisted only
-    *  - where a driver loop re-reads it across actions
-    *    (`DedupQueries.componentLabels`, q111, q165, q176);
     *  - where two consumers need identical partition ids (the
     *    [[Cumulative]] cell pass and its join-back); or
     *  - where a named query measured slower without it: q86, q162 and
@@ -78,8 +76,8 @@ object Tables {
     * Never `eager` a [[landed]] read. A landed table is already
     * materialized; a Project/Filter over its scan costs one more scan,
     * so a second, in-memory copy buys an extra count job and a cache
-    * fill. Only a driver loop (q111, q165) may. GlobalWindowPolicySpec
-    * enforces this.
+    * fill. GlobalWindowPolicySpec enforces this. A loop's state is
+    * [[Fixpoint]]'s to materialize, one checkpoint per round.
     */
   def eager(df: DataFrame): DataFrame = {
     MaterializationAudit.record("eager", df)

@@ -3,6 +3,8 @@ package graft.engine.ext
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.engine.Fixpoint
+
 /** Distributed graph primitives for the dedup pipeline.
   *
   * ## 100 TB notes
@@ -20,8 +22,9 @@ import org.apache.spark.sql.functions._
   *    hop. Kiveris et al., "Connected Components in MapReduce and
   *    Beyond" (SOCC '14).
   *
-  * Both run over the |V(edges)|-bounded vertex set (only docs that appear
-  * in some duplicate pair), never the full corpus.
+  * Both run their rounds through [[graft.engine.Fixpoint]], over the
+  * |V(edges)|-bounded vertex set (only docs that appear in some
+  * duplicate pair), never the full corpus.
   */
 object Graph {
 
@@ -40,16 +43,10 @@ object Graph {
     *    itself attaches to m(u) — stars flatten so the next large-star
     *    sees the merged neighborhood.
     * The edge set strictly shrinks toward a union of min-rooted stars;
-    * convergence = the round is a no-op (set equality via count +
-    * exceptAll on the distinct edge tables). Every round is groupBy/join
-    * equi-shuffles on the vertex key — no driver-side data.
-    *
-    * Each round's result is eagerly `localCheckpoint`ed: a round
-    * references the previous edge table four times, so carrying raw
-    * lineage would grow the logical plan 4^rounds (driver OOM while just
-    * RENDERING the plan, observed at ~12 rounds). Checkpointing resets
-    * the plan to a leaf per round — on a cluster this is `checkpoint` to
-    * reliable storage, the standard iterative-Spark form.
+    * convergence = the round is a no-op: [[graft.engine.Fixpoint]] stops
+    * at the first round that neither adds nor retires an edge. Every
+    * round is groupBy/join equi-shuffles on the vertex key — no
+    * driver-side data.
     */
   def largeSmallStarComponents(edges: DataFrame, maxRounds: Int = 50): DataFrame = {
     def canon(df: DataFrame): DataFrame =
@@ -67,11 +64,13 @@ object Graph {
     def undirected(df: DataFrame): DataFrame =
       df.union(df.select(col("b").as("a"), col("a").as("b")))
 
-    var cur = canon(edges).localCheckpoint(true)
-    var curCount = cur.count()
-    var converged = curCount == 0
-    var rounds = 0
-    while (!converged && rounds < maxRounds) {
+    // `live`: the edge is in this round's output; a retired edge stays
+    // one round, flagged, so the round's change count sees it
+    val init = canon(edges).select(col("a"), col("b"),
+      lit(true).as("live"), lit(false).as("changed"))
+    val stars = Fixpoint.iterate(init, maxRounds,
+        "large/small-star components") { (state, _) =>
+      val cur = state.filter(col("live")).select(col("a"), col("b"))
       // large-star: (u,v) with v > u emits (m(u), v); m <= u < v keeps the
       // pair canonical and can never be a self-loop
       val undCur = undirected(cur)
@@ -92,22 +91,17 @@ object Graph {
         .union(mL.select(col("m").as("a"), col("u").as("b")))
         .filter(col("a") =!= col("b"))
         .distinct()
-      val next = small.localCheckpoint(true)
-      val nextCount = next.count()
-      // both sides are distinct canonical sets: equal counts + empty
-      // difference <=> equal sets <=> the round changed nothing
-      converged = nextCount == curCount && next.exceptAll(cur).isEmpty
-      cur = next
-      curCount = nextCount
-      rounds += 1
+      // both sides are distinct canonical sets, so the outer join pairs
+      // each edge with itself; an edge on one side only was added or
+      // retired by this round
+      small.withColumn("live", lit(true))
+        .join(cur.withColumn("was", lit(true)), Seq("a", "b"), "full_outer")
+        .select(col("a"), col("b"), col("live").isNotNull.as("live"),
+          (col("live").isNull || col("was").isNull).as("changed"))
     }
-    // same contract as label propagation: never emit a partial clustering
-    if (!converged)
-      throw new IllegalStateException(
-        s"large/small-star components did not converge in $rounds rounds")
     // at the fixpoint the graph is a union of min-rooted stars: every
     // member's closed-neighborhood min IS the root, and the root's is itself
-    closedMin(undirected(cur))
+    closedMin(undirected(stars.select(col("a"), col("b"))))
       .select(col("u").as("doc_id"), col("m").as("component"))
   }
 }

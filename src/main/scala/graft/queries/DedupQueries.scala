@@ -3,10 +3,9 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.storage.StorageLevel
 
 import graft.Catalog.Q
-import graft.engine.Tables
+import graft.engine.{Fixpoint, Tables}
 import graft.engine.ext.Text
 
 /** Deduplication suite over `documents` (SURVEY.md §7.4 north-star):
@@ -445,9 +444,8 @@ object DedupQueries {
     * Rounds needed = component diameter; dup clusters are near-cliques,
     * so 2-3 in practice. Each round is one equi-join shuffle on a table
     * bounded by |V| — the standard scale-out CC shape, no driver-side
-    * graph. The convergence probe is an aggregate count, not a collect.
-    * The oracle computes the same fixpoint declaratively with a
-    * recursive CTE.
+    * graph; [[Fixpoint]] drives the rounds. The oracle computes the same
+    * fixpoint declaratively with a recursive CTE.
     *
     * Design note — plain propagation vs large-star/small-star: the
     * Kiveris et al. alternating large-star/small-star rounds REWRITE the
@@ -464,37 +462,20 @@ object DedupQueries {
     val edges = dupEdges(s, dir)
     val undirected = edges
       .union(edges.select(col("b").as("a"), col("a").as("b")))
-    var cached = Tables.eager(edges.select(col("a").as("v"))
+    val init = edges.select(col("a").as("v"))
       .union(edges.select(col("b").as("v"))).distinct()
-      .select(col("v"), col("v").as("lbl")))
-    var lbl = cached
-    var converged = false
-    var rounds = 0
-    while (!converged && rounds < 50) {
+      .select(col("v"), col("v").as("lbl"), lit(false).as("changed"))
+    // never emit a partially-propagated clustering: a component whose
+    // diameter exceeds the bound would silently split into several
+    Fixpoint.iterate(init, 50, "connected components") { (lbl, _) =>
       val nbrMin = undirected
         .join(lbl.select(col("v").as("b"), col("lbl").as("nl")), Seq("b"))
         .groupBy(col("a")).agg(min(col("nl")).as("nbr"))
-      // one action per round: the changed-flag count both materializes
-      // the persisted label table and decides convergence
-      val next = lbl
-        .join(nbrMin.select(col("a").as("v"), col("nbr")), Seq("v"), "left")
+      lbl.join(nbrMin.select(col("a").as("v"), col("nbr")), Seq("v"), "left")
         .select(col("v"),
-          least(col("lbl"), coalesce(col("nbr"), col("lbl"))).as("nlbl"),
-          (coalesce(col("nbr"), col("lbl")) < col("lbl")).as("chg"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val changed = next.filter(col("chg")).count()
-      cached.unpersist()
-      cached = next
-      lbl = next.select(col("v"), col("nlbl").as("lbl"))
-      converged = changed == 0
-      rounds += 1
-    }
-    // never emit a partially-propagated clustering: a component whose
-    // diameter exceeds the cap would silently split into several
-    if (!converged)
-      throw new IllegalStateException(
-        s"connected components did not converge in $rounds rounds")
-    lbl.select(col("v").as("doc_id"), col("lbl").as("component"))
+          least(col("lbl"), coalesce(col("nbr"), col("lbl"))).as("lbl"),
+          (coalesce(col("nbr"), col("lbl")) < col("lbl")).as("changed"))
+    }.select(col("v").as("doc_id"), col("lbl").as("component"))
   }
 
   /** Materialize-once-reuse for [[componentLabels]] — the 100 TB posture

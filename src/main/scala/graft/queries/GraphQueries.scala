@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.Catalog.Q
-import graft.engine.Tables
+import graft.engine.{Fixpoint, Tables}
 
 /** Graph analytics over an explicit co-occurrence graph (SURVEY.md §2
   * scale extensions — complements connected components q43/q69 and the
@@ -32,10 +32,10 @@ import graft.engine.Tables
   *    reason a star vertex with 10^6 neighbors contributes zero wedges
   *    rather than 10^12. The closing-edge probe is a plain equi-join on
   *    the canonical (min,max) pair.
-  *  - BFS (q111) is a driver loop of per-round equi-joins (frontier x
-  *    adjacency), one shuffle per round, frontier localCheckpoint'ed so
-  *    lineage stays flat (same posture as q43's label propagation). The
-  *    visited set is the only growing state and it is bounded by |V|.
+  *  - BFS (q111), k-core peeling (q165) and time-respecting reach
+  *    (q176) are [[graft.engine.Fixpoint]] loops of per-round
+  *    equi-joins. BFS's visited set is the only growing state and it is
+  *    bounded by |V|.
   */
 object GraphQueries {
 
@@ -291,50 +291,35 @@ object GraphQueries {
 
   /** BFS hop-distance distribution from the minimum-id vertex.
     *
-    * Driver loop over per-round equi-joins: frontier x adjacency ->
-    * candidates, anti-join against visited -> novel, stop when the
-    * frontier drains. Throws past [[MaxHops]] rounds so the engine can
-    * never silently diverge from the oracle CTE's `h < MaxHops` bound.
-    * Unreachable vertices are absent on both sides by construction.
+    * One [[Fixpoint]] round per hop: frontier (the nodes the last round
+    * reached) x adjacency -> candidates, anti-join against visited ->
+    * novel, stop when a round reaches nothing new. Unreachable vertices
+    * are absent on both sides by construction.
     */
   val q111BfsHops: Q = Q(
     "q111_bfs_hops",
     (s, dir) => {
-      val e = Tables.eager(cooccurrenceEdges(s, dir))
+      val e = cooccurrenceEdges(s, dir)
       val adj = e.select(col("u"), col("v"))
         .unionAll(e.select(col("v").as("u"), col("u").as("v")))
       // every edge has u < v, so the minimum vertex id is min(u)
-      // loop state is localCheckpoint'ed (not persisted): each round's
-      // relation is cut from its lineage, so round N is one flat join
-      // instead of an N-deep recomputable plan (same posture as q43's
-      // label propagation in engine/ext/Graph.scala)
-      var dist = e.agg(min(col("u")).as("node"))
-        .withColumn("hops", lit(0L)).localCheckpoint(true)
-      var frontier = dist
-      var round = 0
-      var done = false
-      while (!done) {
-        round += 1
+      val root = e.agg(min(col("u")).as("node"))
+        .select(col("node"), lit(0L).as("hops"), lit(true).as("changed"))
+      // the oracle's recursive join (`walk.h < MaxHops`) still emits
+      // hop-MaxHops nodes (joined FROM h = MaxHops-1 rows), so hop
+      // MaxHops is legitimate on both sides; only at MaxHops+1 would the
+      // oracle first silently truncate — throw exactly there
+      Fixpoint.iterate(root, MaxHops + 1, "BFS") { (dist, round) =>
         // both sides descend from the same edge relation — qualify via
         // aliases so the self-join columns cannot be ambiguous
-        val cand = frontier.as("f")
+        val novel = dist.filter(col("changed")).as("f")
           .join(adj.as("a"), col("f.node") === col("a.u"))
           .select(col("a.v").as("node")).distinct()
-        val novel = cand.join(dist, Seq("node"), "left_anti")
-          .withColumn("hops", lit(round.toLong)).localCheckpoint(true)
-        if (novel.isEmpty) done = true
-        else {
-          // the oracle's recursive join (`walk.h < MaxHops`) still emits
-          // hop-MaxHops nodes (joined FROM h = MaxHops-1 rows), so hop
-          // MaxHops is legitimate on both sides; only at MaxHops+1 would
-          // the oracle first silently truncate — throw exactly there
-          require(round <= MaxHops,
-            s"BFS exceeded $MaxHops hops; oracle bound would diverge")
-          dist = dist.unionByName(novel).localCheckpoint(true)
-          frontier = novel
-        }
-      }
-      dist.groupBy(col("hops"))
+          .join(dist, Seq("node"), "left_anti")
+        dist.select(col("node"), col("hops"), lit(false).as("changed"))
+          .unionByName(novel.select(col("node"),
+            lit(round.toLong).as("hops"), lit(true).as("changed")))
+      }.groupBy(col("hops"))
         .agg(count(lit(1)).as("n_users"))
         .orderBy(col("hops"))
     },
@@ -357,43 +342,36 @@ object GraphQueries {
     * peeling CASCADES: removing a weak vertex can drop its neighbors
     * below k.
     *
-    * Engine = driver loop to fixpoint, each round two bounded shuffles
-    * (degree agg + two semi-joins), state `localCheckpoint`ed like
-    * q111/q43 so round N stays one flat plan. Converges in
+    * Engine = one [[Fixpoint]] round per peeling step, each two bounded
+    * shuffles (degree agg + two degree joins). Converges in
     * O(peeling depth) rounds — typically a handful; throws past
     * [[MaxPeelRounds]] so it can never silently diverge from the
     * oracle, which unrolls EXACTLY MaxPeelRounds peeling rounds as
     * CTEs (post-fixpoint rounds are no-ops, so the two agree iff the
-    * engine converged within the bound — which the `require` proves).
+    * engine converged within the bound — which the throw proves).
     * Output: every 3-core vertex with its within-core degree.
     */
   val q165KCore: Q = Q(
     "q165_kcore",
     (s, dir) => {
       val k = 3L
-      var cur = Tables.eager(cooccurrenceEdges(s, dir))
-      var round = 0
-      var done = false
-      var nEdges = cur.count()
-      while (!done) {
-        round += 1
-        require(round <= MaxPeelRounds,
-          s"k-core peeling exceeded $MaxPeelRounds rounds; oracle " +
-            "unroll would diverge")
-        val deg = cur.select(col("u").as("node"))
-          .unionAll(cur.select(col("v").as("node")))
-          .groupBy(col("node")).agg(count(lit(1)).as("d"))
-        val keep = deg.filter(col("d") >= k).select(col("node"))
-        val next = cur
-          .join(keep.select(col("node").as("u")), Seq("u"), "left_semi")
-          .join(keep.select(col("node").as("v")), Seq("v"), "left_semi")
-          .select(col("u"), col("v")).localCheckpoint(true)
-        val nNext = next.count()
-        if (nNext == nEdges) done = true
-        else { cur = next; nEdges = nNext }
+      val init = cooccurrenceEdges(s, dir)
+        .select(col("u"), col("v"), lit(false).as("changed"))
+      val core = Fixpoint.iterate(init, MaxPeelRounds, "k-core peeling") {
+        (state, _) =>
+          // an edge peeled last round (`changed`) leaves before this one
+          val cur = state.filter(!col("changed"))
+          val deg = cur.select(col("u").as("node"))
+            .unionAll(cur.select(col("v").as("node")))
+            .groupBy(col("node")).agg(count(lit(1)).as("d"))
+          cur
+            .join(deg.select(col("node").as("u"), col("d").as("du")), Seq("u"))
+            .join(deg.select(col("node").as("v"), col("d").as("dv")), Seq("v"))
+            .select(col("u"), col("v"),
+              (col("du") < k || col("dv") < k).as("changed"))
       }
-      cur.select(col("u").as("node"))
-        .unionAll(cur.select(col("v").as("node")))
+      core.select(col("u").as("node"))
+        .unionAll(core.select(col("v").as("node")))
         .groupBy(col("node")).agg(count(lit(1)).as("core_degree"))
         .orderBy(col("node"))
     },
@@ -424,14 +402,15 @@ object GraphQueries {
     * traversed AFTER x was reached (arrival(x) <= h) — the temporal
     * constraint plain BFS (q111) ignores, and the difference between
     * "connected to" and "could actually have been influenced by".
-    * Label-correcting driver loop: per round, frontier x timed-edges
-    * (h >= arrival) propose arrivals, keep strict improvements
-    * (min-arrival per node), stop at fixpoint. Arrivals only decrease
-    * over a finite domain, so the fixpoint exists; throws past
-    * [[MaxWaveRounds]] so the engine can never silently diverge from
-    * the oracle's recursive CTE (whose UNION-dedup over finite
-    * (node, h) pairs terminates unconditionally). Output: number of
-    * users first reached in each time bucket.
+    * Label-correcting [[Fixpoint]] loop: per round, frontier (the nodes
+    * the last round improved) x timed-edges (h >= arrival) propose
+    * arrivals, keep strict improvements (min-arrival per node), stop at
+    * fixpoint. Arrivals only decrease over a finite domain, so the
+    * fixpoint exists; throws past [[MaxWaveRounds]] so the engine can
+    * never silently diverge from the oracle's recursive CTE (whose
+    * UNION-dedup over finite (node, h) pairs terminates
+    * unconditionally). Output: number of users first reached in each
+    * time bucket.
     */
   val q176TimeReach: Q = Q(
     "q176_time_reach",
@@ -441,47 +420,33 @@ object GraphQueries {
       // relation is a scan + union — the pair join + distinct run once
       // per (JVM, fixture), not once per query execution
       val und = timedEdges(s, dir)
-      val te = Tables.eager(und.unionByName(
-        und.select(col("v").as("u"), col("u").as("v"), col("h"))))
-      var dist = te.agg(min(col("u")).as("node"))
-        .withColumn("arrival", lit(-1L)).localCheckpoint(true)
-      var frontier = dist
-      var round = 0
-      var done = false
-      while (!done) {
-        round += 1
-        require(round <= MaxWaveRounds,
-          s"time-reach exceeded $MaxWaveRounds rounds; label-correcting " +
-            "loop did not converge")
-        // the frontier (this round's improved nodes) starts at one
-        // node and stays a small fraction of the vertex set — BROADCAST
-        // it so the persisted edge table is scanned in place instead of
-        // being shuffled every round (a label-correcting loop's edge
-        // relation is loop-invariant; re-shuffling it per round was the
-        // dominant per-round cost). A deployment whose frontier
-        // outgrows the broadcast threshold would flip this hint off and
-        // let AQE pick the shuffled join — same plan shape as BFS.
+      val te = und.unionByName(
+        und.select(col("v").as("u"), col("u").as("v"), col("h")))
+      val root = te.agg(min(col("u")).as("node"))
+        .select(col("node"), lit(-1L).as("arrival"),
+          lit(true).as("changed"))
+      Fixpoint.iterate(root, MaxWaveRounds, "time-reach") { (dist, _) =>
+        // the frontier starts at one node and stays a small fraction of
+        // the vertex set — BROADCAST it so the edge table is scanned in
+        // place instead of being shuffled every round (a
+        // label-correcting loop's edge relation is loop-invariant;
+        // re-shuffling it per round was the dominant per-round cost). A
+        // deployment whose frontier outgrows the broadcast threshold
+        // would flip this hint off and let AQE pick the shuffled join —
+        // same plan shape as BFS.
         val proposals = te.as("e")
-          .join(broadcast(frontier.as("f")),
+          .join(broadcast(dist.filter(col("changed")).as("f")),
             col("f.node") === col("e.u") && col("e.h") >= col("f.arrival"))
           .groupBy(col("e.v").as("node"))
           .agg(min(col("e.h")).as("cand"))
-        val improved = proposals.join(dist, Seq("node"), "left_outer")
-          .filter(col("arrival").isNull || col("cand") < col("arrival"))
-          .select(col("node"), col("cand").as("arrival"))
-          .localCheckpoint(true)
-        if (improved.isEmpty) done = true
-        else {
-          // the retraction set is the same small frontier — broadcast
-          // the anti-join too, so dist is rewritten without a shuffle
-          dist = dist.join(
-              broadcast(improved.select(col("node").as("n2"))),
-              col("node") === col("n2"), "left_anti")
-            .unionByName(improved).localCheckpoint(true)
-          frontier = improved
-        }
-      }
-      dist.filter(col("arrival") >= 0)
+        // a node improves when its best proposal beats its arrival (or
+        // it had none); `least` skips the null of an unproposed node
+        proposals.join(dist, Seq("node"), "full_outer")
+          .select(col("node"),
+            least(col("cand"), col("arrival")).as("arrival"),
+            (col("cand").isNotNull && (col("arrival").isNull ||
+              col("cand") < col("arrival"))).as("changed"))
+      }.filter(col("arrival") >= 0)
         .groupBy(col("arrival"))
         .agg(count(lit(1)).as("n_reached"))
         .orderBy(col("arrival"))

@@ -221,8 +221,8 @@ object SimilarityQueries {
     * Scale shape: centroids broadcast (tiny), assignment is a map-side
     * argmax over the streamed corpus, and the recompute is posexplode +
     * one partial-agg shuffle on (cluster, dim) — k*dims result rows. The
-    * full algorithm is this step in a driver loop, exactly like q43's
-    * label propagation.
+    * full algorithm is this step in a [[graft.engine.Fixpoint]] loop,
+    * like q43's label propagation.
     */
   val q44KmeansStep: Q = Q(
     "q44_kmeans_step",

@@ -33,7 +33,7 @@ import graft.engine.MaterializationAudit.Recorded
   *
   * A third, materialization policy rides the same sweep: `Tables.eager`
   * persists computed frames only, never a read of a `Tables.landed`
-  * table (q111/q165's driver loops are the reviewed exceptions).
+  * table, with no exceptions.
   *
   * A NEW query that trips either policy fails here until it is converted
   * or reviewed onto the list with a Scaladoc justification. Every
@@ -41,12 +41,13 @@ import graft.engine.MaterializationAudit.Recorded
   * fails too, so a converted query leaves its list.
   *
   * Round 17: the sweep also drains [[graft.engine.MaterializationAudit]], so
-  * operators inside `Tables.eager` / `Tables.landed` INTERMEDIATES —
-  * which hide behind an InMemoryTableScan / parquet scan in the final
-  * plan — are policed too (q180's block-offset window was invisible
-  * before). The `WindowExec: No Partition Defined` warnings in a
-  * full-suite log therefore all attribute to (a) the allowlisted queries
-  * executing in their oracle suites (NewOpsSpec, RobustOpsSpec,
+  * operators inside `Tables.eager` / `Tables.landed` INTERMEDIATES and
+  * every `Fixpoint` round plan — which hide behind an InMemoryTableScan /
+  * parquet scan / checkpoint scan in the final plan — are policed too
+  * (q180's block-offset window was invisible before). The
+  * `WindowExec: No Partition Defined` warnings in a full-suite log
+  * therefore all attribute to (a) the allowlisted queries executing in
+  * their oracle suites (NewOpsSpec, RobustOpsSpec,
   * NewOpsPlanSpec, DecimalDisciplineSpec, and this spec's own fn
   * invocations) or (b) explicitly-serial spec scaffolding —
   * DedupPropertySpec's flat-rank reference model, and
@@ -83,11 +84,11 @@ class GlobalWindowPolicySpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   /** One catalog pass: each non-streaming query's FINAL executed plan
     * (site `final`) plus every intermediate plan it materializes through
-    * Tables.eager / Tables.landed (drained from MaterializationAudit,
-    * with its site). The final plan alone is NOT enough — materialized
-    * subplans hide behind an InMemoryTableScan / parquet scan (q180's
-    * block-offset window was invisible that way for five rounds). Every
-    * policy test reads this one sweep.
+    * Tables.eager / Tables.landed / Fixpoint rounds (drained from
+    * MaterializationAudit, with its site). The final plan alone is NOT
+    * enough — materialized subplans hide behind an InMemoryTableScan /
+    * parquet scan (q180's block-offset window was invisible that way for
+    * five rounds). Every policy test reads this one sweep.
     */
   private lazy val records: Seq[(String, Seq[Recorded])] = {
     engine.MaterializationAudit.enable()
@@ -102,6 +103,15 @@ class GlobalWindowPolicySpec extends SparkSpec with AdaptiveSparkPlanHelper {
           Recorded("final", finalPlan) +: engine.MaterializationAudit.drain())
       }
     finally engine.MaterializationAudit.disable()
+  }
+
+  test("the sweep sees the round plans of every fixpoint loop") {
+    val looped = records.collect {
+      case (name, rs) if rs.exists(_.site.startsWith("fixpoint:")) => name
+    }.toSet
+    looped should contain allOf ("q43_dedup_components",
+      "q69_components_star", "q111_bfs_hops", "q165_kcore",
+      "q176_time_reach")
   }
 
   /** Every node (see [[PlanAudit.flatten]]) of each query's records. */
@@ -200,13 +210,6 @@ class GlobalWindowPolicySpec extends SparkSpec with AdaptiveSparkPlanHelper {
     }, Set.empty)
   }
 
-  /** Queries allowed to `Tables.eager` a landed read, because a driver
-    * loop reads the frame again in later actions.
-    */
-  private val eagerLandedAllowed: Set[String] = Set(
-    "q111_bfs_hops", // every BFS round is its own action over the edges
-    "q165_kcore")    // the peeling loop counts and re-reads round one
-
   /** The plan only reads landed tables: scans of `graft_landed_` dirs
     * under Project / Filter (plus the codegen and columnar wrappers).
     */
@@ -229,6 +232,6 @@ class GlobalWindowPolicySpec extends SparkSpec with AdaptiveSparkPlanHelper {
       case (name, rs) if rs.exists(r => r.site == "eager" &&
         landedRead(r.plan)) => name
     }.toSet
-    checkAllowlist("eager over a landed read", eagerLanded, eagerLandedAllowed)
+    checkAllowlist("eager over a landed read", eagerLanded, Set.empty)
   }
 }
