@@ -134,10 +134,13 @@ object Medallion {
     silver
   }
 
-  /** Gated silver -> gold aggregate, landed as parquet and read back. */
+  /** Gated silver -> gold aggregate, landed as parquet and read back with
+    * the aggregate's schema (no footer-inference job).
+    */
   def toGold(silver: DataFrame, layout: Layout,
              keys: Seq[Column], countCol: Column, countName: String): DataFrame = {
-    Sinks.writeParquet(Gold.groupCount(silver, keys, countCol, countName), layout.goldPath)
-    Sources.readParquet(silver.sparkSession, layout.goldPath)
+    val gold = Gold.groupCount(silver, keys, countCol, countName)
+    Sinks.writeParquet(gold, layout.goldPath)
+    silver.sparkSession.read.schema(gold.schema).parquet(layout.goldPath)
   }
 }

@@ -13,11 +13,19 @@ import org.apache.spark.sql.SparkSession
   *  - `shuffle.partitions` = cores in local mode (the reference leaves the
   *    200 default untuned — pure overhead at small scale; on a real
   *    cluster this would be sized to data volume / 128 MB-256 MB per
-  *    partition, with AQE coalescing the rest);
+  *    partition, with AQE coalescing the rest). The partitioned sinks
+  *    take the smaller of it and the cores as an explicit writer count,
+  *    which AQE does not coalesce (see [[Sinks]]);
   *  - AQE on (runtime re-plan: skew-join splitting, partition coalescing,
   *    broadcast demotion/promotion at 100 TB);
   *  - session timezone pinned UTC so timestamp semantics are stable
-  *    across the engine, the DuckDB oracle, and any cluster locale.
+  *    across the engine, the DuckDB oracle, and any cluster locale;
+  *  - partition discovery lists on the driver however many partition
+  *    dirs a table has (Spark's default runs a listing job above 32, so
+  *    silver's 50 `state=` dirs cost a 50-task job per read-back); in
+  *    local mode that job runs in the same JVM and only adds scheduling
+  *    and task deserialization. A cluster keeps the default, where the
+  *    job spreads a large listing over the executors.
   */
 object Sessions {
 
@@ -33,6 +41,7 @@ object Sessions {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", Int.MaxValue.toString)
       // the events fixture stores TIMESTAMP(NANOS) which Spark 4 rejects
       // outright (PARQUET_TYPE_ILLEGAL); this reads NANOS as BIGINT ns
       // and the engine converts explicitly (see EventQueries)

@@ -20,13 +20,25 @@ import org.apache.spark.sql.functions.col
   *    overwrites.
   *  - File layout: the partitioned sinks own it. A plain `partitionBy`
   *    lands one file per (write task, partition value): 4 tasks over 50
-  *    states is 200 small files. Both sinks first apply the `rebalance`
-  *    hint on the partition columns, so each value goes to one writer task
-  *    and lands one file. It is `rebalance`, not `repartition`: under AQE
-  *    a rebalance shuffle coalesces small writes into few tasks and splits
-  *    a skewed value (one large state) into advisory-size files, where a
-  *    hash `repartition` pins each value to one task. Callers pass the
-  *    frame as it is.
+  *    states is 200 small files. Both sinks first hash-repartition on the
+  *    partition columns into an explicit count: one writer task per core,
+  *    or `spark.sql.shuffle.partitions` if that is smaller (the two are
+  *    equal under [[Sessions.local]]; a cluster that sizes shuffle
+  *    partitions to data volume still gets one writer per core). Each
+  *    value goes to exactly one task and lands one file, and distinct
+  *    values spread over the cores (values that share a hash bucket share
+  *    a task). The count is explicit because AQE never coalesces a
+  *    repartition that names one. It does coalesce the `rebalance` hint,
+  *    with or without a count: a brewery day (about 1.5 MB of JSON)
+  *    shuffles about 0.5 MB, under AQE's 1 MB
+  *    `coalescePartitions.minPartitionSize` floor, so one task wrote all
+  *    50 state files, one after another, and `REBALANCE(n, cols)` still
+  *    ran one writer task in a traced `medallion_daily` day. The trades:
+  *    `rebalance` would split a value larger than the 64 MB advisory size
+  *    across files, where a hash repartition keeps it in one file written
+  *    by one task; and with fewer values than cores the surplus writer
+  *    tasks run empty, where AQE would drop them. Callers pass the frame
+  *    as it is.
   *  - JDBC lands through executor-side batch inserts; `overwrite`
   *    drop+recreates like the reference (brewery_operators.py:386-387).
   *    The serving database is the scale bottleneck by design — gold tables
@@ -80,8 +92,7 @@ object Sinks {
   def writePartitionedParquet(df: DataFrame, path: String,
                               partitionCols: Seq[String],
                               mode: SaveMode = SaveMode.Overwrite): Unit =
-    df.hint("rebalance", partitionCols.map(col): _*).write.partitionBy(partitionCols: _*)
-      .mode(mode).parquet(path)
+    byValue(df, partitionCols).write.partitionBy(partitionCols: _*).mode(mode).parquet(path)
 
   /** Dynamic-partition overwrite: land ONLY the partitions present in
     * `df`, leaving sibling partitions untouched — the at-scale posture the
@@ -92,9 +103,19 @@ object Sinks {
     */
   def overwritePartitionsDynamic(df: DataFrame, path: String,
                                  partitionCols: Seq[String]): Unit =
-    df.hint("rebalance", partitionCols.map(col): _*).write.partitionBy(partitionCols: _*)
+    byValue(df, partitionCols).write.partitionBy(partitionCols: _*)
       .option("partitionOverwriteMode", "dynamic")
       .mode(SaveMode.Overwrite).parquet(path)
+
+  /** Each partition value in one writer task, one task per core at most
+    * (see the header's file-layout note).
+    */
+  private def byValue(df: DataFrame, partitionCols: Seq[String]): DataFrame = {
+    val spark = df.sparkSession
+    val writers = math.min(spark.conf.get("spark.sql.shuffle.partitions").toInt,
+      spark.sparkContext.defaultParallelism)
+    df.repartition(writers, partitionCols.map(col): _*)
+  }
 
   /** Unpartitioned parquet sink (S7): gold layout. */
   def writeParquet(df: DataFrame, path: String): Unit =

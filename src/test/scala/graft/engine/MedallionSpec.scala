@@ -2,7 +2,7 @@ package graft.engine
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{JobLog, SparkSpec}
 
 /** End-to-end pipeline test over brewery-shaped data: the reference DAG
   * `extract >> bronze >> silver >> quality >> gold`
@@ -32,6 +32,17 @@ class MedallionSpec extends SparkSpec {
     "longitude" -> Silver.castDoubleLenient(col("longitude")),
     "latitude" -> Silver.castDoubleLenient(col("latitude")))
 
+  /** A day of `n` breweries spread over `states`, in four range
+    * partitions of consecutive ids: every one holds every state.
+    */
+  private def spreadBatch(n: Int, states: Seq[String]) = spark.range(0, n, 1, 4).select(
+    concat(lit("b"), $"id").as("id"), concat(lit(" Brew "), $"id").as("name"),
+    lit("Micro").as("brewery_type"), concat($"id", lit(" Main St")).as("address_1"),
+    lit(null).cast("string").as("address_2"), lit("Unit 1").as("address_3"),
+    lit("Town").as("city"),
+    element_at(typedLit(states), ($"id" % states.size + 1).cast("int")).as("state_province"),
+    lit("us").as("country"), lit("-1.5").as("longitude"), lit("40.0").as("latitude"))
+
   test("bronze -> silver -> gate -> gold, with reference semantics") {
     withTempDir { root =>
       val layout = Medallion.Layout(s"$root/bronze", s"$root/silver", s"$root/gold")
@@ -56,6 +67,9 @@ class MedallionSpec extends SparkSpec {
 
       val gold = Medallion.toGold(gated, layout,
         Seq(col("brewery_type"), col("state")), col("id"), "brewery_count")
+      // read back with the aggregate's schema: equal, nullability included,
+      // to a schema-discovering read of the landed gold
+      gold.schema shouldBe Sources.readParquet(spark, layout.goldPath).schema
       gold.as[(String, String, Long)].collect().toSet shouldBe
         Set(("micro", "CA", 1L), ("brewpub", "CA", 1L), ("micro", "NY", 1L))
       Sources.readParquet(spark, layout.goldPath).count() shouldBe 3
@@ -66,14 +80,7 @@ class MedallionSpec extends SparkSpec {
     withTempDir { root =>
       val layout = Medallion.Layout(s"$root/bronze", s"$root/silver", s"$root/gold")
       val states = Seq("CA", "NY", "TX")
-      // four range partitions of consecutive ids: every one holds every state
-      val batch = spark.range(0, 48, 1, 4).select(
-        concat(lit("b"), $"id").as("id"), concat(lit(" Brew "), $"id").as("name"),
-        lit("Micro").as("brewery_type"), concat($"id", lit(" Main St")).as("address_1"),
-        lit(null).cast("string").as("address_2"), lit("Unit 1").as("address_3"),
-        lit("Town").as("city"),
-        element_at(typedLit(states), ($"id" % 3 + 1).cast("int")).as("state_province"),
-        lit("us").as("country"), lit("-1.5").as("longitude"), lit("40.0").as("latitude"))
+      val batch = spreadBatch(48, states)
       val snapshot = Medallion.toBronze(batch, layout, "20240106_120000")
       // silver's write reads four bronze files, each holding all three states
       spark.read.schema(batch.schema).json(snapshot)
@@ -89,6 +96,35 @@ class MedallionSpec extends SparkSpec {
         df.select(projection.map { case (n, _) => col(n) }: _*)
           .collect().sortBy(_.getString(0)).toSeq
       rows(silver) shouldBe rows(Silver.project(batch, projection))
+    }
+  }
+
+  test("silver over more state dirs than Spark's parallel-listing threshold runs no listing job") {
+    withTempDir { root =>
+      val layout = Medallion.Layout(s"$root/bronze", s"$root/silver", s"$root/gold")
+      val states = (1 to 40).map(i => f"S$i%02d")
+      Medallion.toBronze(spreadBatch(160, states), layout, "20240107_120000")
+      val (silver, jobs) = JobLog.of(spark)(
+        Medallion.toSilver(spark, layout, projection, Seq("state")))
+      new java.io.File(layout.silverPath).list().count(_.startsWith("state=")) shouldBe 40
+      // the write's shuffle map job and its write job; a listing job of the
+      // 40 dirs would be a third, described "Listing leaf files and directories ..."
+      jobs.map(_.description).filter(_.startsWith("Listing")) shouldBe empty
+      jobs.size shouldBe 2
+      silver.count() shouldBe 160
+    }
+  }
+
+  test("silver's read-back orders partition columns as a discovering read does") {
+    withTempDir { root =>
+      val layout = Medallion.Layout(s"$root/bronze", s"$root/silver", s"$root/gold")
+      Medallion.toBronze(raw, layout, "20240108_120000")
+      // the reverse of their order in the projection
+      val silver = Medallion.toSilver(spark, layout, projection, Seq("country", "state"))
+      new java.io.File(s"${layout.silverPath}/country=us/state=CA").isDirectory shouldBe true
+      silver.schema shouldBe Sources.readParquet(spark, layout.silverPath).schema
+      silver.columns.takeRight(2) shouldBe Array("country", "state")
+      silver.count() shouldBe 3
     }
   }
 

@@ -1,9 +1,9 @@
 package graft.engine
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.functions.{element_at, typedLit}
+import org.apache.spark.sql.functions.{col, element_at, hash, lit, pmod, typedLit}
 
-import graft.SparkSpec
+import graft.{JobLog, SparkSpec}
 
 /** Write/read-back round trips for every sink/source operator
   * (SURVEY.md §2.1; FIXTURES.md §C: S2/S3/S5/S7/S8 are unit-tested, not
@@ -23,6 +23,21 @@ class SinksSourcesSpec extends SparkSpec {
 
   private def partFiles(dir: String) =
     new java.io.File(dir).list().count(_.startsWith("part-"))
+
+  /** Tasks of the writer stage (the result stage of the last job `write`
+    * runs) that wrote rows.
+    */
+  private def writingTasks(write: => Unit) = JobLog.of(spark)(write)._2.last.resultWriters
+
+  /** Tasks the sinks' hash of `state` spreads `df` over: one per value,
+    * unless two values share a bucket. The sinks hash into one task per
+    * core, where AQE would coalesce a small write to a single task.
+    */
+  private def stateBuckets(df: org.apache.spark.sql.DataFrame) = {
+    val writers = math.min(spark.conf.get("spark.sql.shuffle.partitions").toInt,
+      spark.sparkContext.defaultParallelism)
+    df.select(pmod(hash(col("state")), lit(writers))).distinct().count().toInt
+  }
 
   private def sampleDf =
     Seq(("a", "CA", 1.5), ("b", "CA", 2.5), ("c", "NY", 3.5))
@@ -97,7 +112,9 @@ class SinksSourcesSpec extends SparkSpec {
     withTempDir { root =>
       val path = s"$root/silver"
       spreadDf.rdd.getNumPartitions shouldBe 4
-      Sinks.writePartitionedParquet(spreadDf, path, Seq("state"))
+      stateBuckets(spreadDf) should be > 1
+      writingTasks(Sinks.writePartitionedParquet(spreadDf, path, Seq("state"))) shouldBe
+        stateBuckets(spreadDf)
       Seq("CA", "NY", "TX").map(s => s -> partFiles(s"$path/state=$s")) shouldBe
         Seq("CA" -> 1, "NY" -> 1, "TX" -> 1)
       Sources.readParquet(spark, path).select("id", "state", "v")
@@ -110,13 +127,15 @@ class SinksSourcesSpec extends SparkSpec {
     withTempDir { root =>
       val path = s"$root/silver"
       Sinks.writePartitionedParquet(sampleDf, path, Seq("state"))
-      val ca = spreadDf.filter($"state" === "CA")
-      ca.rdd.getNumPartitions shouldBe 4
-      Sinks.overwritePartitionsDynamic(ca, path, Seq("state"))
-      partFiles(s"$path/state=CA") shouldBe 1
-      Sources.readParquet(spark, path).filter($"state" === "CA").select("id", "state", "v")
+      val caNy = spreadDf.filter($"state" =!= "TX")
+      caNy.rdd.getNumPartitions shouldBe 4
+      stateBuckets(caNy) should be > 1
+      writingTasks(Sinks.overwritePartitionsDynamic(caNy, path, Seq("state"))) shouldBe
+        stateBuckets(caNy)
+      Seq("CA", "NY").map(s => partFiles(s"$path/state=$s")) shouldBe Seq(1, 1)
+      Sources.readParquet(spark, path).select("id", "state", "v")
         .as[(String, String, Double)].collect().sorted shouldBe
-        ca.as[(String, String, Double)].collect().sorted
+        caNy.as[(String, String, Double)].collect().sorted
     }
   }
 
